@@ -7,7 +7,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, hash, lit, pmod, shiftright, sum, when}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
 /** Transactional Parquet table layer — the one genuinely custom piece of
   * storage machinery (SURVEY §4): no lakehouse-format jar ships with the
@@ -49,6 +49,16 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * `lockStaleMs` above your slowest expected commit, since a breaker
   * can't tell a dead holder from a slow one. Acquisition waits up to
   * `lockTimeoutMs` then fails loudly rather than deadlocking a job.
+  *
+  * Pinned read schemas: a version directory is immutable, so the schema
+  * of its files is fixed the moment it is committed. A read of a plain
+  * (manifest-less) table hands the reader the schema of the version it
+  * resolves instead of letting the source infer it, which would cost a
+  * footer-read job on every read. The schema is remembered per table
+  * from the commit that wrote the version, or, for a version another
+  * writer committed, from one file footer read on the driver at its
+  * first read; the next commit replaces it. Partitioned versions always
+  * infer (their partition columns come from the directory names).
   */
 class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val lockTimeoutMs: Long = 60000, val lockStaleMs: Long = 1800000) {
@@ -67,6 +77,12 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   // `synchronized`, is not reentrant. Only touched under the instance
   // monitor (every locked() body runs synchronized), so a plain Set.
   private val heldLocks = scala.collection.mutable.Set.empty[String]
+
+  // table -> (version dir name, schema of that version's files); see the
+  // class doc. Keyed by version, so a commit by another writer misses
+  // and re-infers instead of reading with a stale schema.
+  private val pinnedSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
   /** Atomic create-exclusive of the lock file: O_EXCL via NIO on the
     * local FS (Hadoop's RawLocalFileSystem `create(…, overwrite=false)`
@@ -202,9 +218,38 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
 
   def read(name: String): DataFrame = {
     require(exists(name), s"table $name does not exist")
-    readManifest(name) match {
-      case None => spark.read.parquet(currentVersionDir(name).toString)
+    val dir = currentVersionDir(name)
+    readManifestAt(dir) match {
+      case None => readPlain(name, dir)
       case Some(m) => readRefs(name, m.refs.values.toSeq, m.schemaDDL)
+    }
+  }
+
+  /** Read a plain version dir with its pinned schema; on a miss, pin the
+    * schema of one of its file footers (read on the driver, no job).
+    * A partitioned version, or one no Spark writer wrote, infers.
+    */
+  private def readPlain(name: String, dir: Path): DataFrame =
+    Option(pinnedSchemas.get(name)).filter(_._1 == dir.getName).map(_._2)
+      .orElse(footerSchema(dir).map { s => pinnedSchemas.put(name, (dir.getName, s)); s })
+      .fold(spark.read.parquet(dir.toString))(s => spark.read.schema(s).parquet(dir.toString))
+
+  /** The Spark schema a writer stores in every file footer of a version
+    * dir, made nullable as the reader makes it. None when the dir holds
+    * subdirectories (partition columns come from their names) or its
+    * files carry no Spark schema.
+    */
+  private def footerSchema(dir: Path): Option[StructType] = {
+    val entries = fs.listStatus(dir)
+    if (entries.exists(_.isDirectory)) return None
+    entries.map(_.getPath).find(_.getName.startsWith("part-")).flatMap { file =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          file, spark.sparkContext.hadoopConfiguration))
+      val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        finally reader.close()
+      Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(json => asNullable(DataType.fromJson(json)).asInstanceOf[StructType])
     }
   }
 
@@ -280,10 +325,16 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   /** Append = read current + union + commit new version. Control tables
     * are tiny (rows scale with file count, not data volume — SURVEY §7),
     * so the rewrite is cheap; large data tables only ever commit whole
-    * new contents through overwrite().
+    * new contents through overwrite(). The union is coalesced to the
+    * replaced version's file count: small files are one read partition
+    * each, so the union's extra batch partition would otherwise add a
+    * file per append.
     */
   def append(name: String, df: DataFrame): Unit = locked(name) {
-    val merged = if (exists(name)) read(name).unionByName(df) else df
+    val merged = if (exists(name)) {
+      val current = read(name)
+      current.unionByName(df).coalesce(math.max(1, current.inputFiles.length))
+    } else df
     commit(name, merged, primaryKey(name))
   }
 
@@ -578,7 +629,6 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * layout exists. `key` values align positionally with primaryKey().
     */
   def lookupByPk(name: String, key: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
     val pks = primaryKey(name)
     require(pks.nonEmpty, s"table $name has no registered primary key")
     require(key.length == pks.length,
@@ -586,14 +636,36 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val pred = pks.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
     (bucketCount(name), readManifest(name)) match {
       case (Some(n), Some(m)) =>
-        val sch = StructType.fromDDL(m.schemaDDL)
-        val h = new Murmur3Hash(pks.zip(key).map { case (c, v) =>
-          Cast(Literal(v), sch(c).dataType, Some("UTC"))
-        }).eval(null).asInstanceOf[Int]
-        val bucket = ((h % n) + n) % n
+        val bucket = keyBucket(StructType.fromDDL(m.schemaDDL), pks, key, n)
         readRefs(name, m.refs.get(bucket).toSeq, m.schemaDDL).filter(pred)
       case _ => read(name).filter(pred)
     }
+  }
+
+  /** Buckets of literal primary-key tuples of a manifested bucket table,
+    * computed on the driver the way [[lookupByPk]] finds its bucket (no
+    * job). Each key aligns positionally with primaryKey().
+    */
+  def bucketsOfKeys(name: String, keys: Seq[Seq[Any]]): Seq[Int] = {
+    val n = bucketCount(name).getOrElse(
+      throw new IllegalStateException(s"$name has no registered bucket layout"))
+    val m = readManifest(name).getOrElse(
+      throw new IllegalStateException(s"$name has no bucket manifest"))
+    val schema = StructType.fromDDL(m.schemaDDL)
+    val pks = primaryKey(name)
+    keys.map(keyBucket(schema, pks, _, n)).distinct
+  }
+
+  /** [[bucketOf]] evaluated on one literal key: the same Murmur3 hash
+    * over the key cast to the table's column types.
+    */
+  private def keyBucket(schema: StructType, pks: Seq[String], key: Seq[Any],
+      n: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
+    val h = new Murmur3Hash(pks.zip(key).map { case (c, v) =>
+      Cast(Literal(v), schema(c).dataType, Some("UTC"))
+    }).eval(null).asInstanceOf[Int]
+    ((h % n) + n) % n
   }
 
   /** Migrate/overwrite the WHOLE table into bucket layout. */
@@ -941,8 +1013,22 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       writer0.partitionBy(partitionCols: _*) else writer0
     writer.mode("overwrite").parquet(dataDir.toString)
     writeAtomic(pointerFile(name), version)
+    if (partitionCols.isEmpty)
+      pinnedSchemas.put(name, (version, asNullable(df.schema).asInstanceOf[StructType]))
     if (pks.nonEmpty || !fs.exists(metaFile(name))) writeMeta(name, pks)
     pruneUnreferenced(name)
+  }
+
+  /** The schema a file source reads back: every field, array element
+    * and map value nullable (Spark's own `asNullable` is internal).
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** Write-temp + rename-with-OVERWRITE: FileContext.rename(…, OVERWRITE)

@@ -43,10 +43,12 @@ object PathOps {
     op.isin(Operation.all.toSeq: _*)
 
   /** O5 — data-query.py:70-85: next version for one file =
-    * COALESCE(MAX(file_version), 0) + 1 over its history.
+    * COALESCE(MAX(file_version), 0) + 1 over its history. The control
+    * frame is read as one partition, so the global aggregate needs no
+    * shuffle and the lookup is one job.
     */
   def nextVersion(control: DataFrame, fileName: String): Long = {
-    val row = control.filter(col("file_name") === fileName)
+    val row = control.filter(col("file_name") === fileName).coalesce(1)
       .agg(coalesce(max(col("file_version")), lit(0L))).head()
     row.getLong(0) + 1L
   }
@@ -66,7 +68,10 @@ object PathOps {
       .drop("__base")
   }
 
-  /** O6 — process-pipeline.py:238-252: COALESCE(MAX(QueryId), 0). */
+  /** O6 — process-pipeline.py:238-252: COALESCE(MAX(QueryId), 0), in
+    * one job like [[nextVersion]].
+    */
   def maxQueryId(deleteControl: DataFrame): Long =
-    deleteControl.agg(coalesce(max(col("QueryId")), lit(0L))).head().getLong(0)
+    deleteControl.coalesce(1)
+      .agg(coalesce(max(col("QueryId")), lit(0L))).head().getLong(0)
 }

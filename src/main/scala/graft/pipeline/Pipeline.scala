@@ -1,9 +1,15 @@
 package graft.pipeline
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.catalog.Catalog
 import graft.model._
@@ -48,10 +54,12 @@ final class Pipeline(
     * is exceeded — control tables hold file/approval/delete-control
     * rows, so blowing the cap means data rows were routed through a
     * control path, and the fix is the data path, not a bigger driver.
+    * The frame is read as one partition, so the capped collect is one
+    * job: a multi-partition limit would take partitions incrementally,
+    * one job per round.
     */
-  private def collectControl(df: DataFrame,
-      what: String): Array[org.apache.spark.sql.Row] = {
-    val rows = df.limit(maxControlRows + 1).collect()
+  private def collectControl(df: DataFrame, what: String): Array[Row] = {
+    val rows = df.coalesce(1).limit(maxControlRows + 1).collect()
     if (rows.length > maxControlRows)
       throw new IllegalStateException(
         s"control-plane guard: $what exceeded maxControlRows=" +
@@ -124,9 +132,9 @@ final class Pipeline(
         lit(null).cast("timestamp").as("approval_timestamp")),
       "registerArrivals' versioned file events")
     if (versioned.isEmpty) return Map.empty
+    // a local relation, so the planner knows the batch's size
     catalog.append(ControlTable,
-      spark.createDataFrame(spark.sparkContext.parallelize(versioned.toSeq, 1),
-        graft.model.ProcessedFile.schema))
+      spark.createDataFrame(versioned.toSeq.asJava, ProcessedFile.schema))
     val ts = nowIso()
     versioned.foreach { r =>
       val (file, id, op, bucket, version) = (r.getString(0), r.getString(1),
@@ -235,33 +243,55 @@ final class Pipeline(
     }
 
   /** Apply a batch of (event_id, status, approval_ts) control updates in
-    * ONE rewrite: left-join the (tiny, broadcast) update set against the
-    * control table and coalesce the touched columns.
+    * ONE rewrite. The update set is already on the driver, so it rides
+    * in the plan as literal maps keyed by event_id (no join, no
+    * broadcast job); a hashed IN test gates the maps' linear lookup to
+    * the touched rows.
     */
   private def markControl(updates: Seq[(String, String, String)]): Unit = {
     if (updates.isEmpty) return
-    import spark.implicits._
-    val upd = broadcast(updates.toDF("event_id", "__status", "__ts"))
+    val hit = col("event_id").isin(updates.map(_._1): _*)
+    def lookup(value: ((String, String, String)) => String): Column = {
+      val byId = typedLit(updates.map(u => u._1 -> value(u)).toMap)
+      when(hit, byId(col("event_id")))
+    }
+    val status = lookup(_._2)
     catalog.overwrite(ControlTable, catalog.read(ControlTable)
-      .join(upd, Seq("event_id"), "left")
-      .withColumn("status", coalesce(col("__status"), col("status")))
+      .withColumn("status", coalesce(status, col("status")))
       .withColumn("is_processed",
-        when(col("__status").isNotNull, lit(true)).otherwise(col("is_processed")))
+        when(status.isNotNull, lit(true)).otherwise(col("is_processed")))
       .withColumn("approval_timestamp",
-        coalesce(col("__ts").cast("timestamp"), col("approval_timestamp")))
-      .drop("__status", "__ts"))
+        coalesce(lookup(_._3).cast("timestamp"), col("approval_timestamp"))))
   }
 
   /** O1 — CSV scan with validation: header-only schema, all strings;
-    * empty or headerless files raise (process-pipeline.py:334-337,
-    * Spark would otherwise return an empty frame silently).
+    * empty or headerless files and files without data rows raise
+    * (process-pipeline.py:334-337, Spark would otherwise return an
+    * empty frame silently). The driver reads the file's first non-blank
+    * line, the header, and checks that a non-blank line follows; Spark's
+    * own CSV reader parses the header from a local Dataset (no job), and
+    * the file is then read with that all-string schema, so neither the
+    * header nor the emptiness check costs a job.
     */
   def readLandedCsv(bucket: String, objectPath: String): DataFrame = {
-    val path = s"$landingRoot/$bucket/$objectPath"
-    val df = spark.read.option("header", "true").csv(path)
-    if (df.columns.isEmpty || df.columns.forall(_.startsWith("_c")))
+    val path = new Path(s"$landingRoot/$bucket/$objectPath")
+    val in = new BufferedReader(new InputStreamReader(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path), UTF_8))
+    val (header, hasRows) = try {
+      // blank as Spark's CSV reader counts it when it skips lines
+      val lines = Iterator.continually(in.readLine())
+        .takeWhile(_ != null).filter(_.trim.nonEmpty)
+      val h = lines.nextOption()
+      (h, lines.hasNext)
+    } finally in.close()
+    import spark.implicits._
+    val schema = header.fold(new StructType())(h =>
+      spark.read.option("header", "true").csv(Seq(h).toDS()).schema)
+    if (schema.isEmpty || schema.fieldNames.forall(_.startsWith("_c")))
       throw new IllegalArgumentException("CSV file is empty or invalid")
-    df
+    if (!hasRows)
+      throw new IllegalArgumentException("CSV file contains no data rows")
+    spark.read.option("header", "true").schema(schema).csv(path.toString)
   }
 
   /** O17 dispatch (+O9 DDL for non-delete) — process-pipeline.py:317-364. */
@@ -269,8 +299,6 @@ final class Pipeline(
       objectPath: String, tableName: String, eventId: String,
       approvalTs: String): Unit = {
     val data = readLandedCsv(bucket, objectPath)
-    if (data.isEmpty)
-      throw new IllegalArgumentException("CSV file contains no data rows")
     val ordered = data.columns.toSeq // header order = batch order (O2)
     // in-batch order: the reference applies rows in file order; tag it
     // before any shuffle so keep-first/keep-last dedup stays file-ordered
@@ -280,13 +308,13 @@ final class Pipeline(
     val pks = catalog.primaryKey(tableName)
     operation match {
       case Operation.Insert =>
-        mutateData(tableName, withOrd, pks) { current =>
+        mutateData(tableName, pks, bucketsOf(withOrd, pks, _)) { current =>
           MutationOps.insertIgnoreDups(
             current, withOrd.select((ordered :+ "__ord").map(col): _*),
             pks, col("__ord")).select(ordered.map(col): _*)
         }
       case Operation.Update =>
-        mutateData(tableName, withOrd, pks) { current =>
+        mutateData(tableName, pks, bucketsOf(withOrd, pks, _)) { current =>
           MutationOps.upsertByPk(current, withOrd, pks, col("__ord"))
             .select(ordered.map(col): _*)
         }
@@ -304,19 +332,17 @@ final class Pipeline(
 
   /** Read-merge-overwrite a data table through the narrowest commit the
     * catalog's layout allows: with a registered PK-hash bucket layout,
-    * only the buckets containing `keyRows`' keys are read and
+    * only the buckets `touchedBuckets(bucketCount)` names are read and
     * rewritten (the first such mutation migrates the table into the
     * layout); otherwise the whole-table rewrite — the honest fallback
     * when no key partitioning exists.
     */
-  private def mutateData(tableName: String, keyRows: DataFrame,
-      pks: Seq[String])(mutate: DataFrame => DataFrame): Unit = {
+  private def mutateData(tableName: String, pks: Seq[String],
+      touchedBuckets: Int => Seq[Int])(mutate: DataFrame => DataFrame): Unit = {
     catalog.bucketCount(tableName) match {
       case Some(n) if pks.nonEmpty =>
         if (catalog.hasBucketManifest(tableName)) {
-          val touched = keyRows
-            .select(catalog.bucketOf(pks, n).as("__b"))
-            .distinct().collect().map(_.getInt(0)).toSeq
+          val touched = touchedBuckets(n)
           catalog.overwriteBuckets(tableName,
             mutate(catalog.readBuckets(tableName, touched)), touched)
         } else {
@@ -326,6 +352,15 @@ final class Pipeline(
       case _ =>
         catalog.overwrite(tableName, mutate(catalog.read(tableName)))
     }
+  }
+
+  /** Distinct buckets of `rows`' keys in one job with no shuffle: each
+    * partition dedups its own bucket ids and the driver merges them.
+    */
+  private def bucketsOf(rows: DataFrame, pks: Seq[String], n: Int): Seq[Int] = {
+    import spark.implicits._
+    rows.select(catalog.bucketOf(pks, n)).as[Int]
+      .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
   }
 
   // ---------------------------------------------------------------- E4
@@ -349,16 +384,16 @@ final class Pipeline(
           case Nil => rows.head.getMap[String, String](2).keys.toSeq.sorted
           case p => p
         }
-        val keySchema = org.apache.spark.sql.types.StructType(pks.map(p =>
-          org.apache.spark.sql.types.StructField(p, org.apache.spark.sql.types.StringType)))
+        val keySchema = StructType(pks.map(StructField(_, StringType)))
         val keyRows = rows.toSeq.map { r =>
           val m = r.getMap[String, String](2)
-          org.apache.spark.sql.Row.fromSeq(pks.map(p => m.getOrElse(p, null)))
+          pks.map(p => m.getOrElse(p, null))
         }
-        val keys = spark.createDataFrame(
-          spark.sparkContext.parallelize(keyRows, 1), keySchema)
+        // a local relation: the planner knows its size and broadcasts
+        // the keys into the anti-join instead of shuffling the buckets
+        val keys = spark.createDataFrame(keyRows.map(Row.fromSeq).asJava, keySchema)
         if (catalog.exists(table)) {
-          mutateData(table, keys, pks)(current =>
+          mutateData(table, pks, _ => catalog.bucketsOfKeys(table, keyRows))(current =>
             MutationOps.deleteByPk(current, keys, pks))
           executed ++= rows.map(_.getLong(0))
         } else {

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftbridge.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,9 +18,24 @@ object SparkTestBase {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Local property that tags the jobs a [[SparkTestBase.countJobs]]
+    * body starts (child threads such as broadcast futures inherit it).
+    */
+  private val JobTag = "graft.test.jobTag"
+  private val jobsByTag = new ConcurrentHashMap[String, AtomicInteger]()
+  private lazy val jobListener: Unit = spark.sparkContext.addSparkListener(
+    new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(JobTag)))
+          .foreach(t => jobsByTag.computeIfAbsent(t, _ => new AtomicInteger)
+            .incrementAndGet())
+    })
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
+  import SparkTestBase._
+
   lazy val spark: SparkSession = {
     val s = SparkTestBase.spark
     s.sparkContext.setLogLevel("WARN")
@@ -23,4 +43,22 @@ abstract class SparkTestBase extends AnyFunSuite {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Delivers every queued listener event before returning. */
+  def drainListenerBus(): Unit = ListenerBusBridge.drain(spark.sparkContext)
+
+  /** Runs `body` and counts the Spark jobs it started: its jobs carry a
+    * fresh tag, so jobs of other threads are not counted.
+    */
+  def countJobs[T](body: => T): (T, Int) = {
+    jobListener
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val outer = sc.getLocalProperty(JobTag)
+    sc.setLocalProperty(JobTag, tag)
+    val result = try body finally sc.setLocalProperty(JobTag, outer)
+    drainListenerBus()
+    val n = Option(jobsByTag.remove(tag)).map(_.get).getOrElse(0)
+    (result, n)
+  }
 }

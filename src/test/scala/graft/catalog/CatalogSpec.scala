@@ -1,8 +1,10 @@
 package graft.catalog
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.model.{DeleteControl, ProcessedFile}
 
 class CatalogSpec extends SparkTestBase {
   import spark.implicits._
@@ -548,5 +550,88 @@ class CatalogSpec extends SparkTestBase {
     val one = cat.lookupByPk("t", Seq("7"))
     assert(one.count() == 1)
     assert(one.inputFiles.length == 1)
+  }
+
+  test("plain reads are pinned to the schema of the version they resolve") {
+    val root = tmpDir("catpin")
+    val cat = new Catalog(spark, root)
+    // a pinned read runs no schema-inference job and has the schema
+    // inference would give
+    def assertPinned(c: Catalog, t: String): Unit = {
+      val (df, jobs) = countJobs(c.read(t))
+      val inferred = spark.read.parquet(s"$root/$t/${c.currentVersion(t)}").schema
+      assert(jobs == 0 && df.schema == inferred, s"$t: $jobs jobs, ${df.schema} vs $inferred")
+    }
+    val ts = java.sql.Timestamp.valueOf("2026-01-02 03:04:05")
+    // control schemas: bigint, string, boolean, timestamp, map<string,string>
+    cat.createIfAbsent("deletes", DeleteControl.schema)
+    assertPinned(cat, "deletes")
+    cat.append("deletes", spark.createDataFrame(java.util.List.of(
+      Row(1L, "e1", "q", true, false, ts, null, "t", Map("id" -> "1"))),
+      DeleteControl.schema))
+    assertPinned(cat, "deletes")
+    cat.createIfAbsent("files", ProcessedFile.schema)
+    cat.append("files", spark.createDataFrame(java.util.List.of(
+      Row("f.csv", "e1", 1L, false, "b", "insert", "pending", null)),
+      ProcessedFile.schema))
+    assertPinned(cat, "files")
+    // a derived frame with non-nullable columns reads back nullable
+    cat.overwrite("files", cat.read("files").withColumn("is_processed", lit(true)))
+    assertPinned(cat, "files")
+    assert(cat.read("files").select("is_processed").as[Boolean].collect().toSeq == Seq(true))
+
+    // all-string tables through every plain commit path
+    val rows = (1 to 50).map(i => (i.toString, s"v$i")).toDF("id", "v")
+    cat.createIfAbsent("s", cat.allStringSchema(Seq("id", "v")), Seq("id"))
+    assertPinned(cat, "s")
+    cat.append("s", rows)
+    assertPinned(cat, "s")
+    cat.overwrite("s", rows)
+    assertPinned(cat, "s")
+    cat.overwriteSorted("s", rows, Seq("id"))
+    assertPinned(cat, "s")
+    cat.overwriteWithBloom("s", rows, Seq("id"), expectedNdv = 50)
+    assertPinned(cat, "s")
+    cat.overwriteZOrdered("z", (1 to 50).map(i => (i.toLong, (i % 7).toLong, s"v$i"))
+      .toDF("x", "y", "v"), Seq("x", "y"), bits = 2, numPartitions = Some(2))
+    assertPinned(cat, "z")
+
+    // an overwrite that adds a column is read with the new schema
+    cat.overwrite("s", rows.withColumn("w", lit("new")))
+    assertPinned(cat, "s")
+    assert(cat.read("s").columns.toSeq == Seq("id", "v", "w"))
+    assert(cat.read("s").filter($"id" === "7").select("w").as[String].head() == "new")
+
+    // a version another Catalog on the same root committed is pinned
+    // from its footer, never read with the old schema; so is every
+    // table a fresh Catalog reads first
+    new Catalog(spark, root).overwrite("s", rows.withColumn("n", lit(1L)))
+    assertPinned(cat, "s")
+    assert(cat.read("s").columns.toSeq == Seq("id", "v", "n"))
+    val fresh = new Catalog(spark, root)
+    Seq("deletes", "files", "s", "z").foreach(assertPinned(fresh, _))
+
+    // partitioned versions always infer, also on later reads
+    cat.overwritePartitioned("p", rows.withColumn("part", $"id" % 3), Seq("part"))
+    assert(countJobs(cat.read("p"))._2 == 1 && countJobs(cat.read("p"))._2 == 1)
+    assert(cat.read("p").count() == 50)
+  }
+
+  test("append keeps the replaced version's file count (default openCostInBytes)") {
+    // every small file is its own read partition, so a union of the
+    // current version and the batch would write one file more per append
+    val cat = new Catalog(spark, tmpDir("catfiles"))
+    def files(t: String) = cat.read(t).inputFiles.length
+    cat.createIfAbsent("one", cat.allStringSchema(Seq("id")))
+    cat.overwrite("three", (1 to 30).map(_.toString).toDF("id").repartition(3))
+    val start = Map("one" -> files("one"), "three" -> files("three"))
+    assert(start == Map("one" -> 1, "three" -> 3))
+    (1 to 3).foreach { i =>
+      Seq("one", "three").foreach { t =>
+        cat.append(t, Seq(s"a$i").toDF("id"))
+        assert(files(t) == start(t), s"$t after append $i")
+      }
+    }
+    assert(cat.read("one").count() == 3 && cat.read("three").count() == 33)
   }
 }

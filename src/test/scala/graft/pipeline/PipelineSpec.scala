@@ -173,6 +173,37 @@ class PipelineSpec extends SparkTestBase {
     assert(notifier.sent.last.subject.contains("FAILURE"))
   }
 
+  test("CSV probe: header-only and blank-tailed files have no rows, an empty file is invalid") {
+    val (p, notifier, landing) = freshPipeline()
+    def failure(file: String, csv: String): String = {
+      land(landing, "b1", s"insert/$file", csv)
+      intercept[IllegalArgumentException](p.readLandedCsv("b1", s"insert/$file")).getMessage
+    }
+    assert(failure("header.csv", "id,name\n") == "CSV file contains no data rows")
+    assert(failure("blank.csv", "id,name\n\n   \n\n") == "CSV file contains no data rows")
+    assert(failure("empty.csv", "") == "CSV file is empty or invalid")
+    assert(failure("blanks.csv", "\n  \n") == "CSV file is empty or invalid")
+    // the approval path reports the probe's message
+    p.registerArrival(FileEvent("b1", "insert/header.csv", "ev1"))
+    p.processApproval(approval("ev1", "approve", "insert", file = "header.csv", table = "header"))
+    assert(notifier.sent.last.bodyHtml.contains("CSV file contains no data rows"))
+    assert(!p.catalog.exists("header"))
+  }
+
+  test("CSV probe: quoted and duplicated header names match Spark's CSV reader") {
+    val (p, _, landing) = freshPipeline()
+    for ((file, csv) <- Seq(
+        "quoted.csv" -> "\"id,key\",name\n\"1,2\",alice\n\n3,bob\n",
+        "dupes.csv" -> "id,name,name,\n1,a,b,c\n2,d,e,f\n")) {
+      land(landing, "b1", s"insert/$file", csv)
+      val got = p.readLandedCsv("b1", s"insert/$file")
+      val want = spark.read.option("header", "true")
+        .csv(Paths.get(landing, "b1", "insert", file).toString)
+      assert(got.schema == want.schema, s"$file: ${got.schema} vs ${want.schema}")
+      assert(got.collect().toSeq == want.collect().toSeq)
+    }
+  }
+
   test("batch approvals: N events, ONE control-table commit, per-event semantics") {
     val landing = tmpDir("landing")
     val notifier = new InMemoryNotifier
