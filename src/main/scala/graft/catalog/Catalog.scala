@@ -9,6 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, hash, lit, pmod, shiftright, sum, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
+import graft.functions.StagedSwap
+
 /** Transactional Parquet table layer — the one genuinely custom piece of
   * storage machinery (SURVEY §4): no lakehouse-format jar ships with the
   * image, so tables are plain Parquet directories plus a JSON metadata
@@ -41,14 +43,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   * and silently drop a commit — the reference never faced this because
   * Postgres gave it transactions. Each mutation therefore also holds a
   * per-table `_commit.lock` file for its whole read→write→flip span,
-  * acquired create-exclusive (atomic on the local FS via O_EXCL and on
-  * HDFS via the namenode; the same lock-file protocol HDFS-backed
-  * lakehouse formats use for their commit protocol). A crashed holder's
-  * lock goes stale after `lockStaleMs` and is broken by renaming it
-  * aside (rename is the atomic claim — only one breaker wins) — size
-  * `lockStaleMs` above your slowest expected commit, since a breaker
-  * can't tell a dead holder from a slow one. Acquisition waits up to
-  * `lockTimeoutMs` then fails loudly rather than deadlocking a job.
+  * through [[graft.functions.StagedSwap.withFileLock]] (the protocol —
+  * acquire, stale-break, owned release — is described there).
+  * Acquisition waits up to `lockTimeoutMs`; a lock older than
+  * `lockStaleMs` is taken as a crashed holder's, so size it above your
+  * slowest expected commit.
   *
   * Pinned read schemas: a version directory is immutable, so the schema
   * of its files is fixed the moment it is committed. A read of a plain
@@ -73,9 +72,10 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
 
   // tables whose _commit.lock THIS instance's current mutation already
   // holds — mutators call each other (compact → commitBuckets,
-  // overwriteCoLocated → saveCoLocated) and the file lock, unlike
-  // `synchronized`, is not reentrant. Only touched under the instance
-  // monitor (every locked() body runs synchronized), so a plain Set.
+  // migrateToCoLocated → saveCoLocated, every commit → vacuum) and the
+  // file lock, unlike `synchronized`, is not reentrant. Only touched
+  // under the instance monitor (every locked() body runs synchronized),
+  // so a plain Set.
   private val heldLocks = scala.collection.mutable.Set.empty[String]
 
   // table -> (version dir name, schema of that version's files); see the
@@ -84,84 +84,16 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   private val pinnedSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
-  /** Atomic create-exclusive of the lock file: O_EXCL via NIO on the
-    * local FS (Hadoop's RawLocalFileSystem `create(…, overwrite=false)`
-    * is check-then-act, NOT atomic); `FileSystem.create` elsewhere,
-    * where the namenode makes it atomic. Returns false when the lock is
-    * already held.
+  /** The table's cross-process commit lock around a mutation's whole
+    * read→write→pointer-flip span, reentrant within this instance.
     */
-  private def tryAcquire(lock: Path): Boolean = {
-    val content = s"""{"pid":${ProcessHandle.current().pid()},"epochMs":${System.currentTimeMillis()}}"""
-    if (fs.getScheme == "file") {
-      val f = new java.io.File(fs.makeQualified(lock).toUri.getPath)
-      try {
-        if (!f.createNewFile()) false
-        else {
-          val out = new java.io.FileOutputStream(f)
-          try out.write(content.getBytes("UTF-8")) finally out.close()
-          true
-        }
-      } catch { case _: java.io.IOException => false }
-    } else {
-      try {
-        val out = fs.create(lock, false)
-        try out.write(content.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
+  private def withTableLock[T](name: String)(body: => T): T =
+    if (heldLocks(name)) body
+    else StagedSwap.withFileLock(spark, lockFile(name).toString,
+        staleMs = lockStaleMs, timeoutMs = lockTimeoutMs) {
+      heldLocks += name
+      try body finally heldLocks -= name
     }
-  }
-
-  /** Cross-process per-table mutual exclusion around a mutation's whole
-    * read→write→pointer-flip span. Reentrant within this instance. A
-    * lock older than `lockStaleMs` (crashed holder) is broken by
-    * renaming it to a unique grave name first — rename succeeds for
-    * exactly one breaker, so two processes can't both "delete stale,
-    * create fresh" and end up holding the lock together.
-    */
-  private def withTableLock[T](name: String)(body: => T): T = {
-    if (heldLocks(name)) return body
-    val lock = lockFile(name)
-    fs.mkdirs(tableDir(name))
-    val deadline = System.currentTimeMillis() + lockTimeoutMs
-    var acquired = tryAcquire(lock)
-    while (!acquired) {
-      val heldSinceMs = try {
-        Some(System.currentTimeMillis() -
-          fs.getFileStatus(lock).getModificationTime)
-      } catch { case _: java.io.FileNotFoundException => None }
-      if (heldSinceMs.exists(_ > lockStaleMs)) {
-        val grave = new Path(lock.getParent,
-          s".${lock.getName}.stale.${java.util.UUID.randomUUID().toString.take(8)}")
-        // the rename RETURN decides who wins the break race (checked);
-        // the grave delete is best-effort cleanup of an already-
-        // neutralized tombstone — a leftover .stale.* file is not live
-        // state and never consulted again
-        try { if (fs.rename(lock, grave)) fs.delete(grave, false) }
-        catch { case _: java.io.IOException => () }
-      } else if (System.currentTimeMillis() > deadline) {
-        throw new IllegalStateException(
-          s"could not acquire commit lock for table $name within " +
-            s"${lockTimeoutMs}ms — another writer holds $lock " +
-            s"(held ${heldSinceMs.getOrElse(0L)}ms; breaks as stale after " +
-            s"${lockStaleMs}ms if its holder crashed)")
-      } else Thread.sleep(25 + scala.util.Random.nextInt(50))
-      acquired = tryAcquire(lock)
-    }
-    heldLocks += name
-    try body
-    finally {
-      heldLocks -= name
-      // must not throw (finally would mask the body's exception) but
-      // must not be SILENT either: a false return leaves the lock held
-      // and every writer stalled until the stale-break window passes
-      try {
-        if (!fs.delete(lock, false) && fs.exists(lock))
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"could not release commit lock $lock — writers on this " +
-              s"table stall until the ${lockStaleMs}ms stale-break")
-      } catch { case _: java.io.IOException => () }
-    }
-  }
 
   /** Every public mutation runs under BOTH the instance monitor
     * (in-JVM serialization, reentrancy guard) and the table's
@@ -178,14 +110,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * order (13-digit millis until year 2286). Crash-recovery fallback
     * only: the pointer file is the normal resolution path.
     */
-  private def latestVersionDir(name: String): Option[Path] = {
-    if (!fs.exists(tableDir(name))) return None
-    fs.listStatus(tableDir(name)).toSeq
-      .filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("v"))
-      .filter(isCommitted)
-      .sortBy(_.getName).lastOption
-  }
+  private def latestVersionDir(name: String): Option[Path] =
+    versions(name).lastOption.map(new Path(tableDir(name), _))
 
   /** A version directory counts as a completed commit only when its
     * parquet job finished (`_SUCCESS`) and, if it holds bucket
@@ -202,19 +128,17 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
         s.isDirectory && s.getPath.getName.startsWith("__b=")) ||
       fs.exists(manifestFile(dir)))
 
-  private def currentVersionDir(name: String): Path = {
-    if (!fs.exists(pointerFile(name))) {
-      // a crash exactly between pointer delete and rename (pre-overwrite-
-      // rename code) or a half-written pointer must not brick the table:
-      // fall back to the newest fully-written version directory (data
-      // dirs are always materialized before the pointer flips).
-      return latestVersionDir(name).getOrElse(
+  private def currentVersionDir(name: String): Path =
+    StagedSwap.readSmallFile(spark, pointerFile(name).toString) match {
+      case Some(v) => new Path(tableDir(name), v.trim)
+      // a crash exactly between pointer delete and rename (the delete+
+      // rename fallback of writeAtomic) or a half-written pointer must
+      // not brick the table: fall back to the newest fully-written
+      // version directory (data dirs are always materialized before the
+      // pointer flips).
+      case None => latestVersionDir(name).getOrElse(
         throw new IllegalStateException(s"table $name has no versions"))
     }
-    val in = fs.open(pointerFile(name))
-    val v = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    new Path(tableDir(name), v)
-  }
 
   def read(name: String): DataFrame = {
     require(exists(name), s"table $name does not exist")
@@ -412,14 +336,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     // column before appending (range-repartition + sort), so row-group
     // min/max stats prune instead — see appendLogClustered.
     df.write.mode("overwrite").parquet(dataDir.toString)
-    val refs = prev + ((prev.keySet + (-1)).max + 1 -> version)
-    val json = mapper.writeValueAsString(Map(
-      "schemaDDL" -> unionSchema.toDDL,
-      "buckets" -> refs.map { case (k, v) => k.toString -> v }))
-    writeAtomic(manifestFile(dataDir), json)
-    writeAtomic(pointerFile(name), version)
-    if (!fs.exists(metaFile(name))) writeMeta(name, primaryKey(name))
-    pruneUnreferenced(name)
+    commitManifest(name, version, unionSchema.toDDL,
+      prev + ((prev.keySet + (-1)).max + 1 -> version))
   }
 
   /** appendLog with the batch range-clustered on `clusterCols`: each
@@ -463,12 +381,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val version = newVersionName()
     val dataDir = new Path(tableDir(name), version)
     df.write.mode("overwrite").parquet(dataDir.toString)
-    val json = mapper.writeValueAsString(Map(
-      "schemaDDL" -> df.schema.toDDL,
-      "buckets" -> Map("0" -> version)))
-    writeAtomic(manifestFile(dataDir), json)
-    writeAtomic(pointerFile(name), version)
-    pruneUnreferenced(name)
+    commitManifest(name, version, df.schema.toDDL, Map(0 -> version))
   }
 
   /** Overwrite with hive-style partition directories (`col=value/…`).
@@ -748,11 +661,12 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     // files so readCoLocated can re-attach the metadata from ANY
     // SparkSession (another session in this JVM, or a later process
     // pointed at the same root) instead of failing table-not-found.
-    writeAtomic(coLocatedSpecFile(name), mapper.writeValueAsString(Map(
-      "schemaDDL" -> df.schema.toDDL,
-      "bucketCols" -> bucketCols,
-      "sortCols" -> sort,
-      "numBuckets" -> numBuckets)))
+    StagedSwap.writeAtomic(spark, coLocatedSpecFile(name).toString,
+      mapper.writeValueAsString(Map(
+        "schemaDDL" -> df.schema.toDDL,
+        "bucketCols" -> bucketCols,
+        "sortCols" -> sort,
+        "numBuckets" -> numBuckets)))
   }
 
   /** Read a co-located table WITH its bucket metadata attached (a plain
@@ -765,13 +679,10 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   def readCoLocated(name: String): DataFrame = synchronized {
     val ident = coLocatedIdent(name)
     if (!spark.catalog.tableExists(ident)) {
-      val f = coLocatedSpecFile(name)
-      if (!fs.exists(f))
-        throw new IllegalStateException(
-          s"no co-located table '$name' under $root")
-      val in = fs.open(f)
-      val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      val node = mapper.readTree(txt)
+      val node = mapper.readTree(
+        StagedSwap.readSmallFile(spark, coLocatedSpecFile(name).toString)
+          .getOrElse(throw new IllegalStateException(
+            s"no co-located table '$name' under $root")))
       def cols(field: String) = node.get(field).elements.asScala
         .map(n => s"`${n.asText()}`").mkString(", ")
       spark.sql(
@@ -834,17 +745,14 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   private def readManifest(name: String): Option[Manifest] =
     readManifestAt(currentVersionDir(name))
 
-  private def readManifestAt(versionDir: Path): Option[Manifest] = {
-    val mf = manifestFile(versionDir)
-    if (!fs.exists(mf)) return None
-    val in = fs.open(mf)
-    val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-    val node = mapper.readTree(txt)
-    val b = node.get("buckets")
-    Some(Manifest(
-      b.fieldNames.asScala.map(k => k.toInt -> b.get(k).asText()).toMap,
-      node.get("schemaDDL").asText()))
-  }
+  private def readManifestAt(versionDir: Path): Option[Manifest] =
+    StagedSwap.readSmallFile(spark, manifestFile(versionDir).toString).map { txt =>
+      val node = mapper.readTree(txt)
+      val b = node.get("buckets")
+      Manifest(
+        b.fieldNames.asScala.map(k => k.toInt -> b.get(k).asText()).toMap,
+        node.get("schemaDDL").asText())
+    }
 
   private def commitBuckets(name: String, df: DataFrame,
       prev: Map[Int, String], touched: Seq[Int]): Unit = {
@@ -860,14 +768,21 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val written = fs.listStatus(dataDir).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("__b="))
       .map(d => d.stripPrefix("__b=").toInt -> s"$version/$d").toMap
-    val refs = (prev -- touched) ++ written
-    val json = mapper.writeValueAsString(Map(
-      "schemaDDL" -> df.schema.toDDL, "buckets" -> refs.map {
-        case (k, v) => k.toString -> v
-      }))
-    writeAtomic(manifestFile(dataDir), json)
-    writeAtomic(pointerFile(name), version)
-    if (!fs.exists(metaFile(name))) writeMeta(name, pks)
+    commitManifest(name, version, df.schema.toDDL, (prev -- touched) ++ written)
+  }
+
+  /** Commit a manifest version whose data dir is written: the manifest
+    * lands in the version dir, then the pointer flips to it.
+    */
+  private def commitManifest(name: String, version: String, schemaDDL: String,
+      refs: Map[Int, String]): Unit = {
+    StagedSwap.writeAtomic(spark,
+      manifestFile(new Path(tableDir(name), version)).toString,
+      mapper.writeValueAsString(Map(
+        "schemaDDL" -> schemaDDL,
+        "buckets" -> refs.map { case (k, v) => k.toString -> v })))
+    StagedSwap.writeAtomic(spark, pointerFile(name).toString, version)
+    if (!fs.exists(metaFile(name))) writeMeta(name, primaryKey(name))
     pruneUnreferenced(name)
   }
 
@@ -930,12 +845,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       case Some(pks) => (0 until pks.size()).map(i => pks.get(i).asText())
     }
 
-  private def readMetaNode(name: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    if (!fs.exists(metaFile(name))) return None
-    val in = fs.open(metaFile(name))
-    val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-    Some(mapper.readTree(txt))
-  }
+  private def readMetaNode(name: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+    StagedSwap.readSmallFile(spark, metaFile(name).toString).map(mapper.readTree)
 
   def registerPrimaryKey(name: String, pks: Seq[String]): Unit =
     locked(name) { writeMeta(name, pks) }
@@ -957,7 +868,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val m: Map[String, Any] = Map("primaryKey" -> pks) ++
       bc.map(n => "bucketCount" -> n) ++
       (if (cs.nonEmpty) Map("constraints" -> cs) else Map.empty)
-    writeAtomic(metaFile(name), mapper.writeValueAsString(m))
+    StagedSwap.writeAtomic(spark, metaFile(name).toString, mapper.writeValueAsString(m))
   }
 
   /** Registered CHECK constraints: label → boolean SQL expression. */
@@ -1012,7 +923,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val writer = if (partitionCols.nonEmpty)
       writer0.partitionBy(partitionCols: _*) else writer0
     writer.mode("overwrite").parquet(dataDir.toString)
-    writeAtomic(pointerFile(name), version)
+    StagedSwap.writeAtomic(spark, pointerFile(name).toString, version)
     if (partitionCols.isEmpty)
       pinnedSchemas.put(name, (version, asNullable(df.schema).asInstanceOf[StructType]))
     if (pks.nonEmpty || !fs.exists(metaFile(name))) writeMeta(name, pks)
@@ -1029,34 +940,5 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
       valueContainsNull = true)
     case other => other
-  }
-
-  /** Write-temp + rename-with-OVERWRITE: FileContext.rename(…, OVERWRITE)
-    * replaces the target in one atomic step on local FS and HDFS — no
-    * delete-then-rename window in which a crash would leave the table
-    * with no pointer at all (currentVersionDir's newest-version fallback
-    * covers tables written by the older two-step code).
-    *
-    * FileContext requires an AbstractFileSystem binding
-    * (`fs.AbstractFileSystem.<scheme>.impl`), which object-store
-    * deployments don't always ship. Fall back to delete+rename there:
-    * that reopens the tiny no-pointer window, but currentVersionDir's
-    * newest-committed-version fallback makes a crash inside it
-    * recoverable, not fatal (CrashFaultSpec pins exactly this).
-    */
-  private def writeAtomic(target: Path, content: String): Unit = {
-    val tmp = new Path(target.getParent, s".${target.getName}.tmp${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (fs.exists(target)) fs.delete(target, false)
-        if (!fs.rename(tmp, target))
-          throw new java.io.IOException(s"rename $tmp -> $target failed")
-    }
   }
 }

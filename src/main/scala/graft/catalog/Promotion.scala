@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *  4. commits through the target catalog's normal path: the TARGET's
   *     own registered CHECK constraints still fire (an environment
   *     keeps its own invariants), data materializes fully BEFORE the
-  *     pointer flips (writeAtomic), and the previous version stays
-  *     time-travelable under the target's retention.
+  *     pointer flips (StagedSwap.writeAtomic), and the previous version
+  *     stays time-travelable under the target's retention.
   *
   * Any gate violation (or target-constraint violation inside commit)
   * throws BEFORE the target pointer moves — rejection is free of

@@ -9,7 +9,7 @@ package graft
   * reference's GCS read path, process-pipeline.py:320-326).
   *
   * Registered via `fs.rawspec.impl`; deliberately NO
-  * `fs.AbstractFileSystem.rawspec.impl`, so Catalog.writeAtomic's
+  * `fs.AbstractFileSystem.rawspec.impl`, so StagedSwap.writeAtomic's
   * FileContext-unavailable fallback is the code path under test.
   */
 class RawSpecFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {

@@ -521,6 +521,33 @@ class CatalogSpec extends SparkTestBase {
     assert(!lock.exists(), "broken stale lock must not linger")
   }
 
+  test("commit lock: release leaves a lock another writer took over in place") {
+    // A holder whose lock was stale-broken and re-acquired by another
+    // writer must not delete the new holder's lock on release: that
+    // would let a third writer in mid-commit.
+    val root = tmpDir("cattoken")
+    val lock = java.nio.file.Paths.get(root, "t", "_commit.lock")
+    var takeOver = false
+    val cat = new Catalog(spark, root) {
+      // append reads the primary key inside its locked span
+      override def primaryKey(name: String): Seq[String] = {
+        if (takeOver) {
+          takeOver = false
+          java.nio.file.Files.writeString(lock, """{"token":"other"}""")
+        }
+        super.primaryKey(name)
+      }
+    }
+    cat.createIfAbsent("t", cat.allStringSchema(Seq("id")), Nil)
+    takeOver = true
+    cat.append("t", Seq("x").toDF("id"))
+    assert(!takeOver, "the lock was never replaced inside the commit")
+    assert(java.nio.file.Files.exists(lock) &&
+      java.nio.file.Files.readString(lock).contains("\"token\":\"other\""),
+      "release must leave a lock owned by another writer in place")
+    assert(cat.read("t").as[String].collect().toSeq == Seq("x"))
+  }
+
   test("compact rewrites fragmented buckets to one file each, data intact") {
     val cat = new Catalog(spark, tmpDir("catcompact"))
     val n = 4
