@@ -5,8 +5,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, expr, hash, lit, pmod, shiftright, sum, when}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, expr, hash, input_file_name, lit, pmod, shiftright, sum, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
 import graft.functions.StagedSwap
@@ -149,14 +149,20 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     }
   }
 
-  /** Read a plain version dir with its pinned schema; on a miss, pin the
-    * schema of one of its file footers (read on the driver, no job).
-    * A partitioned version, or one no Spark writer wrote, infers.
+  /** Read a plain version dir with its pinned schema. A partitioned
+    * version, or one no Spark writer wrote, infers.
     */
   private def readPlain(name: String, dir: Path): DataFrame =
+    pinnedSchema(name, dir)
+      .fold(spark.read.parquet(dir.toString))(s => spark.read.schema(s).parquet(dir.toString))
+
+  /** The schema of a plain version dir's files: pinned by the commit
+    * that wrote it or, on a miss, pinned from one of its file footers
+    * (read on the driver, no job).
+    */
+  private def pinnedSchema(name: String, dir: Path): Option[StructType] =
     Option(pinnedSchemas.get(name)).filter(_._1 == dir.getName).map(_._2)
       .orElse(footerSchema(dir).map { s => pinnedSchemas.put(name, (dir.getName, s)); s })
-      .fold(spark.read.parquet(dir.toString))(s => spark.read.schema(s).parquet(dir.toString))
 
   /** The Spark schema a writer stores in every file footer of a version
     * dir, made nullable as the reader makes it. None when the dir holds
@@ -166,16 +172,27 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   private def footerSchema(dir: Path): Option[StructType] = {
     val entries = fs.listStatus(dir)
     if (entries.exists(_.isDirectory)) return None
-    entries.map(_.getPath).find(_.getName.startsWith("part-")).flatMap { file =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          file, spark.sparkContext.hadoopConfiguration))
-      val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData
-        finally reader.close()
-      Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
+    partFiles(dir).headOption.flatMap { file =>
+      Option(footer(file).getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
         .map(json => asNullable(DataType.fromJson(json)).asInstanceOf[StructType])
     }
   }
+
+  private def partFiles(dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+
+  /** A parquet file's footer, read on the driver. */
+  private def footer(file: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Rows in a flat version dir, summed from its file footers (no job). */
+  private def rowCount(dir: Path): Long =
+    partFiles(dir).map(footer(_).getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Committed versions of a table, oldest → newest (version names are
     * `v<epochMillis>_<uuid8>`, so name order is commit order). With a
@@ -246,13 +263,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   def allStringSchema(headers: Seq[String]): StructType =
     StructType(headers.map(h => StructField(h, StringType)))
 
-  /** Append = read current + union + commit new version. Control tables
-    * are tiny (rows scale with file count, not data volume — SURVEY §7),
-    * so the rewrite is cheap; large data tables only ever commit whole
-    * new contents through overwrite(). The union is coalesced to the
-    * replaced version's file count: small files are one read partition
-    * each, so the union's extra batch partition would otherwise add a
-    * file per append.
+  /** Append = read current + union + commit new version: O(table) per
+    * append, for small tables that are also rewritten whole. A table that
+    * grows with every append — the pipeline's control tables grow with
+    * file events — appends through [[appendLog]], which costs the batch.
+    * The union is coalesced to the replaced version's file count: small
+    * files are one read partition each, so the union's extra batch
+    * partition would otherwise add a file per append.
     */
   def append(name: String, df: DataFrame): Unit = locked(name) {
     val merged = if (exists(name)) {
@@ -274,18 +291,14 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * updates, quadratic for append-only state). Readers still get ONE
     * multi-path scan via the manifest. Fragmentation from many small
     * appends is maintenance: `compactLog` folds the refs back into one
-    * directory.
+    * directory. A plain table becomes a log on its first appendLog: its
+    * current version dir is adopted as ref 0, as it stands (see
+    * [[logManifest]]).
     */
   def appendLog(name: String, df: DataFrame,
       evolveSchema: Boolean = false): Unit = locked(name) {
-    require(bucketCount(name).isEmpty,
-      s"$name has a PK-bucket layout; its manifest keys are bucket ids, not log refs")
     validateConstraints(name, df) // the BATCH only — appends stay O(batch)
-    val prevManifest: Option[Manifest] = if (exists(name))
-      Some(readManifest(name).getOrElse(
-        throw new IllegalStateException(
-          s"$name is a plain table; appendLog requires a log/manifest table")))
-    else None
+    val prevManifest = logManifest(name)
     // the manifest's schemaDDL reads EVERY historical ref, so a batch
     // with a renamed/retyped column would silently null out history —
     // fail fast on drift instead (nullability may differ; names+types
@@ -300,12 +313,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       case Some(m) =>
         val stored = StructType.fromDDL(m.schemaDDL)
         if (!evolveSchema) {
-          val compatible = stored.length == df.schema.length &&
-            stored.fields.zip(df.schema.fields).forall { case (a, b) =>
-              // .sql ignores nullability (incl. nested containsNull) —
-              // exactly the drift classes that matter are name + type
-              a.name == b.name && a.dataType.sql == b.dataType.sql }
-          require(compatible,
+          require(sameColumns(stored, df.schema),
             s"appendLog schema drift for $name: table is [${stored.toDDL}], " +
               s"batch is [${df.schema.toDDL}] (pass evolveSchema=true to " +
               "accept column adds)")
@@ -336,8 +344,75 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     // column before appending (range-repartition + sort), so row-group
     // min/max stats prune instead — see appendLogClustered.
     df.write.mode("overwrite").parquet(dataDir.toString)
-    commitManifest(name, version, unionSchema.toDDL,
-      prev + ((prev.keySet + (-1)).max + 1 -> version))
+    commitManifest(name, version, unionSchema.toDDL, prev + (nextRef(prev) -> version))
+  }
+
+  private def nextRef(refs: Map[Int, String]): Int = (refs.keySet + (-1)).max + 1
+
+  /** Same column names and types in the same order. Nullability may
+    * differ: `.sql` ignores it, nested containsNull included, so exactly
+    * the drift classes that matter are name + type.
+    */
+  private def sameColumns(a: StructType, b: StructType): Boolean =
+    a.length == b.length && a.fields.zip(b.fields).forall { case (x, y) =>
+      x.name == y.name && x.dataType.sql == y.dataType.sql }
+
+  /** The log manifest of an existing table (None when it does not
+    * exist). A plain table is adopted as it stands: its current version
+    * dir becomes ref 0 under the schema its reads are pinned to, so no
+    * data is read or rewritten and no footer job runs; the caller's
+    * commit writes the manifest.
+    */
+  private def logManifest(name: String): Option[Manifest] = {
+    require(bucketCount(name).isEmpty,
+      s"$name has a PK-bucket layout; its manifest keys are bucket ids, not log refs")
+    if (!exists(name)) return None
+    val dir = currentVersionDir(name)
+    Some(readManifestAt(dir).getOrElse(Manifest(Map(0 -> dir.getName),
+      pinnedSchema(name, dir).getOrElse(throw new IllegalStateException(
+        s"$name version ${dir.getName} is partitioned or has no Spark schema; " +
+          "log refs must be flat parquet")).toDDL)))
+  }
+
+  /** UPDATE for a log table, in O(touched refs): under the commit lock,
+    * the refs holding rows that match `matching` are replaced by ONE new
+    * ref holding `f(their rows)`; every other ref is carried over as it
+    * is, so a status update to one event of a long log rewrites that
+    * event's ref, not the log. `f` sees every row of the replaced refs
+    * and must pass the rows it leaves alone through unchanged, keeping
+    * the table's columns; a result with no rows drops the ref. A plain
+    * table is adopted first, as by [[appendLog]].
+    *
+    * Finding the refs costs a job inside the lock. A caller whose own
+    * read of the table already found its rows passes what that read saw
+    * as `hint` (see [[Catalog.RefHint]]) and the rewrite runs only its
+    * write job. Either way the refs are resolved and read inside the
+    * lock, so a commit another writer landed after the caller's read is
+    * carried over, never lost.
+    */
+  def rewriteLog(name: String, matching: Column, hint: Option[Catalog.RefHint] = None)(
+      f: DataFrame => DataFrame): Unit = locked(name) {
+    val m = logManifest(name).getOrElse(
+      throw new IllegalArgumentException(s"table $name does not exist"))
+    val touched = hint match {
+      case Some(h) => m.refs.values.filter(r => h.hits(r) || !h.scanned(r)).toSet
+      case None => readRefs(name, m.refs.values.toSeq, m.schemaDDL).filter(matching)
+        .select(input_file_name()).as[String](Encoders.STRING)
+        .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+        .collect().map(Catalog.refOf).toSet
+    }
+    if (touched.nonEmpty) {
+      val out = f(readRefs(name, touched.toSeq, m.schemaDDL))
+      require(sameColumns(StructType.fromDDL(m.schemaDDL), out.schema),
+        s"rewriteLog schema drift for $name: table is [${m.schemaDDL}], " +
+          s"rewrite is [${out.schema.toDDL}]")
+      val version = newVersionName()
+      val dataDir = new Path(tableDir(name), version)
+      out.write.mode("overwrite").parquet(dataDir.toString)
+      val kept = m.refs.filterNot { case (_, r) => touched(r) }
+      commitManifest(name, version, m.schemaDDL,
+        if (rowCount(dataDir) == 0) kept else kept + (nextRef(m.refs) -> version))
+    }
   }
 
   /** appendLog with the batch range-clustered on `clusterCols`: each
@@ -518,8 +593,9 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   def hasBucketManifest(name: String): Boolean =
     exists(name) && readManifest(name).isDefined
 
-  /** Current bucket → data-directory map (empty when the table has no
-    * bucket manifest yet). Introspection for tools and tests.
+  /** The current manifest's refs: bucket → data directory for a bucket
+    * table, ref number → data directory for a log table (empty for a
+    * plain table). Introspection for tools, tests and fold policies.
     */
   def bucketRefs(name: String): Map[Int, String] =
     readManifest(name).map(_.refs).getOrElse(Map.empty)
@@ -941,4 +1017,23 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       valueContainsNull = true)
     case other => other
   }
+}
+
+object Catalog {
+
+  /** What a caller's own read of a log table saw of the rows a
+    * [[Catalog.rewriteLog]] changes, so that the rewrite finds their
+    * refs without a job: `scannedFiles` are the files of that read
+    * (`DataFrame.inputFiles`), `hitFiles` the files its matching rows
+    * came from (`input_file_name()`). The rewrite takes every ref holding
+    * a hit file and every live ref the read did not scan, since one
+    * committed after the read may hold matching rows too.
+    */
+  final case class RefHint(scannedFiles: Seq[String], hitFiles: Seq[String]) {
+    private[catalog] val scanned: Set[String] = scannedFiles.map(refOf).toSet
+    private[catalog] val hits: Set[String] = hitFiles.map(refOf).toSet
+  }
+
+  /** The ref (flat version dir) a data file of a log table lives in. */
+  private def refOf(file: String): String = new Path(file).getParent.getName
 }

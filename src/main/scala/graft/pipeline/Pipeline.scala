@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.catalog.Catalog
+import graft.catalog.Catalog.RefHint
 import graft.model._
 import graft.notify.Notifier
 import graft.ops.{MutationOps, PathOps}
@@ -46,6 +47,12 @@ final class Pipeline(
   val ControlTable = "processed_files"
   val DeleteControlTable = "delete_control"
 
+  // A control table is a log of immutable refs: an insert appends one, a
+  // status update rewrites only the refs holding its rows. Past this many
+  // refs a commit folds the log back into one, so reads stay one scan of
+  // a bounded number of dirs.
+  private[pipeline] val MaxControlRefs = 64
+
   private def nowIso(): String = Instant.now().toString
 
   /** Driver-side materialization of a CONTROL frame, capped: collects
@@ -75,6 +82,15 @@ final class Pipeline(
     catalog.createIfAbsent(DeleteControlTable, DeleteControl.schema)
   }
 
+  /** The INSERT of a control table, in O(batch): the rows land as one new
+    * ref (Catalog.appendLog), and the log is folded once it holds more
+    * than `MaxControlRefs` refs.
+    */
+  private def appendControl(table: String, rows: DataFrame): Unit = {
+    catalog.appendLog(table, rows)
+    if (catalog.bucketRefs(table).size > MaxControlRefs) catalog.compactLog(table)
+  }
+
   // ---------------------------------------------------------------- E1
 
   /** data-query.py:199-239 — register one object-arrival event, version
@@ -97,7 +113,7 @@ final class Pipeline(
     import spark.implicits._
     val row = Seq(ProcessedFile(fileName, ev.id, version,
       is_processed = false, ev.bucket, operation, Status.Pending, None)).toDF()
-    catalog.append(ControlTable, row)
+    appendControl(ControlTable, row)
     val ts = nowIso()
     notifier.requestApproval(approver, operation, tableName,
       fileName, ev.id, ev.bucket, version, ts,
@@ -107,7 +123,7 @@ final class Pipeline(
   }
 
   /** Set-based E1: register a whole batch of arrival events in ONE
-    * control-table commit — guards and routing as column expressions,
+    * control-table append — guards and routing as column expressions,
     * versions continued per file with a single window
     * (PathOps.assignVersions) instead of one MAX query per event.
     * Returns (event_id, assigned version); filtered events are absent.
@@ -133,7 +149,7 @@ final class Pipeline(
       "registerArrivals' versioned file events")
     if (versioned.isEmpty) return Map.empty
     // a local relation, so the planner knows the batch's size
-    catalog.append(ControlTable,
+    appendControl(ControlTable,
       spark.createDataFrame(versioned.toSeq.asJava, ProcessedFile.schema))
     val ts = nowIso()
     versioned.foreach { r =>
@@ -157,9 +173,9 @@ final class Pipeline(
   /** Batch-grouped E3: the full per-event state machine (approve →
     * apply + notify, reject, failed-field / failed-op, unknown-action
     * drop, O8 idempotency), but ALL status updates of a micro-batch
-    * land in ONE conditional control-table rewrite — a burst of N
-    * approvals costs one commit instead of N full-table rewrites
-    * (which would be quadratic in control-table size).
+    * land in ONE control-table commit, which rewrites only the refs
+    * holding the batch's events — a burst of N approvals costs one
+    * commit instead of N, and each costs the batch, not the table.
     *
     * Events are applied in sequence (the reference handles one Pub/Sub
     * message per invocation — process-pipeline.py:436 — so in-batch
@@ -173,7 +189,7 @@ final class Pipeline(
         ev.action != null && ev.action.nonEmpty)
     if (valid.isEmpty) return
     // O8 idempotency, one control-table read for the whole batch
-    val done = alreadyProcessedSet(valid.map(_.event_id))
+    val (done, hint) = lookupEvents(valid.map(_.event_id))
     val updates = Seq.newBuilder[(String, String, String)]
     val seen = scala.collection.mutable.Set[String]()
     valid.foreach { ev =>
@@ -215,40 +231,52 @@ final class Pipeline(
         }
       }
     }
-    markControl(updates.result())
+    val batch = updates.result()
+    markControl(batch, hint(batch.map(_._1)))
   }
 
   /** O8 — any error reading the control table is treated as "not yet
     * processed" (process-pipeline.py:97-99; a preserved reference quirk).
     */
   def alreadyProcessed(eventId: String): Boolean =
-    alreadyProcessedSet(Seq(eventId)).contains(eventId)
+    lookupEvents(Seq(eventId))._1.contains(eventId)
 
-  /** O8 for a batch: which of `eventIds` are already processed, in one
-    * control-table read. Read errors → "none processed", preserving the
-    * reference quirk (process-pipeline.py:97-99).
+  /** O8 for a batch, in one control-table read (one job): which of
+    * `eventIds` are already processed, and the ref hint of a status
+    * update to some of them — the files their rows were read from and
+    * every file the read scanned — so the update finds its refs without
+    * a job of its own. Read errors → "none processed" and no hint,
+    * preserving the reference quirk (process-pipeline.py:97-99).
     */
-  private def alreadyProcessedSet(eventIds: Seq[String]): Set[String] =
+  private def lookupEvents(
+      eventIds: Seq[String]): (Set[String], Seq[String] => Option[RefHint]) =
     try {
-      collectControl(catalog.read(ControlTable)
-        .filter(col("event_id").isin(eventIds.distinct: _*) && col("is_processed"))
-        .select("event_id"), "alreadyProcessed's idempotency lookup")
-        .map(_.getString(0)).toSet
+      val ctrl = catalog.read(ControlTable)
+      val rows = collectControl(ctrl
+        .filter(col("event_id").isin(eventIds.distinct: _*))
+        .select(col("event_id"), coalesce(col("is_processed"), lit(false)),
+          input_file_name()), "alreadyProcessed's idempotency lookup")
+      val files = rows.toSeq.groupMap(_.getString(0))(_.getString(2))
+      (rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet,
+        ids => Some(RefHint(ctrl.inputFiles.toSeq,
+          ids.flatMap(files.getOrElse(_, Nil)))))
     } catch {
       // read errors → "none processed" is the preserved reference
       // quirk, but the guard tripping is NOT a read error — a batch
       // that large must fail loudly, never silently reprocess
       case e: IllegalStateException => throw e
-      case _: Exception => Set.empty
+      case _: Exception => (Set.empty, _ => None)
     }
 
   /** Apply a batch of (event_id, status, approval_ts) control updates in
-    * ONE rewrite. The update set is already on the driver, so it rides
-    * in the plan as literal maps keyed by event_id (no join, no
-    * broadcast job); a hashed IN test gates the maps' linear lookup to
-    * the touched rows.
+    * ONE commit that rewrites only the refs holding those events' rows
+    * (Catalog.rewriteLog; `hint` says where the lookup found them). The
+    * update set is already on the driver, so it rides in the plan as
+    * literal maps keyed by event_id (no join, no broadcast job); a hashed
+    * IN test gates the maps' linear lookup to the touched rows.
     */
-  private def markControl(updates: Seq[(String, String, String)]): Unit = {
+  private def markControl(updates: Seq[(String, String, String)],
+      hint: Option[RefHint]): Unit = {
     if (updates.isEmpty) return
     val hit = col("event_id").isin(updates.map(_._1): _*)
     def lookup(value: ((String, String, String)) => String): Column = {
@@ -256,7 +284,7 @@ final class Pipeline(
       when(hit, byId(col("event_id")))
     }
     val status = lookup(_._2)
-    catalog.overwrite(ControlTable, catalog.read(ControlTable)
+    catalog.rewriteLog(ControlTable, hit, hint)(_
       .withColumn("status", coalesce(status, col("status")))
       .withColumn("is_processed",
         when(status.isNotNull, lit(true)).otherwise(col("is_processed")))
@@ -324,7 +352,7 @@ final class Pipeline(
           catalog.read(DeleteControlTable), withOrd, tableName,
           if (pks.nonEmpty) pks else ordered.filterNot(_ == "__ord"),
           eventId, base, lit(approvalTs), col("__ord"))
-        catalog.append(DeleteControlTable, staged)
+        appendControl(DeleteControlTable, staged)
       case other =>
         throw new IllegalArgumentException(s"Unknown operation: $other")
     }
@@ -374,7 +402,7 @@ final class Pipeline(
     val ctrl = catalog.read(DeleteControlTable)
     val pending = collectControl(
       ctrl.filter(col("DeleteFlag") && !col("ExecutedFlag"))
-        .select("QueryId", "target_table", "pk_values"),
+        .select(col("QueryId"), col("target_table"), col("pk_values"), input_file_name()),
       "executePendingDeletes' staged delete rows")
     if (pending.isEmpty) return Nil
     val executed = Seq.newBuilder[Long]
@@ -410,8 +438,12 @@ final class Pipeline(
     }
     val done = executed.result()
     if (done.nonEmpty) {
+      // the stamp rewrites only the refs the executed rows were read from
+      val doneIds = done.toSet
+      val hint = RefHint(ctrl.inputFiles.toSeq,
+        pending.filter(r => doneIds(r.getLong(0))).map(_.getString(3)).toSeq)
       val hit = col("QueryId").isin(done: _*)
-      catalog.overwrite(DeleteControlTable, catalog.read(DeleteControlTable)
+      catalog.rewriteLog(DeleteControlTable, hit, Some(hint))(_
         .withColumn("ExecutedFlag", when(hit, lit(true)).otherwise(col("ExecutedFlag")))
         .withColumn("ExecutedDeleteTimestamp",
           when(hit, current_timestamp()).otherwise(col("ExecutedDeleteTimestamp"))))

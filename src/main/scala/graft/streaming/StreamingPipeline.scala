@@ -26,10 +26,9 @@ final class StreamingPipeline(spark: SparkSession, pipeline: Pipeline,
 
   /** E1 as a stream: file-arrival events (bucket, name, id) arriving as
     * JSON lines, registered + notified one micro-batch at a time. A
-    * micro-batch of N arrivals costs ONE control-table commit
-    * (Pipeline.registerArrivals assigns all N versions with a single
-    * window), not N read-modify-write cycles — under arrival bursts the
-    * per-event path is quadratic in control-table size.
+    * micro-batch of N arrivals costs ONE control-table append — one new
+    * ref of the table's log (Pipeline.registerArrivals assigns all N
+    * versions with a single window) — not N version lookups and N refs.
     */
   def startIngest(eventsDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
@@ -53,7 +52,10 @@ final class StreamingPipeline(spark: SparkSession, pipeline: Pipeline,
     * as JSON lines → the approval state machine. Orchestration is
     * driver-side, mirroring the reference; the data work each event
     * triggers is distributed, and a micro-batch of N approvals costs
-    * ONE control-table commit (Pipeline.processApprovals), not N.
+    * ONE control-table commit (Pipeline.processApprovals), not N, which
+    * rewrites only the refs holding those N events. It reads the refs
+    * under the table's commit lock, so arrivals the ingest stream
+    * registers meanwhile are carried over.
     */
   def startApprovals(approvalsDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {

@@ -1,7 +1,12 @@
 package graft.catalog
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkTestBase
 import graft.model.{DeleteControl, ProcessedFile}
@@ -660,5 +665,108 @@ class CatalogSpec extends SparkTestBase {
       }
     }
     assert(cat.read("one").count() == 3 && cat.read("three").count() == 33)
+  }
+
+  /** Every file of a version dir with its bytes, to show a dir untouched. */
+  private def dirBytes(root: String, table: String, version: String): Map[String, Seq[Byte]] = {
+    val s = Files.list(Paths.get(root, table, version))
+    try s.iterator.asScala.map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+    finally s.close()
+  }
+
+  private def multiset[T](xs: Seq[T]): Map[T, Int] =
+    xs.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("appendLog adopts a plain table: its dir becomes ref 0, never rewritten") {
+    val root = tmpDir("catadopt")
+    val cat = new Catalog(spark, root)
+    cat.overwrite("t", (1 to 30).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(3))
+    val plain = cat.currentVersion("t")
+    val before = dirBytes(root, "t", plain)
+    // a Catalog that never read the table adopts it from a footer (no job):
+    // the batch write is the only job
+    val adopter = new Catalog(spark, root)
+    val (_, jobs) = countJobs(adopter.appendLog("t", Seq((31L, "v31")).toDF("id", "v")))
+    assert(jobs == 1, s"adoption ran $jobs jobs")
+    val refs = cat.bucketRefs("t")
+    assert(refs.size == 2 && refs(0) == plain, s"refs $refs")
+    assert(dirBytes(root, "t", plain) == before, "the adopted dir was rewritten")
+
+    // reads: pinned to the plain version's schema (no job), every row
+    val inferred = spark.read.parquet(s"$root/t/$plain").schema
+    for (c <- Seq(cat, adopter, new Catalog(spark, root))) {
+      val (df, readJobs) = countJobs(c.read("t"))
+      assert(readJobs == 0 && df.schema == inferred, s"$readJobs jobs, ${df.schema}")
+      assert(df.select("id").as[Long].collect().sorted.toSeq == (1L to 31L))
+    }
+    // vacuum keeps the adopted dir (the manifest references it); the
+    // old plain version still time-travels
+    cat.vacuum("t")
+    assert(cat.readVersion("t", plain).count() == 30)
+    assert(cat.read("t").count() == 31 && dirBytes(root, "t", plain) == before)
+
+    // a partitioned version has no flat ref to adopt
+    cat.overwritePartitioned("p", Seq((1L, "a")).toDF("id", "part"), Seq("part"))
+    intercept[IllegalStateException](cat.appendLog("p", Seq((2L, "b")).toDF("id", "part")))
+  }
+
+  test("rewriteLog replaces only the refs holding matching rows") {
+    val root = tmpDir("catrewrite")
+    val cat = new Catalog(spark, root)
+    (1 to 3).foreach(i =>
+      cat.appendLog("log", Seq((i.toLong, "a"), (i * 10L, "a")).toDF("id", "v")))
+    def rows = cat.read("log").as[(Long, String)].collect().toSeq
+    def set(id: Long, v: String)(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("v", when($"id" === id, lit(v)).otherwise($"v"))
+    val refs = cat.bucketRefs("log")
+    val bytes = refs.values.map(r => r -> dirBytes(root, "log", r)).toMap
+
+    // without a hint the rewrite finds the refs with one job of its own
+    val (_, jobs) = countJobs(cat.rewriteLog("log", $"id" === 2L)(set(2L, "b")))
+    assert(jobs == 2, s"$jobs jobs")
+    val after = cat.bucketRefs("log")
+    assert(after.size == 3 && after - 3 == refs - 1, s"$refs -> $after")
+    (refs - 1).values.foreach(r => assert(dirBytes(root, "log", r) == bytes(r), r))
+    assert(multiset(rows) == multiset(Seq((1L, "a"), (10L, "a"), (2L, "b"), (20L, "a"),
+      (3L, "a"), (30L, "a"))))
+
+    // with a caller's lookup as the hint, only the write job runs; a ref
+    // committed after that lookup is rewritten too, since it may hold
+    // matching rows
+    val looked = cat.read("log")
+    val hint = Catalog.RefHint(looked.inputFiles.toSeq,
+      looked.filter($"id" === 30L).select(input_file_name()).as[String].collect().toSeq)
+    cat.appendLog("log", Seq((30L, "late")).toDF("id", "v"))
+    val late = cat.bucketRefs("log")(4)
+    val (_, hintJobs) = countJobs(
+      cat.rewriteLog("log", $"id" === 30L, Some(hint))(set(30L, "c")))
+    assert(hintJobs == 1, s"$hintJobs jobs")
+    assert(!cat.bucketRefs("log").values.exists(Set(after(2), late)))
+    assert(cat.bucketRefs("log")(0) == refs(0) && cat.bucketRefs("log")(3) == after(3))
+    assert(rows.filter(_._1 == 30L).map(_._2).sorted == Seq("c", "c"))
+
+    // a rewrite to zero rows drops its ref
+    val n = cat.bucketRefs("log").size
+    cat.rewriteLog("log", $"id".isin(1L, 10L))(_.filter(!$"id".isin(1L, 10L)))
+    assert(cat.bucketRefs("log").size == n - 1 && !cat.bucketRefs("log").contains(0))
+    assert(rows.map(_._1).sorted == Seq(2L, 3L, 20L, 30L, 30L))
+    // columns stay the table's
+    intercept[IllegalArgumentException](
+      cat.rewriteLog("log", $"id" === 2L)(_.withColumn("v", lit(1))))
+  }
+
+  test("compactLog folds adopted, appended and rewritten refs to the same multiset of rows") {
+    val cat = new Catalog(spark, tmpDir("catfold"))
+    cat.overwrite("log", Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("id", "v"))
+    (1 to 20).foreach(i => cat.appendLog("log", Seq((i % 5L, s"r$i"), (1L, "a")).toDF("id", "v")))
+    cat.rewriteLog("log", $"id" === 2L)(_.withColumn("v",
+      when($"id" === 2L, concat($"v", lit("!"))).otherwise($"v")))
+    def rows = cat.read("log").as[(Long, String)].collect().toSeq
+    val before = rows
+    // 21 refs, less the 5 holding id 2 that the rewrite folded into one
+    assert(cat.bucketRefs("log").size == 17 && before.size == 43)
+    cat.compactLog("log")
+    assert(cat.bucketRefs("log").size == 1)
+    assert(multiset(rows) == multiset(before))
   }
 }

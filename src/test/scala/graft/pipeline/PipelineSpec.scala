@@ -2,6 +2,11 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+
 import graft.SparkTestBase
 import graft.catalog.Catalog
 import graft.model._
@@ -208,11 +213,11 @@ class PipelineSpec extends SparkTestBase {
     val landing = tmpDir("landing")
     val notifier = new InMemoryNotifier
     val counting = new Catalog(spark, tmpDir("wh")) {
-      val overwrites = scala.collection.mutable.Map[String, Int]()
-      override def overwrite(name: String,
-          df: org.apache.spark.sql.DataFrame): Unit = {
-        overwrites(name) = overwrites.getOrElse(name, 0) + 1
-        super.overwrite(name, df)
+      val rewrites = scala.collection.mutable.Map[String, Int]()
+      override def rewriteLog(name: String, matching: Column,
+          hint: Option[Catalog.RefHint])(f: DataFrame => DataFrame): Unit = {
+        rewrites(name) = rewrites.getOrElse(name, 0) + 1
+        super.rewriteLog(name, matching, hint)(f)
       }
     }
     val p = new Pipeline(spark, counting, notifier, landing)
@@ -224,7 +229,7 @@ class PipelineSpec extends SparkTestBase {
       FileEvent("b1", "insert/customers.csv", "ev3"),
       FileEvent("b1", "insert/customers.csv", "ev4"),
       FileEvent("b1", "insert/customers.csv", "ev5")))
-    counting.overwrites.clear()
+    counting.rewrites.clear()
 
     p.processApprovals(Seq(
       approval("ev1", "approve", "insert"),               // applies
@@ -236,8 +241,8 @@ class PipelineSpec extends SparkTestBase {
         None, None, Some("2026-01-02T03:04:05Z"), None))) // missing fields → Failed
 
     // the whole batch of 5 distinct outcomes = ONE control-table rewrite
-    assert(counting.overwrites(p.ControlTable) == 1,
-      s"control-table commits: ${counting.overwrites}")
+    assert(counting.rewrites(p.ControlTable) == 1,
+      s"control-table commits: ${counting.rewrites}")
     val st = p.catalog.read(p.ControlTable).as[ProcessedFile].collect()
       .map(r => r.event_id -> (r.status, r.is_processed)).toMap
     assert(st("ev1") == (Status.Approved, true))
@@ -338,5 +343,125 @@ class PipelineSpec extends SparkTestBase {
     assert(new java.io.File(s"$root/t/_current").delete())
     assert(cat.exists("t"))
     assert(cat.read("t").as[String].collect().toSeq == Seq("x"))
+  }
+
+  /** A Catalog that calls `onRead` each time a read of `table` has
+    * resolved its version: another writer committing while the caller
+    * still works from that read. Catalogs of these specs keep 8 old
+    * versions, so that the caller's stale read still finds its files and
+    * a lost update shows as a missing row, not as a vanished file.
+    */
+  private class ReadHook(root: String, table: String)
+      extends Catalog(spark, root, graceVersions = 8) {
+    var onRead: () => Unit = () => ()
+    override def read(name: String): DataFrame = {
+      val df = super.read(name)
+      if (name == table) onRead()
+      df
+    }
+  }
+
+  private def statuses(p: Pipeline): Map[String, (String, Boolean)] =
+    p.catalog.read(p.ControlTable).as[ProcessedFile].collect()
+      .map(r => r.event_id -> (r.status, r.is_processed)).toMap
+
+  test("lost update: a registration committed during an approval survives it") {
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val cat = new ReadHook(root, "processed_files")
+    val p = new Pipeline(spark, cat, new InMemoryNotifier, landing)
+    // a second writer on the same root, as the ingest stream beside the
+    // approvals stream
+    val ingest = new Pipeline(spark, new Catalog(spark, root, graceVersions = 8),
+      new InMemoryNotifier, landing)
+    land(landing, "b1", "insert/customers.csv", "customer_id,name\n1,a\n")
+    p.registerArrival(FileEvent("b1", "insert/customers.csv", "ev1"))
+    val concurrent = ArrayBuffer.empty[String]
+    cat.onRead = () => {
+      val id = s"late${concurrent.size + 1}"
+      concurrent += id
+      ingest.registerArrival(FileEvent("b1", s"insert/$id.csv", id))
+    }
+    p.processApproval(approval("ev1", "approve", "insert"))
+    cat.onRead = () => ()
+    val st = statuses(p)
+    assert(concurrent.nonEmpty)
+    assert(st("ev1") == (Status.Approved, true))
+    concurrent.foreach(id =>
+      assert(st.get(id).contains((Status.Pending, false)), s"registration $id lost: $st"))
+  }
+
+  test("lost update: a delete staged while the delete job runs survives its stamp") {
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val cat = new ReadHook(root, "delete_control")
+    val p = new Pipeline(spark, cat, new InMemoryNotifier, landing)
+    val other = new Pipeline(spark, new Catalog(spark, root, graceVersions = 8),
+      new InMemoryNotifier, landing)
+    def answer(q: Pipeline, id: String, op: String, csv: String): Unit = {
+      land(landing, "b1", s"$op/customers.csv", csv)
+      q.registerArrival(FileEvent("b1", s"$op/customers.csv", id))
+      q.processApproval(approval(id, "approve", op))
+    }
+    answer(p, "ins", "insert", "customer_id,name\n" + (1 to 9).map(k => s"$k,n$k\n").mkString)
+    p.catalog.registerPrimaryKey("customers", Seq("customer_id"))
+    answer(p, "del1", "delete", "customer_id\n1\n")
+    val concurrent = ArrayBuffer.empty[String]
+    cat.onRead = () => {
+      val id = s"del${concurrent.size + 2}"
+      concurrent += id
+      answer(other, id, "delete", s"customer_id\n${concurrent.size + 1}\n")
+    }
+    val executed = p.executePendingDeletes()
+    cat.onRead = () => ()
+    assert(executed.size == 1 && concurrent.nonEmpty)
+    val rows = p.catalog.read(p.DeleteControlTable).as[DeleteControl].collect()
+      .map(r => r.EventId -> r.ExecutedFlag).toMap
+    assert(rows("del1"), s"the job's own delete is not stamped: $rows")
+    concurrent.foreach(id =>
+      assert(rows.get(id).contains(false), s"staged delete $id lost: $rows"))
+    assert(p.catalog.read("customers").count() == 8)
+  }
+
+  test("registration + approval leave the history ref's dir as it is") {
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val p = new Pipeline(spark, new Catalog(spark, root), new InMemoryNotifier, landing)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    p.catalog.createIfAbsent(p.ControlTable, ProcessedFile.schema)
+    p.catalog.overwrite(p.ControlTable, spark.createDataFrame((1 to 500).map(i =>
+      Row(s"hist_$i.csv", s"h$i", 1L, true, "b1", "insert", Status.Approved, ts)).asJava,
+      ProcessedFile.schema))
+    val history = p.catalog.currentVersion(p.ControlTable)
+    def files = {
+      val s = Files.list(Paths.get(root, p.ControlTable, history))
+      try s.iterator.asScala.map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+      finally s.close()
+    }
+    val before = files
+    land(landing, "b1", "insert/customers.csv", "customer_id,name\n1,a\n")
+    p.registerArrival(FileEvent("b1", "insert/customers.csv", "ev1"))
+    p.processApproval(approval("ev1", "approve", "insert"))
+    val refs = p.catalog.bucketRefs(p.ControlTable)
+    assert(refs.size == 2 && refs(0) == history, s"refs $refs")
+    assert(files == before, "the history ref was rewritten")
+    val st = statuses(p)
+    assert(st.size == 501 && st("ev1") == (Status.Approved, true) &&
+      st("h7") == (Status.Approved, true))
+  }
+
+  test("the control log folds once a commit leaves more than MaxControlRefs refs") {
+    val (p, _, _) = freshPipeline()
+    // the empty table createIfAbsent made is ref 0, so registration k
+    // leaves k + 1 refs
+    val n = p.MaxControlRefs
+    (1 until n).foreach(i => p.registerArrival(FileEvent("b1", s"insert/f${i % 7}.csv", s"ev$i")))
+    assert(p.catalog.bucketRefs(p.ControlTable).size == n)
+    p.registerArrival(FileEvent("b1", s"insert/f${n % 7}.csv", s"ev$n"))
+    assert(p.catalog.bucketRefs(p.ControlTable).size == 1)
+    val got = p.catalog.read(p.ControlTable).as[ProcessedFile].collect()
+      .map(r => (r.event_id, r.file_name, r.file_version, r.status)).toSeq
+    val want = (1 to n).map { i =>
+      val f = i % 7
+      (s"ev$i", s"f$f.csv", (1 to i).count(_ % 7 == f).toLong, Status.Pending)
+    }
+    assert(got.sorted == want.sorted)
   }
 }

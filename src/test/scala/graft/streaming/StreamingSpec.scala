@@ -58,10 +58,10 @@ class StreamingSpec extends SparkTestBase {
     val notifier = new InMemoryNotifier
     val counting = new Catalog(spark, tmpDir("wh_1c")) {
       val appends = scala.collection.mutable.Map[String, Int]()
-      override def append(name: String,
-          df: org.apache.spark.sql.DataFrame): Unit = {
+      override def appendLog(name: String,
+          df: org.apache.spark.sql.DataFrame, evolveSchema: Boolean): Unit = {
         appends(name) = appends.getOrElse(name, 0) + 1
-        super.append(name, df)
+        super.appendLog(name, df, evolveSchema)
       }
     }
     val pipeline = new Pipeline(spark, counting, notifier, landing)
