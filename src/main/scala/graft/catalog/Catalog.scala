@@ -361,14 +361,18 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * exist). A plain table is adopted as it stands: its current version
     * dir becomes ref 0 under the schema its reads are pinned to, so no
     * data is read or rewritten and no footer job runs; the caller's
-    * commit writes the manifest.
+    * commit writes the manifest. A version with no rows (a table
+    * [[createIfAbsent]] made) starts the log with no refs, so no read of
+    * the log opens its empty dir; the rows are counted from the file
+    * footers, without a job.
     */
   private def logManifest(name: String): Option[Manifest] = {
     require(bucketCount(name).isEmpty,
       s"$name has a PK-bucket layout; its manifest keys are bucket ids, not log refs")
     if (!exists(name)) return None
     val dir = currentVersionDir(name)
-    Some(readManifestAt(dir).getOrElse(Manifest(Map(0 -> dir.getName),
+    Some(readManifestAt(dir).getOrElse(Manifest(
+      if (rowCount(dir) == 0) Map.empty else Map(0 -> dir.getName),
       pinnedSchema(name, dir).getOrElse(throw new IllegalStateException(
         s"$name version ${dir.getName} is partitioned or has no Spark schema; " +
           "log refs must be flat parquet")).toDDL)))
@@ -688,6 +692,27 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       commitBuckets(name, df, m.refs, frag)
     }
     frag
+  }
+
+  /** Read-modify-write of a data table through the narrowest commit its
+    * layout allows, reading inside the table's commit lock so that a
+    * commit another writer lands meanwhile is never overwritten: `f`
+    * maps the rows read to the rows to write. With a registered bucket
+    * layout and primary key, only the buckets `touchedBuckets(bucket
+    * count)` names are read and rewritten, and the first such rewrite
+    * migrates the whole table into the layout; otherwise the whole
+    * table is rewritten.
+    */
+  def rewrite(name: String, touchedBuckets: Int => Seq[Int])(
+      f: DataFrame => DataFrame): Unit = locked(name) {
+    (bucketCount(name), readManifest(name)) match {
+      case (Some(n), Some(m)) if primaryKey(name).nonEmpty =>
+        val touched = touchedBuckets(n)
+        commitBuckets(name, f(readBuckets(name, touched)), m.refs, touched)
+      case (Some(_), None) if primaryKey(name).nonEmpty =>
+        commitBuckets(name, f(read(name)), prev = Map.empty, touched = Nil)
+      case _ => commit(name, f(read(name)), primaryKey(name))
+    }
   }
 
   /** Rewrite only `touched` buckets: `df` must hold exactly the new

@@ -3,15 +3,14 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared GENERATION machinery for the persisted on-disk indexes —
-  * SignatureIndex's reader-consistency design (r12 verdict item 2),
-  * factored out so TextIndex and VectorIndex get the identical
-  * treatment instead of their own drifting in-place mutation protocols
-  * (r13 verdict item 1: TextIndex.append dynamic-overwrote live
-  * postings buckets, so a concurrent reader mid-append saw mixed df
-  * values; VectorIndex.append wrote into live list dirs, so a
-  * concurrent serve could observe a torn batch).
+  * SignatureIndex, TextIndex and VectorIndex keep their data in the
+  * same immutable-generation layout and commit, recover and vacuum it
+  * through one protocol, the [[GenIndex.Store]] each family holds
+  * (before it, each family carried its own drifting copy — r13 verdict
+  * item 1: TextIndex.append dynamic-overwrote live postings buckets and
+  * VectorIndex.append wrote into live list dirs).
   *
-  * The design is the Catalog bucket-manifest treatment:
+  * The layout is the Catalog bucket-manifest treatment:
   *
   *  - data lives in IMMUTABLE generation dirs,
   *    `<table>_g{G}/<part>={k}/` — a generation dir is NEVER modified
@@ -20,38 +19,166 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    land;
   *  - `_manifest_v{N}.json` maps every bucket of every table to the
   *    generation dir(s) holding its current rows (a Seq per bucket:
-  *    rewrite-style tables — postings, signature bands/sets — keep
-  *    singletons; fragment-style tables — IVF inverted lists, whose
-  *    appends must stay O(batch), not O(touched lists) — accumulate
-  *    fragments that compaction folds back to one). The manifest also
-  *    carries small `extras` (corpus stats, bucket counts), committed
-  *    ATOMICALLY with the data refs — which is what dissolves
-  *    TextIndex's old torn-append window between its postings rewrite
-  *    and its separate stats table;
+  *    rewrite-style tables keep singletons; fragment-style tables —
+  *    whose appends must stay O(batch), not O(touched buckets) —
+  *    accumulate fragments that a fold or compact merges back). The
+  *    manifest also carries small `extras` (corpus stats, bucket
+  *    counts, the append-id history), committed ATOMICALLY with the
+  *    data refs;
   *  - `_current` holds the committed manifest version, flipped
-  *    atomically (StagedSwap.writeAtomic) as the SINGLE commit point.
+  *    atomically (StagedSwap.writeAtomic) as the SINGLE commit point;
+  *  - `_commit.lock` (StagedSwap.withFileLock) serializes writers over
+  *    their whole read→write→flip span; reads are lock-free.
+  *
+  * A [[Store]] owns every step of that protocol for one family: the
+  * lock, the current-manifest read, the commit (manifest write +
+  * pointer flip), the rebuild reset, the redelivery-guarded mutation
+  * skeleton (append, delete), the maintenance skeleton (fold, compact,
+  * retrain) and the public recover / vacuum. A family supplies only
+  * what differs: its rows, which tables each commit carries, and its
+  * serve paths.
   *
   * Crash safety falls out: every mutation writes only fresh
   * generation dirs + a fresh manifest, then flips the pointer — a
   * crash anywhere before the flip leaves orphan generation dirs
-  * ([[vacuum]] reclaims them) and the committed snapshot untouched.
-  * Old generations stay servable inside the vacuum grace window, so a
-  * reader holding the previous snapshot is never invalidated by the
-  * next commit.
-  *
-  * Writers serialize through StagedSwap.withFileLock around their
-  * whole read→write→flip span; reads are lock-free.
+  * ([[Store.vacuum]] reclaims them) and the committed snapshot
+  * untouched. Old generations stay servable inside the vacuum grace
+  * window, so a reader holding the previous snapshot is never
+  * invalidated by the next commit.
   */
 private[graft] object GenIndex {
+
+  /** bucket → generation dirs holding its rows, for one table */
+  type Refs = Map[Int, Seq[String]]
+  /** a commit's tables (table name → refs) and extras */
+  type Snapshot = (Map[String, Refs], Map[String, String])
+
+  private val LockName = "_commit.lock"
+
+  /** One index family's handle on the generation protocol (see the
+    * object scaladoc). `genPrefixes` are the table dir prefixes
+    * ("postings_g", "lists_g", …) the family owns — nothing else at an
+    * index dir is touched by its vacuum or its empty-batch cleanup.
+    */
+  final class Store(val what: String, genPrefixes: Seq[String]) {
+
+    /** Runs `body` holding the index's writer lock. NOT reentrant:
+      * public entry points lock, their internals stay lock-free.
+      */
+    def locked[T](spark: SparkSession, indexDir: String)(body: => T): T =
+      StagedSwap.withFileLock(spark, s"$indexDir/$LockName")(body)
+
+    def current(spark: SparkSession, indexDir: String): Manifest =
+      readManifest(spark, indexDir, what)
+
+    /** The commit point: write the manifest, then flip `_current`. */
+    private def commit(spark: SparkSession, indexDir: String, m: Manifest): Unit = {
+      writeManifest(spark, indexDir, m)
+      flipCurrent(spark, indexDir, m.version)
+    }
+
+    /** A build: under the lock, clear every prior artifact at indexDir
+      * (a stale stage or old-parameter generation must never survive
+      * into a rebuilt index — r12 ADVICE item 1), run `body`, which
+      * writes generation 0, and commit its snapshot as v0.
+      */
+    def rebuild(spark: SparkSession, indexDir: String)(body: => Snapshot): Unit =
+      locked(spark, indexDir) {
+        clearIndexState(spark, indexDir,
+          s"prior $what state (it must not survive a rebuild)")
+        val (tables, extras) = body
+        commit(spark, indexDir, Manifest(0, "build", tables, extras))
+      }
+
+    /** An append or delete: under the lock, a `commitId` that already
+      * committed ([[isRedelivered]]) is a no-op; otherwise `body` writes
+      * generation `cur.version + 1` and returns the snapshot to commit,
+      * or None when the batch changed nothing — its `*_g{gen}` dirs are
+      * then deleted and nothing commits. The commit records the id in
+      * the append-id history ([[withAppendId]]); `after` then runs,
+      * still under the lock, with the committed manifest (the inline
+      * fold and retrain triggers).
+      */
+    def mutate(spark: SparkSession, indexDir: String, commitId: Option[String],
+        after: Manifest => Unit = _ => ())(
+        body: (Manifest, Int) => Option[Snapshot]): Unit =
+      locked(spark, indexDir) {
+        val cur = current(spark, indexDir)
+        if (!isRedelivered(cur, commitId)) {
+          val gen = cur.version + 1
+          body(cur, gen) match {
+            case None =>
+              genPrefixes.foreach(p => StagedSwap.deleteChecked(spark,
+                s"$indexDir/$p$gen", s"empty $what generation (nothing to commit)"))
+            case Some((tables, extras)) =>
+              val cid = commitId.getOrElse(java.util.UUID.randomUUID().toString)
+              val m = Manifest(gen, cid, tables, withAppendId(extras, cid))
+              commit(spark, indexDir, m)
+              after(m)
+          }
+        }
+      }
+
+    /** A fold, compact or retrain, for a caller holding the lock:
+      * `body` writes generation `cur.version + 1` and returns the
+      * snapshot to commit (None: nothing to do), committed as
+      * `<kind>_g{gen}` and followed by a vacuum at grace 1.
+      */
+    def maintain(spark: SparkSession, indexDir: String, kind: String)(
+        body: (Manifest, Int) => Option[Snapshot]): Unit = {
+      val cur = current(spark, indexDir)
+      val gen = cur.version + 1
+      body(cur, gen).foreach { case (tables, extras) =>
+        commit(spark, indexDir, Manifest(gen, s"${kind}_g$gen", tables, extras))
+        GenIndex.vacuum(spark, indexDir, genPrefixes, graceVersions = 1, what)
+      }
+    }
+
+    /** Repair torn maintenance: re-materialize a lost `_current`
+      * pointer (the newest INTACT manifest wins — see
+      * [[restoreCurrentIfMissing]]), run the family's own `repair`,
+      * then vacuum the orphan generations a crashed commit left behind.
+      */
+    def recover(spark: SparkSession, indexDir: String,
+        repair: () => Unit = () => ()): Unit =
+      locked(spark, indexDir) {
+        restoreCurrentIfMissing(spark, indexDir, what)
+        repair()
+        GenIndex.vacuum(spark, indexDir, genPrefixes, graceVersions = 1, what)
+      }
+
+    /** Delete generation dirs referenced by NO manifest inside the
+      * grace window, and manifests older than it. Grace 1 keeps the
+      * immediately-previous snapshot servable for readers that resolved
+      * their paths just before a commit; 0 reclaims everything but the
+      * current snapshot — maintenance windows only.
+      */
+    def vacuum(spark: SparkSession, indexDir: String, graceVersions: Int): Unit =
+      locked(spark, indexDir) {
+        GenIndex.vacuum(spark, indexDir, genPrefixes, graceVersions, what)
+      }
+  }
+
+  /** `written` fragments appended to each bucket's `prior` refs. */
+  def withFragments(prior: Refs, written: Refs): Refs =
+    prior ++ written.map { case (k, gs) => k -> (prior.getOrElse(k, Seq.empty) ++ gs) }
+
+  /** The refs of the just-written generation dir `<table>_g{gen}`: one
+    * singleton per bucket it holds.
+    */
+  def genRefs(spark: SparkSession, indexDir: String, table: String,
+      part: String, gen: Int): Refs =
+    bucketsIn(spark, s"$indexDir/${table}_g$gen", part)
+      .map(_ -> Seq(s"${table}_g$gen")).toMap
 
   /** One committed snapshot: bucket → generation-dir list per table,
     * plus the commit id that produced it (idempotency token for
     * staged replays) and small atomic extras.
     */
   case class Manifest(version: Int, commitId: String,
-      tables: Map[String, Map[Int, Seq[String]]],
+      tables: Map[String, Refs],
       extras: Map[String, String]) {
-    def refs(table: String): Map[Int, Seq[String]] =
+    def refs(table: String): Refs =
       tables.getOrElse(table, Map.empty)
     def extra(key: String, what: String): String =
       extras.getOrElse(key, throw new IllegalStateException(
@@ -188,7 +315,7 @@ private[graft] object GenIndex {
     * the manifest knows).
     */
   def readBuckets(spark: SparkSession, indexDir: String,
-      refs: Map[Int, Seq[String]], part: String, buckets: Seq[Int],
+      refs: Refs, part: String, buckets: Seq[Int],
       withBucketCol: Boolean, schemaDDL: => String): DataFrame = {
     val present: Seq[(Int, String)] = buckets.distinct
       .flatMap(k => refs.getOrElse(k, Seq.empty).map(k -> _))
@@ -267,7 +394,7 @@ private[graft] object GenIndex {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def footerDDL(spark: SparkSession, indexDir: String,
-      refs: Map[Int, Seq[String]], part: String,
+      refs: Refs, part: String,
       fallbackDDL: String): String =
     refs.headOption.map { case (k, gs) =>
       footerDDLCache.computeIfAbsent(s"$indexDir/${gs.head}/$part=$k",
@@ -318,7 +445,7 @@ private[graft] object GenIndex {
     * prefixes ("postings_g", "lists_g", …) this index owns — nothing
     * else at indexDir is touched.
     */
-  def vacuum(spark: SparkSession, indexDir: String,
+  private def vacuum(spark: SparkSession, indexDir: String,
       genPrefixes: Seq[String], graceVersions: Int, what: String): Unit = {
     val cur = readManifest(spark, indexDir, what)
     val floor = cur.version - math.max(0, graceVersions)
@@ -356,8 +483,8 @@ private[graft] object GenIndex {
     * generation dirs survive wins — a dangling crashed-commit
     * manifest must not be restored-to, see [[newestIntactVersion]]).
     */
-  def restoreCurrentIfMissing(spark: SparkSession, indexDir: String,
-      what: String = "index"): Unit =
+  private def restoreCurrentIfMissing(spark: SparkSession, indexDir: String,
+      what: String): Unit =
     if (StagedSwap.readSmallFile(spark, s"$indexDir/_current").isEmpty)
       newestIntactVersion(spark, indexDir, what)
         .foreach(flipCurrent(spark, indexDir, _))
@@ -424,7 +551,7 @@ private[graft] object GenIndex {
   def foldFragmentTable(spark: SparkSession, indexDir: String,
       cur: Manifest, table: String, part: String, gen: Int,
       threshold: Int, order: Seq[org.apache.spark.sql.Column],
-      ddl: => String): Option[Map[Int, Seq[String]]] = {
+      ddl: => String): Option[Refs] = {
     val refs = cur.refs(table)
     val over = refs.filter(_._2.size >= threshold)
     if (over.isEmpty) return None
@@ -465,15 +592,13 @@ private[graft] object GenIndex {
   }
 
   /** Clear every prior index artifact at indexDir EXCEPT the writer
-    * lock the caller is holding — the build()-time reset that keeps a
-    * stale stage or old-parameter generation from ever surviving into
-    * a rebuilt index (r12 ADVICE item 1).
+    * lock the caller is holding — [[Store.rebuild]]'s reset.
     */
-  def clearIndexState(spark: SparkSession, indexDir: String,
-      lockName: String, what: String): Unit = {
+  private def clearIndexState(spark: SparkSession, indexDir: String,
+      what: String): Unit = {
     val (fs, root) = hfs(spark, indexDir)
     if (fs.exists(root)) fs.listStatus(root).foreach { s =>
-      if (s.getPath.getName != lockName)
+      if (s.getPath.getName != LockName)
         StagedSwap.deleteChecked(spark, s.getPath.toString, what)
     }
   }

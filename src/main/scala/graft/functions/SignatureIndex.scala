@@ -62,22 +62,12 @@ import org.apache.spark.sql.functions._
   * by SignatureIndexSpec and the t71 oracle row, which shares t49's
   * SQL.
   *
-  * Crash safety is the generation discipline: every mutation writes
-  * only fresh generation dirs + a fresh manifest, then flips the
-  * pointer — a crash anywhere before the flip leaves orphan dirs
-  * ([[vacuum]] reclaims them) and the committed snapshot untouched.
-  * There is NO staged append anymore (the pre-fragment `append_next`
-  * protocol existed because the old apply was a read-modify-write);
-  * redelivery idempotency is the `commitId` token, persisted in the
-  * bounded append-id history (GenIndex.MaxAppendIds) so it survives
-  * inline folds AND multi-batch checkpoint replays (the r15 ADVICE
-  * discipline shared with TextIndex/VectorIndex, deepened in r16).
-  *
-  * Writers are mutually exclusive: build/append/delete/compact/recover/vacuum
-  * each hold `_commit.lock` (StagedSwap.withFileLock, the Catalog
-  * protocol) for their whole read→write→flip span — without it two
-  * concurrent appends both compute generation N+1 and the loser's
-  * acknowledged batch silently vanishes. Reads stay lock-free.
+  * Commits, crash safety, the writer lock, redelivery idempotency
+  * (`commitId`) and vacuum are the shared generation protocol of
+  * [[GenIndex.Store]] ([[store]]). There is NO staged append anymore
+  * (the pre-fragment `append_next` protocol existed because the old
+  * apply was a read-modify-write); [[recover]] still discards a stage
+  * such an old append left.
   */
 object SignatureIndex {
 
@@ -120,14 +110,11 @@ object SignatureIndex {
 
   private def stageDir(indexDir: String) = s"$indexDir/append_next"
 
-  private val LockName = "_commit.lock"
-  private def lockPath(indexDir: String) = s"$indexDir/$LockName"
-
   private case class Params(shingle: Int, numHashes: Int, bands: Int,
       nBuckets: Int)
 
-  private val What = "signature index"
-  private val GenPrefixes = Seq("bands_g", "sets_g")
+  private[graft] val store =
+    new GenIndex.Store("signature index", Seq("bands_g", "sets_g"))
   private val BandsDDL = "doc_id bigint, band int, key string, __gen int"
   private val SetsDDL = "doc_id bigint, hhd array<bigint>, __gen int"
 
@@ -155,11 +142,11 @@ object SignatureIndex {
     (m.extras.get("shingle"), m.extras.get("num_hashes"),
         m.extras.get("bands")) match {
       case (Some(s), Some(h), Some(b)) =>
-        Params(s.toInt, h.toInt, b.toInt, m.extra("n_buckets", What).toInt)
+        Params(s.toInt, h.toInt, b.toInt, m.extra("n_buckets", store.what).toInt)
       case _ =>
         val r = spark.read.parquet(s"$indexDir/meta").head()
         Params(r.getInt(0), r.getInt(1), r.getInt(2),
-          m.extra("n_buckets", What).toInt)
+          m.extra("n_buckets", store.what).toInt)
     }
 
   /** The signing-parameter extras every commit carries forward (later
@@ -170,12 +157,6 @@ object SignatureIndex {
     "shingle" -> p.shingle.toString,
     "num_hashes" -> p.numHashes.toString,
     "bands" -> p.bands.toString)
-
-  // --------------------------------------------------- manifest
-
-  private def readManifest(spark: SparkSession,
-      indexDir: String): GenIndex.Manifest =
-    GenIndex.readManifest(spark, indexDir, What)
 
   // ------------------------------------------------------ signing
 
@@ -226,7 +207,7 @@ object SignatureIndex {
     */
   private def writeGeneration(spark: SparkSession, indexDir: String,
       bands: DataFrame, sets: DataFrame,
-      gen: Int): (Map[Int, Seq[String]], Map[Int, Seq[String]], Long) = {
+      gen: Int): (GenIndex.Refs, GenIndex.Refs, Long) = {
     val obs = Observation(s"sets_g$gen")
     GenIndex.inParallel(
       bands.repartition(col("__kb"))
@@ -236,10 +217,8 @@ object SignatureIndex {
         .repartition(col("__db"))
         .write.mode("overwrite").partitionBy("__db")
         .parquet(s"$indexDir/sets_g$gen"))
-    (GenIndex.bucketsIn(spark, s"$indexDir/bands_g$gen", "__kb")
-        .map(_ -> Seq(s"bands_g$gen")).toMap,
-      GenIndex.bucketsIn(spark, s"$indexDir/sets_g$gen", "__db")
-        .map(_ -> Seq(s"sets_g$gen")).toMap,
+    (GenIndex.genRefs(spark, indexDir, "bands", "__kb", gen),
+      GenIndex.genRefs(spark, indexDir, "sets", "__db", gen),
       // an empty-batch plan can collapse to an empty LocalRelation
       // whose write never executes the CollectMetrics node — a missing
       // metric IS the zero-row case
@@ -279,9 +258,7 @@ object SignatureIndex {
       if (nBuckets > 0) nBuckets
       else bucketsFor(nDocs, bandsPerDoc = bands,
         targetBandRowsPerBucket = targetBandRowsPerBucket)
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.clearIndexState(spark, indexDir, LockName,
-        "prior signature index state (stale stages must not survive a rebuild)")
+    store.rebuild(spark, indexDir) {
       val p = Params(shingle, numHashes, bands, nb)
       writeMeta(spark, indexDir, p)
       // the signed frame is shared lazily (two streaming passes) —
@@ -291,13 +268,11 @@ object SignatureIndex {
       val (bandRefs, setRefs, _) = writeGeneration(spark, indexDir,
         bandRows(signed, p, gen = 0),
         setRows(signed, p, gen = 0), gen = 0)
-      GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(0, "build",
-        Map("bands" -> bandRefs, "sets" -> setRefs),
+      (Map("bands" -> bandRefs, "sets" -> setRefs),
         Map("n_buckets" -> nb.toString,
           "n_docs" -> nDocs.toString,
           "target_band_rows" -> targetBandRowsPerBucket.toString)
-          ++ paramExtras(p)))
-      GenIndex.flipCurrent(spark, indexDir, 0)
+          ++ paramExtras(p))
     }
   }
 
@@ -333,61 +308,33 @@ object SignatureIndex {
       indexDir: String, commitId: Option[String] = None,
       autoCompactFragments: Int = AutoCompactFragments): Unit = {
     val spark = docs.sparkSession
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      val cur = readManifest(spark, indexDir)
-      // bounded-deep append-id history (GenIndex.MaxAppendIds): under
-      // last-generation-wins upserts an OUT-OF-ORDER redelivery is
-      // worse than a double-count — a replayed old batch would land at
-      // a higher generation and silently revert a newer upsert — so
-      // the guard remembers more than the newest id (r16 review)
-      if (GenIndex.isRedelivered(cur, commitId)) {
-        // redelivered batch: its commit already flipped — no-op
-      } else {
-        val p = currentParams(spark, indexDir, cur)
-        val gen = cur.version + 1
-        // the signed frame is shared LAZILY — each write re-derives it
-        // (two pipelined shingle+hash scans). Persisting it to share
-        // one pass was measured SLOWER: the columnar cache encode of
-        // the fat hhd arrays cost more than the scan it saved (e37 at
-        // the 100× probe went 43 → 77–83 s with persist; reverted)
-        val signed = signedFrame(docs, idCol, textCol, p)
-        // batch doc count observed ON the sets write (one row per doc)
-        // — the empty-micro-batch check rides the same metric: the old
-        // pre-scan `docs.isEmpty` cost a whole corpus-column job on
-        // EVERY non-empty append to guard the rare empty delivery,
-        // which now just writes two empty dirs and cleans them up
-        val (bandW, setW, batchDocs) = writeGeneration(spark, indexDir,
-          bandRows(signed, p, gen), setRows(signed, p, gen), gen)
-        if (batchDocs == 0L) {
-          // empty micro-batch (a legitimate foreachBatch delivery):
-          // no-op — no manifest churn, no generation left behind
-          StagedSwap.deleteChecked(spark, s"$indexDir/bands_g$gen",
-            "empty append generation (no docs in batch)")
-          StagedSwap.deleteChecked(spark, s"$indexDir/sets_g$gen",
-            "empty append generation (no docs in batch)")
-        } else {
-          def acc(prior: Map[Int, Seq[String]],
-              written: Map[Int, Seq[String]]): Map[Int, Seq[String]] =
-            prior ++ written.map { case (k, gs) =>
-              k -> (prior.getOrElse(k, Seq.empty) ++ gs) }
-          val bandRefs = acc(cur.refs("bands"), bandW)
-          val setRefs = acc(cur.refs("sets"), setW)
-          // re-appended docs double-count in n_docs, which only
-          // over-sizes compact's rebucket target until it recomputes
-          // the exact distinct count
-          val cid = commitId.getOrElse(java.util.UUID.randomUUID().toString)
-          GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(gen, cid,
-            Map("bands" -> bandRefs, "sets" -> setRefs),
-            GenIndex.withAppendId(cur.extras, cid) ++ Map(
-              "n_docs" -> (cur.extra("n_docs", What).toLong + batchDocs)
-                .toString)))
-          GenIndex.flipCurrent(spark, indexDir, gen)
-          if (autoCompactFragments > 0 &&
-              (bandRefs.values.exists(_.size >= autoCompactFragments) ||
-                setRefs.values.exists(_.size >= autoCompactFragments)))
-            foldLocked(spark, indexDir, autoCompactFragments)
-        }
-      }
+    def overThreshold(m: GenIndex.Manifest) = autoCompactFragments > 0 &&
+      Seq("bands", "sets").exists(m.refs(_).values.exists(_.size >= autoCompactFragments))
+    store.mutate(spark, indexDir, commitId,
+        after = m => if (overThreshold(m)) fold(spark, indexDir, autoCompactFragments)) {
+        (cur, gen) =>
+      val p = currentParams(spark, indexDir, cur)
+      // the signed frame is shared LAZILY — each write re-derives it
+      // (two pipelined shingle+hash scans). Persisting it to share
+      // one pass was measured SLOWER: the columnar cache encode of
+      // the fat hhd arrays cost more than the scan it saved (e37 at
+      // the 100× probe went 43 → 77–83 s with persist; reverted)
+      val signed = signedFrame(docs, idCol, textCol, p)
+      // batch doc count observed ON the sets write (one row per doc)
+      // — the empty-micro-batch check rides the same metric: the old
+      // pre-scan `docs.isEmpty` cost a whole corpus-column job on
+      // EVERY non-empty append to guard the rare empty delivery,
+      // which now just writes two empty dirs the store cleans up
+      val (bandW, setW, batchDocs) = writeGeneration(spark, indexDir,
+        bandRows(signed, p, gen), setRows(signed, p, gen), gen)
+      // re-appended docs double-count in n_docs, which only
+      // over-sizes compact's rebucket target until it recomputes
+      // the exact distinct count
+      if (batchDocs == 0L) None
+      else Some((Map("bands" -> GenIndex.withFragments(cur.refs("bands"), bandW),
+          "sets" -> GenIndex.withFragments(cur.refs("sets"), setW)),
+        cur.extras + ("n_docs" ->
+          (cur.extra("n_docs", store.what).toLong + batchDocs).toString)))
     }
   }
 
@@ -420,82 +367,63 @@ object SignatureIndex {
       commitId: Option[String] = None): Unit = {
     val spark = ids.sparkSession
     import spark.implicits._
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      val cur = readManifest(spark, indexDir)
-      if (GenIndex.isRedelivered(cur, commitId)) {
-        // redelivered delete batch: its commit already flipped — no-op
-      } else {
-        val p = currentParams(spark, indexDir, cur)
-        val gen = cur.version + 1
-        val del = ids.select(col(idCol).as("doc_id")).distinct()
-          .withColumn("__db", pmod(hash(col("doc_id")), lit(p.nBuckets)))
-          .persist()
-        try {
-          // touched set buckets: bounded ≤ nBuckets control read. An
-          // empty delete batch surfaces HERE as zero buckets — the old
-          // separate `ids.isEmpty` pre-scan paid a whole id-column job
-          // on every real delete to guard that rare case
-          val dbs = del.select($"__db").distinct().as[Int].collect().toSeq
-          // liveness: a doc is LIVE iff its LATEST set row has a real
-          // hhd (null = already tombstoned). max(struct(...)) rather
-          // than max_by so the tombstone row can never be silently
-          // skipped by aggregate null handling — the generation field
-          // leads, so ordering is by __gen exactly ((doc_id, __gen) is
-          // unique in sets, so the flag never breaks a tie). The
-          // struct carries only a LIVENESS FLAG, not the hhd payload:
-          // shuffling the fat hash arrays through the groupBy exchange
-          // to test nullness was pure shuffle weight (guide §2.3 —
-          // shuffle flags, not payloads; the serve path's max_by keeps
-          // the payload because verification actually needs it).
-          val live = GenIndex.readBuckets(spark, indexDir,
-              cur.refs("sets"), "__db", dbs, withBucketCol = false,
-              SetsDDL)
-            .join(del.select($"doc_id"), Seq("doc_id"), "left_semi")
-            .groupBy($"doc_id")
-            .agg(max(struct($"__gen", $"hhd".isNotNull.as("__live")))
-              .as("__m"))
-            .filter($"__m".getField("__live"))
-            .select($"doc_id")
-          val tombs = live.join(del, "doc_id")
-            .select($"doc_id", lit(null).cast("array<bigint>").as("hhd"),
-              lit(gen).as("__gen"), $"__db")
-          // killed-doc count observed ON the tombstone write (guide
-          // §1.4/§6 — the old post-write footer count was an extra job
-          // per delete). An empty delete batch (dbs empty) short-
-          // circuits through the same zero-count path: readBuckets
-          // returns the empty frame and the write lands no buckets.
-          val obs = Observation(s"tombs_g$gen")
-          tombs.observe(obs, count(lit(1)).as("n"))
-            .repartition(col("__db"))
-            .write.mode("overwrite").partitionBy("__db")
-            .parquet(s"$indexDir/sets_g$gen")
-          val nDel = obs.get.get("n")
-            .map(_.asInstanceOf[Long]).getOrElse(0L)
-          if (nDel == 0) {
-            // nothing live matched: no commit needed — a redelivery
-            // re-resolves liveness and is again a no-op by content
-            StagedSwap.deleteChecked(spark, s"$indexDir/sets_g$gen",
-              "empty tombstone generation (no live doc matched)")
-          } else {
-            val prior = cur.refs("sets")
-            val setRefs = prior ++ GenIndex
-              .bucketsIn(spark, s"$indexDir/sets_g$gen", "__db")
-              .map(k => k -> (prior.getOrElse(k, Seq.empty)
-                :+ s"sets_g$gen"))
-            val cid = commitId.getOrElse(
-              java.util.UUID.randomUUID().toString)
-            GenIndex.writeManifest(spark, indexDir,
-              GenIndex.Manifest(gen, cid,
-                Map("bands" -> cur.refs("bands"), "sets" -> setRefs),
-                GenIndex.withAppendId(cur.extras, cid) ++ Map(
-                  "n_docs" -> (cur.extra("n_docs", What).toLong - nDel)
-                    .toString)))
-            GenIndex.flipCurrent(spark, indexDir, gen)
-            if (setRefs.values.exists(_.size >= AutoCompactFragments))
-              foldLocked(spark, indexDir, AutoCompactFragments)
-          }
-        } finally del.unpersist()
-      }
+    store.mutate(spark, indexDir, commitId,
+        after = m => if (m.refs("sets").values.exists(_.size >= AutoCompactFragments))
+          fold(spark, indexDir, AutoCompactFragments)) { (cur, gen) =>
+      val p = currentParams(spark, indexDir, cur)
+      val del = ids.select(col(idCol).as("doc_id")).distinct()
+        .withColumn("__db", pmod(hash(col("doc_id")), lit(p.nBuckets)))
+        .persist()
+      try {
+        // touched set buckets: bounded ≤ nBuckets control read. An
+        // empty delete batch surfaces HERE as zero buckets — the old
+        // separate `ids.isEmpty` pre-scan paid a whole id-column job
+        // on every real delete to guard that rare case
+        val dbs = del.select($"__db").distinct().as[Int].collect().toSeq
+        // liveness: a doc is LIVE iff its LATEST set row has a real
+        // hhd (null = already tombstoned). max(struct(...)) rather
+        // than max_by so the tombstone row can never be silently
+        // skipped by aggregate null handling — the generation field
+        // leads, so ordering is by __gen exactly ((doc_id, __gen) is
+        // unique in sets, so the flag never breaks a tie). The
+        // struct carries only a LIVENESS FLAG, not the hhd payload:
+        // shuffling the fat hash arrays through the groupBy exchange
+        // to test nullness was pure shuffle weight (guide §2.3 —
+        // shuffle flags, not payloads; the serve path's max_by keeps
+        // the payload because verification actually needs it).
+        val live = GenIndex.readBuckets(spark, indexDir,
+            cur.refs("sets"), "__db", dbs, withBucketCol = false,
+            SetsDDL)
+          .join(del.select($"doc_id"), Seq("doc_id"), "left_semi")
+          .groupBy($"doc_id")
+          .agg(max(struct($"__gen", $"hhd".isNotNull.as("__live")))
+            .as("__m"))
+          .filter($"__m".getField("__live"))
+          .select($"doc_id")
+        val tombs = live.join(del, "doc_id")
+          .select($"doc_id", lit(null).cast("array<bigint>").as("hhd"),
+            lit(gen).as("__gen"), $"__db")
+        // killed-doc count observed ON the tombstone write (guide
+        // §1.4/§6 — the old post-write footer count was an extra job
+        // per delete). An empty delete batch (dbs empty) short-
+        // circuits through the same zero-count path: readBuckets
+        // returns the empty frame and the write lands no buckets.
+        val obs = Observation(s"tombs_g$gen")
+        tombs.observe(obs, count(lit(1)).as("n"))
+          .repartition(col("__db"))
+          .write.mode("overwrite").partitionBy("__db")
+          .parquet(s"$indexDir/sets_g$gen")
+        val nDel = obs.get.get("n")
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        // nothing live matched: no commit needed — a redelivery
+        // re-resolves liveness and is again a no-op by content
+        if (nDel == 0) None
+        else Some((Map("bands" -> cur.refs("bands"),
+            "sets" -> GenIndex.withFragments(cur.refs("sets"),
+              GenIndex.genRefs(spark, indexDir, "sets", "__db", gen))),
+          cur.extras + ("n_docs" ->
+            (cur.extra("n_docs", store.what).toLong - nDel).toString)))
+      } finally del.unpersist()
     }
   }
 
@@ -506,32 +434,26 @@ object SignatureIndex {
     * their original `__gen` stamps, so last-generation-wins is
     * unaffected and serving is bit-identical before/after
     * (spec-pinned); superseded rows are not reclaimed here — that is
-    * [[compact]]'s job. Commits as one generation + pointer flip,
-    * then vacuums at the default grace window.
+    * [[compact]]'s job. Runs under the caller's lock, through the
+    * store's maintenance commit.
     */
-  private def foldLocked(spark: SparkSession, indexDir: String,
-      threshold: Int): Unit = {
-    val cur = readManifest(spark, indexDir)
-    val gen = cur.version + 1
+  private def fold(spark: SparkSession, indexDir: String,
+      threshold: Int): Unit = store.maintain(spark, indexDir, "fold") { (cur, gen) =>
     // merge-tail logic is the shared GenIndex.foldFragmentTable; both
     // tables fold into the SAME generation suffix and one manifest.
     // The two folds are independent read+write jobs until that
     // manifest — run them CONCURRENTLY (guide §2.6, the same overlap
     // the generation writes use).
-    var bandRefs: Option[Map[Int, Seq[String]]] = None
-    var setRefs: Option[Map[Int, Seq[String]]] = None
+    var bandRefs: Option[GenIndex.Refs] = None
+    var setRefs: Option[GenIndex.Refs] = None
     GenIndex.inParallel(
       { bandRefs = GenIndex.foldFragmentTable(spark, indexDir, cur,
           "bands", "__kb", gen, threshold, order = Seq.empty, BandsDDL) },
       { setRefs = GenIndex.foldFragmentTable(spark, indexDir, cur,
           "sets", "__db", gen, threshold, order = Seq.empty, SetsDDL) })
-    if (bandRefs.isEmpty && setRefs.isEmpty) return
-    GenIndex.writeManifest(spark, indexDir,
-      GenIndex.Manifest(gen, s"fold_g$gen",
-        Map("bands" -> bandRefs.getOrElse(cur.refs("bands")),
-          "sets" -> setRefs.getOrElse(cur.refs("sets"))), cur.extras))
-    GenIndex.flipCurrent(spark, indexDir, gen)
-    GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions = 1, What)
+    if (bandRefs.isEmpty && setRefs.isEmpty) None
+    else Some((Map("bands" -> bandRefs.getOrElse(cur.refs("bands")),
+      "sets" -> setRefs.getOrElse(cur.refs("sets"))), cur.extras))
   }
 
   /** Serve incoming-vs-base near-dup pairs from the index:
@@ -569,7 +491,7 @@ object SignatureIndex {
   def servePairs(spark: SparkSession, indexDir: String, incoming: DataFrame,
       idCol: String, textCol: String, threshold: Double): DataFrame = {
     import spark.implicits._
-    val m = readManifest(spark, indexDir)
+    val m = store.current(spark, indexDir)
     val p = currentParams(spark, indexDir, m)
     // the incoming batch's signed frame is shared LAZILY between the
     // band derivation and the verification sets — persisting it to
@@ -655,13 +577,12 @@ object SignatureIndex {
     * immediately-previous snapshot servable.
     */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      compactLocked(spark, indexDir)
+    store.locked(spark, indexDir) {
+      store.maintain(spark, indexDir, "compact")(compacted(spark, indexDir))
     }
 
-  private def compactLocked(spark: SparkSession, indexDir: String): Unit = {
-    val cur = readManifest(spark, indexDir)
-    val gen = cur.version + 1
+  private def compacted(spark: SparkSession, indexDir: String)(
+      cur: GenIndex.Manifest, gen: Int): Option[GenIndex.Snapshot] = {
     val setsAll = GenIndex.readBuckets(spark, indexDir, cur.refs("sets"),
       "__db", cur.refs("sets").keys.toSeq, withBucketCol = false, SetsDDL)
     // each doc's latest generation — the upsert GC frame (sets hold one
@@ -686,8 +607,8 @@ object SignatureIndex {
     val nDocs = latest.count()
     val target = cur.extras.getOrElse("target_band_rows",
       (4L << 20).toString).toLong
-    val meta = spark.read.parquet(s"$indexDir/meta").head()
-    val nb = bucketsFor(nDocs, bandsPerDoc = meta.getInt(2),
+    val nb = bucketsFor(nDocs,
+      bandsPerDoc = currentParams(spark, indexDir, cur).bands,
       targetBandRowsPerBucket = target)
     val bandsLive = GenIndex.readBuckets(spark, indexDir, cur.refs("bands"),
         "__kb", cur.refs("bands").keys.toSeq, withBucketCol = false, BandsDDL)
@@ -701,52 +622,27 @@ object SignatureIndex {
     val (bandRefs, setRefs, _) =
       writeGeneration(spark, indexDir, bandsLive, setsLive, gen)
     latest.unpersist()
-    GenIndex.writeManifest(spark, indexDir,
-      GenIndex.Manifest(gen, s"compact_g$gen",
-        Map("bands" -> bandRefs, "sets" -> setRefs),
-        cur.extras ++ Map("n_buckets" -> nb.toString,
-          "n_docs" -> nDocs.toString)))
-    GenIndex.flipCurrent(spark, indexDir, gen)
-    vacuumLocked(spark, indexDir, graceVersions = 1)
+    Some((Map("bands" -> bandRefs, "sets" -> setRefs),
+      cur.extras ++ Map("n_buckets" -> nb.toString, "n_docs" -> nDocs.toString)))
   }
 
-  /** Delete generation dirs referenced by NO manifest inside the grace
-    * window, and the manifest files older than that window. The
-    * default `graceVersions = 1` keeps the immediately-previous
-    * snapshot fully servable — a reader that resolved its paths just
-    * before a concurrent commit is never invalidated (Catalog.vacuum's
-    * keepLast treatment). `graceVersions = 0` reclaims everything but
-    * the current snapshot: run THAT only in maintenance windows when
-    * no reader holds an older snapshot.
+  /** [[GenIndex.Store.vacuum]]: the default grace of 1 keeps the
+    * previous snapshot servable; 0 is maintenance-window-only.
     */
   def vacuum(spark: SparkSession, indexDir: String,
       graceVersions: Int = 1): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      vacuumLocked(spark, indexDir, graceVersions)
-    }
+    store.vacuum(spark, indexDir, graceVersions)
 
-  private def vacuumLocked(spark: SparkSession, indexDir: String,
-      graceVersions: Int): Unit =
-    GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions, What)
-
-  /** Repair any torn maintenance: re-materialize a lost `_current`
-    * pointer (the torn-flip window of StagedSwap.writeAtomic's
-    * non-atomic fallback — the newest INTACT manifest wins), discard
-    * any `append_next` stage left by a pre-fragment-era crashed
-    * append (the fragment append never stages; a crashed old-protocol
-    * append never returned, so its batch was never acknowledged and
-    * the at-least-once producer re-sends it under its commitId), then
-    * vacuum orphan generations a crashed append/fold/compact left
-    * behind.
+  /** [[GenIndex.Store.recover]], which also discards any
+    * `append_next` stage left by a pre-fragment-era crashed append (the
+    * fragment append never stages; a crashed old-protocol append never
+    * returned, so its batch was never acknowledged and the
+    * at-least-once producer re-sends it under its commitId).
     */
   def recover(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.restoreCurrentIfMissing(spark, indexDir, What)
-      if (StagedSwap.exists(spark, stageDir(indexDir)))
-        StagedSwap.deleteChecked(spark, stageDir(indexDir),
-          "pre-fragment append stage (batch was never acknowledged)")
-      vacuumLocked(spark, indexDir, graceVersions = 1)
-    }
+    store.recover(spark, indexDir, () =>
+      StagedSwap.deleteChecked(spark, stageDir(indexDir),
+        "pre-fragment append stage (batch was never acknowledged)"))
 
   /** The current snapshot's bucket → generation-dir refs for `table`
     * ("bands" | "sets") — exposed for specs that pin layout
@@ -754,6 +650,6 @@ object SignatureIndex {
     * results, singleton refs after compact, vacuum bounds).
     */
   private[graft] def currentRefs(spark: SparkSession, indexDir: String,
-      table: String): Map[Int, Seq[String]] =
-    readManifest(spark, indexDir).refs(table)
+      table: String): GenIndex.Refs =
+    store.current(spark, indexDir).refs(table)
 }

@@ -50,9 +50,9 @@ import org.apache.spark.sql.functions._
   * The BM25 a consumer computes from this index is pinned equal to
   * the full-scan t57 query by sharing its oracle.
   *
-  * Writers (build/append/delete/compact/recover/vacuum) serialize through
-  * `_commit.lock` (StagedSwap.withFileLock) around their whole
-  * read→write→flip span; reads stay lock-free.
+  * Commits, the writer lock, redelivery idempotency (`commitId`),
+  * recover and vacuum are the shared generation protocol of
+  * [[GenIndex.Store]] ([[store]]); reads stay lock-free.
   */
 object TextIndex {
 
@@ -93,10 +93,8 @@ object TextIndex {
     */
   val AutoCompactFragments = 8
 
-  private val What = "text index"
-  private val LockName = "_commit.lock"
-  private def lockPath(indexDir: String) = s"$indexDir/$LockName"
-  private val GenPrefixes = Seq("postings_g", "doclens_g", "tombs_g")
+  private[graft] val store = new GenIndex.Store("text index",
+    Seq("postings_g", "doclens_g", "tombs_g"))
 
   /** Schema for the empty-bucket frame when NO queried bucket exists in
     * the manifest — derived from a real generation's footer when one
@@ -140,17 +138,12 @@ object TextIndex {
       .withColumn("__db", pmod(hash(col("doc_id")), lit(nb)))
 
   private def writeDoclens(spark: SparkSession, indexDir: String,
-      rows: DataFrame, gen: Int): Map[Int, Seq[String]] = {
+      rows: DataFrame, gen: Int): GenIndex.Refs = {
     rows.repartition(col("__db"))
       .write.mode("overwrite").partitionBy("__db")
       .parquet(s"$indexDir/doclens_g$gen")
-    GenIndex.bucketsIn(spark, s"$indexDir/doclens_g$gen", "__db")
-      .map(_ -> Seq(s"doclens_g$gen")).toMap
+    GenIndex.genRefs(spark, indexDir, "doclens", "__db", gen)
   }
-
-  private def readManifest(spark: SparkSession,
-      indexDir: String): GenIndex.Manifest =
-    GenIndex.readManifest(spark, indexDir, What)
 
   /** One corpus pass: tokenize → (doc, term) tf with per-doc length
     * carried through the explode, bucketed and written as
@@ -182,9 +175,7 @@ object TextIndex {
       targetRowsPerBucket: Long = 4L << 20): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.clearIndexState(spark, indexDir, LockName,
-        "prior text index state (old generations must not survive a rebuild)")
+    store.rebuild(spark, indexDir) {
       val tokens = docs.select(col(idCol).as("doc_id"),
         TextFunctions.terms(col(textCol)).as("ts"))
       val tf = tokens
@@ -213,7 +204,7 @@ object TextIndex {
       // ([[doclensRows]]) are independent once nb is known — write them
       // CONCURRENTLY (guide §2.6): sequential execution left the
       // doclens tokenize scan waiting on the postings write's tail
-      var dlRefs: Map[Int, Seq[String]] = Map.empty
+      var dlRefs: GenIndex.Refs = Map.empty
       GenIndex.inParallel(
         tf.withColumn("__tb", pmod(hash($"term"), lit(nb)))
           .repartition(col("__tb"))
@@ -225,17 +216,13 @@ object TextIndex {
       // target_rows_per_bucket rides the manifest so compact() can
       // REBUCKET to the accumulated corpus volume with the same goal
       // the build sized against (r14 verdict item 1)
-      GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(0, "build",
-        Map("postings" ->
-          GenIndex.bucketsIn(spark, s"$indexDir/postings_g0", "__tb")
-            .map(_ -> Seq("postings_g0")).toMap,
+      (Map("postings" -> GenIndex.genRefs(spark, indexDir, "postings", "__tb", 0),
           "doclens" -> dlRefs),
         Map("n_docs" -> st.getLong(0).toString,
           "total_tokens" -> totalTokens.toString,
           "n_buckets" -> nb.toString,
           "target_rows_per_bucket" -> targetRowsPerBucket.toString,
-          "has_doclens" -> "1")))
-      GenIndex.flipCurrent(spark, indexDir, 0)
+          "has_doclens" -> "1"))
     }
   }
 
@@ -275,123 +262,96 @@ object TextIndex {
       autoCompactFragments: Int = AutoCompactFragments): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      val cur = readManifest(spark, indexDir)
-      // redelivery test runs against the PERSISTED append-id history,
-      // not cur.commitId alone (r15 ADVICE item 1): an append that
-      // crosses AutoCompactFragments immediately commits fold_g{N}
-      // in the same call — and any maintenance compact between append
-      // and redelivery reopens the same window — so the manifest's own
-      // commitId no longer names the append. The history rides every
-      // later commit (compactLocked carries cur.extras forward), so
-      // the guarantee survives folds — and it is BOUNDED-DEEP
-      // (GenIndex.MaxAppendIds), so a checkpoint restored several
-      // batches back still no-ops instead of double-counting.
-      if (GenIndex.isRedelivered(cur, commitId)) {
-        // redelivered batch: its commit already flipped — no-op
-      } else {
-        val nb = cur.extra("n_buckets", What).toInt
-        // re-appending a TOMBSTONED id must refuse, not silently land:
-        // postings rows carry no generation to outrank, so the
-        // serve-side tombstone anti join would hide the revived rows
-        // too. Only paid when tombstones exist (bounded read).
-        if (cur.refs("tombs").nonEmpty) {
-          val clash = docs.select(col(idCol).as("doc_id"))
-            .join(tombRows(spark, indexDir, cur), Seq("doc_id"),
-              "left_semi")
-            .limit(1).count()
-          if (clash > 0)
-            throw new IllegalStateException(
-              s"text index at $indexDir holds tombstones for ids in " +
-                "this batch — re-inserting a deleted id needs compact() " +
-                "first (tombstones are id-level; compact purges them " +
-                "physically, after which the id may be re-appended)")
-        }
-        val tokens = docs.select(col(idCol).as("doc_id"),
-          TextFunctions.terms(col(textCol)).as("ts"))
-        val newTf = tokens
-          .select($"doc_id", size($"ts").cast("long").as("dl"),
-            posexplode($"ts").as(Seq("pos", "term")))
-          .groupBy($"doc_id", $"term", $"dl")
-          .agg(count(lit(1)).as("tf"),
-            sort_array(collect_list($"pos")).as("pss"))
-          .withColumn("__tb", pmod(hash($"term"), lit(nb)))
-        val gen = cur.version + 1
-        val hasDoclens = cur.extras.contains("has_doclens")
-        // corpus-stat deltas OBSERVED on the doclens write (one row
-        // per doc carrying dl — exactly the old separate
-        // tokenize+aggregate job's input, now riding a write this
-        // append pays anyway; guide §1.4/§6) — and the empty-batch
-        // no-op check rides the same metric instead of a pre-scan
-        // `docs.isEmpty` job on every non-empty append. A pre-doclens
-        // index keeps the aggregate job (it has no sidecar write to
-        // fold the stats into).
-        val obs = Observation(s"doclens_g$gen")
-        var dlW: Map[Int, Seq[String]] = Map.empty
-        // postings and the doclens sidecar are independent once nb is
-        // known — write them CONCURRENTLY (guide §2.6), same as build
-        if (hasDoclens)
-          GenIndex.inParallel(
-            newTf.sortWithinPartitions($"__tb", $"term")
-              .write.mode("overwrite").partitionBy("__tb")
-              .parquet(s"$indexDir/postings_g$gen"),
-            { dlW = writeDoclens(spark, indexDir,
-              doclensRows(tokens, nb)
-                .observe(obs, count(lit(1)).as("n"), sum($"dl").as("t")),
-              gen) })
-        else
-          // same term-clustered layout as build (page-index pruning)
+    // the store's redelivery test runs against the PERSISTED
+    // append-id history, not cur.commitId alone (r15 ADVICE item 1): an
+    // append that crosses AutoCompactFragments immediately commits
+    // fold_g{N} in the same call, so the manifest's own commitId no
+    // longer names the append
+    store.mutate(spark, indexDir, commitId,
+        after = m => if (autoCompactFragments > 0 &&
+          m.refs("postings").values.exists(_.size >= autoCompactFragments))
+          fold(spark, indexDir, autoCompactFragments)) { (cur, gen) =>
+      val nb = cur.extra("n_buckets", store.what).toInt
+      // re-appending a TOMBSTONED id must refuse, not silently land:
+      // postings rows carry no generation to outrank, so the
+      // serve-side tombstone anti join would hide the revived rows
+      // too. Only paid when tombstones exist (bounded read).
+      if (cur.refs("tombs").nonEmpty) {
+        val clash = docs.select(col(idCol).as("doc_id"))
+          .join(tombRows(spark, indexDir, cur), Seq("doc_id"),
+            "left_semi")
+          .limit(1).count()
+        if (clash > 0)
+          throw new IllegalStateException(
+            s"text index at $indexDir holds tombstones for ids in " +
+              "this batch — re-inserting a deleted id needs compact() " +
+              "first (tombstones are id-level; compact purges them " +
+              "physically, after which the id may be re-appended)")
+      }
+      val tokens = docs.select(col(idCol).as("doc_id"),
+        TextFunctions.terms(col(textCol)).as("ts"))
+      val newTf = tokens
+        .select($"doc_id", size($"ts").cast("long").as("dl"),
+          posexplode($"ts").as(Seq("pos", "term")))
+        .groupBy($"doc_id", $"term", $"dl")
+        .agg(count(lit(1)).as("tf"),
+          sort_array(collect_list($"pos")).as("pss"))
+        .withColumn("__tb", pmod(hash($"term"), lit(nb)))
+      val hasDoclens = cur.extras.contains("has_doclens")
+      // corpus-stat deltas OBSERVED on the doclens write (one row
+      // per doc carrying dl — exactly the old separate
+      // tokenize+aggregate job's input, now riding a write this
+      // append pays anyway; guide §1.4/§6) — and the empty-batch
+      // no-op check rides the same metric instead of a pre-scan
+      // `docs.isEmpty` job on every non-empty append. A pre-doclens
+      // index keeps the aggregate job (it has no sidecar write to
+      // fold the stats into).
+      val obs = Observation(s"doclens_g$gen")
+      var dlW: GenIndex.Refs = Map.empty
+      // postings and the doclens sidecar are independent once nb is
+      // known — write them CONCURRENTLY (guide §2.6), same as build
+      if (hasDoclens)
+        GenIndex.inParallel(
           newTf.sortWithinPartitions($"__tb", $"term")
             .write.mode("overwrite").partitionBy("__tb")
-            .parquet(s"$indexDir/postings_g$gen")
-        val (bn, bt) =
-          if (hasDoclens)
-            // an empty-batch plan can collapse to an empty
-            // LocalRelation whose write never runs the CollectMetrics
-            // node — a missing metric IS the zero-row case
-            (obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L),
-              obs.get.get("t").flatMap(v => Option(v))
-                .map(_.asInstanceOf[Long]).getOrElse(0L))
-          else {
-            val st = tokens.agg(count(lit(1)).as("n"),
-              sum(size($"ts").cast("long")).as("t")).head()
-            (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-          }
-        if (bn == 0L) {
-          // empty micro-batch (a legitimate foreachBatch delivery):
-          // no-op — no manifest churn, no generation left behind
-          StagedSwap.deleteChecked(spark, s"$indexDir/postings_g$gen",
-            "empty append generation (no docs in batch)")
-          if (hasDoclens)
-            StagedSwap.deleteChecked(spark, s"$indexDir/doclens_g$gen",
-              "empty append generation (no docs in batch)")
-        } else {
-          val prior = cur.refs("postings")
-          val refs = prior ++ GenIndex
-            .bucketsIn(spark, s"$indexDir/postings_g$gen", "__tb")
-            .map(k => k -> (prior.getOrElse(k, Seq.empty) :+ s"postings_g$gen"))
-          // the batch's doclens fragment (the has_doclens extra marks a
-          // doclens-era index — a pre-doclens index skips it and delete
-          // refuses there; nothing else changes)
-          val dlPrior = cur.refs("doclens")
-          val dlRefs = if (!hasDoclens) dlPrior
-            else dlPrior ++ dlW.map { case (k, gs) =>
-              k -> (dlPrior.getOrElse(k, Seq.empty) ++ gs) }
-          val n0 = cur.extra("n_docs", What).toLong
-          val t0 = cur.extra("total_tokens", What).toLong
-          val cid = commitId.getOrElse(java.util.UUID.randomUUID().toString)
-          GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(gen,
-            cid, Map("postings" -> refs, "doclens" -> dlRefs,
-              "tombs" -> cur.refs("tombs")),
-            GenIndex.withAppendId(cur.extras, cid) ++ Map(
-              "n_docs" -> (n0 + bn).toString,
-              "total_tokens" -> (t0 + bt).toString)))
-          GenIndex.flipCurrent(spark, indexDir, gen)
-          if (autoCompactFragments > 0 &&
-              refs.values.exists(_.size >= autoCompactFragments))
-            foldLocked(spark, indexDir, autoCompactFragments)
+            .parquet(s"$indexDir/postings_g$gen"),
+          { dlW = writeDoclens(spark, indexDir,
+            doclensRows(tokens, nb)
+              .observe(obs, count(lit(1)).as("n"), sum($"dl").as("t")),
+            gen) })
+      else
+        // same term-clustered layout as build (page-index pruning)
+        newTf.sortWithinPartitions($"__tb", $"term")
+          .write.mode("overwrite").partitionBy("__tb")
+          .parquet(s"$indexDir/postings_g$gen")
+      val (bn, bt) =
+        if (hasDoclens)
+          // an empty-batch plan can collapse to an empty
+          // LocalRelation whose write never runs the CollectMetrics
+          // node — a missing metric IS the zero-row case
+          (obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L),
+            obs.get.get("t").flatMap(v => Option(v))
+              .map(_.asInstanceOf[Long]).getOrElse(0L))
+        else {
+          val st = tokens.agg(count(lit(1)).as("n"),
+            sum(size($"ts").cast("long")).as("t")).head()
+          (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
         }
-      }
+      // an empty micro-batch (a legitimate foreachBatch delivery)
+      // commits nothing
+      if (bn == 0L) None
+      else Some((Map(
+          "postings" -> GenIndex.withFragments(cur.refs("postings"),
+            GenIndex.genRefs(spark, indexDir, "postings", "__tb", gen)),
+          // the has_doclens extra marks a doclens-era index — a
+          // pre-doclens index has no doclens fragment (dlW is empty)
+          // and delete refuses there; nothing else changes
+          "doclens" -> GenIndex.withFragments(cur.refs("doclens"), dlW),
+          "tombs" -> cur.refs("tombs")),
+        cur.extras ++ Map(
+          "n_docs" -> (cur.extra("n_docs", store.what).toLong + bn).toString,
+          "total_tokens" ->
+            (cur.extra("total_tokens", store.what).toLong + bt).toString)))
     }
   }
 
@@ -421,78 +381,59 @@ object TextIndex {
       commitId: Option[String] = None): Unit = {
     val spark = ids.sparkSession
     import spark.implicits._
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      val cur = readManifest(spark, indexDir)
-      if (GenIndex.isRedelivered(cur, commitId)) {
-        // redelivered delete batch: its commit already flipped — no-op
-      } else {
-        if (!cur.extras.contains("has_doclens"))
-          throw new IllegalStateException(
-            s"text index at $indexDir predates the doclens sidecar — " +
-              "exact delete needs per-doc lengths; rebuild the index " +
-              "to enable deletes")
-        val nb = cur.extra("n_buckets", What).toInt
-        val gen = cur.version + 1
-        val del = ids.select(col(idCol).as("doc_id")).distinct()
-          .withColumn("__db", pmod(hash(col("doc_id")), lit(nb)))
-          .persist()
-        try {
-          // touched doclens buckets: bounded ≤ nBuckets control read
-          // (an empty delete batch surfaces here as zero buckets — the
-          // old separate `ids.isEmpty` pre-scan paid an id-column job
-          // on every real delete to guard that rare case)
-          val dbs = del.select($"__db").distinct().as[Int].collect().toSeq
-          // LIVE deleted docs with their lengths: in the sidecar, not
-          // already tombstoned. The (count, Σdl) stats the manifest
-          // decrement needs are OBSERVED on the tombstone write itself
-          // (guide §1.4/§6) — the old separate aggregate job re-read
-          // the pruned sidecar buckets a second time.
-          val obs = Observation(s"tombs_g$gen")
-          val live = GenIndex.readBuckets(spark, indexDir,
-              cur.refs("doclens"), "__db", dbs, withBucketCol = false,
-              doclensDDL(spark, indexDir, cur))
-            .join(del.select($"doc_id"), Seq("doc_id"), "left_semi")
-            .join(tombRows(spark, indexDir, cur), Seq("doc_id"),
-              "left_anti")
-            .observe(obs, count(lit(1)).as("n"), sum($"dl").as("t"))
-          live.select($"doc_id")
-            .join(del, "doc_id")
-            .select($"doc_id", $"__db")
-            .repartition(col("__db"))
-            .write.mode("overwrite").partitionBy("__db")
-            .parquet(s"$indexDir/tombs_g$gen")
-          val nDel = obs.get.get("n")
+    store.mutate(spark, indexDir, commitId) { (cur, gen) =>
+      if (!cur.extras.contains("has_doclens"))
+        throw new IllegalStateException(
+          s"text index at $indexDir predates the doclens sidecar — " +
+            "exact delete needs per-doc lengths; rebuild the index " +
+            "to enable deletes")
+      val nb = cur.extra("n_buckets", store.what).toInt
+      val del = ids.select(col(idCol).as("doc_id")).distinct()
+        .withColumn("__db", pmod(hash(col("doc_id")), lit(nb)))
+        .persist()
+      try {
+        // touched doclens buckets: bounded ≤ nBuckets control read
+        // (an empty delete batch surfaces here as zero buckets — the
+        // old separate `ids.isEmpty` pre-scan paid an id-column job
+        // on every real delete to guard that rare case)
+        val dbs = del.select($"__db").distinct().as[Int].collect().toSeq
+        // LIVE deleted docs with their lengths: in the sidecar, not
+        // already tombstoned. The (count, Σdl) stats the manifest
+        // decrement needs are OBSERVED on the tombstone write itself
+        // (guide §1.4/§6) — the old separate aggregate job re-read
+        // the pruned sidecar buckets a second time.
+        val obs = Observation(s"tombs_g$gen")
+        val live = GenIndex.readBuckets(spark, indexDir,
+            cur.refs("doclens"), "__db", dbs, withBucketCol = false,
+            doclensDDL(spark, indexDir, cur))
+          .join(del.select($"doc_id"), Seq("doc_id"), "left_semi")
+          .join(tombRows(spark, indexDir, cur), Seq("doc_id"),
+            "left_anti")
+          .observe(obs, count(lit(1)).as("n"), sum($"dl").as("t"))
+        live.select($"doc_id")
+          .join(del, "doc_id")
+          .select($"doc_id", $"__db")
+          .repartition(col("__db"))
+          .write.mode("overwrite").partitionBy("__db")
+          .parquet(s"$indexDir/tombs_g$gen")
+        val nDel = obs.get.get("n")
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        // nothing live matched — no commit needed (a redelivery
+        // re-resolves liveness and is again a no-op)
+        if (nDel == 0) None
+        else {
+          val tDel = obs.get.get("t").flatMap(v => Option(v))
             .map(_.asInstanceOf[Long]).getOrElse(0L)
-          if (nDel > 0) {
-            val tDel = obs.get.get("t").flatMap(v => Option(v))
-              .map(_.asInstanceOf[Long]).getOrElse(0L)
-            val tPrior = cur.refs("tombs")
-            val tRefs = tPrior ++ GenIndex
-              .bucketsIn(spark, s"$indexDir/tombs_g$gen", "__db")
-              .map(k => k -> (tPrior.getOrElse(k, Seq.empty)
-                :+ s"tombs_g$gen"))
-            val cid = commitId.getOrElse(
-              java.util.UUID.randomUUID().toString)
-            GenIndex.writeManifest(spark, indexDir,
-              GenIndex.Manifest(gen, cid,
-                Map("postings" -> cur.refs("postings"),
-                  "doclens" -> cur.refs("doclens"),
-                  "tombs" -> tRefs),
-                GenIndex.withAppendId(cur.extras, cid) ++ Map(
-                  "n_docs" ->
-                    (cur.extra("n_docs", What).toLong - nDel).toString,
-                  "total_tokens" ->
-                    (cur.extra("total_tokens", What).toLong - tDel)
-                      .toString)))
-            GenIndex.flipCurrent(spark, indexDir, gen)
-          } else
-            // nothing live matched — no commit needed (a redelivery
-            // re-resolves liveness and is again a no-op); reclaim the
-            // empty tombstone generation the observed write left
-            StagedSwap.deleteChecked(spark, s"$indexDir/tombs_g$gen",
-              "empty tombstone generation (no live doc matched)")
-        } finally del.unpersist()
-      }
+          Some((Map("postings" -> cur.refs("postings"),
+              "doclens" -> cur.refs("doclens"),
+              "tombs" -> GenIndex.withFragments(cur.refs("tombs"),
+                GenIndex.genRefs(spark, indexDir, "tombs", "__db", gen))),
+            cur.extras ++ Map(
+              "n_docs" -> (cur.extra("n_docs", store.what).toLong - nDel).toString,
+              "total_tokens" ->
+                (cur.extra("total_tokens", store.what).toLong - tDel).toString)))
+        }
+      } finally del.unpersist()
     }
   }
 
@@ -507,10 +448,8 @@ object TextIndex {
     * re-derived from rows at serve time — fragment boundaries carry
     * no meaning). Rebucketing stays in [[compact]].
     */
-  private def foldLocked(spark: SparkSession, indexDir: String,
-      threshold: Int): Unit = {
-    val cur = readManifest(spark, indexDir)
-    val gen = cur.version + 1
+  private def fold(spark: SparkSession, indexDir: String,
+      threshold: Int): Unit = store.maintain(spark, indexDir, "fold") { (cur, gen) =>
     // same one-file-per-bucket, term-sorted layout as build/compact so
     // folded fragments page-prune identically (shared fold machinery:
     // GenIndex.foldFragmentTable — merge-tail logic lives ONCE); the
@@ -519,8 +458,8 @@ object TextIndex {
     // the two folds are independent read+write jobs until the shared
     // manifest — run them CONCURRENTLY (guide §2.6, same overlap as
     // the generation writes)
-    var pRefs: Option[Map[Int, Seq[String]]] = None
-    var dRefs: Option[Map[Int, Seq[String]]] = None
+    var pRefs: Option[GenIndex.Refs] = None
+    var dRefs: Option[GenIndex.Refs] = None
     GenIndex.inParallel(
       { pRefs = GenIndex.foldFragmentTable(spark, indexDir, cur,
           "postings", "__tb", gen, threshold,
@@ -530,43 +469,27 @@ object TextIndex {
           else GenIndex.foldFragmentTable(spark, indexDir, cur,
             "doclens", "__db", gen, threshold, order = Seq.empty,
             doclensDDL(spark, indexDir, cur)) })
-    if (pRefs.isEmpty && dRefs.isEmpty) return
-    GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(gen,
-      s"fold_g$gen",
-      Map("postings" -> pRefs.getOrElse(cur.refs("postings")),
+    if (pRefs.isEmpty && dRefs.isEmpty) None
+    else Some((Map("postings" -> pRefs.getOrElse(cur.refs("postings")),
         "doclens" -> dRefs.getOrElse(cur.refs("doclens")),
         // a fold between delete and compact must CARRY the tombstones
         // or the committed delete silently un-deletes
         "tombs" -> cur.refs("tombs")),
       cur.extras))
-    GenIndex.flipCurrent(spark, indexDir, gen)
-    GenIndex.vacuum(spark, indexDir, GenPrefixes,
-      graceVersions = 1, What)
   }
 
-  /** Repair torn maintenance: re-materialize a lost `_current` pointer
-    * (the torn-flip window of StagedSwap.writeAtomic's non-atomic
-    * fallback — manifests are flip-ordered, so newest wins) and vacuum
-    * orphan generations a crashed append/compact left behind. There is
-    * no torn-APPEND state anymore: an append commits atomically at the
-    * pointer flip or not at all.
+  /** [[GenIndex.Store.recover]]: there is no torn-APPEND state — an
+    * append commits atomically at the pointer flip or not at all.
     */
   def recover(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.restoreCurrentIfMissing(spark, indexDir, What)
-      GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions = 1, What)
-    }
+    store.recover(spark, indexDir)
 
-  /** Delete generations referenced by NO manifest inside the grace
-    * window (default 1 keeps the immediately-previous snapshot
-    * servable for readers that resolved paths just before a commit;
-    * 0 is maintenance-window-only full reclaim).
+  /** [[GenIndex.Store.vacuum]]: the default grace of 1 keeps the
+    * previous snapshot servable; 0 is maintenance-window-only.
     */
   def vacuum(spark: SparkSession, indexDir: String,
       graceVersions: Int = 1): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions, What)
-    }
+    store.vacuum(spark, indexDir, graceVersions)
 
   /** Maintenance twin of append — the Catalog.compact story for the
     * inverted index: fragment generations accumulated by appends are
@@ -584,23 +507,18 @@ object TextIndex {
     * bucket column sends each bucket to exactly one task (1 file
     * each) while buckets compact in parallel. Commits like an append
     * (fresh generation + pointer flip), then vacuums at the default
-    * grace window. Runs in maintenance windows like Catalog.compact,
-    * or inline when an append crosses [[AutoCompactFragments]].
+    * grace window. Runs in maintenance windows like Catalog.compact.
     */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      compactLocked(spark, indexDir)
+    store.locked(spark, indexDir) {
+      store.maintain(spark, indexDir, "compact")(compacted(spark, indexDir))
     }
 
-  /** [[compact]]'s body, for callers already holding the writer lock
-    * (append's auto-compact trigger — withFileLock is not reentrant).
-    */
-  private def compactLocked(spark: SparkSession, indexDir: String): Unit = {
-    val cur = readManifest(spark, indexDir)
+  private def compacted(spark: SparkSession, indexDir: String)(
+      cur: GenIndex.Manifest, gen: Int): Option[GenIndex.Snapshot] = {
     val target = cur.extras.getOrElse("target_rows_per_bucket",
       (4L << 20).toString).toLong
-    val nb = bucketsFor(cur.extra("total_tokens", What).toLong, target)
-    val gen = cur.version + 1
+    val nb = bucketsFor(cur.extra("total_tokens", store.what).toLong, target)
     // the physical purge ([[delete]]): tombstoned docs' rows fall out
     // of the rewrite and the new manifest records no tombstones. Only
     // paid when tombstones exist — the no-deletes compact plan is
@@ -629,15 +547,9 @@ object TextIndex {
             "__db", cur.refs("doclens").keys.toSeq, withBucketCol = false,
             doclensDDL(spark, indexDir, cur)))
           .withColumn("__db", pmod(hash(col("doc_id")), lit(nb))), gen)
-    GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(gen,
-      s"compact_g$gen",
-      Map("postings" ->
-        GenIndex.bucketsIn(spark, s"$indexDir/postings_g$gen", "__tb")
-          .map(_ -> Seq(s"postings_g$gen")).toMap,
+    Some((Map("postings" -> GenIndex.genRefs(spark, indexDir, "postings", "__tb", gen),
         "doclens" -> dlRefs),
       cur.extras + ("n_buckets" -> nb.toString)))
-    GenIndex.flipCurrent(spark, indexDir, gen)
-    GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions = 1, What)
   }
 
   /** Postings for a set of query terms, read through the manifest's
@@ -659,8 +571,8 @@ object TextIndex {
   def postingsFor(spark: SparkSession, indexDir: String,
       terms: Seq[String], nBuckets: Int = DefaultBuckets): DataFrame = {
     import spark.implicits._
-    val m = readManifest(spark, indexDir)
-    val nb = m.extra("n_buckets", What).toInt
+    val m = store.current(spark, indexDir)
+    val nb = m.extra("n_buckets", store.what).toInt
     // bucket ids re-derived with the same codegen'd hash the writer
     // used; one bounded local job for the whole (tiny) term list
     val buckets = terms.toDF("term")
@@ -686,7 +598,7 @@ object TextIndex {
     */
   private[graft] def currentPostings(spark: SparkSession,
       indexDir: String): DataFrame = {
-    val m = readManifest(spark, indexDir)
+    val m = store.current(spark, indexDir)
     GenIndex.readBuckets(spark, indexDir, m.refs("postings"), "__tb",
       m.refs("postings").keys.toSeq, withBucketCol = true,
       postingsDDL(spark, indexDir, m))
@@ -697,8 +609,8 @@ object TextIndex {
     * compact, fragment accumulation, vacuum bounds).
     */
   private[graft] def currentRefs(spark: SparkSession,
-      indexDir: String): Map[Int, Seq[String]] =
-    readManifest(spark, indexDir).refs("postings")
+      indexDir: String): GenIndex.Refs =
+    store.current(spark, indexDir).refs("postings")
 
   /** The (n_docs, total_tokens) pair, from the manifest — committed
     * atomically with the postings refs, so stats and postings can
@@ -706,8 +618,8 @@ object TextIndex {
     * the two writes and needed a staged repair protocol).
     */
   def corpusStats(spark: SparkSession, indexDir: String): (Long, Long) = {
-    val m = readManifest(spark, indexDir)
-    (m.extra("n_docs", What).toLong, m.extra("total_tokens", What).toLong)
+    val m = store.current(spark, indexDir)
+    (m.extra("n_docs", store.what).toLong, m.extra("total_tokens", store.what).toLong)
   }
 
   /** Index-served PHRASE search: documents containing the exact
@@ -869,7 +781,7 @@ object TextIndex {
       // The corpus reference may still CONTAIN deleted docs — they are
       // tombstoned out here too, or a purged doc would resurface as a
       // zero-score row.
-      val man = readManifest(spark, indexDir)
+      val man = store.current(spark, indexDir)
       val corpus0 = docs
         .select(col(idCol).as("doc_id"),
           size(TextFunctions.terms(col(textCol))).cast("long").as("dl"))

@@ -45,8 +45,9 @@ import org.apache.spark.sql.functions._
   * (centroids + lists + fresh baseline committed by a single pointer
   * flip — a concurrent serve keeps its old snapshot, never a mix).
   *
-  * Writers (build/buildPq/append/delete/compact/retrain/recover/vacuum)
-  * serialize through `_commit.lock`; reads stay lock-free.
+  * Commits, the writer lock, redelivery idempotency (`commitId`),
+  * recover and vacuum are the shared generation protocol of
+  * [[GenIndex.Store]] ([[store]]); reads stay lock-free.
   */
 object VectorIndex {
 
@@ -118,14 +119,8 @@ object VectorIndex {
       buildMaxShare: Double, lastAppendMaxShare: Double,
       lastSkewRatio: Double, retrainRecommended: Boolean)
 
-  private val What = "vector index"
-  private val LockName = "_commit.lock"
-  private def lockPath(indexDir: String) = s"$indexDir/$LockName"
-  private val GenPrefixes = Seq("lists_g", "centroids_g", "tombs_g")
-
-  private def readManifest(spark: SparkSession,
-      indexDir: String): GenIndex.Manifest =
-    GenIndex.readManifest(spark, indexDir, What)
+  private[graft] val store = new GenIndex.Store("vector index",
+    Seq("lists_g", "centroids_g", "tombs_g"))
 
   /** The manifest-recorded centroid generation dir — centroids ride
     * the same snapshot as the lists they assigned, so one manifest
@@ -135,7 +130,7 @@ object VectorIndex {
   private def centroidsDir(m: GenIndex.Manifest): String =
     m.refs("centroids").getOrElse(0, Seq.empty).headOption.getOrElse(
       throw new IllegalStateException(
-        s"$What manifest v${m.version} records no centroids generation — " +
+        s"${store.what} manifest v${m.version} records no centroids generation — " +
           "built by an incompatible version?"))
 
   private def centroidsOf(spark: SparkSession, indexDir: String,
@@ -146,7 +141,7 @@ object VectorIndex {
     * function) — the audit read specs and recall tooling use.
     */
   def centroids(spark: SparkSession, indexDir: String): DataFrame =
-    centroidsOf(spark, indexDir, readManifest(spark, indexDir))
+    centroidsOf(spark, indexDir, store.current(spark, indexDir))
 
   /** Write `rows` as the `lists_g{gen}` generation dir; returns the
     * list ids it actually holds (empty lists write no dir).
@@ -211,39 +206,20 @@ object VectorIndex {
       if (n == 0L) 0.0 else maxList.toDouble / n)
   }
 
-  /** Commit manifest v`gen` and flip: `replace = true` makes the new
-    * generation the whole lists table (build/compact/retrain);
-    * `replace = false` appends its lists as FRAGMENTS onto the
-    * existing refs (append). `centroidsGen` names a NEW centroid
-    * generation (build/retrain) or None to carry the current one.
-    * `tombs` is the tombstone table to record ([[delete]]): append
-    * and fold must CARRY the current refs or committed deletes would
-    * silently un-delete; build/compact/retrain pass empty (build has
-    * none, compact/retrain physically purge). Returns the committed
-    * lists refs (the append path's auto-compact trigger reads them).
+  /** The refs of list ids `written` into the `lists_g{gen}` dir. */
+  private def listRefs(written: Seq[Int], gen: Int): GenIndex.Refs =
+    written.map(_ -> Seq(s"lists_g$gen")).toMap
+
+  /** A commit's tables: the lists, the centroid generation dir that
+    * assigned them and the tombstones. Append, delete and fold must
+    * CARRY the current tombstones or committed deletes would silently
+    * un-delete; build, compact and retrain pass none (build has none,
+    * compact and retrain purge physically).
     */
-  private def commitManifest(spark: SparkSession, indexDir: String,
-      gen: Int, written: Seq[Int], cur: Option[GenIndex.Manifest],
-      commitId: String, replace: Boolean, centroidsGen: Option[String],
-      extras: Map[String, String],
-      tombs: Map[Int, Seq[String]]): Map[Int, Seq[String]] = {
-    val prior: Map[Int, Seq[String]] =
-      if (replace) Map.empty else cur.map(_.refs("lists")).getOrElse(Map.empty)
-    val refs =
-      if (replace) written.map(_ -> Seq(s"lists_g$gen")).toMap
-      else prior ++ written.map(c =>
-        c -> (prior.getOrElse(c, Seq.empty) :+ s"lists_g$gen"))
-    val cdir = centroidsGen.orElse(cur.map(centroidsDir)).getOrElse(
-      throw new IllegalStateException(
-        s"$What commit v$gen has no centroid generation to reference"))
-    GenIndex.writeManifest(spark, indexDir,
-      GenIndex.Manifest(gen, commitId,
-        Map("lists" -> refs, "centroids" -> Map(0 -> Seq(cdir))) ++
-          (if (tombs.nonEmpty) Map("tombs" -> tombs) else Map.empty),
-        extras))
-    GenIndex.flipCurrent(spark, indexDir, gen)
-    refs
-  }
+  private def tables(lists: GenIndex.Refs, centroids: String,
+      tombs: GenIndex.Refs): Map[String, GenIndex.Refs] =
+    Map("lists" -> lists, "centroids" -> Map(0 -> Seq(centroids))) ++
+      (if (tombs.nonEmpty) Map("tombs" -> tombs) else Map.empty)
 
   /** The tombstone ids of the current snapshot — bounded by deletes
     * since the last compact/retrain (which purge physically); empty
@@ -289,9 +265,7 @@ object VectorIndex {
       s"metaCols must be non-empty and comma-free (manifest records them " +
         s"comma-joined): $metaCols")
     val spark = corpus.sparkSession
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.clearIndexState(spark, indexDir, LockName,
-        "prior vector index state (old generations must not survive a rebuild)")
+    store.rebuild(spark, indexDir) {
       val k =
         if (numCentroids > 0) numCentroids
         else {
@@ -311,9 +285,8 @@ object VectorIndex {
         k, metaCols)
       val (written, n, meanCos, maxShare) =
         writeListsWithStats(spark, indexDir, lists, 0)
-      commitManifest(spark, indexDir, 0, written, None, "build",
-        replace = true, Some("centroids_g0"), tombs = Map.empty,
-        extras = Map("flavor" -> "raw", "meta_cols" -> metaCols.mkString(","),
+      (tables(listRefs(written, 0), "centroids_g0", Map.empty),
+        Map("flavor" -> "raw", "meta_cols" -> metaCols.mkString(","),
           "num_centroids" -> numCentroids.toString,
           "sample_size" -> sampleSize.toString,
           "iters" -> iters.toString, "cell_target" -> cellTarget.toString,
@@ -383,7 +356,7 @@ object VectorIndex {
     * corpus-sized job, so the default only RECORDS, and maintenance
     * decides when to pay — the [[DriftRetrainRatio]] recommendation).
     * Fragment folding is cheaper and automatic: any list crossing
-    * `autoCompactFragments` fragments triggers an inline [[compact]].
+    * `autoCompactFragments` fragments triggers an inline bounded fold.
     */
   def append(corpus: DataFrame, idCol: String, vecCol: String,
       indexDir: String, coarseProbe: Option[Int] = None,
@@ -391,100 +364,92 @@ object VectorIndex {
       autoCompactFragments: Int = AutoCompactFragments,
       autoRetrainRatio: Option[Double] = None): Unit = {
     val spark = corpus.sparkSession
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      val cur = readManifest(spark, indexDir)
-      // redelivery test runs against the PERSISTED append-id history,
-      // not cur.commitId alone (r15 ADVICE item 2): an inline fold or
-      // autoRetrainRatio-triggered retrain replaces the just-committed
-      // append id with fold_g{N}/retrain_g{N} in the same call, so a
-      // redelivered batch would double-insert every row (and skew the
-      // drift accumulators). The history rides every later commit —
-      // compactLocked forwards cur.extras, retrainLocked's extras
-      // rewrite preserves it — and is bounded-deep
-      // (GenIndex.MaxAppendIds) against multi-batch checkpoint replays.
-      if (GenIndex.isRedelivered(cur, commitId)) {
-        // redelivered batch: its commit already flipped — no-op
-      } else {
-        // REQUIRED extras, never defaulted: an index built before the
-        // flavor/meta_cols manifest fields (extras = {}) must refuse
-        // actionably here — defaulting to "raw"/"" would bypass both
-        // guards and commit incompatible fragments into a pre-upgrade PQ
-        // or metaCols index (round-14 second-review finding #1)
-        val flavor = cur.extra("flavor", What)
-        // a raw-vector append into a PQ index would commit fragments the
-        // code-row serving path cannot read — refuse with the real fix
-        if (flavor == "pq")
+    // the store's redelivery test runs against the PERSISTED append-id
+    // history, not cur.commitId alone (r15 ADVICE item 2): an inline
+    // fold or autoRetrainRatio-triggered retrain replaces the
+    // just-committed append id with fold_g{N}/retrain_g{N} in the same
+    // call, so a redelivered batch would double-insert every row (and
+    // skew the drift accumulators). The history rides every later
+    // commit — fold and compact forward cur.extras, retrain's extras
+    // rewrite preserves it.
+    def after(m: GenIndex.Manifest): Unit = {
+      if (autoCompactFragments > 0 &&
+          m.refs("lists").values.exists(_.size >= autoCompactFragments))
+        fold(spark, indexDir, autoCompactFragments)
+      autoRetrainRatio.foreach { thr =>
+        if (driftOf(store.current(spark, indexDir), thr).retrainRecommended)
+          store.maintain(spark, indexDir, "retrain")(retrained(spark, indexDir))
+      }
+    }
+    store.mutate(spark, indexDir, commitId, after) { (cur, gen) =>
+      // REQUIRED extras, never defaulted: an index built before the
+      // flavor/meta_cols manifest fields (extras = {}) must refuse
+      // actionably here — defaulting to "raw"/"" would bypass both
+      // guards and commit incompatible fragments into a pre-upgrade PQ
+      // or metaCols index (round-14 second-review finding #1)
+      val flavor = cur.extra("flavor", store.what)
+      // a raw-vector append into a PQ index would commit fragments the
+      // code-row serving path cannot read — refuse with the real fix
+      if (flavor == "pq")
+        throw new IllegalStateException(
+          s"vector index at $indexDir stores PQ codes — append raw " +
+            "vectors by rebuilding with buildPq (codebooks are frozen " +
+            "per build; incremental PQ appends would encode against " +
+            "stale codebooks)")
+      // a fragment must carry the SAME columns as the built
+      // generations — including the build's metaCols (recorded in the
+      // manifest), or the cross-generation read becomes unresolvable
+      val metaCols = cur.extra("meta_cols", store.what)
+        .split(",").filter(_.nonEmpty).toSeq
+      // re-appending a TOMBSTONED id must refuse, not silently land:
+      // vector tombstones are id-level (lists are bucketed by
+      // centroid, so rows carry no generation to outrank), and the
+      // serve-side anti join would hide the revived rows too. The
+      // check reads the (deletes-since-compact-bounded) tombstone
+      // set only when one exists — the common no-deletes append
+      // pays nothing.
+      if (cur.refs("tombs").nonEmpty) {
+        val clash = corpus.select(col(idCol).as("neighbor_id"))
+          .join(tombIds(spark, indexDir, cur), Seq("neighbor_id"),
+            "left_semi")
+          .limit(1).count()
+        if (clash > 0)
           throw new IllegalStateException(
-            s"vector index at $indexDir stores PQ codes — append raw " +
-              "vectors by rebuilding with buildPq (codebooks are frozen " +
-              "per build; incremental PQ appends would encode against " +
-              "stale codebooks)")
-        // a fragment must carry the SAME columns as the built
-        // generations — including the build's metaCols (recorded in the
-        // manifest), or the cross-generation read becomes unresolvable
-        val metaCols = cur.extra("meta_cols", What)
-          .split(",").filter(_.nonEmpty).toSeq
-        // re-appending a TOMBSTONED id must refuse, not silently land:
-        // vector tombstones are id-level (lists are bucketed by
-        // centroid, so rows carry no generation to outrank), and the
-        // serve-side anti join would hide the revived rows too. The
-        // check reads the (deletes-since-compact-bounded) tombstone
-        // set only when one exists — the common no-deletes append
-        // pays nothing.
-        if (cur.refs("tombs").nonEmpty) {
-          val clash = corpus.select(col(idCol).as("neighbor_id"))
-            .join(tombIds(spark, indexDir, cur), Seq("neighbor_id"),
-              "left_semi")
-            .limit(1).count()
-          if (clash > 0)
-            throw new IllegalStateException(
-              s"vector index at $indexDir holds tombstones for ids in " +
-                "this batch — re-inserting a deleted id needs compact() " +
-                "first (tombstones are id-level; compact purges them " +
-                "physically, after which the id may be re-appended)")
-        }
-        val cents = centroidsOf(spark, indexDir, cur)
-        // same auto rule as build: the frozen centroid count decides the path
-        val rows = assignedLists(corpus, idCol, vecCol, broadcast(cents),
-          coarseProbe, cents.count().toInt, metaCols)
-        val gen = cur.version + 1
-        // batch drift stats vs the build baseline OBSERVED on the write
-        // itself (writeListsWithStats) — the old O(batch) read-back job
-        // is gone, and the empty-batch no-op check rides the same
-        // metric instead of a pre-scan `corpus.isEmpty` job on every
-        // non-empty append (the TextIndex.append pattern)
-        val (written, bn, bMean, bShare) =
-          writeListsWithStats(spark, indexDir, rows, gen)
-        if (bn == 0L) {
-          // empty micro-batch (a legitimate foreachBatch delivery):
-          // no-op — no manifest churn, no generation left behind
-          StagedSwap.deleteChecked(spark, s"$indexDir/lists_g$gen",
-            "empty append generation (no vectors in batch)")
-        } else {
+            s"vector index at $indexDir holds tombstones for ids in " +
+              "this batch — re-inserting a deleted id needs compact() " +
+              "first (tombstones are id-level; compact purges them " +
+              "physically, after which the id may be re-appended)")
+      }
+      val cents = centroidsOf(spark, indexDir, cur)
+      // same auto rule as build: the frozen centroid count decides the path
+      val rows = assignedLists(corpus, idCol, vecCol, broadcast(cents),
+        coarseProbe, cents.count().toInt, metaCols)
+      // batch drift stats vs the build baseline OBSERVED on the write
+      // itself (writeListsWithStats) — the old O(batch) read-back job
+      // is gone, and the empty-batch no-op check rides the same
+      // metric instead of a pre-scan `corpus.isEmpty` job on every
+      // non-empty append (the TextIndex.append pattern)
+      val (written, bn, bMean, bShare) =
+        writeListsWithStats(spark, indexDir, rows, gen)
+      // an empty micro-batch (a legitimate foreachBatch delivery)
+      // commits nothing
+      if (bn == 0L) None
+      else {
         val buildMean = cur.extras.get("assign_cos_mean").map(_.toDouble)
         val buildShare = cur.extras.get("assign_max_share").map(_.toDouble)
         val an0 = cur.extras.getOrElse("appended_n", "0").toLong
         val as0 = cur.extras.getOrElse("appended_cos_sum", "0.0").toDouble
-        val cid = commitId.getOrElse(java.util.UUID.randomUUID().toString)
-        val extras = GenIndex.withAppendId(cur.extras, cid) ++ Map(
-          "appended_n" -> (an0 + bn).toString,
-          "appended_cos_sum" -> (as0 + bn * bMean).toString,
-          "last_append_cos_mean" -> bMean.toString,
-          "last_append_max_share" -> bShare.toString) ++
-          buildMean.map(bm => "last_drift_ratio" ->
-            ((1.0 - bMean) / math.max(1e-12, 1.0 - bm)).toString) ++
-          buildShare.map(bs => "last_skew_ratio" ->
-            (bShare / math.max(1e-12, bs)).toString)
-        val refs = commitManifest(spark, indexDir, gen, written, Some(cur),
-          cid, replace = false, None, extras, tombs = cur.refs("tombs"))
-        if (autoCompactFragments > 0 &&
-            refs.values.exists(_.size >= autoCompactFragments))
-          foldLocked(spark, indexDir, autoCompactFragments)
-        autoRetrainRatio.foreach { thr =>
-          if (driftOf(readManifest(spark, indexDir), thr).retrainRecommended)
-            retrainLocked(spark, indexDir)
-        }
-        }
+        Some((tables(GenIndex.withFragments(cur.refs("lists"), listRefs(written, gen)),
+            centroidsDir(cur), cur.refs("tombs")),
+          cur.extras ++ Map(
+            "appended_n" -> (an0 + bn).toString,
+            "appended_cos_sum" -> (as0 + bn * bMean).toString,
+            "last_append_cos_mean" -> bMean.toString,
+            "last_append_max_share" -> bShare.toString) ++
+            buildMean.map(bm => "last_drift_ratio" ->
+              ((1.0 - bMean) / math.max(1e-12, 1.0 - bm)).toString) ++
+            buildShare.map(bs => "last_skew_ratio" ->
+              (bShare / math.max(1e-12, bs)).toString)))
       }
     }
   }
@@ -512,46 +477,28 @@ object VectorIndex {
   def delete(ids: DataFrame, idCol: String, indexDir: String,
       commitId: Option[String] = None): Unit = {
     val spark = ids.sparkSession
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      val cur = readManifest(spark, indexDir)
-      if (GenIndex.isRedelivered(cur, commitId)) {
-        // redelivered delete batch: its commit already flipped — no-op
-      } else {
-        val gen = cur.version + 1
-        val fresh = ids.select(col(idCol).as("neighbor_id")).distinct()
-          .join(tombIds(spark, indexDir, cur), Seq("neighbor_id"),
-            "left_anti")
-          .withColumn("__tk", lit(0))
-        // killed-id count OBSERVED on the tombstone write (guide
-        // §1.4/§6) — the old post-write re-read count job and the
-        // per-call `ids.isEmpty` pre-scan both ride this one metric
-        val obs = Observation(s"tombs_g$gen")
-        fresh.observe(obs, count(lit(1)).as("n"))
-          .repartition(1).write.mode("overwrite").partitionBy("__tk")
-          .parquet(s"$indexDir/tombs_g$gen")
-        // an empty-batch plan can collapse to an empty LocalRelation
-        // whose write never runs the CollectMetrics node — a missing
-        // metric IS the zero-row case
-        val nDel = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (nDel == 0) {
-          StagedSwap.deleteChecked(spark, s"$indexDir/tombs_g$gen",
-            "empty tombstone generation (all ids already tombstoned)")
-        } else {
-          val prior = cur.refs("tombs")
-          val tombs = Map(0 ->
-            (prior.getOrElse(0, Seq.empty) :+ s"tombs_g$gen"))
-          val nt0 = cur.extras.getOrElse("n_tombstones", "0").toLong
-          val cid = commitId.getOrElse(
-            java.util.UUID.randomUUID().toString)
-          GenIndex.writeManifest(spark, indexDir,
-            GenIndex.Manifest(gen, cid,
-              Map("lists" -> cur.refs("lists"),
-                "centroids" -> cur.refs("centroids"),
-                "tombs" -> tombs),
-              GenIndex.withAppendId(cur.extras, cid) +
-                ("n_tombstones" -> (nt0 + nDel).toString)))
-          GenIndex.flipCurrent(spark, indexDir, gen)
-        }
+    store.mutate(spark, indexDir, commitId) { (cur, gen) =>
+      val fresh = ids.select(col(idCol).as("neighbor_id")).distinct()
+        .join(tombIds(spark, indexDir, cur), Seq("neighbor_id"),
+          "left_anti")
+        .withColumn("__tk", lit(0))
+      // killed-id count OBSERVED on the tombstone write (guide
+      // §1.4/§6) — the old post-write re-read count job and the
+      // per-call `ids.isEmpty` pre-scan both ride this one metric
+      val obs = Observation(s"tombs_g$gen")
+      fresh.observe(obs, count(lit(1)).as("n"))
+        .repartition(1).write.mode("overwrite").partitionBy("__tk")
+        .parquet(s"$indexDir/tombs_g$gen")
+      // an empty-batch plan can collapse to an empty LocalRelation
+      // whose write never runs the CollectMetrics node — a missing
+      // metric IS the zero-row case (all ids already tombstoned)
+      val nDel = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+      if (nDel == 0) None
+      else {
+        val nt0 = cur.extras.getOrElse("n_tombstones", "0").toLong
+        Some((tables(cur.refs("lists"), centroidsDir(cur),
+            GenIndex.withFragments(cur.refs("tombs"), Map(0 -> Seq(s"tombs_g$gen")))),
+          cur.extras + ("n_tombstones" -> (nt0 + nDel).toString)))
       }
     }
   }
@@ -562,7 +509,7 @@ object VectorIndex {
     */
   def driftReport(spark: SparkSession, indexDir: String,
       threshold: Double = DriftRetrainRatio): DriftReport =
-    driftOf(readManifest(spark, indexDir), threshold)
+    driftOf(store.current(spark, indexDir), threshold)
 
   private def driftOf(m: GenIndex.Manifest, threshold: Double): DriftReport = {
     val nB = m.extras.getOrElse("assign_n", "0").toLong
@@ -597,18 +544,18 @@ object VectorIndex {
     * maintenance-window job, priced by DriftProbe's 100× row.
     */
   def retrain(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      retrainLocked(spark, indexDir)
+    store.locked(spark, indexDir) {
+      store.maintain(spark, indexDir, "retrain")(retrained(spark, indexDir))
     }
 
-  private def retrainLocked(spark: SparkSession, indexDir: String): Unit = {
-    val cur = readManifest(spark, indexDir)
-    if (cur.extra("flavor", What) == "pq")
+  private def retrained(spark: SparkSession, indexDir: String)(
+      cur: GenIndex.Manifest, gen: Int): Option[GenIndex.Snapshot] = {
+    if (cur.extra("flavor", store.what) == "pq")
       throw new IllegalStateException(
         s"vector index at $indexDir stores PQ codes — retrain by " +
           "rebuilding with buildPq (codebooks and centroids train " +
           "together from the raw corpus)")
-    val metaCols = cur.extra("meta_cols", What)
+    val metaCols = cur.extra("meta_cols", store.what)
       .split(",").filter(_.nonEmpty).toSeq
     val all0 = GenIndex.readBuckets(spark, indexDir, cur.refs("lists"),
         "__cid", cur.refs("lists").keys.toSeq, withBucketCol = false,
@@ -630,22 +577,18 @@ object VectorIndex {
     val effSample = math.max(sampleSize, 2 * k)
     val cents = VectorFunctions.ivfTrainCentroids(
       all, "neighbor_id", "__cv", k, effSample, iters)
-    val gen = cur.version + 1
     cents.write.mode("overwrite").parquet(s"$indexDir/centroids_g$gen")
     val rows = assignedLists(all, "neighbor_id", "__cv", broadcast(cents),
       None, k, metaCols)
     val (written, nw, meanCos, maxShare) =
       writeListsWithStats(spark, indexDir, rows, gen)
-    commitManifest(spark, indexDir, gen, written, Some(cur),
-      s"retrain_g$gen", replace = true, Some(s"centroids_g$gen"),
-      tombs = Map.empty,
-      extras = cur.extras --
+    Some((tables(listRefs(written, gen), s"centroids_g$gen", Map.empty),
+      cur.extras --
         Seq("appended_n", "appended_cos_sum", "last_append_cos_mean",
           "last_drift_ratio", "last_append_max_share", "last_skew_ratio",
           "n_tombstones") ++
         Map("assign_n" -> nw.toString, "assign_cos_mean" -> meanCos.toString,
-          "assign_max_share" -> maxShare.toString))
-    GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions = 1, What)
+          "assign_max_share" -> maxShare.toString)))
   }
 
   /** Persisted IVF-PQ index — the memory/disk-bounded serving layout:
@@ -666,9 +609,7 @@ object VectorIndex {
       iters: Int = 2): Unit = {
     require(dims % m == 0, s"dims $dims not divisible into $m subspaces")
     val spark = corpus.sparkSession
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.clearIndexState(spark, indexDir, LockName,
-        "prior vector index state (old generations must not survive a rebuild)")
+    store.rebuild(spark, indexDir) {
       val cents = VectorFunctions.ivfTrainCentroids(
         corpus, idCol, vecCol, numCentroids, sampleSize, iters)
       cents.write.mode("overwrite").parquet(s"$indexDir/centroids_g0")
@@ -681,10 +622,8 @@ object VectorIndex {
         .ivfAssign(corpus, idCol, vecCol, broadcast(cents))
         .select(col("__cid"), col("__aid").as("neighbor_id"))
         .join(enc.withColumnRenamed("__eid", "neighbor_id"), "neighbor_id")
-      val written = writeLists(spark, indexDir, rows, 0)
-      commitManifest(spark, indexDir, 0, written, None, "build",
-        replace = true, Some("centroids_g0"), tombs = Map.empty,
-        extras = Map("flavor" -> "pq", "meta_cols" -> ""))
+      (tables(listRefs(writeLists(spark, indexDir, rows, 0), 0), "centroids_g0",
+        Map.empty), Map("flavor" -> "pq", "meta_cols" -> ""))
     }
   }
 
@@ -703,7 +642,7 @@ object VectorIndex {
     import spark.implicits._
     val subDim = dims / m
     // ONE manifest read resolves centroids + lists — a consistent snapshot
-    val man = readManifest(spark, indexDir)
+    val man = store.current(spark, indexDir)
     val cents = centroidsOf(spark, indexDir, man)
     // schema memoized (the codebook's column set is a layout constant
     // even across rebuilds that rewrite its values)
@@ -767,12 +706,24 @@ object VectorIndex {
     * one task per list. Commits like any generation (manifest +
     * pointer flip), then vacuums at the default grace window — a
     * crash mid-compact leaves only an orphan generation. Runs in
-    * maintenance windows like Catalog.compact, or inline when an
-    * append crosses [[AutoCompactFragments]].
+    * maintenance windows like Catalog.compact.
     */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      compactLocked(spark, indexDir)
+    store.locked(spark, indexDir) {
+      store.maintain(spark, indexDir, "compact") { (cur, gen) =>
+        val all0 = GenIndex.readBuckets(spark, indexDir, cur.refs("lists"),
+          "__cid", cur.refs("lists").keys.toSeq, withBucketCol = true,
+          listsDDL(spark, indexDir, cur))
+        // the physical purge ([[delete]]): tombstoned rows fall out of the
+        // rewrite and the new manifest records no tombstones
+        val all = if (cur.refs("tombs").isEmpty) all0
+          else all0.join(Dedup.maybeBroadcast(tombIds(spark, indexDir, cur)),
+            Seq("neighbor_id"), "left_anti")
+        val written =
+          writeLists(spark, indexDir, all.repartition(col("__cid")), gen)
+        Some((tables(listRefs(written, gen), centroidsDir(cur), Map.empty),
+          cur.extras - "n_tombstones"))
+      }
     }
 
   /** The bounded inline fold (r15 verdict item 5): for every list
@@ -786,10 +737,8 @@ object VectorIndex {
     * MetaCols clustering is preserved in the folded files (same sort
     * discipline as the build).
     */
-  private def foldLocked(spark: SparkSession, indexDir: String,
-      threshold: Int): Unit = {
-    val cur = readManifest(spark, indexDir)
-    val gen = cur.version + 1
+  private def fold(spark: SparkSession, indexDir: String,
+      threshold: Int): Unit = store.maintain(spark, indexDir, "fold") { (cur, gen) =>
     val metaCols = cur.extras.getOrElse("meta_cols", "")
       .split(",").filter(_.nonEmpty).toSeq
     // metaCols clustering preserved in the folded files (leading
@@ -800,65 +749,24 @@ object VectorIndex {
         order = if (metaCols.isEmpty) Seq.empty
           else col("__cid") +: metaCols.map(col),
         listsDDL(spark, indexDir, cur))
-      .foreach { refs =>
-        GenIndex.writeManifest(spark, indexDir, GenIndex.Manifest(gen,
-          s"fold_g$gen",
-          Map("lists" -> refs,
-            "centroids" -> Map(0 -> Seq(centroidsDir(cur)))) ++
-            // a fold between delete and compact must CARRY the
-            // tombstones or the committed delete silently un-deletes
-            (if (cur.refs("tombs").nonEmpty)
-              Map("tombs" -> cur.refs("tombs")) else Map.empty),
-          cur.extras))
-        GenIndex.flipCurrent(spark, indexDir, gen)
-        GenIndex.vacuum(spark, indexDir, GenPrefixes,
-          graceVersions = 1, What)
-      }
+      // a fold between delete and compact must CARRY the tombstones or
+      // the committed delete silently un-deletes
+      .map(refs => (tables(refs, centroidsDir(cur), cur.refs("tombs")), cur.extras))
   }
 
-  /** [[compact]]'s body, for callers already holding the writer lock
-    * (append's auto-compact trigger — withFileLock is not reentrant).
-    */
-  private def compactLocked(spark: SparkSession, indexDir: String): Unit = {
-    val cur = readManifest(spark, indexDir)
-    val all0 = GenIndex.readBuckets(spark, indexDir, cur.refs("lists"),
-      "__cid", cur.refs("lists").keys.toSeq, withBucketCol = true,
-      listsDDL(spark, indexDir, cur))
-    // the physical purge ([[delete]]): tombstoned rows fall out of the
-    // rewrite and the new manifest records no tombstones
-    val all = if (cur.refs("tombs").isEmpty) all0
-      else all0.join(Dedup.maybeBroadcast(tombIds(spark, indexDir, cur)),
-        Seq("neighbor_id"), "left_anti")
-    val gen = cur.version + 1
-    val written =
-      writeLists(spark, indexDir, all.repartition(col("__cid")), gen)
-    commitManifest(spark, indexDir, gen, written, Some(cur),
-      s"compact_g$gen", replace = true, None,
-      cur.extras - "n_tombstones", tombs = Map.empty)
-    GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions = 1, What)
-  }
-
-  /** Repair torn maintenance: re-materialize a lost `_current` pointer
-    * and vacuum orphan generations a crashed build/append/compact left
-    * behind. There is no torn-append or torn-compact state anymore —
-    * every mutation commits atomically at the pointer flip or not at
-    * all.
+  /** [[GenIndex.Store.recover]]: there is no torn-append or
+    * torn-compact state — every mutation commits atomically at the
+    * pointer flip or not at all.
     */
   def recover(spark: SparkSession, indexDir: String): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.restoreCurrentIfMissing(spark, indexDir, What)
-      GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions = 1, What)
-    }
+    store.recover(spark, indexDir)
 
-  /** Delete generations referenced by NO manifest inside the grace
-    * window (default 1 keeps the previous snapshot servable; 0 is
-    * maintenance-window-only full reclaim).
+  /** [[GenIndex.Store.vacuum]]: the default grace of 1 keeps the
+    * previous snapshot servable; 0 is maintenance-window-only.
     */
   def vacuum(spark: SparkSession, indexDir: String,
       graceVersions: Int = 1): Unit =
-    StagedSwap.withFileLock(spark, lockPath(indexDir)) {
-      GenIndex.vacuum(spark, indexDir, GenPrefixes, graceVersions, What)
-    }
+    store.vacuum(spark, indexDir, graceVersions)
 
   /** The lists' data schema varies by flavor (raw __cv vs PQ codes,
     * optional metaCols), so derive the empty-read DDL from an actual
@@ -877,7 +785,7 @@ object VectorIndex {
     */
   private[graft] def readLists(spark: SparkSession, indexDir: String,
       needed: Seq[Long]): DataFrame = {
-    val m = readManifest(spark, indexDir)
+    val m = store.current(spark, indexDir)
     GenIndex.readBuckets(spark, indexDir, m.refs("lists"), "__cid",
       needed.map(_.toInt), withBucketCol = true, listsDDL(spark, indexDir, m))
   }
@@ -888,7 +796,7 @@ object VectorIndex {
     */
   private[graft] def currentLists(spark: SparkSession,
       indexDir: String): DataFrame = {
-    val m = readManifest(spark, indexDir)
+    val m = store.current(spark, indexDir)
     GenIndex.readBuckets(spark, indexDir, m.refs("lists"), "__cid",
       m.refs("lists").keys.toSeq, withBucketCol = true,
       listsDDL(spark, indexDir, m))
@@ -899,8 +807,8 @@ object VectorIndex {
     * append, single-generation refs after compact, vacuum bounds).
     */
   private[graft] def currentRefs(spark: SparkSession,
-      indexDir: String): Map[Int, Seq[String]] =
-    readManifest(spark, indexDir).refs("lists")
+      indexDir: String): GenIndex.Refs =
+    store.current(spark, indexDir).refs("lists")
 
   def topK(spark: SparkSession, indexDir: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
@@ -927,7 +835,7 @@ object VectorIndex {
     import spark.implicits._
     // ONE manifest read resolves centroids + lists: the snapshot is
     // consistent even across a concurrent retrain's centroid swap
-    val man = readManifest(spark, indexDir)
+    val man = store.current(spark, indexDir)
     // the centroids frame is tiny (numCentroids rows) — broadcast it so
     // the assignment cross join never gambles on a size estimate
     val cents = broadcast(centroidsOf(spark, indexDir, man))

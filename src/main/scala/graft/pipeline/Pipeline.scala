@@ -336,13 +336,13 @@ final class Pipeline(
     val pks = catalog.primaryKey(tableName)
     operation match {
       case Operation.Insert =>
-        mutateData(tableName, pks, bucketsOf(withOrd, pks, _)) { current =>
+        catalog.rewrite(tableName, bucketsOf(withOrd, pks, _)) { current =>
           MutationOps.insertIgnoreDups(
             current, withOrd.select((ordered :+ "__ord").map(col): _*),
             pks, col("__ord")).select(ordered.map(col): _*)
         }
       case Operation.Update =>
-        mutateData(tableName, pks, bucketsOf(withOrd, pks, _)) { current =>
+        catalog.rewrite(tableName, bucketsOf(withOrd, pks, _)) { current =>
           MutationOps.upsertByPk(current, withOrd, pks, col("__ord"))
             .select(ordered.map(col): _*)
         }
@@ -355,30 +355,6 @@ final class Pipeline(
         appendControl(DeleteControlTable, staged)
       case other =>
         throw new IllegalArgumentException(s"Unknown operation: $other")
-    }
-  }
-
-  /** Read-merge-overwrite a data table through the narrowest commit the
-    * catalog's layout allows: with a registered PK-hash bucket layout,
-    * only the buckets `touchedBuckets(bucketCount)` names are read and
-    * rewritten (the first such mutation migrates the table into the
-    * layout); otherwise the whole-table rewrite — the honest fallback
-    * when no key partitioning exists.
-    */
-  private def mutateData(tableName: String, pks: Seq[String],
-      touchedBuckets: Int => Seq[Int])(mutate: DataFrame => DataFrame): Unit = {
-    catalog.bucketCount(tableName) match {
-      case Some(n) if pks.nonEmpty =>
-        if (catalog.hasBucketManifest(tableName)) {
-          val touched = touchedBuckets(n)
-          catalog.overwriteBuckets(tableName,
-            mutate(catalog.readBuckets(tableName, touched)), touched)
-        } else {
-          // one-time migration into the bucket layout
-          catalog.overwriteAllBuckets(tableName, mutate(catalog.read(tableName)))
-        }
-      case _ =>
-        catalog.overwrite(tableName, mutate(catalog.read(tableName)))
     }
   }
 
@@ -421,7 +397,7 @@ final class Pipeline(
         // the keys into the anti-join instead of shuffling the buckets
         val keys = spark.createDataFrame(keyRows.map(Row.fromSeq).asJava, keySchema)
         if (catalog.exists(table)) {
-          mutateData(table, pks, _ => catalog.bucketsOfKeys(table, keyRows))(current =>
+          catalog.rewrite(table, _ => catalog.bucketsOfKeys(table, keyRows))(current =>
             MutationOps.deleteByPk(current, keys, pks))
           executed ++= rows.map(_.getLong(0))
         } else {

@@ -710,6 +710,25 @@ class CatalogSpec extends SparkTestBase {
     intercept[IllegalStateException](cat.appendLog("p", Seq((2L, "b")).toDF("id", "part")))
   }
 
+  test("appendLog adopts an empty plain table as a log with no refs") {
+    val root = tmpDir("catempty")
+    val cat = new Catalog(spark, root)
+    cat.createIfAbsent("t", Seq.empty[(Long, String)].toDF("id", "v").schema)
+    val empty = cat.currentVersion("t")
+    // the rows are counted from the footers: the batch write is the only job
+    val adopter = new Catalog(spark, root)
+    val (_, jobs) = countJobs(adopter.appendLog("t", Seq((1L, "a")).toDF("id", "v")))
+    assert(jobs == 1, s"adoption ran $jobs jobs")
+    val refs = cat.bucketRefs("t")
+    assert(refs.size == 1 && !refs.values.toSet(empty), s"refs $refs")
+    // nothing references the empty version any more, so the commit's
+    // vacuum reclaimed it and no read opens it
+    assert(!cat.versions("t").contains(empty))
+    val df = cat.read("t")
+    assert(df.inputFiles.nonEmpty && !df.inputFiles.exists(_.contains(empty)))
+    assert(df.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
   test("rewriteLog replaces only the refs holding matching rows") {
     val root = tmpDir("catrewrite")
     val cat = new Catalog(spark, root)

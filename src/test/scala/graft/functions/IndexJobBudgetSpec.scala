@@ -1,0 +1,80 @@
+package graft.functions
+
+import graft.SparkTestBase
+
+/** Spark jobs per lifecycle phase of the three persisted index
+  * families, pinned. Index mutations pay for commit machinery as much
+  * as for data, so a job added (or removed) by any phase changes a count
+  * here and is a reviewed change. Counts are for tiny fixtures in the
+  * shared local[4] test session; each phase's body includes collecting
+  * a serve's result.
+  */
+class IndexJobBudgetSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private lazy val docs =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+  private lazy val emb =
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+  /** Runs each phase in order and returns its job count by name. */
+  private def budget(phases: (String, () => Unit)*): Map[String, Int] = {
+    assert(spark.streams.active.isEmpty, "a running stream would add jobs")
+    phases.map { case (name, body) => name -> countAllJobs(body())._2 }.toMap
+  }
+
+  test("SignatureIndex: jobs per build, append, delete, compact and serve") {
+    val dir = tmpDir("sigbudget") + "/idx"
+    val jobs = budget(
+      "build" -> (() => SignatureIndex.build(docs.filter($"doc_id" < 60),
+        "doc_id", "text", dir, nBuckets = 8)),
+      "append" -> (() => SignatureIndex.append(
+        docs.filter($"doc_id" >= 60 && $"doc_id" < 80), "doc_id", "text", dir,
+        commitId = Some("a1"))),
+      "delete" -> (() => SignatureIndex.delete(
+        Seq(3L, 61L).toDF("doc_id"), "doc_id", dir, commitId = Some("d1"))),
+      "compact" -> (() => SignatureIndex.compact(spark, dir)),
+      "serve" -> (() => SignatureIndex.servePairs(spark, dir,
+        docs.filter($"doc_id" >= 80 && $"doc_id" < 100), "doc_id", "text", 0.5)
+        .collect()))
+    // compact learns `bands` from the manifest extras, not from a read
+    // of the meta parquet (a schema-inference job plus a head job)
+    assert(jobs == Map("build" -> 8, "append" -> 4, "delete" -> 9,
+      "compact" -> 10, "serve" -> 14), s"signature index jobs: $jobs")
+  }
+
+  test("TextIndex: jobs per build, append, delete, compact and bm25 serve") {
+    val dir = tmpDir("textbudget")
+    val jobs = budget(
+      "build" -> (() => TextIndex.build(docs.filter($"doc_id" < 60),
+        "doc_id", "text", dir, nBuckets = 8)),
+      "append" -> (() => TextIndex.append(
+        docs.filter($"doc_id" >= 60 && $"doc_id" < 80), "doc_id", "text", dir,
+        commitId = Some("a1"))),
+      "delete" -> (() => TextIndex.delete(
+        Seq(3L, 61L).toDF("doc_id"), "doc_id", dir, commitId = Some("d1"))),
+      "compact" -> (() => TextIndex.compact(spark, dir)),
+      "bm25" -> (() => TextIndex.bm25TopK(spark, dir,
+        Seq("vector", "stream", "window", "hash"), 10).collect()))
+    assert(jobs == Map("build" -> 7, "append" -> 4, "delete" -> 9,
+      "compact" -> 8, "bm25" -> 7), s"text index jobs: $jobs")
+  }
+
+  test("VectorIndex: jobs per build, append, delete, compact, retrain and topK") {
+    val dir = tmpDir("vecbudget")
+    val jobs = budget(
+      "build" -> (() => VectorIndex.build(emb.filter($"vec_id" < 120),
+        "vec_id", "embedding", dir, numCentroids = 4)),
+      "append" -> (() => VectorIndex.append(
+        emb.filter($"vec_id" >= 120 && $"vec_id" < 160), "vec_id", "embedding",
+        dir, commitId = Some("a1"))),
+      "delete" -> (() => VectorIndex.delete(
+        Seq(3L, 121L).toDF("vec_id"), "vec_id", dir, commitId = Some("d1"))),
+      "compact" -> (() => VectorIndex.compact(spark, dir)),
+      "retrain" -> (() => VectorIndex.retrain(spark, dir)),
+      "topK" -> (() => VectorIndex.topK(spark, dir, emb.filter($"vec_id" < 8),
+        "vec_id", "embedding", 3).collect()))
+    assert(jobs == Map("build" -> 6, "append" -> 7, "delete" -> 3,
+      "compact" -> 4, "retrain" -> 8, "topK" -> 9), s"vector index jobs: $jobs")
+  }
+}

@@ -421,6 +421,37 @@ class PipelineSpec extends SparkTestBase {
     assert(p.catalog.read("customers").count() == 8)
   }
 
+  test("lost update: a data-table commit landed during an approval survives it") {
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val cat = new ReadHook(root, "customers")
+    val p = new Pipeline(spark, cat, new InMemoryNotifier, landing)
+    val other = new Pipeline(spark, new Catalog(spark, root, graceVersions = 8),
+      new InMemoryNotifier, landing)
+    def insert(q: Pipeline, id: String, file: String, csv: String): Unit = {
+      land(landing, "b1", s"insert/$file", csv)
+      q.registerArrival(FileEvent("b1", s"insert/$file", id))
+      q.processApproval(approval(id, "approve", "insert", file))
+    }
+    insert(p, "ins1", "customers.csv", "customer_id,name\n1,a\n")
+    // the second writer runs on its own thread: a read taken inside the
+    // commit lock makes it wait for the approval's commit, while a read
+    // taken before the lock lets it commit in between
+    var failure: Option[Throwable] = None
+    val writer = new Thread(() =>
+      try insert(other, "ins2", "more/customers.csv", "customer_id,name\n2,b\n")
+      catch { case e: Throwable => failure = Some(e) })
+    cat.onRead = () => {
+      cat.onRead = () => ()
+      writer.start()
+      writer.join(10000)
+    }
+    insert(p, "ins3", "customers.csv", "customer_id,name\n3,c\n")
+    writer.join()
+    failure.foreach(throw _)
+    val ids = p.catalog.read("customers").as[(String, String)].collect().map(_._1).toSet
+    assert(ids == Set("1", "2", "3"), s"rows after both commits: $ids")
+  }
+
   test("registration + approval leave the history ref's dir as it is") {
     val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
     val p = new Pipeline(spark, new Catalog(spark, root), new InMemoryNotifier, landing)
@@ -449,16 +480,16 @@ class PipelineSpec extends SparkTestBase {
 
   test("the control log folds once a commit leaves more than MaxControlRefs refs") {
     val (p, _, _) = freshPipeline()
-    // the empty table createIfAbsent made is ref 0, so registration k
-    // leaves k + 1 refs
+    // the empty table createIfAbsent made starts the log with no refs,
+    // so registration k leaves k refs
     val n = p.MaxControlRefs
-    (1 until n).foreach(i => p.registerArrival(FileEvent("b1", s"insert/f${i % 7}.csv", s"ev$i")))
+    (1 to n).foreach(i => p.registerArrival(FileEvent("b1", s"insert/f${i % 7}.csv", s"ev$i")))
     assert(p.catalog.bucketRefs(p.ControlTable).size == n)
-    p.registerArrival(FileEvent("b1", s"insert/f${n % 7}.csv", s"ev$n"))
+    p.registerArrival(FileEvent("b1", s"insert/f${(n + 1) % 7}.csv", s"ev${n + 1}"))
     assert(p.catalog.bucketRefs(p.ControlTable).size == 1)
     val got = p.catalog.read(p.ControlTable).as[ProcessedFile].collect()
       .map(r => (r.event_id, r.file_name, r.file_version, r.status)).toSeq
-    val want = (1 to n).map { i =>
+    val want = (1 to n + 1).map { i =>
       val f = i % 7
       (s"ev$i", s"f$f.csv", (1 to i).count(_ % 7 == f).toLong, Status.Pending)
     }
