@@ -29,7 +29,7 @@ import graft.functions.StagedSwap
   *
   * Version GC: every commit calls `vacuum` with this catalog's
   * `graceVersions` retention, deleting version directories that neither
-  * the `_current` pointer nor any live bucket-manifest ref reaches
+  * the `_current` pointer nor any live manifest ref reaches
   * (ref-counted, never blind). `graceVersions > 0` keeps that many of
   * the newest unreferenced versions as a grace window so a reader that
   * resolved the pointer just before a commit still finds its files —
@@ -49,15 +49,15 @@ import graft.functions.StagedSwap
   * `lockStaleMs` is taken as a crashed holder's, so size it above your
   * slowest expected commit.
   *
-  * Pinned read schemas: a version directory is immutable, so the schema
-  * of its files is fixed the moment it is committed. A read of a plain
-  * (manifest-less) table hands the reader the schema of the version it
-  * resolves instead of letting the source infer it, which would cost a
-  * footer-read job on every read. The schema is remembered per table
-  * from the commit that wrote the version, or, for a version another
-  * writer committed, from one file footer read on the driver at its
-  * first read; the next commit replaces it. Partitioned versions always
-  * infer (their partition columns come from the directory names).
+  * Versions: every commit writes a fresh version dir and ends in one
+  * tail, [[commitManifest]]: the version's `_manifest.json` lands, then
+  * the pointer flips. The manifest maps refs to the data dirs the
+  * version reads and records the schema a read of it returns, so reads
+  * and time travel hand the reader that schema and never infer one. A
+  * flat overwrite is ref 0 → its own dir (a partitioned overwrite too,
+  * its partition columns last in the schema), a log is one ref per
+  * append batch, a bucket table one ref per bucket, and an empty table
+  * has no refs.
   */
 class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val lockTimeoutMs: Long = 60000, val lockStaleMs: Long = 1800000) {
@@ -77,12 +77,6 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   // under the instance monitor (every locked() body runs synchronized),
   // so a plain Set.
   private val heldLocks = scala.collection.mutable.Set.empty[String]
-
-  // table -> (version dir name, schema of that version's files); see the
-  // class doc. Keyed by version, so a commit by another writer misses
-  // and re-infers instead of reading with a stale schema.
-  private val pinnedSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
   /** The table's cross-process commit lock around a mutation's whole
     * read→write→pointer-flip span, reentrant within this instance.
@@ -113,20 +107,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   private def latestVersionDir(name: String): Option[Path] =
     versions(name).lastOption.map(new Path(tableDir(name), _))
 
-  /** A version directory counts as a completed commit only when its
-    * parquet job finished (`_SUCCESS`) and, if it holds bucket
-    * subdirectories, its `_manifest.json` landed (the manifest is
-    * written after the parquet job). Without this gate, a crash during
-    * a table's FIRST commit (no pointer yet) would leave a partial data
-    * directory that the pointer-less fallback resurrects as live data —
-    * and a partial first BUCKET commit would be read as plain parquet
-    * with `__b=` dirs inferred as a phantom partition column.
+  /** A version directory counts as a completed commit once its
+    * `_manifest.json` landed: every commit writes it after its data job
+    * returned. Without this gate, a crash during a table's FIRST commit
+    * (no pointer yet) would leave a data directory that the
+    * pointer-less fallback resurrects as live data.
     */
-  private def isCommitted(dir: Path): Boolean =
-    fs.exists(new Path(dir, "_SUCCESS")) && (
-      !fs.listStatus(dir).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("__b=")) ||
-      fs.exists(manifestFile(dir)))
+  private def isCommitted(dir: Path): Boolean = fs.exists(manifestFile(dir))
 
   private def currentVersionDir(name: String): Path =
     StagedSwap.readSmallFile(spark, pointerFile(name).toString) match {
@@ -143,40 +130,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   def read(name: String): DataFrame = {
     require(exists(name), s"table $name does not exist")
     val dir = currentVersionDir(name)
-    readManifestAt(dir) match {
-      case None => readPlain(name, dir)
-      case Some(m) => readRefs(name, m.refs.values.toSeq, m.schemaDDL)
-    }
-  }
-
-  /** Read a plain version dir with its pinned schema. A partitioned
-    * version, or one no Spark writer wrote, infers.
-    */
-  private def readPlain(name: String, dir: Path): DataFrame =
-    pinnedSchema(name, dir)
-      .fold(spark.read.parquet(dir.toString))(s => spark.read.schema(s).parquet(dir.toString))
-
-  /** The schema of a plain version dir's files: pinned by the commit
-    * that wrote it or, on a miss, pinned from one of its file footers
-    * (read on the driver, no job).
-    */
-  private def pinnedSchema(name: String, dir: Path): Option[StructType] =
-    Option(pinnedSchemas.get(name)).filter(_._1 == dir.getName).map(_._2)
-      .orElse(footerSchema(dir).map { s => pinnedSchemas.put(name, (dir.getName, s)); s })
-
-  /** The Spark schema a writer stores in every file footer of a version
-    * dir, made nullable as the reader makes it. None when the dir holds
-    * subdirectories (partition columns come from their names) or its
-    * files carry no Spark schema.
-    */
-  private def footerSchema(dir: Path): Option[StructType] = {
-    val entries = fs.listStatus(dir)
-    if (entries.exists(_.isDirectory)) return None
-    partFiles(dir).headOption.flatMap { file =>
-      Option(footer(file).getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(json => asNullable(DataType.fromJson(json)).asInstanceOf[StructType])
-    }
+    readAt(name, dir, manifestAt(name, dir))
   }
 
   private def partFiles(dir: Path): Seq[Path] =
@@ -212,26 +166,23 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   def currentVersion(name: String): String = currentVersionDir(name).getName
 
   /** Time travel: read the table AS OF a specific committed version
-    * (any entry of `versions(name)` that vacuum hasn't reclaimed). A
-    * manifest version resolves ITS OWN refs — the bucket/log contents
-    * as of that commit — not the current pointer's.
+    * (any entry of `versions(name)` that vacuum hasn't reclaimed). The
+    * version resolves ITS OWN manifest — the refs as of that commit,
+    * under that commit's schema — not the current pointer's.
     */
   def readVersion(name: String, version: String): DataFrame = {
     val dir = new Path(tableDir(name), version)
-    require(fs.exists(dir) && isCommitted(dir),
+    require(isCommitted(dir),
       s"table $name has no committed version $version (vacuumed or never existed)")
-    readManifestAt(dir) match {
-      case None => spark.read.parquet(dir.toString)
-      case Some(m) =>
-        // an old manifest may reference dirs the CURRENT state no
-        // longer does — vacuum only protects the live refs, so time
-        // travel past a vacuum fails loudly, never reads partial data
-        val missing = m.refs.values.map(_.split("/").head).toSet
-          .filterNot(v => fs.exists(new Path(tableDir(name), v)))
-        require(missing.isEmpty,
-          s"version $version of $name references vacuumed dirs: $missing")
-        readRefs(name, m.refs.values.toSeq, m.schemaDDL)
-    }
+    val m = manifestAt(name, dir)
+    // an old manifest may reference dirs the CURRENT state no longer
+    // does — vacuum only protects the live refs, so time travel past a
+    // vacuum fails loudly, never reads partial data
+    val missing = m.refs.values.map(_.split("/").head).toSet
+      .filterNot(v => fs.exists(new Path(tableDir(name), v)))
+    require(missing.isEmpty,
+      s"version $version of $name references vacuumed dirs: $missing")
+    readAt(name, dir, m)
   }
 
   /** Change feed between any two committed versions (within the vacuum
@@ -253,11 +204,10 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     */
   def createIfAbsent(name: String, schema: StructType,
       primaryKey: Seq[String] = Nil): Unit = locked(name) {
-    if (!exists(name)) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      commit(name, empty, primaryKey)
-    }
+    if (!exists(name))
+      commit(name, spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+        primaryKey, empty = true)
   }
 
   def allStringSchema(headers: Seq[String]): StructType =
@@ -291,9 +241,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * updates, quadratic for append-only state). Readers still get ONE
     * multi-path scan via the manifest. Fragmentation from many small
     * appends is maintenance: `compactLog` folds the refs back into one
-    * directory. A plain table becomes a log on its first appendLog: its
-    * current version dir is adopted as ref 0, as it stands (see
-    * [[logManifest]]).
+    * directory. An overwritten table's ref 0 stays the log's first ref,
+    * as it stands (see [[logManifest]]).
     */
   def appendLog(name: String, df: DataFrame,
       evolveSchema: Boolean = false): Unit = locked(name) {
@@ -357,25 +306,19 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     a.length == b.length && a.fields.zip(b.fields).forall { case (x, y) =>
       x.name == y.name && x.dataType.sql == y.dataType.sql }
 
-  /** The log manifest of an existing table (None when it does not
-    * exist). A plain table is adopted as it stands: its current version
-    * dir becomes ref 0 under the schema its reads are pinned to, so no
-    * data is read or rewritten and no footer job runs; the caller's
-    * commit writes the manifest. A version with no rows (a table
-    * [[createIfAbsent]] made) starts the log with no refs, so no read of
-    * the log opens its empty dir; the rows are counted from the file
-    * footers, without a job.
+  /** The current manifest of a table that takes log refs (None when it
+    * does not exist): an overwrite's ref 0 or an empty table's no refs
+    * start the log as they stand, so no data is read or rewritten.
     */
   private def logManifest(name: String): Option[Manifest] = {
     require(bucketCount(name).isEmpty,
       s"$name has a PK-bucket layout; its manifest keys are bucket ids, not log refs")
     if (!exists(name)) return None
     val dir = currentVersionDir(name)
-    Some(readManifestAt(dir).getOrElse(Manifest(
-      if (rowCount(dir) == 0) Map.empty else Map(0 -> dir.getName),
-      pinnedSchema(name, dir).getOrElse(throw new IllegalStateException(
-        s"$name version ${dir.getName} is partitioned or has no Spark schema; " +
-          "log refs must be flat parquet")).toDDL)))
+    val m = manifestAt(name, dir)
+    if (m.layout == Catalog.Partitioned) throw new IllegalStateException(
+      s"$name version ${dir.getName} is partitioned; log refs must be flat parquet")
+    Some(m)
   }
 
   /** UPDATE for a log table, in O(touched refs): under the commit lock,
@@ -384,8 +327,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * is, so a status update to one event of a long log rewrites that
     * event's ref, not the log. `f` sees every row of the replaced refs
     * and must pass the rows it leaves alone through unchanged, keeping
-    * the table's columns; a result with no rows drops the ref. A plain
-    * table is adopted first, as by [[appendLog]].
+    * the table's columns; a result with no rows drops the ref. An
+    * overwritten table's ref 0 is a ref like any other.
     *
     * Finding the refs costs a job inside the lock. A caller whose own
     * read of the table already found its rows passes what that read saw
@@ -563,15 +506,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   // ------------------------------------------------- bucket layout
   // A table may opt into a PK-hash bucket layout: rows live in
   // `bucketCount` hash buckets, each materialized as its own directory,
-  // and a per-version `_manifest.json` maps bucket → the version
-  // directory that last rewrote it. A mutation then reads and rewrites
+  // and the version's manifest maps bucket → the `__b=` directory of the
+  // version that last rewrote it. A mutation then reads and rewrites
   // ONLY the buckets containing its keys — at 100 TB, an approved CSV
   // touches a handful of partitions instead of the whole table — while
   // the `_current` pointer flip stays the single atomic commit point
   // (a manifest references immutable directories; old versions are
   // pruned only once nothing in the current manifest points at them).
-
-  private case class Manifest(refs: Map[Int, String], schemaDDL: String)
 
   /** Bucket id of a row: pmod(hash(pk…), n) — deterministic Murmur3,
     * computable engine-side with no lookup.
@@ -595,26 +536,34 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   }
 
   def hasBucketManifest(name: String): Boolean =
-    exists(name) && readManifest(name).isDefined
+    exists(name) && bucketManifest(name).isDefined
+
+  /** The current manifest when a bucket commit wrote it. A registered
+    * layout is not a bucket table until its first bucket commit
+    * migrates the table, so every bucket-scoped path asks this, never
+    * whether a manifest exists.
+    */
+  private def bucketManifest(name: String): Option[Manifest] =
+    Some(currentManifest(name)).filter(_.layout == Catalog.Buckets)
 
   /** The current manifest's refs: bucket → data directory for a bucket
-    * table, ref number → data directory for a log table (empty for a
-    * plain table). Introspection for tools, tests and fold policies.
+    * table, ref number → data directory for any other (one ref for an
+    * overwritten table, one per batch for a log, none for an empty
+    * table). Introspection for tools, tests and fold policies.
     */
-  def bucketRefs(name: String): Map[Int, String] =
-    readManifest(name).map(_.refs).getOrElse(Map.empty)
+  def bucketRefs(name: String): Map[Int, String] = currentManifest(name).refs
 
-  /** Read only the given buckets of a manifested table; an unmanifested
-    * table is one undivided bucket, so the whole table comes back.
+  /** Read only the given buckets of a bucket table; any other table is
+    * one undivided bucket, so the whole table comes back.
     */
   def readBuckets(name: String, buckets: Seq[Int]): DataFrame =
-    readManifest(name) match {
+    bucketManifest(name) match {
       case Some(m) =>
         readRefs(name, buckets.distinct.flatMap(m.refs.get), m.schemaDDL)
       case None => read(name)
     }
 
-  /** Point read by primary key: on a manifested table the key's bucket
+  /** Point read by primary key: on a bucket table the key's bucket
     * is computed DRIVER-SIDE (the same Murmur3 hash `bucketOf` plans,
     * evaluated on the literal key — no job, no lookup) and only that
     * one bucket directory is scanned; 1/numBuckets of the table instead
@@ -627,7 +576,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     require(key.length == pks.length,
       s"expected ${pks.length} key values for (${pks.mkString(", ")})")
     val pred = pks.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-    (bucketCount(name), readManifest(name)) match {
+    (bucketCount(name), bucketManifest(name)) match {
       case (Some(n), Some(m)) =>
         val bucket = keyBucket(StructType.fromDDL(m.schemaDDL), pks, key, n)
         readRefs(name, m.refs.get(bucket).toSeq, m.schemaDDL).filter(pred)
@@ -635,14 +584,14 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     }
   }
 
-  /** Buckets of literal primary-key tuples of a manifested bucket table,
+  /** Buckets of literal primary-key tuples of a bucket table,
     * computed on the driver the way [[lookupByPk]] finds its bucket (no
     * job). Each key aligns positionally with primaryKey().
     */
   def bucketsOfKeys(name: String, keys: Seq[Seq[Any]]): Seq[Int] = {
     val n = bucketCount(name).getOrElse(
       throw new IllegalStateException(s"$name has no registered bucket layout"))
-    val m = readManifest(name).getOrElse(
+    val m = bucketManifest(name).getOrElse(
       throw new IllegalStateException(s"$name has no bucket manifest"))
     val schema = StructType.fromDDL(m.schemaDDL)
     val pks = primaryKey(name)
@@ -678,7 +627,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * the compacted bucket ids.
     */
   def compact(name: String, maxFilesPerBucket: Int = 1): Seq[Int] = locked(name) {
-    val m = readManifest(name).getOrElse(throw new IllegalStateException(
+    val m = bucketManifest(name).getOrElse(throw new IllegalStateException(
       s"$name has no bucket manifest; only bucketed tables compact"))
     val frag = m.refs.filter { case (_, ref) =>
       fs.listStatus(new Path(tableDir(name), ref))
@@ -705,7 +654,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     */
   def rewrite(name: String, touchedBuckets: Int => Seq[Int])(
       f: DataFrame => DataFrame): Unit = locked(name) {
-    (bucketCount(name), readManifest(name)) match {
+    (bucketCount(name), bucketManifest(name)) match {
       case (Some(n), Some(m)) if primaryKey(name).nonEmpty =>
         val touched = touchedBuckets(n)
         commitBuckets(name, f(readBuckets(name, touched)), m.refs, touched)
@@ -714,18 +663,6 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       case _ => commit(name, f(read(name)), primaryKey(name))
     }
   }
-
-  /** Rewrite only `touched` buckets: `df` must hold exactly the new
-    * contents of those buckets; every other bucket keeps its existing
-    * (immutable) directory via the carried-over manifest entry.
-    */
-  def overwriteBuckets(name: String, df: DataFrame, touched: Seq[Int]): Unit =
-    locked(name) {
-      val prev = readManifest(name).map(_.refs).getOrElse(
-        throw new IllegalStateException(
-          s"$name has no bucket manifest; use overwriteAllBuckets first"))
-      commitBuckets(name, df, prev, touched)
-    }
 
   // --------------------------------------------- co-located layout
   // Large analytical tables that are repeatedly joined/aggregated on
@@ -841,19 +778,38 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       spark.read.schema(StructType.fromDDL(schemaDDL))
         .parquet(refs.sorted.map(r => new Path(tableDir(name), r).toString): _*)
 
+  /** Every row of a version: its refs, read under its schema. A version
+    * with no refs holds no rows, and its own dir is read in their place
+    * (an empty file or none), so a table read is always a file scan.
+    */
+  private def readAt(name: String, dir: Path, m: Manifest): DataFrame =
+    readRefs(name, if (m.refs.isEmpty) Seq(dir.getName) else m.refs.values.toSeq,
+      m.schemaDDL)
+
+  /** A version's manifest: `refs` maps a ref number (a bucket id in a
+    * bucket table) to a data directory under the table dir, `schemaDDL`
+    * is the schema every read of the version returns, and `layout` says
+    * what the refs are (`flat`, `partitioned` or `buckets`).
+    */
+  private case class Manifest(refs: Map[Int, String], schemaDDL: String, layout: String)
+
   private def manifestFile(versionDir: Path) = new Path(versionDir, "_manifest.json")
 
-  private def readManifest(name: String): Option[Manifest] =
-    readManifestAt(currentVersionDir(name))
+  private def currentManifest(name: String): Manifest =
+    manifestAt(name, currentVersionDir(name))
 
-  private def readManifestAt(versionDir: Path): Option[Manifest] =
-    StagedSwap.readSmallFile(spark, manifestFile(versionDir).toString).map { txt =>
-      val node = mapper.readTree(txt)
-      val b = node.get("buckets")
-      Manifest(
-        b.fieldNames.asScala.map(k => k.toInt -> b.get(k).asText()).toMap,
-        node.get("schemaDDL").asText())
-    }
+  private def manifestAt(name: String, versionDir: Path): Manifest = {
+    val txt = StagedSwap.readSmallFile(spark, manifestFile(versionDir).toString)
+      .getOrElse(throw new IllegalStateException(
+        s"table $name: version ${versionDir.getName} has no _manifest.json — " +
+          "a directory without one is not a committed version"))
+    val node = mapper.readTree(txt)
+    val b = node.get("buckets")
+    Manifest(
+      b.fieldNames.asScala.map(k => k.toInt -> b.get(k).asText()).toMap,
+      node.get("schemaDDL").asText(),
+      node.get("layout").asText())
+  }
 
   private def commitBuckets(name: String, df: DataFrame,
       prev: Map[Int, String], touched: Seq[Int]): Unit = {
@@ -869,18 +825,20 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val written = fs.listStatus(dataDir).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("__b="))
       .map(d => d.stripPrefix("__b=").toInt -> s"$version/$d").toMap
-    commitManifest(name, version, df.schema.toDDL, (prev -- touched) ++ written)
+    commitManifest(name, version, df.schema.toDDL, (prev -- touched) ++ written,
+      Catalog.Buckets)
   }
 
-  /** Commit a manifest version whose data dir is written: the manifest
-    * lands in the version dir, then the pointer flips to it.
+  /** The one commit tail: once a version's data dir is written, its
+    * manifest lands in it, then the pointer flips to it.
     */
   private def commitManifest(name: String, version: String, schemaDDL: String,
-      refs: Map[Int, String]): Unit = {
+      refs: Map[Int, String], layout: String = Catalog.Flat): Unit = {
     StagedSwap.writeAtomic(spark,
       manifestFile(new Path(tableDir(name), version)).toString,
       mapper.writeValueAsString(Map(
         "schemaDDL" -> schemaDDL,
+        "layout" -> layout,
         "buckets" -> refs.map { case (k, v) => k.toString -> v })))
     StagedSwap.writeAtomic(spark, pointerFile(name).toString, version)
     if (!fs.exists(metaFile(name))) writeMeta(name, primaryKey(name))
@@ -905,10 +863,9 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       minAgeMs: Long = 0L): Seq[String] = locked(name) {
     require(keepLast >= 0, "keepLast must be >= 0")
     if (!exists(name)) return Nil
-    val cur = currentVersionDir(name).getName
-    val referenced = readManifest(name)
-      .map(_.refs.values.map(_.split("/").head).toSet)
-      .getOrElse(Set.empty) + cur
+    val cur = currentVersionDir(name)
+    val referenced =
+      manifestAt(name, cur).refs.values.map(_.split("/").head).toSet + cur.getName
     val now = System.currentTimeMillis()
     val expendable = fs.listStatus(tableDir(name)).toSeq
       .filter(_.isDirectory).map(_.getPath)
@@ -1011,24 +968,31 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       s"commit to $name rejected by CHECK constraints — ${violated.mkString("; ")}")
   }
 
+  /** Commit `df` as the table's whole contents: one version whose ref 0
+    * is its own data dir, under the schema a read of its files returns
+    * (every column nullable, partition columns last). A version `empty`
+    * by construction records no ref.
+    */
   private def commit(name: String, df: DataFrame, pks: Seq[String],
       partitionCols: Seq[String] = Nil,
-      writeOptions: Map[String, String] = Map.empty): Unit = {
+      writeOptions: Map[String, String] = Map.empty,
+      empty: Boolean = false): Unit = {
     validateConstraints(name, df)
     val version = newVersionName()
-    val dataDir = new Path(tableDir(name), version)
     // Materialize BEFORE flipping the pointer: df may itself read the
     // current version (read-merge-overwrite), and parquet writes are
     // lazy per partition.
     val writer0 = df.write.options(writeOptions)
     val writer = if (partitionCols.nonEmpty)
       writer0.partitionBy(partitionCols: _*) else writer0
-    writer.mode("overwrite").parquet(dataDir.toString)
-    StagedSwap.writeAtomic(spark, pointerFile(name).toString, version)
-    if (partitionCols.isEmpty)
-      pinnedSchemas.put(name, (version, asNullable(df.schema).asInstanceOf[StructType]))
-    if (pks.nonEmpty || !fs.exists(metaFile(name))) writeMeta(name, pks)
-    pruneUnreferenced(name)
+    writer.mode("overwrite").parquet(new Path(tableDir(name), version).toString)
+    val schema = asNullable(df.schema).asInstanceOf[StructType]
+    val readSchema = StructType(
+      schema.filterNot(f => partitionCols.contains(f.name)) ++ partitionCols.map(schema(_)))
+    if (pks.nonEmpty) writeMeta(name, pks)
+    commitManifest(name, version, readSchema.toDDL,
+      if (empty) Map.empty else Map(0 -> version),
+      if (partitionCols.isEmpty) Catalog.Flat else Catalog.Partitioned)
   }
 
   /** The schema a file source reads back: every field, array element
@@ -1045,6 +1009,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
 }
 
 object Catalog {
+
+  // What a manifest's refs are: flat parquet dirs (an overwrite's one
+  // ref, a log's one per batch), one hive-partitioned dir (ref 0 of a
+  // partitioned overwrite), or bucket id → `__b=` dir.
+  private val Flat = "flat"
+  private val Partitioned = "partitioned"
+  private val Buckets = "buckets"
 
   /** What a caller's own read of a log table saw of the rows a
     * [[Catalog.rewriteLog]] changes, so that the rewrite finds their

@@ -16,19 +16,18 @@ import org.apache.spark.sql.functions._
   * Layout under `indexDir` — IMMUTABLE generation dirs + an atomic
   * pointer, the shared [[GenIndex]] treatment:
   *
-  *  - `meta`  — one row: (shingle, num_hashes, bands, n_buckets at
-  *    build), validated on every serve/append — band keys built under
-  *    different SIGNING parameters would silently collapse recall, so
-  *    drift fails fast (the IncrementalDedup contract). The CURRENT
-  *    bucket count is the manifest's `n_buckets` extra ([[compact]]
-  *    rebuckets, so the live count moves with the commit — meta keeps
-  *    only the build-time value);
   *  - `bands_g{G}/__kb={k}/` — (doc_id, band, key, __gen) rows of
   *    key-hash bucket k as written by generation G;
   *  - `sets_g{G}/__db={k}/` — (doc_id, hhd, __gen) verification sets,
   *    bucketed by hash(doc_id);
   *  - `_manifest_v{N}.json` — bucket → generation-dir refs for both
   *    tables plus atomic extras, `_current` — the committed version.
+  *    The extras carry the SIGNING parameters (shingle, num_hashes,
+  *    bands), validated on every serve/append — band keys built under
+  *    different parameters would silently collapse recall, so drift
+  *    fails fast (the IncrementalDedup contract) — and the CURRENT
+  *    bucket count `n_buckets` ([[compact]] rebuckets, so it moves with
+  *    the commit).
   *
   * Both tables are FRAGMENT tables (r15 verdict item 1 — the
   * TextIndex/VectorIndex treatment): an append writes ONLY its
@@ -118,36 +117,16 @@ object SignatureIndex {
   private val BandsDDL = "doc_id bigint, band int, key string, __gen int"
   private val SetsDDL = "doc_id bigint, hhd array<bigint>, __gen int"
 
-  // ------------------------------------------------------- meta
+  // ------------------------------------------------------- params
 
-  private def writeMeta(spark: SparkSession, indexDir: String,
-      p: Params): Unit = {
-    import spark.implicits._
-    Seq((p.shingle, p.numHashes, p.bands, p.nBuckets))
-      .toDF("shingle", "num_hashes", "bands", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-  }
-
-  /** Signing params from the manifest extras (committed with the refs
-    * since the job-count wave — reading them costs nothing) + the LIVE
-    * bucket count (compact rebuckets; serve/append must hash with the
-    * count the committed layout was written under). Falls back to the
-    * meta parquet for an index built by an older version: the sidecar
-    * stays on disk as the layout contract either way, but the common
-    * path no longer pays a parquet head() JOB per serve/append/delete
-    * just to learn three integers.
+  /** Signing params + the LIVE bucket count from the manifest extras
+    * (compact rebuckets; serve/append must hash with the count the
+    * committed layout was written under). Reading them costs no job.
     */
-  private def currentParams(spark: SparkSession, indexDir: String,
-      m: GenIndex.Manifest): Params =
-    (m.extras.get("shingle"), m.extras.get("num_hashes"),
-        m.extras.get("bands")) match {
-      case (Some(s), Some(h), Some(b)) =>
-        Params(s.toInt, h.toInt, b.toInt, m.extra("n_buckets", store.what).toInt)
-      case _ =>
-        val r = spark.read.parquet(s"$indexDir/meta").head()
-        Params(r.getInt(0), r.getInt(1), r.getInt(2),
-          m.extra("n_buckets", store.what).toInt)
-    }
+  private def currentParams(m: GenIndex.Manifest): Params = {
+    def int(key: String) = m.extra(key, store.what).toInt
+    Params(int("shingle"), int("num_hashes"), int("bands"), int("n_buckets"))
+  }
 
   /** The signing-parameter extras every commit carries forward (later
     * commits copy cur.extras, so writing them once at build is
@@ -260,7 +239,6 @@ object SignatureIndex {
         targetBandRowsPerBucket = targetBandRowsPerBucket)
     store.rebuild(spark, indexDir) {
       val p = Params(shingle, numHashes, bands, nb)
-      writeMeta(spark, indexDir, p)
       // the signed frame is shared lazily (two streaming passes) —
       // see the signedFrame scaladoc for why persisting it is a
       // measured loss at every batch size tried
@@ -313,7 +291,7 @@ object SignatureIndex {
     store.mutate(spark, indexDir, commitId,
         after = m => if (overThreshold(m)) fold(spark, indexDir, autoCompactFragments)) {
         (cur, gen) =>
-      val p = currentParams(spark, indexDir, cur)
+      val p = currentParams(cur)
       // the signed frame is shared LAZILY — each write re-derives it
       // (two pipelined shingle+hash scans). Persisting it to share
       // one pass was measured SLOWER: the columnar cache encode of
@@ -370,7 +348,7 @@ object SignatureIndex {
     store.mutate(spark, indexDir, commitId,
         after = m => if (m.refs("sets").values.exists(_.size >= AutoCompactFragments))
           fold(spark, indexDir, AutoCompactFragments)) { (cur, gen) =>
-      val p = currentParams(spark, indexDir, cur)
+      val p = currentParams(cur)
       val del = ids.select(col(idCol).as("doc_id")).distinct()
         .withColumn("__db", pmod(hash(col("doc_id")), lit(p.nBuckets)))
         .persist()
@@ -492,7 +470,7 @@ object SignatureIndex {
       idCol: String, textCol: String, threshold: Double): DataFrame = {
     import spark.implicits._
     val m = store.current(spark, indexDir)
-    val p = currentParams(spark, indexDir, m)
+    val p = currentParams(m)
     // the incoming batch's signed frame is shared LAZILY between the
     // band derivation and the verification sets — persisting it to
     // share one signing pass was measured SLOWER (the columnar cache
@@ -608,7 +586,7 @@ object SignatureIndex {
     val target = cur.extras.getOrElse("target_band_rows",
       (4L << 20).toString).toLong
     val nb = bucketsFor(nDocs,
-      bandsPerDoc = currentParams(spark, indexDir, cur).bands,
+      bandsPerDoc = currentParams(cur).bands,
       targetBandRowsPerBucket = target)
     val bandsLive = GenIndex.readBuckets(spark, indexDir, cur.refs("bands"),
         "__kb", cur.refs("bands").keys.toSeq, withBucketCol = false, BandsDDL)

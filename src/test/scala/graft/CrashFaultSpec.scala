@@ -15,7 +15,8 @@ import graft.sources.bus.BusLog
   * successful commit is unaffected by the wreckage.
   *
   * Catalog: data dir + manifest materialize first, then the one-line
-  * `_current` pointer flips (Catalog.scala commit/appendLog). BusWrite:
+  * `_current` pointer flips (Catalog.scala commitManifest, the tail of
+  * every commit). BusWrite:
   * task writers stage under `.staging/`, the driver renames staged
   * files into live segments, streaming commits then append the epoch
   * ledger (BusWrite.scala commit protocol).
@@ -42,6 +43,60 @@ class CrashFaultSpec extends SparkTestBase {
     // not resurrected into the manifest chain
     cat.appendLog("log", Seq(3L).toDF("id"))
     assert(cat.read("log").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("overwrite crash before its manifest: data with _SUCCESS is not a version") {
+    val root = tmpDir("crash_nomanifest")
+    val cat = new Catalog(spark, root)
+    // the data job of a flat overwrite finished (`_SUCCESS` landed) but
+    // the writer died before the manifest: not a committed version
+    def crashedOverwrite(table: String, version: String): Unit = {
+      val dir = Paths.get(root, table, version)
+      Seq(("x", 9L)).toDF("k", "v").write.mode("overwrite").parquet(dir.toString)
+      assert(Files.exists(dir.resolve("_SUCCESS")))
+    }
+    // a table's first commit: no pointer, so the table does not exist
+    crashedOverwrite("first", "v1700000000000_deadbeef")
+    assert(cat.versions("first").isEmpty && !cat.exists("first"))
+    intercept[Exception](cat.read("first"))
+    // beside a live version: versions omits it, reads keep the live one
+    cat.overwrite("t", Seq(("a", 1L)).toDF("k", "v"))
+    val live = cat.currentVersion("t")
+    crashedOverwrite("t", "v9999999999999_deadbeef")
+    assert(cat.versions("t") == Seq(live))
+    // a pointer naming it fails loudly, naming the table and the version
+    Files.writeString(Paths.get(root, "t", "_current"), "v9999999999999_deadbeef")
+    Files.deleteIfExists(Paths.get(root, "t", "._current.crc")) // the local FS's sidecar
+    val e = intercept[IllegalStateException](cat.read("t"))
+    assert(e.getMessage.contains("table t") && e.getMessage.contains("v9999999999999_deadbeef"))
+    // with no pointer the fallback finds the live version, never the crashed one
+    Files.delete(Paths.get(root, "t", "_current"))
+    assert(cat.read("t").as[(String, Long)].collect().toSeq == Seq(("a", 1L)))
+    // and the next commits succeed on top of the debris
+    cat.overwrite("first", Seq(("b", 2L)).toDF("k", "v"))
+    cat.overwrite("t", Seq(("a", 3L)).toDF("k", "v"))
+    assert(cat.read("first").as[(String, Long)].collect().toSeq == Seq(("b", 2L)))
+    assert(cat.read("t").as[(String, Long)].collect().toSeq == Seq(("a", 3L)))
+  }
+
+  test("overwrite crash after manifest, before pointer flip: last version stays live") {
+    val root = tmpDir("crash_flat")
+    val cat = new Catalog(spark, root)
+    cat.overwrite("t", Seq(("a", 1L)).toDF("k", "v"))
+    val live = cat.currentVersion("t")
+    // a complete staged flat commit whose pointer flip never ran, newer
+    // than the live version
+    val orphan = s"v${System.currentTimeMillis()}_deadcafe"
+    val dir = Paths.get(root, "t", orphan)
+    Seq(("x", 9L)).toDF("k", "v").write.mode("overwrite").parquet(dir.toString)
+    Files.writeString(dir.resolve("_manifest.json"),
+      s"""{"schemaDDL":"k STRING,v BIGINT","layout":"flat","buckets":{"0":"$orphan"}}""")
+    assert(cat.currentVersion("t") == live)
+    assert(cat.read("t").as[(String, Long)].collect().toSeq == Seq(("a", 1L)))
+    // the next commit lands and its vacuum reclaims the orphan
+    cat.overwrite("t", Seq(("a", 2L)).toDF("k", "v"))
+    assert(cat.read("t").as[(String, Long)].collect().toSeq == Seq(("a", 2L)))
+    assert(!Files.exists(dir) && cat.versions("t") == Seq(cat.currentVersion("t")))
   }
 
   test("half-staged pointer tmp files are inert; a missing pointer falls back") {

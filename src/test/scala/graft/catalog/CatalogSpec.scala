@@ -232,10 +232,8 @@ class CatalogSpec extends SparkTestBase {
     // buckets; the middle rewrite becomes unreferenced garbage
     val b7 = rows.toDF("id", "v").filter($"id" === "7")
       .select(cat.bucketOf(Seq("id"), n).as("b")).head().getInt(0)
-    cat.overwriteBuckets("t",
-      cat.readBuckets("t", Seq(b7)).withColumn("v", concat($"v", lit("!"))), Seq(b7))
-    cat.overwriteBuckets("t",
-      cat.readBuckets("t", Seq(b7)).withColumn("v", concat($"v", lit("?"))), Seq(b7))
+    cat.rewrite("t", _ => Seq(b7))(_.withColumn("v", concat($"v", lit("!"))))
+    cat.rewrite("t", _ => Seq(b7))(_.withColumn("v", concat($"v", lit("?"))))
 
     val deleted = cat.vacuum("t")
     val live = cat.bucketRefs("t").values.map(_.split("/").head).toSet
@@ -271,7 +269,7 @@ class CatalogSpec extends SparkTestBase {
       .select(cat.bucketOf(Seq("id"), n).as("b")).head().getInt(0)
     val newBucketRows = cat.readBuckets("t", Seq(b7))
       .withColumn("v", concat($"v", lit("!")))
-    cat.overwriteBuckets("t", newBucketRows, Seq(b7))
+    cat.rewrite("t", _ => Seq(b7))(_.withColumn("v", concat($"v", lit("!"))))
 
     val refs1 = cat.bucketRefs("t")
     assert(refs1(b7) != refs0(b7), "touched bucket must get a new directory")
@@ -290,8 +288,7 @@ class CatalogSpec extends SparkTestBase {
       s"readBuckets leaked beyond bucket $b7: ${files.toSeq}")
 
     // deleting every row of a bucket drops its manifest entry
-    cat.overwriteBuckets("t",
-      cat.readBuckets("t", Seq(b7)).limit(0), Seq(b7))
+    cat.rewrite("t", _ => Seq(b7))(_.limit(0))
     assert(!cat.bucketRefs("t").contains(b7))
     assert(cat.read("t").count() == 40 - newBucketRows.count())
   }
@@ -643,9 +640,9 @@ class CatalogSpec extends SparkTestBase {
     val fresh = new Catalog(spark, root)
     Seq("deletes", "files", "s", "z").foreach(assertPinned(fresh, _))
 
-    // partitioned versions always infer, also on later reads
+    // partitioned versions are pinned too, partition columns last
     cat.overwritePartitioned("p", rows.withColumn("part", $"id" % 3), Seq("part"))
-    assert(countJobs(cat.read("p"))._2 == 1 && countJobs(cat.read("p"))._2 == 1)
+    assert(countJobs(cat.read("p"))._2 == 0 && countJobs(cat.read("p"))._2 == 0)
     assert(cat.read("p").count() == 50)
   }
 
@@ -787,5 +784,55 @@ class CatalogSpec extends SparkTestBase {
     cat.compactLog("log")
     assert(cat.bucketRefs("log").size == 1)
     assert(multiset(rows) == multiset(before))
+  }
+
+  test("a registered but unmigrated bucket layout reads whole until rewrite migrates it") {
+    val cat = new Catalog(spark, tmpDir("catunmigrated"))
+    val n = 4
+    val rows = (1 to 40).map(i => (i.toString, s"v$i"))
+    cat.createIfAbsent("t", cat.allStringSchema(Seq("id", "v")), Seq("id"))
+    cat.overwrite("t", rows.toDF("id", "v"))
+    cat.registerBucketLayout("t", n)
+    assert(!cat.hasBucketManifest("t"))
+    val b7 = Seq("7").toDF("id").select(cat.bucketOf(Seq("id"), n)).as[Int].head()
+    // no bucket exists yet: a point read filters the whole table and a
+    // bucket read returns all of it
+    assert(cat.lookupByPk("t", Seq("7")).as[(String, String)].collect().toSeq ==
+      Seq("7" -> "v7"))
+    assert(cat.readBuckets("t", Seq(b7)).as[(String, String)].collect().toSet == rows.toSet)
+    intercept[IllegalStateException](cat.compact("t"))
+
+    // the first rewrite migrates the whole table into the layout
+    cat.rewrite("t", _ => Seq(b7))(
+      _.withColumn("v", when($"id" === "7", lit("v7!")).otherwise($"v")))
+    assert(cat.hasBucketManifest("t") && cat.bucketRefs("t").keySet == (0 until n).toSet)
+    assert(cat.lookupByPk("t", Seq("7")).as[(String, String)].collect().toSeq ==
+      Seq("7" -> "v7!"))
+    assert(cat.read("t").count() == 40)
+
+    // a bucket table whose every bucket was deleted reads empty and has
+    // nothing to compact
+    cat.rewrite("t", k => 0 until k)(_.limit(0))
+    assert(cat.hasBucketManifest("t") && cat.bucketRefs("t").isEmpty)
+    assert(cat.read("t").isEmpty && cat.read("t").columns.toSeq == Seq("id", "v"))
+    assert(cat.lookupByPk("t", Seq("7")).isEmpty)
+    assert(cat.compact("t") == Nil)
+  }
+
+  test("time travel to flat and partitioned versions is pinned: no job, same rows") {
+    val cat = new Catalog(spark, tmpDir("catttpin"), graceVersions = 8)
+    val rows = (1 to 30).map(i => (i.toLong, s"v$i", i % 3))
+    val df = rows.toDF("id", "v", "part")
+    cat.overwrite("t", df)
+    val flat = cat.currentVersion("t")
+    cat.overwritePartitioned("t", df, Seq("part"))
+    val partitioned = cat.currentVersion("t")
+    cat.overwrite("t", df.limit(1))
+    for (v <- Seq(flat, partitioned)) {
+      val (got, jobs) = countJobs(cat.readVersion("t", v))
+      assert(jobs == 0, s"readVersion of $v ran $jobs jobs")
+      assert(got.columns.toSeq == Seq("id", "v", "part"))
+      assert(got.as[(Long, String, Int)].collect().toSet == rows.toSet, v)
+    }
   }
 }

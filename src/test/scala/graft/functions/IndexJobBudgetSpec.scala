@@ -37,9 +37,9 @@ class IndexJobBudgetSpec extends SparkTestBase {
       "serve" -> (() => SignatureIndex.servePairs(spark, dir,
         docs.filter($"doc_id" >= 80 && $"doc_id" < 100), "doc_id", "text", 0.5)
         .collect()))
-    // compact learns `bands` from the manifest extras, not from a read
-    // of the meta parquet (a schema-inference job plus a head job)
-    assert(jobs == Map("build" -> 8, "append" -> 4, "delete" -> 9,
+    // every phase learns the signing params from the manifest extras;
+    // build writes no meta parquet beside them
+    assert(jobs == Map("build" -> 7, "append" -> 4, "delete" -> 9,
       "compact" -> 10, "serve" -> 14), s"signature index jobs: $jobs")
   }
 

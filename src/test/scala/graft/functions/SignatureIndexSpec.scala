@@ -166,9 +166,9 @@ class SignatureIndexSpec extends SparkTestBase {
     val small = base.filter($"doc_id" % 8 === 0)
     val dir1 = tmpDir("sigidxauto1") + "/idx"
     SignatureIndex.build(small, "doc_id", "text", dir1)
-    def metaBuckets(dir: String): Int =
-      spark.read.parquet(s"$dir/meta").head().getInt(3)
-    assert(metaBuckets(dir1) == SignatureIndex.DefaultBuckets)
+    def builtBuckets(dir: String): Int =
+      SignatureIndex.store.current(spark, dir).extras("n_buckets").toInt
+    assert(builtBuckets(dir1) == SignatureIndex.DefaultBuckets)
     // ...and with a tiny rewrite-unit target the SAME default exceeds
     // the floor — proving build feeds the real corpus count through
     // bucketsFor rather than a constant (a 1e9-row corpus in a spec is
@@ -180,7 +180,7 @@ class SignatureIndexSpec extends SparkTestBase {
     val want = SignatureIndex.bucketsFor(n, bandsPerDoc = 2,
       targetBandRowsPerBucket = 1L)
     assert(want > SignatureIndex.DefaultBuckets)
-    assert(metaBuckets(dir2) == want)
+    assert(builtBuckets(dir2) == want)
     spark.catalog.clearCache()
   }
 
@@ -477,14 +477,16 @@ class SignatureIndexSpec extends SparkTestBase {
     SignatureIndex.build(base, "doc_id", "text", dir)
     // a 3-doc batch: at most 6 band keys hash to at most 6 of 64 buckets
     val tiny = incoming.filter($"doc_id" <= 5)
-    val p = spark.read.parquet(s"$dir/meta").head()
-    val rows = p.getInt(1) / p.getInt(2)
-    val touched = Dedup.hashedShingleFrame(tiny, "doc_id", "text", p.getInt(0))
+    val Seq(shingle, numHashes, bands, nBuckets) =
+      Seq("shingle", "num_hashes", "bands", "n_buckets")
+        .map(SignatureIndex.store.current(spark, dir).extras(_).toInt)
+    val rows = numHashes / bands
+    val touched = Dedup.hashedShingleFrame(tiny, "doc_id", "text", shingle)
       .withColumn("__sig",
-        Dedup.minhashSignatureFromHashesFast($"__hhd", p.getInt(1)))
-      .select(posexplode(Dedup.lshBandKeys($"__sig", p.getInt(2), rows))
+        Dedup.minhashSignatureFromHashesFast($"__hhd", numHashes))
+      .select(posexplode(Dedup.lshBandKeys($"__sig", bands, rows))
         .as(Seq("band", "key")))
-      .select(pmod(hash($"key"), lit(p.getInt(3))))
+      .select(pmod(hash($"key"), lit(nBuckets)))
       .distinct().as[Int].collect().toSet
     assert(touched.size <= 6)
     // the serve plan's band-side scan is built from manifest paths, so
