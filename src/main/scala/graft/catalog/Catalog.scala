@@ -2,12 +2,13 @@ package graft.catalog
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, expr, hash, input_file_name, lit, pmod, shiftright, sum, when}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{coalesce, col, expr, hash, input_file_name, lit, max, min, pmod, row_number, shiftright, struct, sum, when}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType, StructField, StructType}
 
 import graft.functions.StagedSwap
 
@@ -57,7 +58,29 @@ import graft.functions.StagedSwap
   * flat overwrite is ref 0 → its own dir (a partitioned overwrite too,
   * its partition columns last in the schema), a log is one ref per
   * append batch, a bucket table one ref per bucket, and an empty table
-  * has no refs.
+  * has no refs. The refs are the version's BASE; the manifest also
+  * lists its FRAGMENTS in commit order.
+  *
+  * Fragments: a table with a primary key takes row mutations as
+  * key-resolved fragments, the log-structured merge of O'Neil et al.
+  * (The LSM-Tree, 1996). [[insertByKey]], [[upsertByKey]] and
+  * [[deleteByKey]] each commit ONE fragment, one file in its own
+  * version dir holding the batch deduplicated by key (or tombstones
+  * for the deleted keys), tagged with its op, its commit order and each
+  * row's bucket; they never read the table. A read resolves every key
+  * over its records in commit order, the base row being the oldest
+  * upsert: only records after the newest tombstone count, the newest
+  * upsert among them wins, else the FIRST insert, else the key is
+  * absent. That is the sequential semantics of the reference's SQL:
+  * an insert keeps the first row and ignores a live key, an update
+  * keeps the last row, a delete removes the key. A row with a null key
+  * column matches no other, as in SQL. A version with no fragments
+  * reads its base alone, as a plain scan. Once a table holds more than
+  * [[Catalog.MaxFragments]] fragments the commit that crossed the bound
+  * [[fold]]s them into new bases (only the buckets they touch). Any
+  * other commit leaves no fragment behind: a commit of the whole
+  * contents (overwrite, append, compactLog) replaces them with the
+  * base, and `rewrite`, `compact` and the log commits fold first.
   */
 class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val lockTimeoutMs: Long = 60000, val lockStaleMs: Long = 1800000) {
@@ -178,8 +201,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     // an old manifest may reference dirs the CURRENT state no longer
     // does — vacuum only protects the live refs, so time travel past a
     // vacuum fails loudly, never reads partial data
-    val missing = m.refs.values.map(_.split("/").head).toSet
-      .filterNot(v => fs.exists(new Path(tableDir(name), v)))
+    val missing = m.dirs.filterNot(v => fs.exists(new Path(tableDir(name), v)))
     require(missing.isEmpty,
       s"version $version of $name references vacuumed dirs: $missing")
     readAt(name, dir, m)
@@ -308,7 +330,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
 
   /** The current manifest of a table that takes log refs (None when it
     * does not exist): an overwrite's ref 0 or an empty table's no refs
-    * start the log as they stand, so no data is read or rewritten.
+    * start the log as they stand, so no data is read or rewritten. A
+    * table holding fragments is folded first, since a log ref is base.
     */
   private def logManifest(name: String): Option[Manifest] = {
     require(bucketCount(name).isEmpty,
@@ -318,7 +341,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val m = manifestAt(name, dir)
     if (m.layout == Catalog.Partitioned) throw new IllegalStateException(
       s"$name version ${dir.getName} is partitioned; log refs must be flat parquet")
-    Some(m)
+    if (m.fragments.nonEmpty) { fold(name); logManifest(name) }
+    else Some(m)
   }
 
   /** UPDATE for a log table, in O(touched refs): under the commit lock,
@@ -507,12 +531,17 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   // A table may opt into a PK-hash bucket layout: rows live in
   // `bucketCount` hash buckets, each materialized as its own directory,
   // and the version's manifest maps bucket → the `__b=` directory of the
-  // version that last rewrote it. A mutation then reads and rewrites
-  // ONLY the buckets containing its keys — at 100 TB, an approved CSV
-  // touches a handful of partitions instead of the whole table — while
-  // the `_current` pointer flip stays the single atomic commit point
-  // (a manifest references immutable directories; old versions are
-  // pruned only once nothing in the current manifest points at them).
+  // version that last rewrote it. Key mutations never rewrite a bucket:
+  // each lands as one fragment whose rows carry their bucket id, so a
+  // bucket read or a point read resolves one bucket's base against the
+  // fragments' rows of that bucket, and the fold rewrites ONLY the
+  // buckets the fragments touched — at 100 TB, an approved CSV costs its
+  // rows and a fold a handful of partitions, never the whole table —
+  // while the `_current` pointer flip stays the single atomic commit
+  // point (a manifest references immutable directories; old versions
+  // are pruned only once nothing in the current manifest points at
+  // them). A keyed table with no bucket layout is one bucket: its base
+  // is the whole table.
 
   /** Bucket id of a row: pmod(hash(pk…), n) — deterministic Murmur3,
     * computable engine-side with no lookup.
@@ -530,10 +559,10 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     writeMeta(name, primaryKey(name), Some(numBuckets))
   }
 
-  def bucketCount(name: String): Option[Int] = {
-    val node = readMetaNode(name).flatMap(n => Option(n.get("bucketCount")))
-    node.map(_.asInt())
-  }
+  def bucketCount(name: String): Option[Int] = bucketCountOf(readMetaNode(name))
+
+  private def bucketCountOf(meta: Option[JsonNode]): Option[Int] =
+    meta.flatMap(n => Option(n.get("bucketCount"))).map(_.asInt())
 
   def hasBucketManifest(name: String): Boolean =
     exists(name) && bucketManifest(name).isDefined
@@ -553,22 +582,29 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     */
   def bucketRefs(name: String): Map[Int, String] = currentManifest(name).refs
 
+  /** The current version's fragment dirs, oldest first (see
+    * [[insertByKey]]); empty once a fold merged them.
+    */
+  def fragments(name: String): Seq[String] = currentManifest(name).fragments
+
   /** Read only the given buckets of a bucket table; any other table is
     * one undivided bucket, so the whole table comes back.
     */
   def readBuckets(name: String, buckets: Seq[Int]): DataFrame =
     bucketManifest(name) match {
       case Some(m) =>
-        readRefs(name, buckets.distinct.flatMap(m.refs.get), m.schemaDDL)
+        readResolved(name, m, buckets.distinct.flatMap(m.refs.get),
+          fragRows = Some(col(Catalog.BucketCol).isin(buckets: _*)))
       case None => read(name)
     }
 
   /** Point read by primary key: on a bucket table the key's bucket
     * is computed DRIVER-SIDE (the same Murmur3 hash `bucketOf` plans,
     * evaluated on the literal key — no job, no lookup) and only that
-    * one bucket directory is scanned; 1/numBuckets of the table instead
-    * of all of it. Falls back to a filtered full read when no bucket
-    * layout exists. `key` values align positionally with primaryKey().
+    * one bucket directory is scanned, with the key's fragment rows;
+    * 1/numBuckets of the table instead of all of it. Falls back to a
+    * filtered full read when no bucket layout exists. `key` values
+    * align positionally with primaryKey().
     */
   def lookupByPk(name: String, key: Seq[Any]): DataFrame = {
     val pks = primaryKey(name)
@@ -579,23 +615,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     (bucketCount(name), bucketManifest(name)) match {
       case (Some(n), Some(m)) =>
         val bucket = keyBucket(StructType.fromDDL(m.schemaDDL), pks, key, n)
-        readRefs(name, m.refs.get(bucket).toSeq, m.schemaDDL).filter(pred)
-      case _ => read(name).filter(pred)
+        readResolved(name, m, m.refs.get(bucket).toSeq,
+          fragRows = Some(col(Catalog.BucketCol) === bucket), keys = Some(pred))
+      case _ =>
+        require(exists(name), s"table $name does not exist")
+        val dir = currentVersionDir(name)
+        readAt(name, dir, manifestAt(name, dir), Some(pred))
     }
-  }
-
-  /** Buckets of literal primary-key tuples of a bucket table,
-    * computed on the driver the way [[lookupByPk]] finds its bucket (no
-    * job). Each key aligns positionally with primaryKey().
-    */
-  def bucketsOfKeys(name: String, keys: Seq[Seq[Any]]): Seq[Int] = {
-    val n = bucketCount(name).getOrElse(
-      throw new IllegalStateException(s"$name has no registered bucket layout"))
-    val m = bucketManifest(name).getOrElse(
-      throw new IllegalStateException(s"$name has no bucket manifest"))
-    val schema = StructType.fromDDL(m.schemaDDL)
-    val pks = primaryKey(name)
-    keys.map(keyBucket(schema, pks, _, n)).distinct
   }
 
   /** [[bucketOf]] evaluated on one literal key: the same Murmur3 hash
@@ -615,7 +641,8 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     commitBuckets(name, df, prev = Map.empty, touched = Nil)
   }
 
-  /** Compact fragmented buckets: every bucket whose directory holds
+  /** Compact fragmented buckets: the table's fragments are folded
+    * first, then every bucket whose directory holds
     * more than `maxFilesPerBucket` part-files is rewritten — through
     * the normal bucket-scoped commit path — after a repartition that
     * lands each bucket in one task, i.e. ONE file per bucket.
@@ -624,11 +651,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * table (the small-file problem is maintenance, not a rewrite of
     * 100 TB). Old version directories become unreferenced as their
     * last buckets compact away and are pruned by the commit. Returns
-    * the compacted bucket ids.
+    * the folded and compacted bucket ids.
     */
   def compact(name: String, maxFilesPerBucket: Int = 1): Seq[Int] = locked(name) {
-    val m = bucketManifest(name).getOrElse(throw new IllegalStateException(
-      s"$name has no bucket manifest; only bucketed tables compact"))
+    if (bucketManifest(name).isEmpty) throw new IllegalStateException(
+      s"$name has no bucket manifest; only bucketed tables compact")
+    val folded = fold(name)
+    val m = currentManifest(name)
     val frag = m.refs.filter { case (_, ref) =>
       fs.listStatus(new Path(tableDir(name), ref))
         .count(s => s.isFile && s.getPath.getName.startsWith("part-")) >
@@ -640,7 +669,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
         .repartition(frag.length, bucketOf(primaryKey(name), n))
       commitBuckets(name, df, m.refs, frag)
     }
-    frag
+    (folded ++ frag).distinct.sorted
   }
 
   /** Read-modify-write of a data table through the narrowest commit its
@@ -650,10 +679,13 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * layout and primary key, only the buckets `touchedBuckets(bucket
     * count)` names are read and rewritten, and the first such rewrite
     * migrates the whole table into the layout; otherwise the whole
-    * table is rewritten.
+    * table is rewritten. A table holding fragments is folded first.
+    * Row mutations of a keyed table go through [[insertByKey]],
+    * [[upsertByKey]] and [[deleteByKey]] instead, which read nothing.
     */
   def rewrite(name: String, touchedBuckets: Int => Seq[Int])(
       f: DataFrame => DataFrame): Unit = locked(name) {
+    if (exists(name) && currentManifest(name).fragments.nonEmpty) fold(name)
     (bucketCount(name), bucketManifest(name)) match {
       case (Some(n), Some(m)) if primaryKey(name).nonEmpty =>
         val touched = touchedBuckets(n)
@@ -661,6 +693,102 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       case (Some(_), None) if primaryKey(name).nonEmpty =>
         commitBuckets(name, f(read(name)), prev = Map.empty, touched = Nil)
       case _ => commit(name, f(read(name)), primaryKey(name))
+    }
+  }
+
+  // ------------------------------------------------- key fragments
+
+  /** INSERT … ON CONFLICT DO NOTHING into a keyed table, in O(batch):
+    * `rows` (the table's columns, in any order, plus `ordCol`, the
+    * batch order) land as one fragment holding the first row of each
+    * key by `ordCol`. A read keeps a key's live row over the fragment's,
+    * so nothing is read here.
+    */
+  def insertByKey(name: String, rows: DataFrame, ordCol: String): Unit =
+    commitFragment(name, Catalog.Insert, rows, Some(ordCol))
+
+  /** Upsert by primary key, in O(batch): one fragment holding the last
+    * row of each key of `rows` by `ordCol`, which replaces the key's
+    * row on read.
+    */
+  def upsertByKey(name: String, rows: DataFrame, ordCol: String): Unit =
+    commitFragment(name, Catalog.Upsert, rows, Some(ordCol))
+
+  /** DELETE by primary key, in O(keys): one fragment of tombstones for
+    * the distinct keys of `keys`, which holds the key columns. A key
+    * with a null column matches no row and is left out.
+    */
+  def deleteByKey(name: String, keys: DataFrame): Unit =
+    commitFragment(name, Catalog.Delete, keys, None)
+
+  /** The one fragment commit, under the table's lock. The batch is cast
+    * to the table's column types and deduplicated by key in ONE
+    * partition (keep-first for an insert, keep-last for an upsert), so
+    * the dedup needs no shuffle and the fragment is one file; its rows
+    * carry the op, the commit order (the fragment's position in the
+    * manifest, base being 0) and their bucket. The first key mutation
+    * of a registered but unmigrated bucket layout migrates the table
+    * into it, as [[rewrite]] does; the commit that leaves more than
+    * [[Catalog.MaxFragments]] fragments folds them.
+    */
+  private def commitFragment(name: String, op: String, rows: DataFrame,
+      ordCol: Option[String]): Unit = locked(name) {
+    require(exists(name), s"table $name does not exist")
+    val pks = primaryKey(name)
+    require(pks.nonEmpty, s"key mutations of $name require a registered primary key")
+    val missing = pks.filterNot(rows.columns.contains)
+    require(missing.isEmpty,
+      s"CSV data must contain all primary key columns; missing: ${missing.mkString(", ")}")
+    val n = bucketCount(name)
+    if (n.isDefined && bucketManifest(name).isEmpty)
+      commitBuckets(name, read(name), prev = Map.empty, touched = Nil)
+    val m = currentManifest(name)
+    val schema = StructType.fromDDL(m.schemaDDL)
+    val cols = schema.map(f =>
+      (if (op != Catalog.Delete || pks.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name))
+    if (op != Catalog.Delete) {
+      val got = rows.columns.toSet -- ordCol
+      require(got == schema.fieldNames.toSet,
+        s"batch columns [${got.toSeq.sorted.mkString(", ")}] do not match table " +
+          s"$name [${schema.fieldNames.mkString(", ")}]")
+    }
+    val ord = col("__ord")
+    val batch = rows.coalesce(1)
+      .select(cols :+ ordCol.map(col).getOrElse(lit(0L)).as("__ord"): _*)
+      .filter(if (op == Catalog.Delete) !Catalog.anyNull(pks) else lit(true))
+      .withColumn("__rn", row_number().over(Window.partitionBy(pks.map(col): _*)
+        .orderBy(if (op == Catalog.Upsert) ord.desc else ord.asc)))
+      .filter(col("__rn") === 1).drop("__rn", "__ord")
+    if (op != Catalog.Delete) validateConstraints(name, batch)
+    val bucket = if (m.layout == Catalog.Buckets) bucketOf(pks, n.get) else lit(0)
+    val version = newVersionName()
+    batch.select(col("*"), lit(op).as(Catalog.OpCol),
+        lit(m.fragments.size + 1).as(Catalog.SeqCol), bucket.as(Catalog.BucketCol))
+      .write.mode("overwrite").parquet(new Path(tableDir(name), version).toString)
+    val fragments = m.fragments :+ version
+    commitManifest(name, version, m.schemaDDL, m.refs, m.layout, fragments)
+    if (fragments.size > Catalog.MaxFragments) fold(name)
+  }
+
+  /** Merge the current fragments into new bases, in one commit: a bucket
+    * table rewrites only the buckets its fragments touch (found by one
+    * job over the fragments), any other table is rewritten whole.
+    * Returns the rewritten bucket ids (0 for a table with no bucket
+    * layout); a table without fragments is left as it is.
+    */
+  def fold(name: String): Seq[Int] = locked(name) {
+    val m = currentManifest(name)
+    if (m.fragments.isEmpty) Nil
+    else if (m.layout == Catalog.Buckets) {
+      val touched = fragmentScan(name, m).select(col(Catalog.BucketCol))
+        .as[Int](Encoders.scalaInt).mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+        .collect().distinct.sorted.toSeq
+      commitBuckets(name, readBuckets(name, touched), m.refs, touched)
+      touched
+    } else {
+      commit(name, read(name), primaryKey(name))
+      Seq(0)
     }
   }
 
@@ -778,20 +906,74 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       spark.read.schema(StructType.fromDDL(schemaDDL))
         .parquet(refs.sorted.map(r => new Path(tableDir(name), r).toString): _*)
 
-  /** Every row of a version: its refs, read under its schema. A version
-    * with no refs holds no rows, and its own dir is read in their place
-    * (an empty file or none), so a table read is always a file scan.
+  /** Every row of a version (those `keys` admits): its refs, read under
+    * its schema and resolved against its fragments. A version with
+    * neither holds no rows, and its own dir is read in their place (an
+    * empty file or none), so a table read is always a file scan.
     */
-  private def readAt(name: String, dir: Path, m: Manifest): DataFrame =
-    readRefs(name, if (m.refs.isEmpty) Seq(dir.getName) else m.refs.values.toSeq,
-      m.schemaDDL)
+  private def readAt(name: String, dir: Path, m: Manifest,
+      keys: Option[Column] = None): DataFrame =
+    readResolved(name, m,
+      if (m.refs.isEmpty && m.fragments.isEmpty) Seq(dir.getName) else m.refs.values.toSeq,
+      keys = keys)
+
+  /** The rows of a version: the base `refs`, resolved against the
+    * version's fragment rows that `fragRows` admits. `keys` filters
+    * both sides first, which is exact since resolution is per key. A
+    * version with no fragments is a plain scan of its base.
+    */
+  private def readResolved(name: String, m: Manifest, refs: Seq[String],
+      fragRows: Option[Column] = None, keys: Option[Column] = None): DataFrame = {
+    def keep(df: DataFrame, c: Option[Column]) = c.fold(df)(df.filter)
+    val base = keep(readRefs(name, refs, m.schemaDDL), keys)
+    if (m.fragments.isEmpty) base
+    else resolve(base, keep(keep(fragmentScan(name, m), fragRows), keys),
+      StructType.fromDDL(m.schemaDDL), primaryKey(name))
+  }
+
+  /** Every row of a version's fragments, under the table's columns plus
+    * the op, commit order and bucket columns.
+    */
+  private def fragmentScan(name: String, m: Manifest): DataFrame =
+    spark.read.schema(StructType(StructType.fromDDL(m.schemaDDL).fields ++ Seq(
+        StructField(Catalog.OpCol, StringType), StructField(Catalog.SeqCol, IntegerType),
+        StructField(Catalog.BucketCol, IntegerType))))
+      .parquet(m.fragments.map(f => new Path(tableDir(name), f).toString): _*)
+
+  /** Key resolution (see the class doc), one shuffle by key: per key, the
+    * newest upsert or tombstone (base rows are upserts at order 0) cuts
+    * the history; an upsert there wins, else the first insert after it.
+    * A key with a null column is resolved within its own record.
+    */
+  private def resolve(base: DataFrame, frags: DataFrame, schema: StructType,
+      pks: Seq[String]): DataFrame = {
+    require(pks.nonEmpty, "a table holding fragments needs its primary key")
+    val cols = schema.fieldNames.toSeq.map(col)
+    val (op, seq) = (col(Catalog.OpCol), col(Catalog.SeqCol))
+    val w = Window.partitionBy(pks.map(col) :+ when(Catalog.anyNull(pks), seq): _*)
+    val cut = max(when(op =!= Catalog.Insert,
+      struct(seq.as("seq"), (op === Catalog.Upsert).as("up")))).over(w)
+    val cutSeq = coalesce(col("__cut.seq"), lit(-1))
+    base.select(cols :+ lit(Catalog.Upsert).as(Catalog.OpCol) :+ lit(0).as(Catalog.SeqCol): _*)
+      .unionByName(frags.select(cols :+ op :+ seq: _*))
+      .withColumn("__cut", cut)
+      .withColumn("__first", min(when(op === Catalog.Insert && seq > cutSeq, seq)).over(w))
+      .filter(when(coalesce(col("__cut.up"), lit(false)), op === Catalog.Upsert && seq === cutSeq)
+        .otherwise(op === Catalog.Insert && seq === col("__first")))
+      .select(cols: _*)
+  }
 
   /** A version's manifest: `refs` maps a ref number (a bucket id in a
     * bucket table) to a data directory under the table dir, `schemaDDL`
-    * is the schema every read of the version returns, and `layout` says
-    * what the refs are (`flat`, `partitioned` or `buckets`).
+    * is the schema every read of the version returns, `layout` says
+    * what the refs are (`flat`, `partitioned` or `buckets`), and
+    * `fragments` lists the version's fragment dirs in commit order.
     */
-  private case class Manifest(refs: Map[Int, String], schemaDDL: String, layout: String)
+  private case class Manifest(refs: Map[Int, String], schemaDDL: String, layout: String,
+      fragments: Seq[String]) {
+    /** Every data dir the version reads. */
+    def dirs: Set[String] = refs.values.map(_.split("/").head).toSet ++ fragments
+  }
 
   private def manifestFile(versionDir: Path) = new Path(versionDir, "_manifest.json")
 
@@ -804,11 +986,14 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
         s"table $name: version ${versionDir.getName} has no _manifest.json — " +
           "a directory without one is not a committed version"))
     val node = mapper.readTree(txt)
-    val b = node.get("buckets")
+    def field(f: String) = Option(node.get(f)).getOrElse(throw new IllegalStateException(
+      s"table $name: the _manifest.json of version ${versionDir.getName} has no $f"))
+    val b = field("buckets")
     Manifest(
       b.fieldNames.asScala.map(k => k.toInt -> b.get(k).asText()).toMap,
-      node.get("schemaDDL").asText(),
-      node.get("layout").asText())
+      field("schemaDDL").asText(),
+      field("layout").asText(),
+      field("fragments").elements.asScala.map(_.asText()).toSeq)
   }
 
   private def commitBuckets(name: String, df: DataFrame,
@@ -833,21 +1018,23 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * manifest lands in it, then the pointer flips to it.
     */
   private def commitManifest(name: String, version: String, schemaDDL: String,
-      refs: Map[Int, String], layout: String = Catalog.Flat): Unit = {
+      refs: Map[Int, String], layout: String = Catalog.Flat,
+      fragments: Seq[String] = Nil): Unit = {
     StagedSwap.writeAtomic(spark,
       manifestFile(new Path(tableDir(name), version)).toString,
       mapper.writeValueAsString(Map(
         "schemaDDL" -> schemaDDL,
         "layout" -> layout,
-        "buckets" -> refs.map { case (k, v) => k.toString -> v })))
+        "buckets" -> refs.map { case (k, v) => k.toString -> v },
+        "fragments" -> fragments)))
     StagedSwap.writeAtomic(spark, pointerFile(name).toString, version)
     if (!fs.exists(metaFile(name))) writeMeta(name, primaryKey(name))
     pruneUnreferenced(name)
   }
 
   /** Version GC. Deletes version directories that are neither the
-    * `_current` pointer target nor reachable from any live bucket-
-    * manifest ref (untouched buckets keep referencing the version that
+    * `_current` pointer target nor reachable from any live manifest ref
+    * or fragment (untouched buckets keep referencing the version that
     * last rewrote them — those must survive any vacuum, so liveness is
     * ref-counted from the manifest, never inferred from age).
     *
@@ -864,8 +1051,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     require(keepLast >= 0, "keepLast must be >= 0")
     if (!exists(name)) return Nil
     val cur = currentVersionDir(name)
-    val referenced =
-      manifestAt(name, cur).refs.values.map(_.split("/").head).toSet + cur.getName
+    val referenced = manifestAt(name, cur).dirs + cur.getName
     val now = System.currentTimeMillis()
     val expendable = fs.listStatus(tableDir(name)).toSeq
       .filter(_.isDirectory).map(_.getPath)
@@ -903,7 +1089,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       case Some(pks) => (0 until pks.size()).map(i => pks.get(i).asText())
     }
 
-  private def readMetaNode(name: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+  private def readMetaNode(name: String): Option[JsonNode] =
     StagedSwap.readSmallFile(spark, metaFile(name).toString).map(mapper.readTree)
 
   def registerPrimaryKey(name: String, pks: Seq[String]): Unit =
@@ -916,22 +1102,28 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
       .filter(exists)
 
   /** Persist table metadata, preserving a previously registered bucket
-    * layout unless a new one is given.
+    * layout unless a new one is given. The file is read once and
+    * written only when its content changes.
     */
   private def writeMeta(name: String, pks: Seq[String],
       buckets: Option[Int] = None,
       constraintsOverride: Option[Map[String, String]] = None): Unit = {
-    val bc = buckets.orElse(bucketCount(name))
-    val cs = constraintsOverride.getOrElse(constraints(name))
+    val meta = readMetaNode(name)
+    val bc = buckets.orElse(bucketCountOf(meta))
+    val cs = constraintsOverride.getOrElse(constraintsOf(meta))
     val m: Map[String, Any] = Map("primaryKey" -> pks) ++
       bc.map(n => "bucketCount" -> n) ++
       (if (cs.nonEmpty) Map("constraints" -> cs) else Map.empty)
-    StagedSwap.writeAtomic(spark, metaFile(name).toString, mapper.writeValueAsString(m))
+    val json = mapper.writeValueAsString(m)
+    if (!meta.contains(mapper.readTree(json)))
+      StagedSwap.writeAtomic(spark, metaFile(name).toString, json)
   }
 
   /** Registered CHECK constraints: label → boolean SQL expression. */
-  def constraints(name: String): Map[String, String] =
-    readMetaNode(name).flatMap(n => Option(n.get("constraints"))) match {
+  def constraints(name: String): Map[String, String] = constraintsOf(readMetaNode(name))
+
+  private def constraintsOf(meta: Option[JsonNode]): Map[String, String] =
+    meta.flatMap(n => Option(n.get("constraints"))) match {
       case None => Map.empty
       case Some(c) =>
         val it = c.fields()
@@ -1016,6 +1208,25 @@ object Catalog {
   private val Flat = "flat"
   private val Partitioned = "partitioned"
   private val Buckets = "buckets"
+
+  /** Fragments a table holds before the commit that adds one more folds
+    * them. Spark lists more than 32 paths of one read with a distributed
+    * job (`spark.sql.sources.parallelPartitionDiscovery.threshold`), so
+    * 16 keeps a whole read of a 16-bucket table at 32 paths.
+    */
+  val MaxFragments = 16
+
+  // The ops of fragment rows, and the helper columns a fragment stores
+  // beside the table's: the op, the commit order and the bucket id.
+  private val Insert = "I"
+  private val Upsert = "U"
+  private val Delete = "D"
+  private val OpCol = "__op"
+  private val SeqCol = "__seq"
+  private val BucketCol = "__b"
+
+  /** True when a key column is null: such a key matches no other. */
+  private def anyNull(pks: Seq[String]): Column = pks.map(col(_).isNull).reduce(_ || _)
 
   /** What a caller's own read of a log table saw of the rows a
     * [[Catalog.rewriteLog]] changes, so that the rewrite finds their

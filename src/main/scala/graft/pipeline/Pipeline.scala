@@ -50,8 +50,10 @@ final class Pipeline(
   // A control table is a log of immutable refs: an insert appends one, a
   // status update rewrites only the refs holding its rows. Past this many
   // refs a commit folds the log back into one, so reads stay one scan of
-  // a bounded number of dirs.
-  private[pipeline] val MaxControlRefs = 64
+  // a bounded number of dirs. Spark lists more than 32 paths of one read
+  // with a distributed job (spark.sql.sources.parallelPartitionDiscovery
+  // .threshold), so the bound keeps every control read at 32 paths.
+  private[pipeline] val MaxControlRefs = 32
 
   private def nowIso(): String = Instant.now().toString
 
@@ -322,7 +324,13 @@ final class Pipeline(
     spark.read.option("header", "true").schema(schema).csv(path.toString)
   }
 
-  /** O17 dispatch (+O9 DDL for non-delete) — process-pipeline.py:317-364. */
+  /** O17 dispatch (+O9 DDL for non-delete) — process-pipeline.py:317-364.
+    * On a table with a registered primary key an insert or update
+    * commits the file's rows as one key-resolved fragment
+    * (Catalog.insertByKey / upsertByKey) and reads no table data; a
+    * table without one takes an insert as a union (Catalog.rewrite) and
+    * no update. A delete only stages its keys in `delete_control`.
+    */
   private def applyOperation(operation: String, bucket: String,
       objectPath: String, tableName: String, eventId: String,
       approvalTs: String): Unit = {
@@ -335,17 +343,15 @@ final class Pipeline(
       catalog.createIfAbsent(tableName, catalog.allStringSchema(ordered))
     val pks = catalog.primaryKey(tableName)
     operation match {
+      case Operation.Insert if pks.nonEmpty => catalog.insertByKey(tableName, withOrd, "__ord")
+      case Operation.Update if pks.nonEmpty => catalog.upsertByKey(tableName, withOrd, "__ord")
       case Operation.Insert =>
-        catalog.rewrite(tableName, bucketsOf(withOrd, pks, _)) { current =>
-          MutationOps.insertIgnoreDups(
-            current, withOrd.select((ordered :+ "__ord").map(col): _*),
-            pks, col("__ord")).select(ordered.map(col): _*)
-        }
-      case Operation.Update =>
-        catalog.rewrite(tableName, bucketsOf(withOrd, pks, _)) { current =>
-          MutationOps.upsertByPk(current, withOrd, pks, col("__ord"))
+        catalog.rewrite(tableName, _ => Nil) { current =>
+          MutationOps.insertIgnoreDups(current, withOrd, Nil, col("__ord"))
             .select(ordered.map(col): _*)
         }
+      case Operation.Update =>
+        throw new IllegalArgumentException("upsert requires a primary key")
       case Operation.Delete =>
         val base = PathOps.maxQueryId(catalog.read(DeleteControlTable))
         val staged = MutationOps.stageDeletes(
@@ -358,20 +364,14 @@ final class Pipeline(
     }
   }
 
-  /** Distinct buckets of `rows`' keys in one job with no shuffle: each
-    * partition dedups its own bucket ids and the driver merges them.
-    */
-  private def bucketsOf(rows: DataFrame, pks: Seq[String], n: Int): Seq[Int] = {
-    import spark.implicits._
-    rows.select(catalog.bucketOf(pks, n)).as[Int]
-      .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
-  }
-
   // ---------------------------------------------------------------- E4
 
   /** delete-control.py:38-101 — execute staged deletes grouped by table,
     * continue on per-table error, stamp ExecutedDeleteTimestamp.
-    * Returns the set of executed QueryIds.
+    * Returns the set of executed QueryIds. A table with a registered
+    * primary key takes its keys as one fragment of tombstones
+    * (Catalog.deleteByKey) and none of its files is read; a table
+    * without one is rewritten whole, keyed by the staged columns.
     */
   def executePendingDeletes(): Seq[Long] = {
     ensureControlTables()
@@ -384,21 +384,21 @@ final class Pipeline(
     val executed = Seq.newBuilder[Long]
     pending.groupBy(_.getString(1)).foreach { case (table, rows) =>
       try {
-        val pks = catalog.primaryKey(table) match {
-          case Nil => rows.head.getMap[String, String](2).keys.toSeq.sorted
-          case p => p
-        }
+        val registered = catalog.primaryKey(table)
+        val pks =
+          if (registered.nonEmpty) registered
+          else rows.head.getMap[String, String](2).keys.toSeq.sorted
         val keySchema = StructType(pks.map(StructField(_, StringType)))
         val keyRows = rows.toSeq.map { r =>
           val m = r.getMap[String, String](2)
           pks.map(p => m.getOrElse(p, null))
         }
-        // a local relation: the planner knows its size and broadcasts
-        // the keys into the anti-join instead of shuffling the buckets
+        // a local relation: the planner knows its size, and an unkeyed
+        // table's anti-join broadcasts the keys instead of shuffling it
         val keys = spark.createDataFrame(keyRows.map(Row.fromSeq).asJava, keySchema)
         if (catalog.exists(table)) {
-          catalog.rewrite(table, _ => catalog.bucketsOfKeys(table, keyRows))(current =>
-            MutationOps.deleteByPk(current, keys, pks))
+          if (registered.nonEmpty) catalog.deleteByKey(table, keys)
+          else catalog.rewrite(table, _ => Nil)(MutationOps.deleteByPk(_, keys, pks))
           executed ++= rows.map(_.getLong(0))
         } else {
           // missing target = per-table error path: leave ExecutedFlag

@@ -16,7 +16,7 @@ import graft.sources.bus.BusLog
   *
   * Catalog: data dir + manifest materialize first, then the one-line
   * `_current` pointer flips (Catalog.scala commitManifest, the tail of
-  * every commit). BusWrite:
+  * every commit, a key mutation's fragment commit included). BusWrite:
   * task writers stage under `.staging/`, the driver renames staged
   * files into live segments, streaming commits then append the epoch
   * ledger (BusWrite.scala commit protocol).
@@ -35,7 +35,7 @@ class CrashFaultSpec extends SparkTestBase {
     val dir = Paths.get(root, "log", orphan)
     Seq(99L).toDF("id").write.mode("overwrite").parquet(dir.toString)
     val manifest =
-      s"""{"schemaDDL":"id BIGINT","buckets":{"0":"$orphan"}}"""
+      s"""{"schemaDDL":"id BIGINT","layout":"flat","buckets":{"0":"$orphan"},"fragments":[]}"""
     Files.writeString(dir.resolve("_manifest.json"), manifest)
     // pointer still names the good version: readers never see row 99
     assert(cat.read("log").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
@@ -90,13 +90,70 @@ class CrashFaultSpec extends SparkTestBase {
     val dir = Paths.get(root, "t", orphan)
     Seq(("x", 9L)).toDF("k", "v").write.mode("overwrite").parquet(dir.toString)
     Files.writeString(dir.resolve("_manifest.json"),
-      s"""{"schemaDDL":"k STRING,v BIGINT","layout":"flat","buckets":{"0":"$orphan"}}""")
+      s"""{"schemaDDL":"k STRING,v BIGINT","layout":"flat","buckets":{"0":"$orphan"},"fragments":[]}""")
     assert(cat.currentVersion("t") == live)
     assert(cat.read("t").as[(String, Long)].collect().toSeq == Seq(("a", 1L)))
     // the next commit lands and its vacuum reclaims the orphan
     cat.overwrite("t", Seq(("a", 2L)).toDF("k", "v"))
     assert(cat.read("t").as[(String, Long)].collect().toSeq == Seq(("a", 2L)))
     assert(!Files.exists(dir) && cat.versions("t") == Seq(cat.currentVersion("t")))
+  }
+
+  /** A keyed 2-bucket table holding one fragment and the rows it reads,
+    * plus a crashed key commit's fragment dir (an upsert of k1 and k9,
+    * with `_SUCCESS`) staged beside it.
+    */
+  private def crashedFragment(root: String): (Catalog, Set[(String, String)], String) = {
+    val cat = new Catalog(spark, root)
+    cat.createIfAbsent("t", cat.allStringSchema(Seq("k", "v")), Seq("k"))
+    cat.registerBucketLayout("t", 2)
+    cat.overwriteAllBuckets("t", Seq(("k1", "a"), ("k2", "b")).toDF("k", "v"))
+    cat.upsertByKey("t", Seq(("k2", "B", 0L)).toDF("k", "v", "ord"), "ord")
+    val live = Set(("k1", "a"), ("k2", "B"))
+    // newer than every live version, yet old enough for vacuum by the
+    // next commit
+    val orphan = s"v${System.currentTimeMillis() + 1}_deadf00d"
+    Seq(("k1", "x", "U", 2, 0), ("k9", "y", "U", 2, 1))
+      .toDF("k", "v", "__op", "__seq", "__b")
+      .write.mode("overwrite").parquet(Paths.get(root, "t", orphan).toString)
+    assert(Files.exists(Paths.get(root, "t", orphan, "_SUCCESS")))
+    (cat, live, orphan)
+  }
+
+  private def rows(cat: Catalog): Set[(String, String)] =
+    cat.read("t").as[(String, String)].collect().toSet
+
+  test("key commit crash after its fragment dir, before its manifest: not a version") {
+    val root = tmpDir("crash_frag")
+    val (cat, live, orphan) = crashedFragment(root)
+    val current = cat.currentVersion("t")
+    assert(!cat.versions("t").contains(orphan) && cat.fragments("t").size == 1)
+    assert(rows(cat) == live)
+    Files.delete(Paths.get(root, "t", "_current"))
+    assert(cat.currentVersion("t") == current && rows(cat) == live)
+    // the next key commit lands on the live state and its vacuum
+    // reclaims the orphan
+    cat.upsertByKey("t", Seq(("k3", "c", 0L)).toDF("k", "v", "ord"), "ord")
+    assert(rows(cat) == live + (("k3", "c")) && cat.fragments("t").size == 2)
+    assert(!Files.exists(Paths.get(root, "t", orphan)))
+  }
+
+  test("key commit crash after its manifest, before the pointer flip: last version stays live") {
+    val root = tmpDir("crash_fragptr")
+    val (cat, live, orphan) = crashedFragment(root)
+    val current = cat.currentVersion("t")
+    val refs = cat.bucketRefs("t").map { case (b, d) => s""""$b":"$d"""" }.mkString(",")
+    val frags = (cat.fragments("t") :+ orphan).map(f => s""""$f"""").mkString(",")
+    Files.writeString(Paths.get(root, "t", orphan, "_manifest.json"),
+      s"""{"schemaDDL":"k STRING,v STRING","layout":"buckets","buckets":{$refs},"fragments":[$frags]}""")
+    assert(cat.versions("t").last == orphan && cat.currentVersion("t") == current)
+    assert(rows(cat) == live && cat.fragments("t").size == 1)
+    assert(cat.lookupByPk("t", Seq("k9")).isEmpty)
+    // the next key commit builds on the pointer's manifest, not the
+    // orphan's, and its vacuum reclaims the orphan
+    cat.deleteByKey("t", Seq("k1").toDF("k"))
+    assert(rows(cat) == Set(("k2", "B")) && cat.fragments("t").size == 2)
+    assert(!Files.exists(Paths.get(root, "t", orphan)))
   }
 
   test("half-staged pointer tmp files are inert; a missing pointer falls back") {

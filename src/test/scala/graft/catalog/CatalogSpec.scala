@@ -819,6 +819,34 @@ class CatalogSpec extends SparkTestBase {
     assert(cat.compact("t") == Nil)
   }
 
+  test("the key commit that leaves more than MaxFragments fragments folds them") {
+    val cat = new Catalog(spark, tmpDir("catfold"))
+    val n = 16
+    cat.createIfAbsent("t", cat.allStringSchema(Seq("id", "v")), Seq("id"))
+    cat.registerBucketLayout("t", n)
+    val base = (1 to 64).map(i => i.toString -> "v").toMap
+    cat.overwriteAllBuckets("t", base.toSeq.toDF("id", "v"))
+    val bases = cat.bucketRefs("t")
+    def upsert(i: Int): Unit =
+      cat.upsertByKey("t", Seq((i.toString, s"u$i", 0L)).toDF("id", "v", "ord"), "ord")
+    (1 to Catalog.MaxFragments).foreach(upsert)
+    assert(cat.fragments("t").size == Catalog.MaxFragments && cat.bucketRefs("t") == bases)
+    // at the bound a whole read names at most 32 paths, so no relation
+    // lists its paths with a distributed job
+    val (df, jobs) = countJobs(cat.read("t"))
+    val paths = df.queryExecution.optimizedPlan.collect {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+          r: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) =>
+        r.location.rootPaths.size
+    }
+    assert(jobs == 0 && paths.sum <= 32, s"$jobs jobs, paths $paths")
+    val want = base ++ (1 to Catalog.MaxFragments + 1).map(i => i.toString -> s"u$i")
+    upsert(Catalog.MaxFragments + 1)
+    assert(cat.fragments("t").isEmpty && cat.bucketRefs("t") != bases)
+    assert(cat.read("t").as[(String, String)].collect().toMap == want)
+    assert(cat.read("t").count() == want.size)
+  }
+
   test("time travel to flat and partitioned versions is pinned: no job, same rows") {
     val cat = new Catalog(spark, tmpDir("catttpin"), graceVersions = 8)
     val rows = (1 to 30).map(i => (i.toLong, s"v$i", i % 3))

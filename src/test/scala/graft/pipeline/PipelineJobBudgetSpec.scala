@@ -2,6 +2,10 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkTestBase
 import graft.catalog.Catalog
 import graft.model._
@@ -65,10 +69,50 @@ class PipelineJobBudgetSpec extends SparkTestBase {
 
     assert(registers == Set(2), s"jobs per registration: $registers")
     assert(jobs.toMap == Map(
-      "insert plain" -> 5, "update plain" -> 6, "delete plain" -> 7,
-      "delete job plain" -> 5,
-      "insert bucketed" -> 6, "update bucketed" -> 7, "delete bucketed" -> 7,
-      "delete job bucketed" -> 5,
+      "insert plain" -> 3, "update plain" -> 3, "delete plain" -> 7,
+      "delete job plain" -> 3,
+      "insert bucketed" -> 3, "update bucketed" -> 3, "delete bucketed" -> 7,
+      "delete job bucketed" -> 3,
       "reject" -> 2), s"jobs per call: $jobs")
+  }
+
+  test("an update approval and the delete job scan no file of their target table") {
+    import spark.implicits._
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val p = new Pipeline(spark, new Catalog(spark, root), new InMemoryNotifier, landing)
+    land(landing, "insert/t.csv", "id,v\n" + (1 to 40).map(k => s"$k,v$k\n").mkString)
+    p.registerArrival(FileEvent("b1", "insert/t.csv", "e1"))
+    p.processApproval(ApprovalEvent("e1", "approve", "insert/t.csv", "t", "insert", "b1",
+      Some(1L), None, Some("2026-01-02T03:04:05Z"), None))
+    p.catalog.registerPrimaryKey("t", Seq("id"))
+    p.catalog.registerBucketLayout("t", 4)
+    p.catalog.overwriteAllBuckets("t", p.catalog.read("t"))
+    // the root paths of every file scan the session plans meanwhile
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        collect(qe.executedPlan) { case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.map(_.toString) }.flatten.foreach(scanned.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      land(landing, "update/t.csv", "id,v\n3,c\n41,d\n3,e\n")
+      p.registerArrival(FileEvent("b1", "update/t.csv", "e2"))
+      p.processApproval(ApprovalEvent("e2", "approve", "update/t.csv", "t", "update", "b1",
+        Some(2L), None, Some("2026-01-02T03:04:05Z"), None))
+      land(landing, "delete/t.csv", "id\n5\n6\n")
+      p.registerArrival(FileEvent("b1", "delete/t.csv", "e3"))
+      p.processApproval(ApprovalEvent("e3", "approve", "delete/t.csv", "t", "delete", "b1",
+        Some(3L), None, Some("2026-01-02T03:04:05Z"), None))
+      assert(p.executePendingDeletes().size == 2)
+      drainListenerBus()
+    } finally spark.listenerManager.unregister(listener)
+    val paths = scanned.toArray.toSeq.map(_.toString)
+    // the listener sees the control tables' scans, and none of t's
+    assert(paths.exists(_.contains(s"/${p.ControlTable}/")), s"scans: $paths")
+    assert(!paths.exists(_.contains(s"$root/t/")), s"the target table was scanned: $paths")
+    assert(p.catalog.read("t").as[(String, String)].collect().toMap ==
+      ((1 to 40).map(k => s"$k" -> s"v$k").toMap - "5" - "6" + ("3" -> "e") + ("41" -> "d")))
   }
 }

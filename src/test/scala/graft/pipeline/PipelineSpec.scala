@@ -288,32 +288,38 @@ class PipelineSpec extends SparkTestBase {
     assert(p.catalog.hasBucketManifest("customers"))
     val refs0 = p.catalog.bucketRefs("customers")
 
-    // second mutation touches ONLY the bucket of id 9
+    // second mutation rewrites NO bucket: it lands as one fragment
     land(landing, "b1", "update/customers.csv", "customer_id,name\n9,NINE\n")
     p.registerArrival(FileEvent("b1", "update/customers.csv", "bv3"))
     p.processApproval(approval("bv3", "approve", "update"))
     val refs1 = p.catalog.bucketRefs("customers")
-    val b9 = Seq("9").toDF("customer_id")
-      .select(p.catalog.bucketOf(Seq("customer_id"), n).as("b")).head().getInt(0)
-    assert(refs1(b9) != refs0(b9))
-    refs0.keys.filter(_ != b9).foreach(k => assert(refs1(k) == refs0(k),
-      s"bucket $k rewritten by an update that never touched it"))
+    assert(refs1 == refs0, "a bucket was rewritten by a key mutation")
+    assert(p.catalog.fragments("customers").size == 2)
     assert(p.catalog.read("customers").count() == 40)
     assert(p.catalog.read("customers").filter($"customer_id" === "9")
       .select("name").head().getString(0) == "NINE")
     assert(p.catalog.read("customers").filter($"customer_id" === "5")
       .select("name").head().getString(0) == "FIVE")
 
-    // staged deletes execute bucket-scoped too
+    // staged deletes land as a fragment of tombstones, rewriting no bucket
     land(landing, "b1", "delete/customers.csv", "customer_id\n9\n")
     p.registerArrival(FileEvent("b1", "delete/customers.csv", "bv4"))
     p.processApproval(approval("bv4", "approve", "delete"))
     val refsBeforeDel = p.catalog.bucketRefs("customers")
     assert(p.executePendingDeletes().nonEmpty)
-    val refsAfterDel = p.catalog.bucketRefs("customers")
-    refsBeforeDel.keys.filter(_ != b9).foreach(k =>
-      assert(refsAfterDel(k) == refsBeforeDel(k)))
+    assert(p.catalog.bucketRefs("customers") == refsBeforeDel)
+    assert(p.catalog.fragments("customers").size == 3)
     assert(p.catalog.read("customers").count() == 39)
+    // a fold rewrites only the buckets the fragments touched
+    val b = Seq("5", "9").toDF("customer_id")
+      .select(p.catalog.bucketOf(Seq("customer_id"), n)).as[Int].collect().toSet
+    assert(p.catalog.fold("customers").toSet == b)
+    val folded = p.catalog.bucketRefs("customers")
+    assert(p.catalog.fragments("customers").isEmpty)
+    refs0.keys.foreach(k => assert(folded.get(k) == refs0.get(k) ^ b(k), s"bucket $k"))
+    assert(p.catalog.read("customers").count() == 39)
+    assert(p.catalog.lookupByPk("customers", Seq("5")).select("name").as[String]
+      .collect().toSeq == Seq("FIVE"))
   }
 
   test("control-plane guard trips loudly past maxControlRows") {
@@ -358,6 +364,19 @@ class PipelineSpec extends SparkTestBase {
       val df = super.read(name)
       if (name == table) onRead()
       df
+    }
+  }
+
+  /** A Catalog that calls `onKeyCommit` when a key mutation of `table`
+    * reads its bucket count, which it does inside the table's commit
+    * lock: another writer committing while the caller's commit is open.
+    */
+  private class CommitHook(root: String, table: String)
+      extends Catalog(spark, root, graceVersions = 8) {
+    var onKeyCommit: () => Unit = () => ()
+    override def bucketCount(name: String): Option[Int] = {
+      if (name == table) onKeyCommit()
+      super.bucketCount(name)
     }
   }
 
@@ -450,6 +469,51 @@ class PipelineSpec extends SparkTestBase {
     failure.foreach(throw _)
     val ids = p.catalog.read("customers").as[(String, String)].collect().map(_._1).toSet
     assert(ids == Set("1", "2", "3"), s"rows after both commits: $ids")
+  }
+
+  test("lost update: a commit to a keyed table landed during an approval's key commit survives it") {
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val cat = new CommitHook(root, "customers")
+    val p = new Pipeline(spark, cat, new InMemoryNotifier, landing)
+    val other = new Pipeline(spark, new Catalog(spark, root, graceVersions = 8),
+      new InMemoryNotifier, landing)
+    def write(q: Pipeline, id: String, op: String, file: String, csv: String): Unit = {
+      land(landing, "b1", s"$op/$file", csv)
+      q.registerArrival(FileEvent("b1", s"$op/$file", id))
+      q.processApproval(approval(id, "approve", op, file))
+    }
+    write(p, "ins1", "insert", "customers.csv", "customer_id,name\n1,a\n")
+    p.catalog.registerPrimaryKey("customers", Seq("customer_id"))
+    // the second writer's insert arrives while the first's insert holds
+    // the lock: it waits, then commits on top (so key 2 keeps the first
+    // writer's row), and neither commit is lost
+    var failure: Option[Throwable] = None
+    val writer = new Thread(() =>
+      try write(other, "ins2", "insert", "more/customers.csv", "customer_id,name\n2,b\n4,d\n")
+      catch { case e: Throwable => failure = Some(e) })
+    cat.onKeyCommit = () => {
+      cat.onKeyCommit = () => ()
+      assert(Files.exists(Paths.get(root, "customers", "_commit.lock")))
+      writer.start()
+      writer.join(10000)
+    }
+    write(p, "ins3", "insert", "customers.csv", "customer_id,name\n3,c\n2,z\n")
+    writer.join()
+    failure.foreach(throw _)
+    assert(p.catalog.read("customers").as[(String, String)].collect().toSet ==
+      Set("1" -> "a", "2" -> "z", "3" -> "c", "4" -> "d"))
+    assert(statuses(p).values.forall(_ == (Status.Approved, true)))
+  }
+
+  test("a control lookup on a log of MaxControlRefs refs runs one job") {
+    val (p, _, _) = freshPipeline()
+    // the empty table createIfAbsent made starts the log with no refs,
+    // so registration k leaves k refs
+    (1 to p.MaxControlRefs).foreach(i =>
+      p.registerArrival(FileEvent("b1", s"insert/f$i.csv", s"ev$i")))
+    assert(p.catalog.bucketRefs(p.ControlTable).size == p.MaxControlRefs)
+    val (done, jobs) = countJobs(p.alreadyProcessed("ev1"))
+    assert(!done && jobs == 1, s"$jobs jobs")
   }
 
   test("registration + approval leave the history ref's dir as it is") {
