@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{coalesce, col, expr, hash, input_file_name, lit, max, min, pmod, row_number, shiftright, struct, sum, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType, StructField, StructType}
@@ -81,6 +83,12 @@ import graft.functions.StagedSwap
   * other commit leaves no fragment behind: a commit of the whole
   * contents (overwrite, append, compactLog) replaces them with the
   * base, and `rewrite`, `compact` and the log commits fold first.
+  *
+  * Log index: a log's refs are immutable once a manifest names them, so
+  * a Catalog keeps the rows of the log refs it has read or written on
+  * the driver, by ref dir, and answers point lookups of a small log
+  * ([[logViews]]) and driver-side log updates ([[rewriteLog]]) from them
+  * with no Spark job for a ref it already holds.
   */
 class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     val lockTimeoutMs: Long = 60000, val lockStaleMs: Long = 1800000) {
@@ -156,21 +164,6 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     readAt(name, dir, manifestAt(name, dir))
   }
 
-  private def partFiles(dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
-
-  /** A parquet file's footer, read on the driver. */
-  private def footer(file: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        file, spark.sparkContext.hadoopConfiguration))
-    try reader.getFooter finally reader.close()
-  }
-
-  /** Rows in a flat version dir, summed from its file footers (no job). */
-  private def rowCount(dir: Path): Long =
-    partFiles(dir).map(footer(_).getBlocks.asScala.map(_.getRowCount).sum).sum
-
   /** Committed versions of a table, oldest → newest (version names are
     * `v<epochMillis>_<uuid8>`, so name order is commit order). With a
     * `graceVersions` retention this is the time-travel window; with
@@ -225,12 +218,14 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     * else all-string from the CSV headers (process-pipeline.py:104-130).
     */
   def createIfAbsent(name: String, schema: StructType,
-      primaryKey: Seq[String] = Nil): Unit = locked(name) {
-    if (!exists(name))
-      commit(name, spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-        primaryKey, empty = true)
-  }
+      primaryKey: Seq[String] = Nil): Unit =
+    // a table once created is never dropped, so an existing one needs no lock
+    if (!exists(name)) locked(name) {
+      if (!exists(name))
+        commit(name, spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row], schema),
+          primaryKey, empty = true)
+    }
 
   def allStringSchema(headers: Seq[String]): StructType =
     StructType(headers.map(h => StructField(h, StringType)))
@@ -345,45 +340,143 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     else Some(m)
   }
 
-  /** UPDATE for a log table, in O(touched refs): under the commit lock,
-    * the refs holding rows that match `matching` are replaced by ONE new
-    * ref holding `f(their rows)`; every other ref is carried over as it
-    * is, so a status update to one event of a long log rewrites that
-    * event's ref, not the log. `f` sees every row of the replaced refs
-    * and must pass the rows it leaves alone through unchanged, keeping
-    * the table's columns; a result with no rows drops the ref. An
-    * overwritten table's ref 0 is a ref like any other.
-    *
-    * Finding the refs costs a job inside the lock. A caller whose own
-    * read of the table already found its rows passes what that read saw
-    * as `hint` (see [[Catalog.RefHint]]) and the rewrite runs only its
-    * write job. Either way the refs are resolved and read inside the
-    * lock, so a commit another writer landed after the caller's read is
-    * carried over, never lost.
+  /** [[appendLog]] of rows already on the driver, as one file. The new
+    * ref is seeded into the log index (see [[logViews]]), so no lookup of
+    * this Catalog reads it back. An empty batch commits nothing.
     */
-  def rewriteLog(name: String, matching: Column, hint: Option[Catalog.RefHint] = None)(
-      f: DataFrame => DataFrame): Unit = locked(name) {
+  def appendLogRows(name: String, rows: Seq[Row]): Unit = locked(name) {
+    val schemaDDL = logManifest(name).getOrElse(
+      throw new IllegalArgumentException(s"table $name does not exist")).schemaDDL
+    val schema = StructType.fromDDL(schemaDDL)
+    val batch = asRead(name, rows, schema)
+    if (batch.nonEmpty) {
+      appendLog(name, spark.createDataFrame(batch.asJava, schema).coalesce(1))
+      seed(name, currentVersion(name), schemaDDL, batch)
+    }
+  }
+
+  /** UPDATE for a log table, in O(touched refs), on the driver: under the
+    * commit lock, the refs holding rows that match `matching` are
+    * replaced by ONE new ref holding `f(their rows)`; every other ref is
+    * carried over as it is, so a status update to one event of a long log
+    * rewrites that event's ref, not the log. `f` sees every row of the
+    * replaced refs and must pass the rows it leaves alone through
+    * unchanged, as rows of the table's columns (a row that carries a
+    * schema, as the index's rows do, must carry the table's); a result
+    * with no rows drops the refs. An overwritten table's ref 0 is a ref like any other,
+    * and `matching` true for every row folds the log into one ref.
+    *
+    * The refs and their rows come from the log index (see [[logViews]]),
+    * resolved inside the lock: a ref another writer committed after the
+    * caller's lookup is read then, in one job, and carried over, never
+    * lost. The write is the rewrite's one other job, and the new ref is
+    * seeded into the index.
+    */
+  def rewriteLog(name: String, matching: Row => Boolean)(
+      f: Seq[Row] => Seq[Row]): Unit = locked(name) {
     val m = logManifest(name).getOrElse(
       throw new IllegalArgumentException(s"table $name does not exist"))
-    val touched = hint match {
-      case Some(h) => m.refs.values.filter(r => h.hits(r) || !h.scanned(r)).toSet
-      case None => readRefs(name, m.refs.values.toSeq, m.schemaDDL).filter(matching)
-        .select(input_file_name()).as[String](Encoders.STRING)
-        .mapPartitions(_.toSet.iterator)(Encoders.STRING)
-        .collect().map(Catalog.refOf).toSet
-    }
+    val touched = indexedRefs(name, m).filter(_._2.rows.exists(matching))
     if (touched.nonEmpty) {
-      val out = f(readRefs(name, touched.toSeq, m.schemaDDL))
-      require(sameColumns(StructType.fromDDL(m.schemaDDL), out.schema),
-        s"rewriteLog schema drift for $name: table is [${m.schemaDDL}], " +
-          s"rewrite is [${out.schema.toDDL}]")
+      val schema = StructType.fromDDL(m.schemaDDL)
+      val out = f(touched.flatMap(_._2.rows))
+      out.find(r => r.length != schema.length ||
+          (r.schema != null && !sameColumns(schema, r.schema))).foreach { r =>
+        throw new IllegalArgumentException(s"rewriteLog schema drift for $name: table " +
+          s"is [${m.schemaDDL}], a rewritten row is " +
+          Option(r.schema).fold(s"${r.length} fields")(t => s"[${t.toDDL}]"))
+      }
+      val rows = asRead(name, out, schema)
       val version = newVersionName()
-      val dataDir = new Path(tableDir(name), version)
-      out.write.mode("overwrite").parquet(dataDir.toString)
-      val kept = m.refs.filterNot { case (_, r) => touched(r) }
+      if (rows.nonEmpty) spark.createDataFrame(rows.asJava, schema).coalesce(1)
+        .write.mode("overwrite").parquet(new Path(tableDir(name), version).toString)
+      val gone = touched.map(_._1).toSet
+      val kept = m.refs.filterNot { case (_, r) => gone(r) }
       commitManifest(name, version, m.schemaDDL,
-        if (rowCount(dataDir) == 0) kept else kept + (nextRef(m.refs) -> version))
+        if (rows.isEmpty) kept else kept + (nextRef(m.refs) -> version))
+      if (rows.nonEmpty) seed(name, version, m.schemaDDL, rows)
     }
+  }
+
+  // ------------------------------------------------- log index
+  // A log ref is immutable once a manifest names it, so its rows, read
+  // into the driver once, never go stale: the index maps (table, ref
+  // dir) to the ref's rows under the schema they were read with, and to
+  // the views built from them. Guarded by its own monitor: lookups take
+  // it outside the commit lock, and a commit (which holds the instance
+  // monitor) takes it after that one.
+  private final class IndexedRef(val schemaDDL: String, val rows: IndexedSeq[Row]) {
+    val views = scala.collection.mutable.Map.empty[Catalog.LogView[_], Any]
+  }
+  private val logIndex = scala.collection.mutable.Map.empty[(String, String), IndexedRef]
+
+  /** `view` of each ref of log table `name` as of its current version,
+    * on the driver, in ref order: the point lookups of a control log (a
+    * version by file, a row by event id) without a Spark job. Each call
+    * resolves the current version as [[read]] does (the pointer, then
+    * the manifest), drops from the index the refs that version no longer
+    * names, and reads the refs the index lacks in ONE job: refs another
+    * Catalog or process committed. Refs this Catalog committed from
+    * driver rows ([[appendLogRows]], [[rewriteLog]]) are seeded when they
+    * commit, so a lookup of a log only this Catalog writes runs no job. A
+    * ref's view is built from its rows the first time it is asked for and
+    * kept beside them, so a lookup costs the log's refs, not its rows.
+    * The index holds every row of the logs looked up, so it is for
+    * control-scale logs, not data.
+    */
+  def logViews[V](name: String, view: Catalog.LogView[V]): Seq[V] = {
+    require(exists(name), s"table $name does not exist")
+    val refs = indexedRefs(name, manifestAt(name, currentVersionDir(name)))
+    logIndex.synchronized {
+      refs.map { case (_, r) =>
+        r.views.getOrElseUpdate(view, view.build(r.rows)).asInstanceOf[V] }
+    }
+  }
+
+  /** The refs of log version `m` with their rows, in ref order, from
+    * the log index (see [[logViews]]).
+    */
+  private def indexedRefs(name: String, m: Manifest): Seq[(String, IndexedRef)] =
+    logIndex.synchronized {
+      require(m.layout == Catalog.Flat && m.fragments.isEmpty,
+        s"$name is not a log: its version is ${m.layout} with ${m.fragments.size} fragments")
+      val refs = m.refs.toSeq.sortBy(_._1).map(_._2)
+      val live = refs.toSet
+      logIndex.filterInPlace { case ((t, r), e) =>
+        t != name || (live(r) && e.schemaDDL == m.schemaDDL) }
+      val missing = refs.filterNot(r => logIndex.contains(name -> r))
+      if (missing.nonEmpty) {
+        val schema = StructType.fromDDL(m.schemaDDL)
+        // one partition, so the collect is one job
+        val byRef = readRefs(name, missing, m.schemaDDL)
+          .select(col("*"), input_file_name()).coalesce(1).collect()
+          .groupBy(r => Catalog.refOf(r.getString(schema.length)))
+        missing.foreach(r => seed(name, r, m.schemaDDL,
+          byRef.getOrElse(r, Array.empty[Row]).toIndexedSeq.map(x =>
+            new GenericRowWithSchema(x.toSeq.init.toArray, schema): Row)))
+      }
+      refs.map(r => r -> logIndex(name -> r))
+    }
+
+  private def seed(name: String, ref: String, schemaDDL: String,
+      rows: IndexedSeq[Row]): Unit =
+    logIndex.synchronized { logIndex(name -> ref) = new IndexedRef(schemaDDL, rows) }
+
+  /** `rows` as a read of their parquet file returns them: through Spark's
+    * converters to the internal form and back, so a timestamp keeps
+    * microseconds and every value has the type a read gives it. A value
+    * of the wrong type for its column fails, naming table `name`.
+    */
+  private def asRead(name: String, rows: Seq[Row], schema: StructType): IndexedSeq[Row] = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    rows.iterator.map { r =>
+      val internal = try toInternal(r) catch {
+        case scala.util.control.NonFatal(e) => throw new IllegalArgumentException(
+          s"a row written to $name does not fit its columns [${schema.toDDL}]: $r", e)
+      }
+      toRow(internal).asInstanceOf[Row]
+    }.toIndexedSeq
   }
 
   /** appendLog with the batch range-clustered on `clusterCols`: each
@@ -900,7 +993,7 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
   private def readRefs(name: String, refs: Seq[String],
       schemaDDL: String): DataFrame =
     if (refs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType.fromDDL(schemaDDL))
     else
       spark.read.schema(StructType.fromDDL(schemaDDL))
@@ -1228,18 +1321,12 @@ object Catalog {
   /** True when a key column is null: such a key matches no other. */
   private def anyNull(pks: Seq[String]): Column = pks.map(col(_).isNull).reduce(_ || _)
 
-  /** What a caller's own read of a log table saw of the rows a
-    * [[Catalog.rewriteLog]] changes, so that the rewrite finds their
-    * refs without a job: `scannedFiles` are the files of that read
-    * (`DataFrame.inputFiles`), `hitFiles` the files its matching rows
-    * came from (`input_file_name()`). The rewrite takes every ref holding
-    * a hit file and every live ref the read did not scan, since one
-    * committed after the read may hold matching rows too.
+  /** A value derived from the rows of one log ref, such as a lookup map
+    * of a control log (see [[Catalog.logViews]]). A ref never changes, so
+    * its view is built once and kept with its rows; views are told apart
+    * by instance, so each is a stable value, built by `build`.
     */
-  final case class RefHint(scannedFiles: Seq[String], hitFiles: Seq[String]) {
-    private[catalog] val scanned: Set[String] = scannedFiles.map(refOf).toSet
-    private[catalog] val hits: Set[String] = hitFiles.map(refOf).toSet
-  }
+  final class LogView[V](private[catalog] val build: IndexedSeq[Row] => V)
 
   /** The ref (flat version dir) a data file of a log table lives in. */
   private def refOf(file: String): String = new Path(file).getParent.getName

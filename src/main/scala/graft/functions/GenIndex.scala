@@ -573,22 +573,28 @@ private[graft] object GenIndex {
     * writes sequentially leaves most cores idle through each job's
     * tail. FIFO scheduling backfills the second job's tasks into the
     * first's stragglers; on a cluster the same overlap fills the
-    * commit/tail phase of one write with the other's scan. Exceptions
-    * propagate (first failure wins; the other action still completes —
-    * a torn generation dir is reclaimed by vacuum like any crashed
-    * commit).
+    * commit/tail phase of one write with the other's scan.
+    *
+    * `b` runs on the caller's thread and `a` on a thread created here,
+    * which inherits the caller's Spark local properties (job group, job
+    * tags, scheduler pool) as they are now, so both jobs carry them; a
+    * pooled thread would carry those of whichever thread created it.
+    * Exceptions propagate (`a`'s first; the other action still
+    * completes — a torn generation dir is reclaimed by vacuum like any
+    * crashed commit).
     */
   def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    // await BOTH before propagating, so a failure in one never leaves
-    // the other's job racing a caller that already started cleanup
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get; rb.get
+    var failure: Option[Throwable] = None
+    val t = new Thread(() => try a catch { case e: Throwable => failure = Some(e) },
+      "graft-inParallel")
+    t.setDaemon(true)
+    t.start()
+    // join BEFORE propagating, so a failure in one never leaves the
+    // other's job racing a caller that already started cleanup
+    val rb = scala.util.Try(b)
+    t.join()
+    failure.foreach(throw _)
+    rb.get
   }
 
   /** Clear every prior index artifact at indexDir EXCEPT the writer

@@ -250,12 +250,4 @@ object TextFunctions {
     ColumnBridge.column(expressions.TokenMaxFreq(
       ColumnBridge.expression(tokens(c))))
   }
-
-  /** HOF reference formulation of maxTokenFreq (equivalence spec +
-    * documentation of the exact semantics): quadratic and re-splits
-    * the text once per distinct token (no CSE across lambdas).
-    */
-  def maxTokenFreqHof(c: Column): Column =
-    array_max(transform(array_distinct(tokens(c)),
-      d => size(filter(tokens(c), t => t === d))))
 }

@@ -23,16 +23,13 @@ object VectorFunctions {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Fused one-pass cosine (see expressions.CosineSimilarity); bit-
-    * identical to `cosineHof`, pinned by a spec.
+    * identical to `dot(a, b) / (norm(a) * norm(b))`, pinned by a spec.
     */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.expressions.CosineSimilarity(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** HOF reference formulation of cosine similarity. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Brute-force top-k cosine neighbors for each query vector: cross
     * join + rank window. Correct baseline; O(|queries|·|corpus|) — use
@@ -62,35 +59,19 @@ object VectorFunctions {
       .otherwise(lit(-1.0))
   }
 
-  /** Signed projection of a vector onto deterministic plane p. */
-  private def signedSum(vec: Column, p: Int): Column =
-    aggregate(
-      zip_with(vec, sequence(lit(0), size(vec) - 1),
-        (x, i) => x.cast("double") * planeSign(p, i)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Multi-table LSH signatures: one `planesPerTable`-bit bucket key per
     * table (table t uses planes t·planesPerTable … +planesPerTable-1).
     * A single wide signature has vanishing recall (p_match = p_bit^bits);
     * T independent narrow tables give 1-(1-p_bit^planes)^T. One-pass
-    * custom expression; `lshTableSignaturesHof` is the reference form.
+    * custom expression, pinned by a spec to the reference form: bit j of
+    * table t is set when the left-to-right double sum of
+    * vec[i]·planeSign(t·planesPerTable + j, i) is positive.
     */
   def lshTableSignatures(vec: Column, tables: Int, planesPerTable: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.expressions.LshPlaneSignatures(
       ColumnBridge.expression(vec), tables, planesPerTable))
   }
-
-  /** HOF reference formulation of lshTableSignatures (equivalence spec
-    * + documentation of the exact bit semantics the oracle mirrors).
-    */
-  def lshTableSignaturesHof(vec: Column, tables: Int, planesPerTable: Int): Column =
-    array((0 until tables).map { t =>
-      (0 until planesPerTable).map { j =>
-        when(signedSum(vec, t * planesPerTable + j) > 0, lit(1))
-          .otherwise(lit(0)) * lit(1 << j)
-      }.reduce(_ + _)
-    }: _*)
 
   /** IVF assignment: nearest (highest-cosine) centroid per vector,
     * deterministic ties by centroid id — EXACT, through the fused
@@ -959,7 +940,8 @@ object VectorFunctions {
     // broadcast codebook join × argmin window × collect_list regroup —
     // which pushed a corpus×(m·codes) frame through a window exchange
     // to argmin `codes` numbers per subspace (guide §2.4). Spec-pinned
-    // bit-identical to that formulation (pqEncodeHof) on the fixture.
+    // bit-identical to that formulation (kept in test sources) on the
+    // fixture.
     val spark = df.sparkSession
     import spark.implicits._
     val cbRows = codebooks.select(col("__m"), col("__code"), col("__cvec"))
@@ -978,33 +960,6 @@ object VectorFunctions {
     df.select(col(idCol).as("__eid"), enc.as("__enc"))
       .select(col("__eid"), col("__enc").getField("codes").as("__codes"),
         col("__enc").getField("rnorm2").as("__rnorm2"))
-  }
-
-  /** The r15 DataFrame formulation of [[pqEncode]] — kept as the
-    * reference the equivalence spec pins the fused kernel against
-    * (the cosineHof pattern).
-    */
-  private[graft] def pqEncodeHof(df: DataFrame, idCol: String, vecCol: String,
-      codebooks: DataFrame, m: Int, subDim: Int): DataFrame = {
-    val subs = df.select(col(idCol).as("__eid"),
-      posexplode(array((0 until m).map(i =>
-        slice(col(vecCol), i * subDim + 1, subDim)): _*)).as(Seq("__m", "__sv")))
-      .withColumn("__m", col("__m").cast("long"))
-    val l2 = aggregate(zip_with(col("__sv"), col("__cvec"),
-        (x, y) => (x.cast("double") - y.cast("double"))
-          * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-    val w = Window.partitionBy(col("__eid"), col("__m"))
-      .orderBy(col("__l2").asc, col("__code").asc)
-    subs.join(broadcast(codebooks), Seq("__m"))
-      .withColumn("__l2", l2)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .groupBy(col("__eid"))
-      .agg(
-        transform(array_sort(collect_list(struct(col("__m"), col("__code")))),
-          s => s.getField("__code")).as("__codes"),
-        sum(dot(col("__cvec"), col("__cvec"))).as("__rnorm2"))
   }
 
   /** IVF-PQ top-k — the memory-bounded ANN serving shape: the coarse
@@ -1131,7 +1086,7 @@ object VectorFunctions {
   def planeSignMatrix(planes: Int, dIn: Int): Column =
     signMatrix("plane", planes, dIn)
 
-  /** `lshTableSignaturesHof` semantics over the literal sign matrix:
+  /** [[lshTableSignatures]] semantics over the literal sign matrix:
     * value-identical signatures (same md5 parities, same left-to-right
     * double fold) without the HOF's per-row sign derivation.
     */

@@ -115,46 +115,24 @@ object MutationOps {
       concat_ws(" AND ", preds: _*))
   }
 
-  /** O15 — stage deferred deletes: assign sequential QueryIds above
-    * `baseQueryId` (COALESCE(MAX(QueryId),0)+1, process-pipeline.py:
-    * 238-252), render the audit string, and drop rows whose identical
-    * DeleteQuery is already pending (the reference's per-row COUNT(*)
-    * probe at :286-295 → one anti-join). Returns new delete_control rows.
-    *
-    * The row_number over a single unordered partition is a deliberate
-    * serialization point — delete batches scale with file size, not the
-    * 100 TB table, and id allocation must be gap-free like the
-    * reference's MAX+i scheme.
+  /** The structured form of a staged delete: key column → its value as
+    * a string.
     */
-  def stageDeletes(pendingControl: DataFrame, keys: DataFrame, table: String,
-      pkCols: Seq[String], eventId: String, baseQueryId: Long,
-      approvalTs: Column, ord: Column): DataFrame = {
-    require(pkCols.nonEmpty, "staged delete requires a primary key")
-    val rendered = keys
-      .withColumn("DeleteQuery", renderDeleteQuery(table, pkCols))
-      .withColumn("pk_values",
-        map(pkCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*))
-      .select(col("DeleteQuery"), col("pk_values"), ord.as("__ord"))
-      // identical rendered queries within the batch collapse to one,
-      // matching the reference's probe-before-insert loop order
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("DeleteQuery")).orderBy(col("__ord").asc)))
-      .filter(col("__rn") === 1)
-    val novel = rendered.join(
-      pendingControl.filter(!col("ExecutedFlag")).select("DeleteQuery"),
-      Seq("DeleteQuery"), "left_anti")
-    novel
-      .withColumn("QueryId",
-        row_number().over(Window.orderBy(col("__ord").asc)) + lit(baseQueryId))
-      .select(
-        col("QueryId").cast("long"),
-        lit(eventId).as("EventId"),
-        col("DeleteQuery"),
-        lit(true).as("DeleteFlag"),
-        lit(false).as("ExecutedFlag"),
-        approvalTs.cast("timestamp").as("DeletedApprovalTimestamp"),
-        lit(null).cast("timestamp").as("ExecutedDeleteTimestamp"),
-        lit(table).as("target_table"),
-        col("pk_values"))
-  }
+  def pkValues(pkCols: Seq[String]): Column =
+    map(pkCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*)
+
+  /** O15 — process-pipeline.py:238-305: the rows a delete file stages,
+    * on the driver. `keys` are the file's (DeleteQuery, pk map) pairs in
+    * file order; identical queries within the file collapse to the first
+    * (the reference probes before each insert), queries `pending` already
+    * holds are dropped (its per-row COUNT(*) probe at :286-295), and the
+    * rest take sequential QueryIds above `baseQueryId`
+    * (COALESCE(MAX(QueryId), 0) + i, :238-252), gap-free like the
+    * reference's. Returns (QueryId, DeleteQuery, pk map).
+    */
+  def stageDeletes(keys: Seq[(String, Map[String, String])], pending: String => Boolean,
+      baseQueryId: Long): Seq[(Long, String, Map[String, String])] =
+    keys.distinctBy(_._1).filterNot(k => pending(k._1)).zipWithIndex.map {
+      case ((query, pk), i) => (baseQueryId + i + 1, query, pk)
+    }
 }

@@ -1,15 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.model.Operation
 
 /** Path routing, table-name derivation, and version allocation — the
-  * reference's driver-side scalar logic (SURVEY O3/O4/O5) as column
-  * expressions, usable both on single values and across whole
-  * DataFrames of file events.
+  * reference's driver-side scalar logic (SURVEY O3/O4/O5): routing and
+  * naming as column expressions, usable both on single values and
+  * across whole DataFrames of file events; versions on the driver, from
+  * a control lookup's maxima.
   */
 object PathOps {
 
@@ -42,36 +44,29 @@ object PathOps {
   def isValidOperation(op: Column): Column =
     op.isin(Operation.all.toSeq: _*)
 
-  /** O5 — data-query.py:70-85: next version for one file =
-    * COALESCE(MAX(file_version), 0) + 1 over its history. The control
-    * frame is read as one partition, so the global aggregate needs no
-    * shuffle and the lookup is one job.
+  /** O5 — data-query.py:70-85: the version of each arrival, in arrival
+    * order: COALESCE(MAX(file_version), 0) over its file's history
+    * (`maxVersion` of its file name) plus its rank among the arrivals of
+    * that file — one MAX per file for a whole batch, keyed by file name
+    * alone, as the reference's MAX query (data-query.py:74-79) is.
     */
-  def nextVersion(control: DataFrame, fileName: String): Long = {
-    val row = control.filter(col("file_name") === fileName).coalesce(1)
-      .agg(coalesce(max(col("file_version")), lit(0L))).head()
-    row.getLong(0) + 1L
+  def assignVersions[A](arrivals: Seq[A], maxVersion: String => Option[Long])(
+      fileName: A => String)(implicit arrivalOrder: Ordering[A]): Seq[(A, Long)] = {
+    val last = scala.collection.mutable.Map.empty[String, Long]
+    arrivals.sorted.map { a =>
+      val file = fileName(a)
+      val version = last.getOrElse(file, maxVersion(file).getOrElse(0L)) + 1
+      last(file) = version
+      a -> version
+    }
   }
 
-  /** Set-based version assignment: the same MAX+1 semantics applied to a
-    * whole batch of arrivals at once — one window instead of one query
-    * per file (what O5 becomes when ingest is a stream of many files).
+  /** Spark's order of strings, as a window or sort over a string column
+    * orders them: unsigned UTF-8 bytes, nulls first.
     */
-  def assignVersions(control: DataFrame, arrivals: DataFrame,
-      ord: Column): DataFrame = {
-    val base = control.groupBy(col("file_name"))
-      .agg(max(col("file_version")).as("__base"))
-    val w = Window.partitionBy(col("file_name")).orderBy(ord.asc)
-    arrivals.join(base, Seq("file_name"), "left")
-      .withColumn("file_version",
-        coalesce(col("__base"), lit(0L)) + row_number().over(w))
-      .drop("__base")
+  val sparkStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+      else java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
   }
-
-  /** O6 — process-pipeline.py:238-252: COALESCE(MAX(QueryId), 0), in
-    * one job like [[nextVersion]].
-    */
-  def maxQueryId(deleteControl: DataFrame): Long =
-    deleteControl.coalesce(1)
-      .agg(coalesce(max(col("QueryId")), lit(0L))).head().getLong(0)
 }

@@ -2,17 +2,22 @@ package graft.pipeline
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.sql.Timestamp
 import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, GenericRowWithSchema, Literal}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 import graft.catalog.Catalog
-import graft.catalog.Catalog.RefHint
 import graft.model._
 import graft.notify.Notifier
 import graft.ops.{MutationOps, PathOps}
@@ -26,15 +31,35 @@ import graft.ops.{MutationOps, PathOps}
   * driver, mirroring the reference's single-threaded Cloud Functions;
   * all data movement is distributed DataFrame work.
   *
+  * The control plane is driver-side too. The reference's control reads
+  * are Postgres point queries (MAX(file_version) by file name, a row by
+  * event_id, pending rows by DeleteQuery); here they are answered from
+  * the Catalog's driver index of the two control logs
+  * ([[graft.catalog.Catalog.logViews]]), so a lookup runs no Spark job.
+  * A log ref is immutable once committed, so each ref's rows are read
+  * into the driver at most once per Catalog: refs this Catalog commits
+  * are seeded from the rows it writes, and refs another writer
+  * committed are read in one job by the next lookup. Each ref's lookup
+  * maps (file name → max version, processed event ids, its maximum
+  * QueryId, pending DeleteQuery set and staged rows) are built once, so
+  * a lookup costs the log's refs (at most `MaxControlRefs` + 1) and its
+  * batch, not the log's rows. Control updates rewrite their refs from
+  * the same rows (Catalog.rewriteLog). The index holds every row of
+  * both control logs, so its driver memory grows with the logs' history
+  * (one row per arrival, one per staged key), as the reference's
+  * Postgres tables do; nothing prunes them.
+  *
   * @param landingRoot directory standing in for the GCS bucket: CSVs
   *   land under `landingRoot/<bucket>/<operation>/<file>.csv`.
-  * @param maxControlRows guard on the control-plane `.collect()`s: the
-  *   driver-side orchestration assumes control rows scale with FILE
-  *   EVENTS, not data rows (SURVEY §7). That assumption is sound for
-  *   this pipeline's design but nothing enforced it — a misuse that
-  *   routed data-scale rows through a control path would OOM the
-  *   driver with no hint why. Past this many rows, the collect fails
-  *   loudly with guidance instead.
+  * @param maxControlRows guard on the driver-side control plane: the
+  *   orchestration assumes control rows scale with FILE EVENTS, not data
+  *   rows (SURVEY §7). That assumption is sound for this pipeline's
+  *   design but nothing enforced it — a misuse that routed data-scale
+  *   rows through a control path would OOM the driver with no hint why.
+  *   A batch of more control rows than this (a registration batch, a
+  *   delete file's keys, the staged deletes a delete job runs) fails
+  *   loudly with guidance instead. It bounds what one call handles, not
+  *   the logs' history: a log may grow past it.
   */
 final class Pipeline(
     spark: SparkSession,
@@ -49,33 +74,39 @@ final class Pipeline(
 
   // A control table is a log of immutable refs: an insert appends one, a
   // status update rewrites only the refs holding its rows. Past this many
-  // refs a commit folds the log back into one, so reads stay one scan of
-  // a bounded number of dirs. Spark lists more than 32 paths of one read
-  // with a distributed job (spark.sql.sources.parallelPartitionDiscovery
-  // .threshold), so the bound keeps every control read at 32 paths.
+  // refs a commit folds the log back into one, so a lookup that reads
+  // the refs another writer committed reads a bounded number of dirs.
+  // Spark lists more than 32 paths of one read with a distributed job
+  // (spark.sql.sources.parallelPartitionDiscovery.threshold), so the
+  // bound keeps every control read at 32 paths.
   private[pipeline] val MaxControlRefs = 32
 
   private def nowIso(): String = Instant.now().toString
 
-  /** Driver-side materialization of a CONTROL frame, capped: collects
-    * at most `maxControlRows + 1` rows (the limit bounds driver memory
-    * even when the input is huge) and fails with guidance when the cap
-    * is exceeded — control tables hold file/approval/delete-control
-    * rows, so blowing the cap means data rows were routed through a
-    * control path, and the fix is the data path, not a bigger driver.
-    * The frame is read as one partition, so the capped collect is one
-    * job: a multi-partition limit would take partitions incrementally,
-    * one job per round.
+  /** Fails with guidance when a control batch holds more than
+    * `maxControlRows` rows: control rows scale with file events, so
+    * blowing the cap means data rows were routed through a control path,
+    * and the fix is the data path, not a bigger driver.
     */
-  private def collectControl(df: DataFrame, what: String): Array[Row] = {
-    val rows = df.coalesce(1).limit(maxControlRows + 1).collect()
-    if (rows.length > maxControlRows)
+  private def guardControl(n: Int, what: String): Unit =
+    if (n > maxControlRows)
       throw new IllegalStateException(
         s"control-plane guard: $what exceeded maxControlRows=" +
           s"$maxControlRows. Control rows scale with file events, not " +
           "data volume — route data-scale rows through the distributed " +
           "data path (or raise maxControlRows if this volume of control " +
           "events is intended).")
+
+  /** Driver-side materialization of a CONTROL frame, capped: collects
+    * at most `maxControlRows + 1` rows (the limit bounds driver memory
+    * even when the input is huge) and fails past the cap. The frame is
+    * read as one partition, so the capped collect is one job: a
+    * multi-partition limit would take partitions incrementally, one job
+    * per round.
+    */
+  private def collectControl(df: DataFrame, what: String): Array[Row] = {
+    val rows = df.coalesce(1).limit(maxControlRows + 1).collect()
+    guardControl(rows.length, what)
     rows
   }
 
@@ -85,84 +116,82 @@ final class Pipeline(
   }
 
   /** The INSERT of a control table, in O(batch): the rows land as one new
-    * ref (Catalog.appendLog), and the log is folded once it holds more
-    * than `MaxControlRefs` refs.
+    * ref (Catalog.appendLogRows), and once the log holds more than
+    * `MaxControlRefs` refs a rewrite of every row folds it into one, from
+    * the index, so the fold reads nothing back.
     */
-  private def appendControl(table: String, rows: DataFrame): Unit = {
-    catalog.appendLog(table, rows)
-    if (catalog.bucketRefs(table).size > MaxControlRefs) catalog.compactLog(table)
+  private def appendControl(table: String, rows: Seq[Row]): Unit = {
+    catalog.appendLogRows(table, rows)
+    if (catalog.bucketRefs(table).size > MaxControlRefs)
+      catalog.rewriteLog(table, _ => true)(identity)
+  }
+
+  /** `row` with the named columns set to new values, under its schema. */
+  private def updated(row: Row, values: (String, Any)*): Row =
+    new GenericRowWithSchema(values.foldLeft(row.toSeq) { case (r, (c, v)) =>
+      r.updated(row.fieldIndex(c), v) }.toArray, row.schema)
+
+  /** CAST(s AS TIMESTAMP) as this session evaluates it, time zone and
+    * ANSI mode included: Spark's own Cast, evaluated on the driver.
+    */
+  private def timestamp(s: String): Any = {
+    val conf = spark.sessionState.conf
+    CatalystTypeConverters.convertToScala(Cast(Literal(s), TimestampType,
+      Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf)).eval(), TimestampType)
   }
 
   // ---------------------------------------------------------------- E1
+
+  /** O4 — data-query.py:212-229: the operation (first path segment) and
+    * file name (last segment) of an arrival, or None when the path is
+    * filtered out (folder markers, shallow paths, unknown operations).
+    */
+  private def route(ev: FileEvent): Option[(String, String)] = {
+    if (ev.name == null || ev.name.endsWith("/")) return None // folder creation event
+    val segments = ev.name.split("/").filter(_.nonEmpty)
+    if (segments.length < 2) return None
+    val operation = segments.head.toLowerCase
+    if (Operation.all.contains(operation)) Some(operation -> segments.last) else None
+  }
 
   /** data-query.py:199-239 — register one object-arrival event, version
     * it, and request approval. Returns the assigned version, or None
     * when the path is filtered out (folder markers, unknown operation).
     */
-  def registerArrival(ev: FileEvent): Option[Long] = {
-    ensureControlTables()
-    if (ev.name.endsWith("/")) return None // folder creation event
-    val segments = ev.name.split("/").filter(_.nonEmpty)
-    if (segments.length < 2) return None
-    val operation = segments.head.toLowerCase
-    if (!Operation.all.contains(operation)) return None
-    val fileName = segments.last
-    val tableName = PathOps.deriveTableName(fileName)
-    // version keyed by file_name ALONE — the reference's MAX query
-    // (data-query.py:74-79) does not filter by operation, so an update
-    // re-upload of a previously inserted file continues its history
-    val version = PathOps.nextVersion(catalog.read(ControlTable), fileName)
-    import spark.implicits._
-    val row = Seq(ProcessedFile(fileName, ev.id, version,
-      is_processed = false, ev.bucket, operation, Status.Pending, None)).toDF()
-    appendControl(ControlTable, row)
-    val ts = nowIso()
-    notifier.requestApproval(approver, operation, tableName,
-      fileName, ev.id, ev.bucket, version, ts,
-      approveUrl = s"https://approvals.local/?event_id=${ev.id}&action=approve",
-      rejectUrl = s"https://approvals.local/?event_id=${ev.id}&action=reject")
-    Some(version)
-  }
+  def registerArrival(ev: FileEvent): Option[Long] =
+    registerArrivals(Seq(ev)).get(ev.id)
 
   /** Set-based E1: register a whole batch of arrival events in ONE
-    * control-table append — guards and routing as column expressions,
-    * versions continued per file with a single window
-    * (PathOps.assignVersions) instead of one MAX query per event.
-    * Returns (event_id, assigned version); filtered events are absent.
+    * control-table append. O5 (data-query.py:70-85): a file's next
+    * version is COALESCE(MAX(file_version), 0) + 1 over its history,
+    * keyed by file_name ALONE — the reference's MAX query
+    * (data-query.py:74-79) does not filter by operation, so an update
+    * re-upload of a previously inserted file continues its history. The
+    * maxima come from the control log's driver index, and the batch's
+    * arrivals of one file continue them in event-id order
+    * (PathOps.assignVersions). Returns (event_id, assigned version);
+    * filtered events are absent.
     */
   def registerArrivals(events: Seq[FileEvent]): Map[String, Long] = {
     ensureControlTables()
-    if (events.isEmpty) return Map.empty
-    import spark.implicits._
-    val arrivals = events.toDF("bucket", "name", "id")
-      .filter(!col("name").endsWith("/"))
-      .withColumn("__segs",
-        filter(split(col("name"), "/"), s => length(s) > 0))
-      .filter(size(col("__segs")) >= 2)
-      .withColumn("operation", lower(element_at(col("__segs"), 1)))
-      .filter(graft.ops.PathOps.isValidOperation(col("operation")))
-      .withColumn("file_name", element_at(col("__segs"), -1))
-    val versioned = collectControl(graft.ops.PathOps.assignVersions(
-        catalog.read(ControlTable), arrivals, ord = col("id"))
-      .select(col("file_name"), col("id").as("event_id"),
-        col("file_version"), lit(false).as("is_processed"),
-        col("bucket"), col("operation"), lit(Status.Pending).as("status"),
-        lit(null).cast("timestamp").as("approval_timestamp")),
-      "registerArrivals' versioned file events")
-    if (versioned.isEmpty) return Map.empty
-    // a local relation, so the planner knows the batch's size
-    appendControl(ControlTable,
-      spark.createDataFrame(versioned.toSeq.asJava, ProcessedFile.schema))
+    val routed = events.flatMap(ev => route(ev).map { case (op, file) => (ev, op, file) })
+    if (routed.isEmpty) return Map.empty
+    guardControl(routed.size, "registerArrivals' versioned file events")
+    val maxima = catalog.logViews(ControlTable, Pipeline.FileVersions)
+    val versioned = PathOps.assignVersions(routed,
+        file => maxima.flatMap(_.get(file)).maxOption)(_._3)(
+      Ordering.by[(FileEvent, String, String), String](_._1.id)(PathOps.sparkStringOrder))
+    appendControl(ControlTable, versioned.map { case ((ev, op, file), version) =>
+      Row(file, ev.id, version, false, ev.bucket, op, Status.Pending, null)
+    })
     val ts = nowIso()
-    versioned.foreach { r =>
-      val (file, id, op, bucket, version) = (r.getString(0), r.getString(1),
-        r.getString(5), r.getString(4), r.getLong(2))
-      notifier.requestApproval(approver, op, graft.ops.PathOps.deriveTableName(file),
-        file, id, bucket, version, ts,
-        approveUrl = s"https://approvals.local/?event_id=$id&action=approve",
-        rejectUrl = s"https://approvals.local/?event_id=$id&action=reject")
+    versioned.foreach { case ((ev, op, file), version) =>
+      notifier.requestApproval(approver, op, PathOps.deriveTableName(file),
+        file, ev.id, ev.bucket, version, ts,
+        approveUrl = s"https://approvals.local/?event_id=${ev.id}&action=approve",
+        rejectUrl = s"https://approvals.local/?event_id=${ev.id}&action=reject")
     }
-    versioned.map(r => r.getString(1) -> r.getLong(2)).toMap
+    versioned.map { case ((ev, _, _), version) => ev.id -> version }.toMap
   }
 
   // ---------------------------------------------------------------- E3
@@ -190,8 +219,8 @@ final class Pipeline(
       ev.event_id != null && ev.event_id.nonEmpty &&
         ev.action != null && ev.action.nonEmpty)
     if (valid.isEmpty) return
-    // O8 idempotency, one control-table read for the whole batch
-    val (done, hint) = lookupEvents(valid.map(_.event_id))
+    // O8 idempotency, one control-log lookup for the whole batch
+    val done = lookupEvents(valid.map(_.event_id))
     val updates = Seq.newBuilder[(String, String, String)]
     val seen = scala.collection.mutable.Set[String]()
     valid.foreach { ev =>
@@ -233,75 +262,52 @@ final class Pipeline(
         }
       }
     }
-    val batch = updates.result()
-    markControl(batch, hint(batch.map(_._1)))
+    markControl(updates.result())
   }
 
   /** O8 — any error reading the control table is treated as "not yet
     * processed" (process-pipeline.py:97-99; a preserved reference quirk).
     */
   def alreadyProcessed(eventId: String): Boolean =
-    lookupEvents(Seq(eventId))._1.contains(eventId)
+    lookupEvents(Seq(eventId)).contains(eventId)
 
-  /** O8 for a batch, in one control-table read (one job): which of
-    * `eventIds` are already processed, and the ref hint of a status
-    * update to some of them — the files their rows were read from and
-    * every file the read scanned — so the update finds its refs without
-    * a job of its own. Read errors → "none processed" and no hint,
+  /** O8 for a batch: which of `eventIds` are already processed, from the
+    * control log's driver index. Read errors → "none processed",
     * preserving the reference quirk (process-pipeline.py:97-99).
     */
-  private def lookupEvents(
-      eventIds: Seq[String]): (Set[String], Seq[String] => Option[RefHint]) =
+  private def lookupEvents(eventIds: Seq[String]): Set[String] =
     try {
-      val ctrl = catalog.read(ControlTable)
-      val rows = collectControl(ctrl
-        .filter(col("event_id").isin(eventIds.distinct: _*))
-        .select(col("event_id"), coalesce(col("is_processed"), lit(false)),
-          input_file_name()), "alreadyProcessed's idempotency lookup")
-      val files = rows.toSeq.groupMap(_.getString(0))(_.getString(2))
-      (rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet,
-        ids => Some(RefHint(ctrl.inputFiles.toSeq,
-          ids.flatMap(files.getOrElse(_, Nil)))))
+      val processed = catalog.logViews(ControlTable, Pipeline.ProcessedIds)
+      eventIds.filter(id => processed.exists(_(id))).toSet
     } catch {
-      // read errors → "none processed" is the preserved reference
-      // quirk, but the guard tripping is NOT a read error — a batch
-      // that large must fail loudly, never silently reprocess
-      case e: IllegalStateException => throw e
-      case _: Exception => (Set.empty, _ => None)
+      case _: Exception => Set.empty
     }
 
   /** Apply a batch of (event_id, status, approval_ts) control updates in
     * ONE commit that rewrites only the refs holding those events' rows
-    * (Catalog.rewriteLog; `hint` says where the lookup found them). The
-    * update set is already on the driver, so it rides in the plan as
-    * literal maps keyed by event_id (no join, no broadcast job); a hashed
-    * IN test gates the maps' linear lookup to the touched rows.
+    * (Catalog.rewriteLog, on the driver rows of the log index).
     */
-  private def markControl(updates: Seq[(String, String, String)],
-      hint: Option[RefHint]): Unit = {
+  private def markControl(updates: Seq[(String, String, String)]): Unit = {
     if (updates.isEmpty) return
-    val hit = col("event_id").isin(updates.map(_._1): _*)
-    def lookup(value: ((String, String, String)) => String): Column = {
-      val byId = typedLit(updates.map(u => u._1 -> value(u)).toMap)
-      when(hit, byId(col("event_id")))
-    }
-    val status = lookup(_._2)
-    catalog.rewriteLog(ControlTable, hit, hint)(_
-      .withColumn("status", coalesce(status, col("status")))
-      .withColumn("is_processed",
-        when(status.isNotNull, lit(true)).otherwise(col("is_processed")))
-      .withColumn("approval_timestamp",
-        coalesce(lookup(_._3).cast("timestamp"), col("approval_timestamp"))))
+    val byId = updates.map { case (id, status, ts) => id -> (status, timestamp(ts)) }.toMap
+    catalog.rewriteLog(ControlTable, r => byId.contains(r.getAs[String]("event_id")))(_.map { r =>
+      byId.get(r.getAs[String]("event_id")).fold(r) { case (status, ts) =>
+        updated(r, "status" -> status, "is_processed" -> true,
+          "approval_timestamp" -> Option(ts).getOrElse(r.getAs[Any]("approval_timestamp")))
+      }
+    })
   }
 
   /** O1 — CSV scan with validation: header-only schema, all strings;
     * empty or headerless files and files without data rows raise
     * (process-pipeline.py:334-337, Spark would otherwise return an
     * empty frame silently). The driver reads the file's first non-blank
-    * line, the header, and checks that a non-blank line follows; Spark's
-    * own CSV reader parses the header from a local Dataset (no job), and
-    * the file is then read with that all-string schema, so neither the
-    * header nor the emptiness check costs a job.
+    * line, the header, and checks that a non-blank line follows. The
+    * header is parsed as Spark's CSV reader parses it (its univocity
+    * parser settings and its safe-header naming of empty and duplicated
+    * names), on the driver, and the file is then read with that
+    * all-string schema, so neither the header nor the emptiness check
+    * costs a job or a query plan.
     */
   def readLandedCsv(bucket: String, objectPath: String): DataFrame = {
     val path = new Path(s"$landingRoot/$bucket/$objectPath")
@@ -314,9 +320,13 @@ final class Pipeline(
       val h = lines.nextOption()
       (h, lines.hasNext)
     } finally in.close()
-    import spark.implicits._
-    val schema = header.fold(new StructType())(h =>
-      spark.read.option("header", "true").csv(Seq(h).toDS()).schema)
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning,
+      conf.sessionLocalTimeZone)
+    val schema = header.flatMap(h => Option(new CsvParser(options.asParserSettings).parseLine(h)))
+      .fold(new StructType())(names => StructType(
+        CSVUtils.makeSafeHeader(names, conf.caseSensitiveAnalysis, options)
+          .map(StructField(_, StringType))))
     if (schema.isEmpty || schema.fieldNames.forall(_.startsWith("_c")))
       throw new IllegalArgumentException("CSV file is empty or invalid")
     if (!hasRows)
@@ -353,15 +363,32 @@ final class Pipeline(
       case Operation.Update =>
         throw new IllegalArgumentException("upsert requires a primary key")
       case Operation.Delete =>
-        val base = PathOps.maxQueryId(catalog.read(DeleteControlTable))
-        val staged = MutationOps.stageDeletes(
-          catalog.read(DeleteControlTable), withOrd, tableName,
-          if (pks.nonEmpty) pks else ordered.filterNot(_ == "__ord"),
-          eventId, base, lit(approvalTs), col("__ord"))
-        appendControl(DeleteControlTable, staged)
+        stageDeletes(tableName, if (pks.nonEmpty) pks else ordered.filterNot(_ == "__ord"),
+          withOrd, eventId, approvalTs)
       case other =>
         throw new IllegalArgumentException(s"Unknown operation: $other")
     }
+  }
+
+  /** O6 + O15 — process-pipeline.py:238-305: stage the keys of a delete
+    * file in `delete_control`. The keys' rendered DeleteQuery and pk map
+    * are collected in file order (one job) and staged on the driver by
+    * MutationOps.stageDeletes, against the pending queries and the
+    * maximum QueryId of the control log's index. The staged rows land as
+    * one ref.
+    */
+  private def stageDeletes(table: String, keyCols: Seq[String], keys: DataFrame,
+      eventId: String, approvalTs: String): Unit = {
+    val refs = catalog.logViews(DeleteControlTable, Pipeline.Deletes)
+    val rendered = collectControl(keys.select(MutationOps.renderDeleteQuery(table, keyCols),
+      MutationOps.pkValues(keyCols), col("__ord")), "a delete file's staged keys")
+    val staged = MutationOps.stageDeletes(
+      rendered.toSeq.sortBy(_.getLong(2)).map(r => (r.getString(0), r.getMap[String, String](1).toMap)),
+      query => refs.exists(_.pending(query)), refs.flatMap(_.maxQueryId).maxOption.getOrElse(0L))
+    val deletedAt = timestamp(approvalTs)
+    appendControl(DeleteControlTable, staged.map { case (id, query, pk) =>
+      Row(id, eventId, query, true, false, deletedAt, null, table, pk)
+    })
   }
 
   // ---------------------------------------------------------------- E4
@@ -375,22 +402,20 @@ final class Pipeline(
     */
   def executePendingDeletes(): Seq[Long] = {
     ensureControlTables()
-    val ctrl = catalog.read(DeleteControlTable)
-    val pending = collectControl(
-      ctrl.filter(col("DeleteFlag") && !col("ExecutedFlag"))
-        .select(col("QueryId"), col("target_table"), col("pk_values"), input_file_name()),
-      "executePendingDeletes' staged delete rows")
+    val pending = catalog.logViews(DeleteControlTable, Pipeline.Deletes).flatMap(_.staged)
     if (pending.isEmpty) return Nil
+    guardControl(pending.size, "the staged deletes pending execution")
+    def pkValues(r: Row) = r.getAs[scala.collection.Map[String, String]]("pk_values")
     val executed = Seq.newBuilder[Long]
-    pending.groupBy(_.getString(1)).foreach { case (table, rows) =>
+    pending.groupBy(_.getAs[String]("target_table")).foreach { case (table, rows) =>
       try {
         val registered = catalog.primaryKey(table)
         val pks =
           if (registered.nonEmpty) registered
-          else rows.head.getMap[String, String](2).keys.toSeq.sorted
+          else pkValues(rows.head).keys.toSeq.sorted
         val keySchema = StructType(pks.map(StructField(_, StringType)))
-        val keyRows = rows.toSeq.map { r =>
-          val m = r.getMap[String, String](2)
+        val keyRows = rows.map { r =>
+          val m = pkValues(r)
           pks.map(p => m.getOrElse(p, null))
         }
         // a local relation: the planner knows its size, and an unkeyed
@@ -399,7 +424,7 @@ final class Pipeline(
         if (catalog.exists(table)) {
           if (registered.nonEmpty) catalog.deleteByKey(table, keys)
           else catalog.rewrite(table, _ => Nil)(MutationOps.deleteByPk(_, keys, pks))
-          executed ++= rows.map(_.getLong(0))
+          executed ++= rows.map(_.getAs[Long]("QueryId"))
         } else {
           // missing target = per-table error path: leave ExecutedFlag
           // false so the staged delete still runs once the table exists
@@ -414,16 +439,35 @@ final class Pipeline(
     }
     val done = executed.result()
     if (done.nonEmpty) {
-      // the stamp rewrites only the refs the executed rows were read from
+      // the stamp rewrites only the refs holding the executed rows
       val doneIds = done.toSet
-      val hint = RefHint(ctrl.inputFiles.toSeq,
-        pending.filter(r => doneIds(r.getLong(0))).map(_.getString(3)).toSeq)
-      val hit = col("QueryId").isin(done: _*)
-      catalog.rewriteLog(DeleteControlTable, hit, Some(hint))(_
-        .withColumn("ExecutedFlag", when(hit, lit(true)).otherwise(col("ExecutedFlag")))
-        .withColumn("ExecutedDeleteTimestamp",
-          when(hit, current_timestamp()).otherwise(col("ExecutedDeleteTimestamp"))))
+      val now = Timestamp.from(Instant.now())
+      def hit(r: Row) = !r.isNullAt(r.fieldIndex("QueryId")) && doneIds(r.getAs[Long]("QueryId"))
+      catalog.rewriteLog(DeleteControlTable, hit)(_.map(r =>
+        if (hit(r)) updated(r, "ExecutedFlag" -> true, "ExecutedDeleteTimestamp" -> now) else r))
     }
     done
   }
+}
+
+object Pipeline {
+  // Lookup maps of one control-log ref (Catalog.logViews), built once per
+  // immutable ref. processed_files: file name → its maximum version, and
+  // the ids of its processed events.
+  private val FileVersions = new Catalog.LogView(_.iterator
+    .filterNot(r => r.isNullAt(r.fieldIndex("file_version")))
+    .map(r => r.getAs[String]("file_name") -> r.getAs[Long]("file_version"))
+    .toSeq.groupMapReduce(_._1)(_._2)(math.max))
+  private val ProcessedIds = new Catalog.LogView(_.iterator
+    .filter(_.getAs[Any]("is_processed") == true).map(_.getAs[String]("event_id")).toSet)
+
+  /** A delete_control ref's maximum QueryId, its pending (not executed)
+    * DeleteQuery strings, and its rows staged for the delete job.
+    */
+  private final case class DeleteRef(maxQueryId: Option[Long], pending: Set[String],
+      staged: Seq[Row])
+  private val Deletes = new Catalog.LogView(rows => DeleteRef(
+    rows.filterNot(r => r.isNullAt(r.fieldIndex("QueryId"))).map(_.getAs[Long]("QueryId")).maxOption,
+    rows.filter(_.getAs[Any]("ExecutedFlag") == false).map(_.getAs[String]("DeleteQuery")).toSet,
+    rows.filter(r => r.getAs[Any]("DeleteFlag") == true && r.getAs[Any]("ExecutedFlag") == false)))
 }

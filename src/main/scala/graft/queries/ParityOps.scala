@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.ops.{MutationOps, PathOps}
@@ -94,22 +93,25 @@ object ParityOps {
 
   /** O15 staged deletes: render + sequential QueryId allocation against
     * an empty pending set (dedup-vs-pending is covered in unit specs).
+    * The keys are rendered by Spark and staged on the driver, by the
+    * function the pipeline stages a delete file with.
     */
   val op04StageDeletes = Q(
     "op04_stage_deletes",
     (s, dir) => {
       import s.implicits._
       val keys = Tables.load(s, dir, "customer")
-        .filter($"c_custkey" % 100 === 0).select($"c_custkey")
-      val emptyPending = s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("QueryId", LongType),
-          StructField("DeleteQuery", StringType),
-          StructField("ExecutedFlag", BooleanType))))
-      MutationOps.stageDeletes(emptyPending, keys, "customers",
-        Seq("c_custkey"), "ev_demo", baseQueryId = 0L,
-        lit("2026-01-01 00:00:00"), $"c_custkey")
-        .drop("pk_values")
+        .filter($"c_custkey" % 100 === 0).orderBy($"c_custkey")
+        .select(MutationOps.renderDeleteQuery("customers", Seq("c_custkey")),
+          MutationOps.pkValues(Seq("c_custkey")))
+        .as[(String, Map[String, String])].collect().toSeq
+      MutationOps.stageDeletes(keys, _ => false, baseQueryId = 0L)
+        .map { case (id, query, _) => (id, query) }.toDF("QueryId", "DeleteQuery")
+        .select($"QueryId", lit("ev_demo").as("EventId"), $"DeleteQuery",
+          lit(true).as("DeleteFlag"), lit(false).as("ExecutedFlag"),
+          lit("2026-01-01 00:00:00").cast("timestamp").as("DeletedApprovalTimestamp"),
+          lit(null).cast("timestamp").as("ExecutedDeleteTimestamp"),
+          lit("customers").as("target_table"))
         .orderBy($"QueryId")
     },
     Some("""
@@ -127,18 +129,19 @@ object ParityOps {
 
   /** O5 batch version assignment: MAX+1 per file continued across a
     * whole arrival batch (events stand in as arrivals keyed by
-    * event_type).
+    * event_type, in event_id order), on the driver, by the function the
+    * pipeline versions its arrivals with.
     */
   val op05AssignVersions = Q(
     "op05_assign_versions",
     (s, dir) => {
       import s.implicits._
-      val control = Seq(("click", 2L), ("error", 5L))
-        .toDF("file_name", "file_version")
+      val maxVersion = Map("click" -> 2L, "error" -> 5L)
       val arrivals = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type".as("file_name"))
-      PathOps.assignVersions(control, arrivals, $"event_id")
-        .select($"event_id", $"file_name", $"file_version")
+        .select($"event_id", $"event_type").as[(Long, String)].collect().toSeq
+      PathOps.assignVersions(arrivals, maxVersion.get)(_._2)(Ordering.by(_._1))
+        .map { case ((id, file), version) => (id, file, version) }
+        .toDF("event_id", "file_name", "file_version")
         .orderBy($"event_id")
     },
     Some("""

@@ -28,7 +28,8 @@ final class StreamingPipeline(spark: SparkSession, pipeline: Pipeline,
     * JSON lines, registered + notified one micro-batch at a time. A
     * micro-batch of N arrivals costs ONE control-table append — one new
     * ref of the table's log (Pipeline.registerArrivals assigns all N
-    * versions with a single window) — not N version lookups and N refs.
+    * versions from one lookup of the log's driver index) — not N version
+    * lookups and N refs.
     */
   def startIngest(eventsDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {

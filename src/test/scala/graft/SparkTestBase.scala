@@ -20,19 +20,17 @@ object SparkTestBase {
     .getOrCreate()
 
   /** Local property that tags the jobs a [[SparkTestBase.countJobs]]
-    * body starts (child threads such as broadcast futures inherit it).
+    * body starts (threads it creates inherit it, and Spark propagates it
+    * to its broadcast futures).
     */
   private val JobTag = "graft.test.jobTag"
   private val jobsByTag = new ConcurrentHashMap[String, AtomicInteger]()
-  private val allJobs = new AtomicInteger
   private lazy val jobListener: Unit = spark.sparkContext.addSparkListener(
     new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        allJobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(JobTag)))
           .foreach(t => jobsByTag.computeIfAbsent(t, _ => new AtomicInteger)
             .incrementAndGet())
-      }
     })
 }
 
@@ -63,21 +61,5 @@ abstract class SparkTestBase extends AnyFunSuite {
     drainListenerBus()
     val n = Option(jobsByTag.remove(tag)).map(_.get).getOrElse(0)
     (result, n)
-  }
-
-  /** Runs `body` and counts every Spark job the session started
-    * meanwhile, on any thread. For bodies that start jobs on pooled
-    * threads (GenIndex.inParallel's futures): a pooled thread keeps the
-    * local properties of the thread that created it, so a
-    * [[countJobs]] tag does not reach its jobs. Only exact while nothing
-    * else runs jobs, so callers check that no stream is active.
-    */
-  def countAllJobs[T](body: => T): (T, Int) = {
-    jobListener
-    drainListenerBus()
-    val before = allJobs.get
-    val result = body
-    drainListenerBus()
-    (result, allJobs.get - before)
   }
 }

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkTestBase
 import graft.model.{DeleteControl, ProcessedFile}
@@ -732,13 +733,14 @@ class CatalogSpec extends SparkTestBase {
     (1 to 3).foreach(i =>
       cat.appendLog("log", Seq((i.toLong, "a"), (i * 10L, "a")).toDF("id", "v")))
     def rows = cat.read("log").as[(Long, String)].collect().toSeq
-    def set(id: Long, v: String)(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("v", when($"id" === id, lit(v)).otherwise($"v"))
+    def id(r: Row) = r.getAs[Long]("id")
+    def set(k: Long, v: String)(rs: Seq[Row]) = rs.map(r => if (id(r) == k) Row(k, v) else r)
     val refs = cat.bucketRefs("log")
     val bytes = refs.values.map(r => r -> dirBytes(root, "log", r)).toMap
 
-    // without a hint the rewrite finds the refs with one job of its own
-    val (_, jobs) = countJobs(cat.rewriteLog("log", $"id" === 2L)(set(2L, "b")))
+    // refs appended as frames are not in the log index yet: the rewrite
+    // reads them into it with one job, then writes with one more
+    val (_, jobs) = countJobs(cat.rewriteLog("log", id(_) == 2L)(set(2L, "b")))
     assert(jobs == 2, s"$jobs jobs")
     val after = cat.bucketRefs("log")
     assert(after.size == 3 && after - 3 == refs - 1, s"$refs -> $after")
@@ -746,37 +748,46 @@ class CatalogSpec extends SparkTestBase {
     assert(multiset(rows) == multiset(Seq((1L, "a"), (10L, "a"), (2L, "b"), (20L, "a"),
       (3L, "a"), (30L, "a"))))
 
-    // with a caller's lookup as the hint, only the write job runs; a ref
-    // committed after that lookup is rewritten too, since it may hold
-    // matching rows
-    val looked = cat.read("log")
-    val hint = Catalog.RefHint(looked.inputFiles.toSeq,
-      looked.filter($"id" === 30L).select(input_file_name()).as[String].collect().toSeq)
-    cat.appendLog("log", Seq((30L, "late")).toDF("id", "v"))
+    // a ref another Catalog committed meanwhile is read in one job and
+    // rewritten too, since it holds matching rows
+    new Catalog(spark, root).appendLog("log", Seq((30L, "late")).toDF("id", "v"))
     val late = cat.bucketRefs("log")(4)
-    val (_, hintJobs) = countJobs(
-      cat.rewriteLog("log", $"id" === 30L, Some(hint))(set(30L, "c")))
-    assert(hintJobs == 1, s"$hintJobs jobs")
+    val (_, lateJobs) = countJobs(cat.rewriteLog("log", id(_) == 30L)(set(30L, "c")))
+    assert(lateJobs == 2, s"$lateJobs jobs")
     assert(!cat.bucketRefs("log").values.exists(Set(after(2), late)))
     assert(cat.bucketRefs("log")(0) == refs(0) && cat.bucketRefs("log")(3) == after(3))
     assert(rows.filter(_._1 == 30L).map(_._2).sorted == Seq("c", "c"))
+    // every live ref is indexed now (a rewrite seeds its own): only the write runs
+    val (_, warmJobs) = countJobs(cat.rewriteLog("log", id(_) == 3L)(set(3L, "d")))
+    assert(warmJobs == 1, s"$warmJobs jobs")
 
-    // a rewrite to zero rows drops its ref
+    // a rewrite to zero rows drops its ref and writes nothing
     val n = cat.bucketRefs("log").size
-    cat.rewriteLog("log", $"id".isin(1L, 10L))(_.filter(!$"id".isin(1L, 10L)))
+    val gone = Set(1L, 10L)
+    val (_, dropJobs) = countJobs(
+      cat.rewriteLog("log", r => gone(id(r)))(_.filterNot(r => gone(id(r)))))
+    assert(dropJobs == 0, s"$dropJobs jobs")
     assert(cat.bucketRefs("log").size == n - 1 && !cat.bucketRefs("log").contains(0))
     assert(rows.map(_._1).sorted == Seq(2L, 3L, 20L, 30L, 30L))
-    // columns stay the table's
+    // columns stay the table's: by count, by type, and by name and type
+    // for a row that carries a schema, as the index's rows do
     intercept[IllegalArgumentException](
-      cat.rewriteLog("log", $"id" === 2L)(_.withColumn("v", lit(1))))
+      cat.rewriteLog("log", id(_) == 2L)(_.map(r => Row(id(r)))))
+    intercept[IllegalArgumentException](
+      cat.rewriteLog("log", id(_) == 2L)(_.map(r => Row(id(r), 1))))
+    val swapped = StructType(Seq(StructField("v", LongType), StructField("id", StringType)))
+    intercept[IllegalArgumentException](cat.rewriteLog("log", id(_) == 2L)(_.map(r =>
+      new GenericRowWithSchema(Array(id(r), r.getString(1)), swapped))))
+    val indexed = cat.logViews("log", new Catalog.LogView[Seq[Row]](identity)).flatten
+    assert(multiset(indexed.map(r => (id(r), r.getString(1)))) == multiset(rows))
   }
 
   test("compactLog folds adopted, appended and rewritten refs to the same multiset of rows") {
     val cat = new Catalog(spark, tmpDir("catfold"))
     cat.overwrite("log", Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("id", "v"))
     (1 to 20).foreach(i => cat.appendLog("log", Seq((i % 5L, s"r$i"), (1L, "a")).toDF("id", "v")))
-    cat.rewriteLog("log", $"id" === 2L)(_.withColumn("v",
-      when($"id" === 2L, concat($"v", lit("!"))).otherwise($"v")))
+    cat.rewriteLog("log", _.getAs[Long]("id") == 2L)(_.map(r =>
+      if (r.getAs[Long]("id") == 2L) Row(2L, r.getString(1) + "!") else r))
     def rows = cat.read("log").as[(Long, String)].collect().toSeq
     val before = rows
     // 21 refs, less the 5 holding id 2 that the rewrite folded into one

@@ -198,12 +198,12 @@ class FunctionsSpec extends SparkTestBase {
         .limit(100)
       val lsh = emb.select(
         VectorFunctions.lshTableSignatures($"embedding", 4, 4).as("fast"),
-        VectorFunctions.lshTableSignaturesHof($"embedding", 4, 4).as("ref"))
+        HofReference.lshTableSignatures($"embedding", 4, 4).as("ref"))
       assert(lsh.filter(not($"fast" <=> $"ref")).isEmpty)
 
       val mf = docs.select(
         TextFunctions.maxTokenFreq($"text").as("fast"),
-        TextFunctions.maxTokenFreqHof($"text").as("ref"))
+        HofReference.maxTokenFreq($"text").as("ref"))
       assert(mf.filter(not($"fast" <=> $"ref")).isEmpty)
 
       val mhh = docs.filter(size(sh) > 0).select(
@@ -218,7 +218,7 @@ class FunctionsSpec extends SparkTestBase {
     val got = docs.select(
       $"doc_id",
       TextFunctions.maxTokenFreq($"text").as("fast"),
-      TextFunctions.maxTokenFreqHof($"text").as("ref"))
+      HofReference.maxTokenFreq($"text").as("ref"))
     assert(got.filter(not($"fast" <=> $"ref")).isEmpty)
     // "the" appears twice in doc 0
     val m = got.select($"doc_id", $"fast").as[(Long, Int)].collect().toMap
@@ -412,7 +412,7 @@ class FunctionsSpec extends SparkTestBase {
       .limit(100)
     val got = emb.select(
       VectorFunctions.lshTableSignatures($"embedding", 4, 4).as("fast"),
-      VectorFunctions.lshTableSignaturesHof($"embedding", 4, 4).as("ref"))
+      HofReference.lshTableSignatures($"embedding", 4, 4).as("ref"))
     assert(got.filter(not($"fast" <=> $"ref")).isEmpty)
   }
 
@@ -422,7 +422,7 @@ class FunctionsSpec extends SparkTestBase {
       .crossJoin(emb.limit(50).select($"vec_id".as("ib"), $"embedding".as("vb")))
     val got = pairs.select(
       VectorFunctions.cosine($"va", $"vb").as("fast"),
-      VectorFunctions.cosineHof($"va", $"vb").as("ref"))
+      HofReference.cosine($"va", $"vb").as("ref"))
     assert(got.filter(not($"fast" <=> $"ref")).isEmpty)
   }
 
@@ -438,7 +438,7 @@ class FunctionsSpec extends SparkTestBase {
       ).toDF("a", "b", "sa", "sb")
       val r = vecs.select(
         VectorFunctions.cosine($"a", $"b").as("cos"),
-        VectorFunctions.cosineHof($"a", $"b").as("cosRef"),
+        HofReference.cosine($"a", $"b").as("cosRef"),
         Dedup.jaccardLongSets(sort_array($"sa"), sort_array($"sb"),
           assumeSorted = true).as("jac"),
         Dedup.jaccard($"sa", $"sb").as("jacRef"))
@@ -448,7 +448,7 @@ class FunctionsSpec extends SparkTestBase {
       val mism = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f)))
         .toDF("a", "b")
         .select(VectorFunctions.cosine($"a", $"b").as("fast"),
-          VectorFunctions.cosineHof($"a", $"b").as("ref"))
+          HofReference.cosine($"a", $"b").as("ref"))
       assert(mism.filter($"fast".isNotNull || $"ref".isNotNull).isEmpty)
     } finally spark.conf.set("spark.sql.codegen.fallback", old)
   }

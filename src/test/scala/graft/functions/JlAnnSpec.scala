@@ -52,7 +52,7 @@ class JlAnnSpec extends SparkTestBase {
       .select(VectorFunctions.jlProject($"embedding", 24).as("pv"))
     val diff = df.select(
         VectorFunctions.lshTableSignaturesLit($"pv", 8, 4, dIn = 24).as("a"),
-        VectorFunctions.lshTableSignaturesHof($"pv", 8, 4).as("b"))
+        HofReference.lshTableSignatures($"pv", 8, 4).as("b"))
       .filter(not($"a" <=> $"b")).count()
     assert(diff == 0L)
   }

@@ -6,7 +6,7 @@ import graft.SparkTestBase
 
 /** Pins the fused PqEncode kernel bit-identical to the r15 DataFrame
   * formulation (posexplode × broadcast codebook join × argmin window ×
-  * regroup, kept as pqEncodeHof) over the whole fixture embedding
+  * regroup, kept as HofReference.pqEncode) over the whole fixture embedding
   * corpus: same codes per subspace (L2 argmin, ties to the lower
   * code under Spark's total double order) and the same reconstructed
   * squared norm.
@@ -22,7 +22,7 @@ class PqEncodeSpec extends SparkTestBase {
       codes = 16)
     val fused = VectorFunctions.pqEncode(emb, "vec_id", "embedding", cb,
       m, subDim)
-    val ref = VectorFunctions.pqEncodeHof(emb, "vec_id", "embedding", cb,
+    val ref = HofReference.pqEncode(emb, "vec_id", "embedding", cb,
       m, subDim)
     val joined = fused.as("f")
       .join(ref.as("r"), col("f.__eid") === col("r.__eid"), "full_outer")

@@ -81,24 +81,15 @@ class MutationOpsSpec extends SparkTestBase {
   }
 
   test("stageDeletes allocates sequential ids and dedups vs pending (O15)") {
-    val pending = Seq((3L, """DELETE FROM t WHERE "id" = '1'""", false))
-      .toDF("QueryId", "DeleteQuery", "ExecutedFlag")
-    val keys = Seq(("1", 0L), ("2", 1L), ("2", 2L), ("4", 3L))
-      .toDF("id", "ord")
-    val got = MutationOps.stageDeletes(pending, keys, "t", Seq("id"),
-      "ev9", baseQueryId = 3L, lit("2026-01-01T00:00:00Z"), col("ord"))
-    val rows = got.orderBy("QueryId")
-      .select("QueryId", "DeleteQuery", "EventId", "ExecutedFlag", "target_table")
-      .collect()
+    val pending = Set("""DELETE FROM t WHERE "id" = '1'""")
+    val keys = Seq(("1", 0L), ("2", 1L), ("2", 2L), ("4", 3L)).toDF("id", "ord")
+      .orderBy("ord").select(MutationOps.renderDeleteQuery("t", Seq("id")),
+        MutationOps.pkValues(Seq("id")))
+      .as[(String, Map[String, String])].collect().toSeq
+    val got = MutationOps.stageDeletes(keys, pending, baseQueryId = 3L)
     // id=1 already pending -> dropped; id=2 duplicated in batch -> one row
-    assert(rows.length == 2)
-    assert(rows.map(_.getLong(0)).toSeq == Seq(4L, 5L))
-    assert(rows(0).getString(1) == """DELETE FROM t WHERE "id" = '2'""")
-    assert(rows(1).getString(1) == """DELETE FROM t WHERE "id" = '4'""")
-    assert(rows.forall(r => r.getString(2) == "ev9" && !r.getBoolean(3)
-      && r.getString(4) == "t"))
-    val pkm = got.filter($"DeleteQuery".contains("'4'"))
-      .select("pk_values").as[Map[String, String]].head()
-    assert(pkm == Map("id" -> "4"))
+    assert(got == Seq(
+      (4L, """DELETE FROM t WHERE "id" = '2'""", Map("id" -> "2")),
+      (5L, """DELETE FROM t WHERE "id" = '4'""", Map("id" -> "4"))))
   }
 }

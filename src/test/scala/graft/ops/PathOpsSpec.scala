@@ -37,20 +37,23 @@ class PathOpsSpec extends SparkTestBase {
   }
 
   test("nextVersion = MAX+1, null -> 0 (data-query.py:70-85)") {
-    val ctrl = Seq(("a.csv", 1L), ("a.csv", 2L), ("b.csv", 7L))
-      .toDF("file_name", "file_version")
-    assert(PathOps.nextVersion(ctrl, "a.csv") == 3L)
-    assert(PathOps.nextVersion(ctrl, "b.csv") == 8L)
-    assert(PathOps.nextVersion(ctrl, "new.csv") == 1L)
+    val maxVersion = Map("a.csv" -> 2L, "b.csv" -> 7L)
+    val got = PathOps.assignVersions(Seq(("a.csv", 1L), ("b.csv", 2L), ("new.csv", 3L)),
+      maxVersion.get)(_._1)(Ordering.by(_._2))
+    assert(got.map { case ((file, _), v) => file -> v }.toMap ==
+      Map("a.csv" -> 3L, "b.csv" -> 8L, "new.csv" -> 1L))
   }
 
   test("assignVersions continues per-file history across a batch") {
-    val ctrl = Seq(("a.csv", 2L)).toDF("file_name", "file_version")
-    val arrivals = Seq(("a.csv", 10L), ("a.csv", 20L), ("b.csv", 30L))
-      .toDF("file_name", "ord")
-    val got = PathOps.assignVersions(ctrl, arrivals, col("ord"))
-      .select("file_name", "file_version").as[(String, Long)]
-      .collect().toSet
-    assert(got == Set(("a.csv", 3L), ("a.csv", 4L), ("b.csv", 1L)))
+    // arrivals take versions in arrival order, whatever order they come in
+    val got = PathOps.assignVersions(Seq(("a.csv", 20L), ("b.csv", 30L), ("a.csv", 10L)),
+      Map("a.csv" -> 2L).get)(_._1)(Ordering.by(_._2))
+    assert(got == Seq((("a.csv", 10L), 3L), (("a.csv", 20L), 4L), (("b.csv", 30L), 1L)))
+  }
+
+  test("sparkStringOrder orders strings as a Spark sort does") {
+    val ids = Seq("b", "a", null, "\uFFFD", "\uD83D\uDE00", "A", "ab", "")
+    val want = ids.toDF("id").orderBy(col("id").asc).as[String].collect().toSeq
+    assert(ids.sorted(PathOps.sparkStringOrder) == want)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkTestBase
 import graft.catalog.Catalog
@@ -195,6 +195,21 @@ class PipelineSpec extends SparkTestBase {
     assert(!p.catalog.exists("header"))
   }
 
+  test("CSV probe: empty and case-only-distinct header names match Spark's CSV reader") {
+    val (p, _, landing) = freshPipeline()
+    for ((file, csv) <- Seq(
+        "gap.csv" -> "id,,name\n1,x,alice\n",
+        "cased.csv" -> "id,ID,Name,name,NAME\n1,2,a,b,c\n",
+        "blanks.csv" -> "id, ,\"\"\n1,2,3\n")) {
+      land(landing, "b1", s"insert/$file", csv)
+      val got = p.readLandedCsv("b1", s"insert/$file")
+      val want = spark.read.option("header", "true")
+        .csv(Paths.get(landing, "b1", "insert", file).toString)
+      assert(got.schema == want.schema, s"$file: ${got.schema} vs ${want.schema}")
+      assert(got.collect().toSeq == want.collect().toSeq)
+    }
+  }
+
   test("CSV probe: quoted and duplicated header names match Spark's CSV reader") {
     val (p, _, landing) = freshPipeline()
     for ((file, csv) <- Seq(
@@ -214,10 +229,10 @@ class PipelineSpec extends SparkTestBase {
     val notifier = new InMemoryNotifier
     val counting = new Catalog(spark, tmpDir("wh")) {
       val rewrites = scala.collection.mutable.Map[String, Int]()
-      override def rewriteLog(name: String, matching: Column,
-          hint: Option[Catalog.RefHint])(f: DataFrame => DataFrame): Unit = {
+      override def rewriteLog(name: String, matching: Row => Boolean)(
+          f: Seq[Row] => Seq[Row]): Unit = {
         rewrites(name) = rewrites.getOrElse(name, 0) + 1
-        super.rewriteLog(name, matching, hint)(f)
+        super.rewriteLog(name, matching)(f)
       }
     }
     val p = new Pipeline(spark, counting, notifier, landing)
@@ -340,6 +355,30 @@ class PipelineSpec extends SparkTestBase {
     assert(p2.registerArrivals(events).size == 5)
   }
 
+  test("maxControlRows bounds a call's control rows, not the control logs' history") {
+    val landing = tmpDir("landing")
+    val p = new Pipeline(spark, new Catalog(spark, tmpDir("wh")),
+      new InMemoryNotifier, landing, maxControlRows = 3)
+    land(landing, "b1", "insert/customers.csv", "customer_id,name\n1,a\n2,b\n3,c\n")
+    land(landing, "b1", "delete/customers.csv", "customer_id\n1\n2\n")
+    def approve(id: String, op: String): Unit = p.processApproval(ApprovalEvent(id, "approve",
+      s"$op/customers.csv", "customers", op, "b1", None, None, None, None))
+    val rounds = (1 to 3).map { i =>
+      val versions = p.registerArrivals(Seq(FileEvent("b1", "insert/customers.csv", s"i$i"),
+        FileEvent("b1", "delete/customers.csv", s"d$i")))
+      approve(s"i$i", "insert")
+      approve(s"d$i", "delete")
+      (versions, p.executePendingDeletes().sorted)
+    }
+    // each round's lookups see the whole history of logs past the guard
+    assert(rounds.last == (Map("d3" -> 5L, "i3" -> 6L), Seq(5L, 6L)))
+    assert(p.catalog.read(p.ControlTable).count() == 6)
+    assert(p.catalog.read(p.DeleteControlTable).count() == 6)
+    assert(p.catalog.read(p.ControlTable).filter("NOT is_processed").isEmpty)
+    assert(p.catalog.read("customers").as[(String, String)].collect().toSeq ==
+      Seq.fill(3)(("3", "c")))
+  }
+
   test("catalog survives a lost pointer file (crash-recovery fallback)") {
     val root = tmpDir("wh")
     val cat = new Catalog(spark, root)
@@ -351,11 +390,12 @@ class PipelineSpec extends SparkTestBase {
     assert(cat.read("t").as[String].collect().toSeq == Seq("x"))
   }
 
-  /** A Catalog that calls `onRead` each time a read of `table` has
-    * resolved its version: another writer committing while the caller
-    * still works from that read. Catalogs of these specs keep 8 old
-    * versions, so that the caller's stale read still finds its files and
-    * a lost update shows as a missing row, not as a vanished file.
+  /** A Catalog that calls `onRead` each time a read or a log lookup of
+    * `table` has resolved its version: another writer committing while
+    * the caller still works from that read. Catalogs of these specs keep
+    * 8 old versions, so that the caller's stale read still finds its
+    * files and a lost update shows as a missing row, not as a vanished
+    * file.
     */
   private class ReadHook(root: String, table: String)
       extends Catalog(spark, root, graceVersions = 8) {
@@ -364,6 +404,11 @@ class PipelineSpec extends SparkTestBase {
       val df = super.read(name)
       if (name == table) onRead()
       df
+    }
+    override def logViews[V](name: String, view: Catalog.LogView[V]): Seq[V] = {
+      val views = super.logViews(name, view)
+      if (name == table) onRead()
+      views
     }
   }
 
@@ -506,14 +551,49 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("a control lookup on a log of MaxControlRefs refs runs one job") {
-    val (p, _, _) = freshPipeline()
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    val p = new Pipeline(spark, new Catalog(spark, root), new InMemoryNotifier, landing)
     // the empty table createIfAbsent made starts the log with no refs,
     // so registration k leaves k refs
     (1 to p.MaxControlRefs).foreach(i =>
       p.registerArrival(FileEvent("b1", s"insert/f$i.csv", s"ev$i")))
     assert(p.catalog.bucketRefs(p.ControlTable).size == p.MaxControlRefs)
+    // warm: every ref was seeded by the catalog that committed it
     val (done, jobs) = countJobs(p.alreadyProcessed("ev1"))
-    assert(!done && jobs == 1, s"$jobs jobs")
+    assert(!done && jobs == 0, s"$jobs jobs")
+    // cold: a fresh Catalog on the same root reads all refs in one job
+    val cold = new Pipeline(spark, new Catalog(spark, root), new InMemoryNotifier, landing)
+    val (coldDone, coldJobs) = countJobs(cold.alreadyProcessed("ev1"))
+    assert(!coldDone && coldJobs == 1, s"$coldJobs jobs")
+    assert(countJobs(cold.alreadyProcessed("ev2"))._2 == 0)
+  }
+
+  test("registration versions continue MAX+1 per file, null -> 0 (data-query.py:70-85)") {
+    val (p, _, landing) = freshPipeline()
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    p.catalog.createIfAbsent(p.ControlTable, ProcessedFile.schema)
+    p.catalog.overwrite(p.ControlTable, spark.createDataFrame(Seq(
+      Row("a.csv", "h1", 1L, true, "b1", "insert", Status.Approved, ts),
+      Row("a.csv", "h2", 2L, true, "b1", "update", Status.Approved, ts),
+      Row("b.csv", "h3", 7L, true, "b1", "insert", Status.Rejected, null),
+      Row("c.csv", "h4", null, true, "b1", "insert", Status.Failed, null)).asJava,
+      ProcessedFile.schema))
+    assert(p.registerArrival(FileEvent("b1", "insert/a.csv", "e1")).contains(3L))
+    assert(p.registerArrival(FileEvent("b1", "delete/b.csv", "e2")).contains(8L))
+    assert(p.registerArrival(FileEvent("b1", "insert/c.csv", "e3")).contains(1L))
+    assert(p.registerArrival(FileEvent("b1", "insert/new.csv", "e4")).contains(1L))
+    // a batch continues each file's history in event-id order
+    assert(p.registerArrivals(Seq(FileEvent("b1", "update/a.csv", "e6"),
+      FileEvent("b1", "insert/a.csv", "e5"), FileEvent("b1", "insert/new.csv", "e7"))) ==
+      Map("e5" -> 4L, "e6" -> 5L, "e7" -> 2L))
+    // staged QueryIds continue COALESCE(MAX(QueryId), 0) + 1 the same way
+    p.catalog.registerPrimaryKey("a", Seq("id"))
+    land(landing, "b1", "delete/a.csv", "id\n7\n8\n")
+    p.processApproval(approval("e6", "approve", "delete", file = "a.csv", table = "a"))
+    land(landing, "b1", "delete/a.csv", "id\n8\n9\n")
+    p.processApproval(approval("e5", "approve", "delete", file = "a.csv", table = "a"))
+    assert(p.catalog.read(p.DeleteControlTable).as[DeleteControl].collect()
+      .map(r => r.QueryId -> r.pk_values("id")).toSet == Set(1L -> "7", 2L -> "8", 3L -> "9"))
   }
 
   test("registration + approval leave the history ref's dir as it is") {
