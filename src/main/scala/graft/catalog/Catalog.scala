@@ -340,19 +340,28 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     else Some(m)
   }
 
-  /** [[appendLog]] of rows already on the driver, as one file. The new
-    * ref is seeded into the log index (see [[logViews]]), so no lookup of
-    * this Catalog reads it back. An empty batch commits nothing.
+  /** [[appendLog]] of rows computed on the driver from the log itself,
+    * as one file. Inside the commit lock, `rows` gets `view` of each live
+    * ref as [[logViews]] returns it, and returns the batch to append
+    * beside a result for the caller. The lookup and the append are one
+    * locked step, so an id the batch derives from the log (a file's next
+    * version, the next QueryId) cannot collide with one another writer
+    * assigns at the same time. The new ref is seeded into the log index,
+    * so no lookup of this Catalog reads it back. An empty batch commits
+    * nothing.
     */
-  def appendLogRows(name: String, rows: Seq[Row]): Unit = locked(name) {
-    val schemaDDL = logManifest(name).getOrElse(
-      throw new IllegalArgumentException(s"table $name does not exist")).schemaDDL
-    val schema = StructType.fromDDL(schemaDDL)
-    val batch = asRead(name, rows, schema)
+  def appendLogRows[V, T](name: String, view: Catalog.LogView[V])(
+      rows: Seq[V] => (Seq[Row], T)): T = locked(name) {
+    val m = logManifest(name).getOrElse(
+      throw new IllegalArgumentException(s"table $name does not exist"))
+    val (out, result) = rows(viewsOf(name, m, view))
+    val schema = StructType.fromDDL(m.schemaDDL)
+    val batch = asRead(name, out, schema)
     if (batch.nonEmpty) {
       appendLog(name, spark.createDataFrame(batch.asJava, schema).coalesce(1))
-      seed(name, currentVersion(name), schemaDDL, batch)
+      seed(name, currentVersion(name), m.schemaDDL, batch)
     }
+    result
   }
 
   /** UPDATE for a log table, in O(touched refs), on the driver: under the
@@ -426,7 +435,12 @@ class Catalog(spark: SparkSession, root: String, val graceVersions: Int = 0,
     */
   def logViews[V](name: String, view: Catalog.LogView[V]): Seq[V] = {
     require(exists(name), s"table $name does not exist")
-    val refs = indexedRefs(name, manifestAt(name, currentVersionDir(name)))
+    viewsOf(name, manifestAt(name, currentVersionDir(name)), view)
+  }
+
+  /** `view` of each ref of log version `m`, from the log index. */
+  private def viewsOf[V](name: String, m: Manifest, view: Catalog.LogView[V]): Seq[V] = {
+    val refs = indexedRefs(name, m)
     logIndex.synchronized {
       refs.map { case (_, r) =>
         r.views.getOrElseUpdate(view, view.build(r.rows)).asInstanceOf[V] }

@@ -80,15 +80,25 @@ private[graft] object GenIndex {
     /** A build: under the lock, clear every prior artifact at indexDir
       * (a stale stage or old-parameter generation must never survive
       * into a rebuilt index — r12 ADVICE item 1), run `body`, which
-      * writes generation 0, and commit its snapshot as v0.
+      * writes generation 0, and commit its snapshot as v0 under a fresh
+      * [[BuildIdKey]] (or the one `body` put in its extras).
       */
     def rebuild(spark: SparkSession, indexDir: String)(body: => Snapshot): Unit =
       locked(spark, indexDir) {
         clearIndexState(spark, indexDir,
           s"prior $what state (it must not survive a rebuild)")
         val (tables, extras) = body
-        commit(spark, indexDir, Manifest(0, "build", tables, extras))
+        commit(spark, indexDir, Manifest(0, "build", tables,
+          extras.updatedWith(BuildIdKey)(_.orElse(Some(newBuildId())))))
       }
+
+    /** `extras` of a commit on top of `cur`, keeping `cur`'s build id
+      * unless `extras` names a new one (a retrain). A manifest written
+      * before build ids existed gets a fresh one at its next commit.
+      */
+    private def sameBuild(cur: Manifest, extras: Map[String, String]) =
+      if (extras.contains(BuildIdKey)) extras
+      else extras + (BuildIdKey -> cur.buildId.getOrElse(newBuildId()))
 
     /** An append or delete: under the lock, a `commitId` that already
       * committed ([[isRedelivered]]) is a no-op; otherwise `body` writes
@@ -112,7 +122,8 @@ private[graft] object GenIndex {
                 s"$indexDir/$p$gen", s"empty $what generation (nothing to commit)"))
             case Some((tables, extras)) =>
               val cid = commitId.getOrElse(java.util.UUID.randomUUID().toString)
-              val m = Manifest(gen, cid, tables, withAppendId(extras, cid))
+              val m = Manifest(gen, cid, tables,
+                withAppendId(sameBuild(cur, extras), cid))
               commit(spark, indexDir, m)
               after(m)
           }
@@ -129,7 +140,8 @@ private[graft] object GenIndex {
       val cur = current(spark, indexDir)
       val gen = cur.version + 1
       body(cur, gen).foreach { case (tables, extras) =>
-        commit(spark, indexDir, Manifest(gen, s"${kind}_g$gen", tables, extras))
+        commit(spark, indexDir,
+          Manifest(gen, s"${kind}_g$gen", tables, sameBuild(cur, extras)))
         GenIndex.vacuum(spark, indexDir, genPrefixes, graceVersions = 1, what)
       }
     }
@@ -184,6 +196,37 @@ private[graft] object GenIndex {
       extras.getOrElse(key, throw new IllegalStateException(
         s"$what manifest v$version has no '$key' extra — " +
           "built by an incompatible version?"))
+    def buildId: Option[String] = extras.get(BuildIdKey)
+  }
+
+  /** The manifest extra naming the write that laid the index out: a
+    * build, or a retrain, which rebuilds an index from its own rows.
+    * Every later commit carries it forward. Generation dir names restart
+    * at every rebuild, so a path alone does not identify what a dir
+    * holds; the build id does, and the driver memos of data that is
+    * fixed per build (a table's schema, trained centroids) are keyed by
+    * it. A manifest written before the key existed has none, and those
+    * memos read the index each time until its next commit records one.
+    */
+  val BuildIdKey = "build_id"
+
+  def newBuildId(): String = java.util.UUID.randomUUID().toString
+
+  /** A driver memo of values fixed per build ([[BuildIdKey]]): one
+    * value per key, tagged with the build it came from, so a rebuild
+    * replaces it rather than adding to it, and a manifest with no build
+    * id loads the value each time.
+    */
+  final class BuildMemo[K, V] {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[K, (String, V)]()
+    def put(key: K, buildId: String, v: V): Unit = memo.put(key, (buildId, v))
+    def apply(key: K, m: Manifest)(load: => V): V = m.buildId match {
+      case None => load
+      case Some(id) =>
+        val hit = memo.get(key)
+        if (hit != null && hit._1 == id) hit._2
+        else { val v = load; put(key, id, v); v }
+    }
   }
 
   private def hfs(spark: SparkSession, p: String
@@ -375,43 +418,54 @@ private[graft] object GenIndex {
     }
   }
 
-  /** The table's data schema derived from ONE committed fragment's
-    * parquet footer (a leaf-dir read, so the partition column is
-    * excluded), falling back to `fallbackDDL` only for a table with no
-    * committed bucket at all. This is [[readBuckets]]' empty-frame
-    * schema companion — feed it through the BY-NAME parameter so the
-    * footer is only opened on the all-buckets-absent path, never per
-    * serve. Shared here because both TextIndex and VectorIndex derive
-    * it from the same generation layout (second-review finding: two
-    * verbatim copies would drift).
-    */
-  // Memoized per leaf dir: a generation dir is immutable once its
-  // manifest commits, so its footer schema can never change — and
-  // readBuckets now evaluates schemaDDL on every call (it feeds the
-  // reader's explicit schema), so the footer read must be one per
-  // (JVM, generation dir), not one per serve.
-  private val footerDDLCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // the schema of each (index dir, table) of its current build; see footerDDL
+  private val tableDDLs = new BuildMemo[(String, String), String]
 
-  def footerDDL(spark: SparkSession, indexDir: String,
-      refs: Refs, part: String,
-      fallbackDDL: String): String =
-    refs.headOption.map { case (k, gs) =>
-      footerDDLCache.computeIfAbsent(s"$indexDir/${gs.head}/$part=$k",
-        p => spark.read.parquet(p).schema.toDDL)
+  /** Note the schema a write of `table` under build `buildId` gives its
+    * generation dirs: the written frame's columns without the partition
+    * column, nullable, as a footer read of its leaf dirs returns them.
+    */
+  def recordDDL(indexDir: String, buildId: String, table: String,
+      written: org.apache.spark.sql.types.StructType, part: String): Unit =
+    tableDDLs.put((indexDir, table), buildId,
+      org.apache.spark.sql.graftbridge.PlanBridge.asNullable(
+        org.apache.spark.sql.types.StructType(written.filterNot(_.name == part))).toDDL)
+
+  /** The data schema of `table` in the build of manifest `m`: the
+    * schema [[recordDDL]] noted when the build's writes ran in this JVM,
+    * else ONE committed fragment's parquet footer (a leaf-dir read, so
+    * the partition column is excluded), falling back to `fallbackDDL`
+    * only for a table with no committed bucket at all. This is
+    * [[readBuckets]]' schema companion, which feeds it to the reader as
+    * the explicit schema, and it is shared because TextIndex and
+    * VectorIndex derive it from the same generation layout.
+    *
+    * Every generation dir of a table in one build holds the same
+    * columns (readBuckets reads them all with one schema), so the memo
+    * keeps ONE schema per (index dir, table), tagged with its build id:
+    * a rebuild reuses the `*_g0` paths with possibly other columns, and
+    * its new build id is what tells the memo apart. Driver memory is
+    * bounded by the index dirs and tables, not by their generations.
+    */
+  def footerDDL(spark: SparkSession, indexDir: String, m: Manifest,
+      table: String, part: String, fallbackDDL: String): String =
+    m.refs(table).headOption.map { case (k, gs) =>
+      tableDDLs((indexDir, table), m)(
+        spark.read.parquet(s"$indexDir/${gs.head}/$part=$k").schema.toDDL)
     }.getOrElse(fallbackDDL)
 
-  /** Read a SINGLE immutable artifact dir (centroids, codebooks) with
-    * its schema memoized per path — same contract as [[footerDDL]]:
-    * the dir is written once per generation and never modified, and
-    * its column set is a layout constant, so the per-read footer
-    * schema-inference job is paid once per (JVM, dir), not once per
-    * serve/append that resolves the artifact.
+  /** Read a SINGLE artifact dir of the build of `m` (PQ codebooks) with
+    * its schema memoized per build, as [[footerDDL]] does: the per-read
+    * footer schema-inference job is paid once per (JVM, build), not once
+    * per serve that resolves the artifact.
     */
-  def readStableDir(spark: SparkSession, path: String): DataFrame =
+  def readStableDir(spark: SparkSession, indexDir: String, m: Manifest,
+      name: String): DataFrame = {
+    val path = s"$indexDir/$name"
     spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
-      footerDDLCache.computeIfAbsent(path,
-        p => spark.read.parquet(p).schema.toDDL))).parquet(path)
+      tableDDLs((indexDir, name), m)(spark.read.parquet(path).schema.toDDL)))
+      .parquet(path)
+  }
 
   /** Newest manifest whose referenced generation dirs ALL still
     * exist — the fallback selector for a lost `_current` pointer

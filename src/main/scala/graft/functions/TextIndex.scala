@@ -100,17 +100,17 @@ object TextIndex {
     * the manifest — derived from a real generation's footer when one
     * exists (build accepts any id type, so a hardcoded doc_id would
     * silently widen a string-id index's union), falling back to the
-    * long-id shape for a genuinely empty index. Evaluated lazily by
-    * readBuckets (by-name), so serves never pay the footer read.
+    * long-id shape for a genuinely empty index. Memoized per build
+    * (GenIndex.footerDDL), so serves pay the footer read at most once.
     */
   private def postingsDDL(spark: SparkSession, indexDir: String,
       m: GenIndex.Manifest): String =
-    GenIndex.footerDDL(spark, indexDir, m.refs("postings"), "__tb",
+    GenIndex.footerDDL(spark, indexDir, m, "postings", "__tb",
       "term string, doc_id bigint, dl bigint, tf bigint, pss array<int>")
 
   private def doclensDDL(spark: SparkSession, indexDir: String,
       m: GenIndex.Manifest): String =
-    GenIndex.footerDDL(spark, indexDir, m.refs("doclens"), "__db",
+    GenIndex.footerDDL(spark, indexDir, m, "doclens", "__db",
       "doc_id bigint, dl bigint")
 
   /** All live tombstone ids — bounded by deletes since the last
@@ -120,7 +120,7 @@ object TextIndex {
       m: GenIndex.Manifest): DataFrame =
     GenIndex.readBuckets(spark, indexDir, m.refs("tombs"), "__db",
       m.refs("tombs").keys.toSeq, withBucketCol = false,
-      GenIndex.footerDDL(spark, indexDir, m.refs("tombs"), "__db",
+      GenIndex.footerDDL(spark, indexDir, m, "tombs", "__db",
         "doc_id bigint"))
 
   /** The per-doc LENGTH sidecar (doc_id, dl), bucketed by doc hash —

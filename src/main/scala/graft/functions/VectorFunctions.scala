@@ -89,8 +89,16 @@ object VectorFunctions {
     * nested-loop join.
     */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, nprobe: Int = 1): DataFrame = {
-    val (sup, cids, cvs) = superGroups(centroids)
+      centroids: DataFrame, nprobe: Int = 1): DataFrame =
+    ivfAssign(df, idCol, vecCol, Centroids.collect(centroids), nprobe)
+
+  /** [[ivfAssign]] against centroids already on the driver: no job
+    * collects them, and their super-quantizer groups are built once per
+    * [[Centroids]] value, not once per call.
+    */
+  private[graft] def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Centroids, nprobe: Int): DataFrame = {
+    val (sup, cids, cvs) = centroids.groups
     import org.apache.spark.sql.graftbridge.ColumnBridge
     if (nprobe == 1) {
       val a = ColumnBridge.column(graft.functions.expressions.TwoLevelAssign(
@@ -104,6 +112,56 @@ object VectorFunctions {
           nprobe))
       df.select(col(idCol).as("__aid"), col(vecCol).as("__avec"),
         explode(a).as("__cid"))
+    }
+  }
+
+  /** A trained centroid set held on the driver: `ids` ascending, `vecs`
+    * aligned with them. Centroids are control data (numCentroids rows),
+    * so the assignment kernels take them as driver values; `groups` is
+    * the super-quantizer built from them once, on first use.
+    */
+  private[graft] final class Centroids(val ids: Array[Long],
+      val vecs: Array[Array[Float]]) {
+    require(ids.nonEmpty, "empty centroid set")
+    lazy val groups: (Array[Array[Float]], Array[Array[Long]],
+      Array[Array[Array[Float]]]) = superGroups(ids, vecs)
+
+    /** The (__cid, __cvec) frame the centroids are persisted as. */
+    def toDF(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      import spark.implicits._
+      ids.toSeq.zip(vecs).toDF("__cid", "__cvec")
+    }
+
+    /** The vector of the centroid a row's `cid` names, looked up per
+      * row in a plan literal: the join-free way to score a row against
+      * its assigned centroid. Needs the trained ids 0 until k.
+      */
+    def vectorOf(cid: Column): Column = {
+      require(ids.indices.forall(i => ids(i) == i),
+        "centroid lookup needs the trained ids 0 until k")
+      import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+      import org.apache.spark.sql.catalyst.util.GenericArrayData
+      import org.apache.spark.sql.graftbridge.ColumnBridge
+      import org.apache.spark.sql.types.{ArrayType, FloatType}
+      // unsafe float arrays: the literal ships with each task as
+      // k·dim·4 bytes, not as boxed floats
+      val table = Literal(new GenericArrayData(
+          vecs.map(v => UnsafeArrayData.fromPrimitiveArray(v): Any)),
+        ArrayType(ArrayType(FloatType, containsNull = false), containsNull = false))
+      element_at(ColumnBridge.column(table), (cid + 1).cast("int"))
+    }
+  }
+
+  private[graft] object Centroids {
+    /** Collect a (__cid, __cvec) frame to the driver (one job unless it
+      * is a local relation).
+      */
+    def collect(centroids: DataFrame): Centroids = {
+      val spark = centroids.sparkSession
+      import spark.implicits._
+      val cents = centroids.select(col("__cid").cast("long"), col("__cvec"))
+        .as[(Long, Array[Float])].collect().sortBy(_._1)
+      new Centroids(cents.map(_._1), cents.map(_._2))
     }
   }
 
@@ -134,18 +192,14 @@ object VectorFunctions {
     * childless the kernel could only fall back. Every centroid lands
     * in exactly one group, so ≥1 super survives.
     */
-  private def superGroups(centroids: DataFrame): (Array[Array[Float]],
-      Array[Array[Long]], Array[Array[Array[Float]]]) = {
-    val spark = centroids.sparkSession
-    import spark.implicits._
-    val cents = centroids.select(col("__cid").cast("long"), col("__cvec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "empty centroid set")
-    val nSuper = math.max(1, math.ceil(math.sqrt(cents.length.toDouble)).toInt)
-    val supers = trainKMeansDeterministic(cents.map(_._2), nSuper, iters = 2)
+  private def superGroups(ids: Array[Long], vecs: Array[Array[Float]]): (
+      Array[Array[Float]], Array[Array[Long]], Array[Array[Array[Float]]]) = {
+    val nSuper = math.max(1, math.ceil(math.sqrt(ids.length.toDouble)).toInt)
+    val supers = trainKMeansDeterministic(vecs, nSuper, iters = 2)
     val grouped = Array.fill(supers.length)(
       Vector.newBuilder[(Long, Array[Float])])
-    cents.foreach { case (cid, v) =>
+    ids.indices.foreach { i =>
+      val v = vecs(i)
       var best = 0
       var bc = Double.NegativeInfinity
       var si = 0
@@ -154,7 +208,7 @@ object VectorFunctions {
         if (c > bc) { bc = c; best = si }
         si += 1
       }
-      grouped(best) += ((cid, v))
+      grouped(best) += ((ids(i), v))
     }
     val kept = grouped.map(_.result()).zipWithIndex.filter(_._1.nonEmpty)
     (kept.map { case (_, si) => supers(si) },
@@ -163,8 +217,12 @@ object VectorFunctions {
   }
 
   def ivfAssignTwoLevel(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, coarseProbe: Int = 2): DataFrame = {
-    val (keptSupers, childCids, childVecs) = superGroups(centroids)
+      centroids: DataFrame, coarseProbe: Int = 2): DataFrame =
+    ivfAssignTwoLevel(df, idCol, vecCol, Centroids.collect(centroids), coarseProbe)
+
+  private[graft] def ivfAssignTwoLevel(df: DataFrame, idCol: String,
+      vecCol: String, centroids: Centroids, coarseProbe: Int): DataFrame = {
+    val (keptSupers, childCids, childVecs) = centroids.groups
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val assignCol = ColumnBridge.column(
       graft.functions.expressions.TwoLevelAssign(
@@ -187,7 +245,7 @@ object VectorFunctions {
   def ivfAssignTwoLevelTopK(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, coarseProbe: Int = 2,
       nAssign: Int = 2): DataFrame = {
-    val (keptSupers, childCids, childVecs) = superGroups(centroids)
+    val (keptSupers, childCids, childVecs) = Centroids.collect(centroids).groups
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val assignCol = ColumnBridge.column(
       graft.functions.expressions.TwoLevelAssignTopK(
@@ -285,13 +343,21 @@ object VectorFunctions {
     * 100 TB the corpus never moves, only the sample does).
     */
   def ivfTrainCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, sampleSize: Int = 256, iters: Int = 2): DataFrame = {
+      k: Int, sampleSize: Int = 256, iters: Int = 2): DataFrame =
+    trainCentroids(corpus, idCol, vecCol, k, sampleSize, iters)
+      .toDF(corpus.sparkSession)
+
+  /** [[ivfTrainCentroids]] kept on the driver, where training leaves
+    * them (ids 0 until k).
+    */
+  private[graft] def trainCentroids(corpus: DataFrame, idCol: String,
+      vecCol: String, k: Int, sampleSize: Int, iters: Int): Centroids = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val sample = corpus.orderBy(col(idCol)).limit(sampleSize)
       .select(col(vecCol)).as[Array[Float]].collect()
-    trainKMeansDeterministic(sample, k, iters).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toSeq.toDF("__cid", "__cvec")
+    val vecs = trainKMeansDeterministic(sample, k, iters)
+    new Centroids(vecs.indices.map(_.toLong).toArray, vecs)
   }
 
   /** Untrained first-N-ids centroids — kept as the degenerate baseline
@@ -308,24 +374,37 @@ object VectorFunctions {
     * trainKMeansDeterministic); probe the `nprobe` nearest centroid
     * buckets instead of the corpus. Complement to the hyperplane-LSH
     * path. Pass `centroids` to reuse a pre-trained/persisted set.
+    * Candidates are ranked by [[rankProbed]].
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, numCentroids: Int = 16,
       nprobe: Int = 4, centroids: Option[DataFrame] = None,
       sampleSize: Int = 256, trainIters: Int = 2): DataFrame = {
-    val cents = centroids.getOrElse(
-      ivfTrainCentroids(corpus, idCol, vecCol, numCentroids, sampleSize, trainIters))
-    val bucketed = ivfAssign(corpus, idCol, vecCol, cents)
+    val cents = centroids.map(Centroids.collect).getOrElse(
+      trainCentroids(corpus, idCol, vecCol, numCentroids, sampleSize, trainIters))
+    val bucketed = ivfAssign(corpus, idCol, vecCol, cents, 1)
       .select(col("__aid").as("neighbor_id"), col("__avec").as("__cv"), col("__cid"))
     val probes = ivfAssign(queries, idCol, vecCol, cents, nprobe)
       .select(col("__aid").as("query_id"), col("__avec").as("__qv"), col("__cid"))
+    rankProbed(probes.join(bucketed, Seq("__cid")), k)
+  }
+
+  /** Top-k of the probe ⋈ list candidates (query_id, __qv, neighbor_id,
+    * __cv, …): score each candidate on the map side, right after the
+    * join, then deduplicate and rank (query_id, neighbor_id, cos) rows,
+    * so no vector enters an aggregate key or an exchange. The rank
+    * filter plans as a partial WindowGroupLimit before the window's
+    * exchange. A pair reached twice (a duplicate query row, an id
+    * appended twice with the same vector) counts once; one id held
+    * with two different vectors ranks once per distinct cosine.
+    */
+  private[graft] def rankProbed(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    probes.join(bucketed, Seq("__cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("__qv"), col("__cv"))
+    candidates.filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        cosine(col("__qv"), col("__cv")).as("cos"))
       .distinct()
-      .withColumn("cos", cosine(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))

@@ -48,6 +48,28 @@ import org.apache.spark.sql.functions._
   * Commits, the writer lock, redelivery idempotency (`commitId`),
   * recover and vacuum are the shared generation protocol of
   * [[GenIndex.Store]] ([[store]]); reads stay lock-free.
+  *
+  * CONTROL DATA stays on the driver. A build and a retrain train their
+  * centroids on the driver and record a fresh build id
+  * ([[GenIndex.BuildIdKey]]) in the manifest; the trained centroids
+  * and their super-quantizer groups are memoized per index dir under
+  * that id, and the lists write records the lists' schema under it.
+  * Appends, compacts and serves of the build then assign through the
+  * driver centroids and read lists with the recorded schema, running
+  * no job to read centroids, count them, collect their groups or infer
+  * a footer schema; a JVM that did not write the build reads each once.
+  * The drift column `__cos` scores each row against its assigned
+  * centroid looked up per row in a plan literal, with the
+  * CosineSimilarity expression every drift baseline was computed with,
+  * so an append's drift ratio compares like with like, bit for bit.
+  *
+  * SERVE assigns the queries to their `nprobe` lists, opens only those
+  * lists' fragment dirs, joins probes to list rows on the list id and
+  * scores each candidate right after the join
+  * ([[VectorFunctions.rankProbed]]): the dedup and the top-k rank see
+  * (query_id, neighbor_id, cos) rows, so no vector is hashed into an
+  * aggregate key or crosses an exchange, and the rank filter runs as a
+  * partial WindowGroupLimit before its shuffle.
   */
 object VectorIndex {
 
@@ -133,25 +155,60 @@ object VectorIndex {
         s"${store.what} manifest v${m.version} records no centroids generation — " +
           "built by an incompatible version?"))
 
-  private def centroidsOf(spark: SparkSession, indexDir: String,
+  /** The centroids of each index dir's current build, on the driver. A
+    * centroid generation is immutable once a manifest names it and is
+    * replaced only by a build or a retrain, which record a new build id
+    * ([[GenIndex.BuildIdKey]]) and seed this memo with the centroids
+    * they trained; a dir committed by another JVM is read once per
+    * build. One entry per index dir.
+    */
+  private val driverCentroids =
+    new GenIndex.BuildMemo[String, VectorFunctions.Centroids]
+
+  private val CentroidsDDL = "__cid bigint, __cvec array<float>"
+
+  private def readCentroids(spark: SparkSession, indexDir: String,
       m: GenIndex.Manifest): DataFrame =
-    GenIndex.readStableDir(spark, s"$indexDir/${centroidsDir(m)}")
+    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(CentroidsDDL))
+      .parquet(s"$indexDir/${centroidsDir(m)}")
+
+  private def centroidsOf(spark: SparkSession, indexDir: String,
+      m: GenIndex.Manifest): VectorFunctions.Centroids =
+    driverCentroids(indexDir, m)(
+      VectorFunctions.Centroids.collect(readCentroids(spark, indexDir, m)))
+
+  /** Persist freshly trained centroids as `centroids_g{gen}` of the
+    * build `buildId` and seed the driver memo with them.
+    */
+  private def writeCentroids(spark: SparkSession, indexDir: String,
+      cents: VectorFunctions.Centroids, gen: Int, buildId: String): Unit = {
+    cents.toDF(spark).write.mode("overwrite").parquet(s"$indexDir/centroids_g$gen")
+    driverCentroids.put(indexDir, buildId, cents)
+  }
 
   /** The CURRENT snapshot's centroids (the frozen assignment
     * function) — the audit read specs and recall tooling use.
     */
   def centroids(spark: SparkSession, indexDir: String): DataFrame =
-    centroidsOf(spark, indexDir, store.current(spark, indexDir))
+    readCentroids(spark, indexDir, store.current(spark, indexDir))
 
   /** Write `rows` as the `lists_g{gen}` generation dir; returns the
     * list ids it actually holds (empty lists write no dir).
     */
   private def writeLists(spark: SparkSession, indexDir: String,
-      rows: DataFrame, gen: Int): Seq[Int] = {
+      rows: DataFrame, gen: Int, buildId: Option[String]): Seq[Int] = {
     rows.write.mode("overwrite").partitionBy("__cid")
       .parquet(s"$indexDir/lists_g$gen")
+    listsWritten(indexDir, buildId, rows)
     GenIndex.bucketsIn(spark, s"$indexDir/lists_g$gen", "__cid")
   }
+
+  /** A lists write records its schema for [[listsDDL]], so no later
+    * read of the build pays a footer job for it.
+    */
+  private def listsWritten(indexDir: String, buildId: Option[String],
+      rows: DataFrame): Unit =
+    buildId.foreach(GenIndex.recordDDL(indexDir, _, "lists", rows.schema, "__cid"))
 
   /** [[writeLists]] for the raw-vector mutations (build/append/retrain),
     * with the drift-stat ingredients folded INTO the write job (guide
@@ -169,12 +226,14 @@ object VectorIndex {
     * Returns (written list ids, row count, mean cosine, max share).
     */
   private def writeListsWithStats(spark: SparkSession, indexDir: String,
-      rows: DataFrame, gen: Int): (Seq[Int], Long, Double, Double) = {
+      rows: DataFrame, gen: Int,
+      buildId: Option[String]): (Seq[Int], Long, Double, Double) = {
     val dir = s"$indexDir/lists_g$gen"
     val obs = Observation(s"lists_g$gen")
-    rows.observe(obs, count(lit(1)).as("n"), sum(col("__cos")).as("s"))
+    val out = rows.observe(obs, count(lit(1)).as("n"), sum(col("__cos")).as("s"))
       .drop("__cos")
-      .write.mode("overwrite").partitionBy("__cid").parquet(dir)
+    out.write.mode("overwrite").partitionBy("__cid").parquet(dir)
+    listsWritten(indexDir, buildId, out)
     val written = GenIndex.bucketsIn(spark, dir, "__cid")
     // an empty-batch plan can collapse to an empty LocalRelation whose
     // write never executes the CollectMetrics node — a missing metric
@@ -278,15 +337,17 @@ object VectorIndex {
       // outgrow the default sample, so scale it (training cost is
       // ~sample·k per Lloyd step — still bounded, never corpus-sized)
       val effSample = math.max(sampleSize, 2 * k)
-      val cents = VectorFunctions.ivfTrainCentroids(
+      val cents = VectorFunctions.trainCentroids(
         corpus, idCol, vecCol, k, effSample, iters)
-      cents.write.mode("overwrite").parquet(s"$indexDir/centroids_g0")
+      val buildId = GenIndex.newBuildId()
+      writeCentroids(spark, indexDir, cents, 0, buildId)
       val lists = assignedLists(corpus, idCol, vecCol, cents, coarseProbe,
-        k, metaCols)
+        metaCols)
       val (written, n, meanCos, maxShare) =
-        writeListsWithStats(spark, indexDir, lists, 0)
+        writeListsWithStats(spark, indexDir, lists, 0, Some(buildId))
       (tables(listRefs(written, 0), "centroids_g0", Map.empty),
-        Map("flavor" -> "raw", "meta_cols" -> metaCols.mkString(","),
+        Map(GenIndex.BuildIdKey -> buildId,
+          "flavor" -> "raw", "meta_cols" -> metaCols.mkString(","),
           "num_centroids" -> numCentroids.toString,
           "sample_size" -> sampleSize.toString,
           "iters" -> iters.toString, "cell_target" -> cellTarget.toString,
@@ -302,19 +363,21 @@ object VectorIndex {
     * cross-generation read of a filtered index unresolvable).
     */
   private def assignedLists(corpus: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, coarseProbe: Option[Int], k: Int,
-      metaCols: Seq[String]): DataFrame = {
+      vecCol: String, cents: VectorFunctions.Centroids,
+      coarseProbe: Option[Int], metaCols: Seq[String]): DataFrame = {
     // __cos (assigned-vs-centroid cosine) rides the frame so the drift
     // stats can be OBSERVED on the write job (writeListsWithStats)
-    // instead of re-read + re-joined afterwards; one broadcast join
-    // map-side before the list exchange, 8 bytes/row through it, and
-    // the column is dropped before the writer.
-    val assigned = assignWith(corpus, idCol, vecCol, cents, coarseProbe, k)
+    // instead of re-read + re-joined afterwards; the assigned
+    // centroid's vector is looked up per row from the driver centroids
+    // (no join, no broadcast job), 8 bytes/row through the list
+    // exchange, and the column is dropped before the writer. A null
+    // vector assigns no list and is not indexed.
+    val assigned = assignWith(corpus, idCol, vecCol, cents, coarseProbe)
+      .filter(col("__cid").isNotNull)
       .select(col("__cid"), col("__aid").as("neighbor_id"),
         col("__avec").as("__cv"))
-      .join(broadcast(cents.select(col("__cid"), col("__cvec"))), "__cid")
-      .withColumn("__cos", VectorFunctions.cosine(col("__cv"), col("__cvec")))
-      .drop("__cvec")
+      .withColumn("__cos",
+        VectorFunctions.cosine(col("__cv"), cents.vectorOf(col("__cid"))))
     // repartition on the list id on BOTH paths: one file per list
     // instead of one per task per list (the r15 TextIndex lesson — a
     // raw 100× build measured ~26k files across 780 lists, and probed
@@ -420,17 +483,17 @@ object VectorIndex {
               "first (tombstones are id-level; compact purges them " +
               "physically, after which the id may be re-appended)")
       }
-      val cents = centroidsOf(spark, indexDir, cur)
-      // same auto rule as build: the frozen centroid count decides the path
-      val rows = assignedLists(corpus, idCol, vecCol, broadcast(cents),
-        coarseProbe, cents.count().toInt, metaCols)
+      // the frozen centroids come from the driver memo: no read, no
+      // count, and their super-quantizer is built once per build
+      val rows = assignedLists(corpus, idCol, vecCol,
+        centroidsOf(spark, indexDir, cur), coarseProbe, metaCols)
       // batch drift stats vs the build baseline OBSERVED on the write
       // itself (writeListsWithStats) — the old O(batch) read-back job
       // is gone, and the empty-batch no-op check rides the same
       // metric instead of a pre-scan `corpus.isEmpty` job on every
       // non-empty append (the TextIndex.append pattern)
       val (written, bn, bMean, bShare) =
-        writeListsWithStats(spark, indexDir, rows, gen)
+        writeListsWithStats(spark, indexDir, rows, gen, cur.buildId)
       // an empty micro-batch (a legitimate foreachBatch delivery)
       // commits nothing
       if (bn == 0L) None
@@ -575,19 +638,21 @@ object VectorIndex {
     val sampleSize = cur.extras.getOrElse("sample_size", "256").toInt
     val iters = cur.extras.getOrElse("iters", "2").toInt
     val effSample = math.max(sampleSize, 2 * k)
-    val cents = VectorFunctions.ivfTrainCentroids(
+    val cents = VectorFunctions.trainCentroids(
       all, "neighbor_id", "__cv", k, effSample, iters)
-    cents.write.mode("overwrite").parquet(s"$indexDir/centroids_g$gen")
-    val rows = assignedLists(all, "neighbor_id", "__cv", broadcast(cents),
-      None, k, metaCols)
+    // new centroids are a new assignment function: a new build id
+    val buildId = GenIndex.newBuildId()
+    writeCentroids(spark, indexDir, cents, gen, buildId)
+    val rows = assignedLists(all, "neighbor_id", "__cv", cents, None, metaCols)
     val (written, nw, meanCos, maxShare) =
-      writeListsWithStats(spark, indexDir, rows, gen)
+      writeListsWithStats(spark, indexDir, rows, gen, Some(buildId))
     Some((tables(listRefs(written, gen), s"centroids_g$gen", Map.empty),
       cur.extras --
         Seq("appended_n", "appended_cos_sum", "last_append_cos_mean",
           "last_drift_ratio", "last_append_max_share", "last_skew_ratio",
           "n_tombstones") ++
-        Map("assign_n" -> nw.toString, "assign_cos_mean" -> meanCos.toString,
+        Map(GenIndex.BuildIdKey -> buildId, "assign_n" -> nw.toString,
+          "assign_cos_mean" -> meanCos.toString,
           "assign_max_share" -> maxShare.toString)))
   }
 
@@ -610,20 +675,21 @@ object VectorIndex {
     require(dims % m == 0, s"dims $dims not divisible into $m subspaces")
     val spark = corpus.sparkSession
     store.rebuild(spark, indexDir) {
-      val cents = VectorFunctions.ivfTrainCentroids(
+      val cents = VectorFunctions.trainCentroids(
         corpus, idCol, vecCol, numCentroids, sampleSize, iters)
-      cents.write.mode("overwrite").parquet(s"$indexDir/centroids_g0")
+      val buildId = GenIndex.newBuildId()
+      writeCentroids(spark, indexDir, cents, 0, buildId)
       val cb = VectorFunctions.pqCodebooks(
         corpus, idCol, vecCol, m, codes, sampleSize, iters)
       cb.write.mode("overwrite").parquet(s"$indexDir/pq_codebooks")
       val enc = VectorFunctions.pqEncode(
         corpus, idCol, vecCol, cb, m, dims / m)
-      val rows = VectorFunctions
-        .ivfAssign(corpus, idCol, vecCol, broadcast(cents))
+      val rows = VectorFunctions.ivfAssign(corpus, idCol, vecCol, cents, 1)
         .select(col("__cid"), col("__aid").as("neighbor_id"))
         .join(enc.withColumnRenamed("__eid", "neighbor_id"), "neighbor_id")
-      (tables(listRefs(writeLists(spark, indexDir, rows, 0), 0), "centroids_g0",
-        Map.empty), Map("flavor" -> "pq", "meta_cols" -> ""))
+      (tables(listRefs(writeLists(spark, indexDir, rows, 0, Some(buildId)), 0),
+        "centroids_g0", Map.empty),
+        Map(GenIndex.BuildIdKey -> buildId, "flavor" -> "pq", "meta_cols" -> ""))
     }
   }
 
@@ -639,21 +705,16 @@ object VectorIndex {
       idCol: String, vecCol: String, k: Int, rerank: DataFrame,
       nprobe: Int = 4, shortlist: Int = 64, dims: Int = 64,
       m: Int = 16): DataFrame = {
-    import spark.implicits._
     val subDim = dims / m
     // ONE manifest read resolves centroids + lists — a consistent snapshot
     val man = store.current(spark, indexDir)
-    val cents = centroidsOf(spark, indexDir, man)
-    // schema memoized (the codebook's column set is a layout constant
-    // even across rebuilds that rewrite its values)
-    val cb = GenIndex.readStableDir(spark, s"$indexDir/pq_codebooks")
+    // codebook schema memoized per build
+    val cb = GenIndex.readStableDir(spark, indexDir, man, "pq_codebooks")
     val probes = VectorFunctions.ivfAssign(queries, idCol, vecCol,
-        broadcast(cents), nprobe)
+        centroidsOf(spark, indexDir, man), nprobe)
       .select(col("__aid").as("query_id"), col("__cid"))
-    // list ids to open: bounded by numCentroids — control-plane collect
-    val needed = probes.select("__cid").distinct().as[Long].collect()
     val lists0 = GenIndex.readBuckets(spark, indexDir, man.refs("lists"),
-      "__cid", needed.map(_.toInt).toSeq, withBucketCol = true,
+      "__cid", probedLists(probes), withBucketCol = true,
       listsDDL(spark, indexDir, man))
     // tombstoned ids drop before the ADC ranking (see [[delete]])
     val lists = if (man.refs("tombs").isEmpty) lists0
@@ -719,8 +780,8 @@ object VectorIndex {
         val all = if (cur.refs("tombs").isEmpty) all0
           else all0.join(Dedup.maybeBroadcast(tombIds(spark, indexDir, cur)),
             Seq("neighbor_id"), "left_anti")
-        val written =
-          writeLists(spark, indexDir, all.repartition(col("__cid")), gen)
+        val written = writeLists(spark, indexDir,
+          all.repartition(col("__cid")), gen, cur.buildId)
         Some((tables(listRefs(written, gen), centroidsDir(cur), Map.empty),
           cur.extras - "n_tombstones"))
       }
@@ -775,8 +836,18 @@ object VectorIndex {
     */
   private def listsDDL(spark: SparkSession, indexDir: String,
       m: GenIndex.Manifest): String =
-    GenIndex.footerDDL(spark, indexDir, m.refs("lists"), "__cid",
+    GenIndex.footerDDL(spark, indexDir, m, "lists", "__cid",
       "neighbor_id bigint, __cv array<float>")
+
+  /** The list ids the probe rows name — control data, bounded by
+    * numCentroids per partition: each partition ships its distinct ids
+    * and the driver merges them, one job and no shuffle.
+    */
+  private def probedLists(probes: DataFrame): Seq[Int] = {
+    import probes.sparkSession.implicits._
+    probes.select(col("__cid")).as[Long].mapPartitions(_.toSet.iterator)
+      .collect().distinct.map(_.toInt).toSeq
+  }
 
   /** Probed lists read through the manifest's immutable fragment
     * paths, with the list id re-attached (basePath) — only the probed
@@ -832,20 +903,16 @@ object VectorIndex {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int,
       predicate: Option[org.apache.spark.sql.Column]): DataFrame = {
-    import spark.implicits._
     // ONE manifest read resolves centroids + lists: the snapshot is
     // consistent even across a concurrent retrain's centroid swap
     val man = store.current(spark, indexDir)
-    // the centroids frame is tiny (numCentroids rows) — broadcast it so
-    // the assignment cross join never gambles on a size estimate
-    val cents = broadcast(centroidsOf(spark, indexDir, man))
+    // the snapshot's centroids and their super-quantizer come from the
+    // driver memo: the probe assignment runs no control job
     val probes = VectorFunctions.ivfAssign(queries, idCol, vecCol,
-        cents, nprobe)
+        centroidsOf(spark, indexDir, man), nprobe)
       .select(col("__aid").as("query_id"), col("__avec").as("__qv"), col("__cid"))
-    // list ids to open: bounded by numCentroids — control-plane collect
-    val needed = probes.select("__cid").distinct().as[Long].collect()
     val lists0 = GenIndex.readBuckets(spark, indexDir, man.refs("lists"),
-      "__cid", needed.map(_.toInt).toSeq, withBucketCol = true,
+      "__cid", probedLists(probes), withBucketCol = true,
       listsDDL(spark, indexDir, man))
     val lists1 = predicate.map(lists0.filter).getOrElse(lists0)
     // tombstoned ids drop BEFORE ranking ([[delete]]): top-k then
@@ -855,16 +922,9 @@ object VectorIndex {
       else lists1.join(
         Dedup.maybeBroadcast(tombIds(spark, indexDir, man)),
         Seq("neighbor_id"), "left_anti")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probes.join(lists, Seq("__cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("__qv"), col("__cv"))
-      .distinct()
-      .withColumn("cos", VectorFunctions.cosine(col("__qv"), col("__cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+    // scored right after the join; ids and cosines, never vectors,
+    // reach the dedup and the rank exchange
+    VectorFunctions.rankProbed(probes.join(lists, Seq("__cid")), k)
   }
 
   /** Below this centroid count flat assignment is cheap and exact;
@@ -875,13 +935,12 @@ object VectorIndex {
   private[graft] val TwoLevelMinCentroids = 64
 
   private def assignWith(corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, coarseProbe: Option[Int], k: Int): DataFrame =
+      cents: VectorFunctions.Centroids, coarseProbe: Option[Int]): DataFrame =
     coarseProbe match {
       case Some(p) =>
         VectorFunctions.ivfAssignTwoLevel(corpus, idCol, vecCol, cents, p)
-      case None if k >= TwoLevelMinCentroids =>
-        VectorFunctions.ivfAssignTwoLevel(corpus, idCol, vecCol, cents,
-          coarseProbe = 2)
-      case None => VectorFunctions.ivfAssign(corpus, idCol, vecCol, cents)
+      case None if cents.ids.length >= TwoLevelMinCentroids =>
+        VectorFunctions.ivfAssignTwoLevel(corpus, idCol, vecCol, cents, 2)
+      case None => VectorFunctions.ivfAssign(corpus, idCol, vecCol, cents, 1)
     }
 }

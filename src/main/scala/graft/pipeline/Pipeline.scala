@@ -115,15 +115,19 @@ final class Pipeline(
     catalog.createIfAbsent(DeleteControlTable, DeleteControl.schema)
   }
 
-  /** The INSERT of a control table, in O(batch): the rows land as one new
-    * ref (Catalog.appendLogRows), and once the log holds more than
+  /** The INSERT of a control table, in O(batch): `rows` builds the batch
+    * from `view` of the log inside its commit lock, so the ids it assigns
+    * are unique across writers; the rows land as one new ref
+    * (Catalog.appendLogRows), and once the log holds more than
     * `MaxControlRefs` refs a rewrite of every row folds it into one, from
     * the index, so the fold reads nothing back.
     */
-  private def appendControl(table: String, rows: Seq[Row]): Unit = {
-    catalog.appendLogRows(table, rows)
+  private def appendControl[V, T](table: String, view: Catalog.LogView[V])(
+      rows: Seq[V] => (Seq[Row], T)): T = {
+    val out = catalog.appendLogRows(table, view)(rows)
     if (catalog.bucketRefs(table).size > MaxControlRefs)
       catalog.rewriteLog(table, _ => true)(identity)
+    out
   }
 
   /** `row` with the named columns set to new values, under its schema. */
@@ -167,7 +171,8 @@ final class Pipeline(
     * keyed by file_name ALONE — the reference's MAX query
     * (data-query.py:74-79) does not filter by operation, so an update
     * re-upload of a previously inserted file continues its history. The
-    * maxima come from the control log's driver index, and the batch's
+    * maxima come from the control log's driver index, read inside the
+    * log's commit lock with the append, and the batch's
     * arrivals of one file continue them in event-id order
     * (PathOps.assignVersions). Returns (event_id, assigned version);
     * filtered events are absent.
@@ -177,13 +182,14 @@ final class Pipeline(
     val routed = events.flatMap(ev => route(ev).map { case (op, file) => (ev, op, file) })
     if (routed.isEmpty) return Map.empty
     guardControl(routed.size, "registerArrivals' versioned file events")
-    val maxima = catalog.logViews(ControlTable, Pipeline.FileVersions)
-    val versioned = PathOps.assignVersions(routed,
-        file => maxima.flatMap(_.get(file)).maxOption)(_._3)(
-      Ordering.by[(FileEvent, String, String), String](_._1.id)(PathOps.sparkStringOrder))
-    appendControl(ControlTable, versioned.map { case ((ev, op, file), version) =>
-      Row(file, ev.id, version, false, ev.bucket, op, Status.Pending, null)
-    })
+    val versioned = appendControl(ControlTable, Pipeline.FileVersions) { maxima =>
+      val v = PathOps.assignVersions(routed,
+          file => maxima.flatMap(_.get(file)).maxOption)(_._3)(
+        Ordering.by[(FileEvent, String, String), String](_._1.id)(PathOps.sparkStringOrder))
+      (v.map { case ((ev, op, file), version) =>
+        Row(file, ev.id, version, false, ev.bucket, op, Status.Pending, null)
+      }, v)
+    }
     val ts = nowIso()
     versioned.foreach { case ((ev, op, file), version) =>
       notifier.requestApproval(approver, op, PathOps.deriveTableName(file),
@@ -374,21 +380,22 @@ final class Pipeline(
     * file in `delete_control`. The keys' rendered DeleteQuery and pk map
     * are collected in file order (one job) and staged on the driver by
     * MutationOps.stageDeletes, against the pending queries and the
-    * maximum QueryId of the control log's index. The staged rows land as
-    * one ref.
+    * maximum QueryId of the control log's index, read inside the log's
+    * commit lock. The staged rows land as one ref.
     */
   private def stageDeletes(table: String, keyCols: Seq[String], keys: DataFrame,
       eventId: String, approvalTs: String): Unit = {
-    val refs = catalog.logViews(DeleteControlTable, Pipeline.Deletes)
     val rendered = collectControl(keys.select(MutationOps.renderDeleteQuery(table, keyCols),
       MutationOps.pkValues(keyCols), col("__ord")), "a delete file's staged keys")
-    val staged = MutationOps.stageDeletes(
-      rendered.toSeq.sortBy(_.getLong(2)).map(r => (r.getString(0), r.getMap[String, String](1).toMap)),
-      query => refs.exists(_.pending(query)), refs.flatMap(_.maxQueryId).maxOption.getOrElse(0L))
     val deletedAt = timestamp(approvalTs)
-    appendControl(DeleteControlTable, staged.map { case (id, query, pk) =>
-      Row(id, eventId, query, true, false, deletedAt, null, table, pk)
-    })
+    appendControl(DeleteControlTable, Pipeline.Deletes) { refs =>
+      val staged = MutationOps.stageDeletes(
+        rendered.toSeq.sortBy(_.getLong(2)).map(r => (r.getString(0), r.getMap[String, String](1).toMap)),
+        query => refs.exists(_.pending(query)), refs.flatMap(_.maxQueryId).maxOption.getOrElse(0L))
+      (staged.map { case (id, query, pk) =>
+        Row(id, eventId, query, true, false, deletedAt, null, table, pk)
+      }, ())
+    }
   }
 
   // ---------------------------------------------------------------- E4

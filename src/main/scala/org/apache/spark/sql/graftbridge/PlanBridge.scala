@@ -38,4 +38,10 @@ object PlanBridge {
       case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
            _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException => None
     }
+
+  /** `t` as a file-source read returns it: every field nullable, nested
+    * ones included (the `private[spark]` StructType.asNullable).
+    */
+  def asNullable(t: org.apache.spark.sql.types.StructType
+      ): org.apache.spark.sql.types.StructType = t.asNullable
 }

@@ -67,4 +67,22 @@ object HofReference {
           s => s.getField("__code")).as("__codes"),
         sum(dot(col("__cvec"), col("__cvec"))).as("__rnorm2"))
   }
+
+  /** The vector-keyed ranking of probe ⋈ list candidates that
+    * [[VectorFunctions.rankProbed]] replaced: distinct over both ids AND
+    * both vectors, then the cosine and the rank. Equal to rankProbed
+    * except where one id pair holds two different vectors whose cosines
+    * are bit-equal (rankProbed then keeps one row, this keeps two).
+    */
+  def rankProbedByVector(candidates: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    candidates.filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("__qv"), col("__cv"))
+      .distinct()
+      .withColumn("cos", VectorFunctions.cosine(col("__qv"), col("__cv")))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+  }
 }

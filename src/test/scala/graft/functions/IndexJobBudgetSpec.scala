@@ -57,8 +57,10 @@ class IndexJobBudgetSpec extends SparkTestBase {
       "compact" -> (() => TextIndex.compact(spark, dir)),
       "bm25" -> (() => TextIndex.bm25TopK(spark, dir,
         Seq("vector", "stream", "window", "hash"), 10).collect()))
+    // the postings schema is memoized per build, so the serve after the
+    // compact reads no footer
     assert(jobs == Map("build" -> 7, "append" -> 4, "delete" -> 9,
-      "compact" -> 8, "bm25" -> 7), s"text index jobs: $jobs")
+      "compact" -> 8, "bm25" -> 6), s"text index jobs: $jobs")
   }
 
   test("VectorIndex: jobs per build, append, delete, compact, retrain and topK") {
@@ -75,7 +77,9 @@ class IndexJobBudgetSpec extends SparkTestBase {
       "retrain" -> (() => VectorIndex.retrain(spark, dir)),
       "topK" -> (() => VectorIndex.topK(spark, dir, emb.filter($"vec_id" < 8),
         "vec_id", "embedding", 3).collect()))
-    assert(jobs == Map("build" -> 6, "append" -> 7, "delete" -> 3,
-      "compact" -> 4, "retrain" -> 8, "topK" -> 9), s"vector index jobs: $jobs")
+    // centroids, their super-quantizer and the list schema are driver
+    // values of the build: no phase reads them back
+    assert(jobs == Map("build" -> 5, "append" -> 2, "delete" -> 3,
+      "compact" -> 3, "retrain" -> 6, "topK" -> 5), s"vector index jobs: $jobs")
   }
 }

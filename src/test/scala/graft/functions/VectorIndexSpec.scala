@@ -7,6 +7,9 @@ import graft.SparkTestBase
 class VectorIndexSpec extends SparkTestBase {
   import spark.implicits._
 
+  // the fixture corpus (500 × 64-d embeddings with a label column)
+  private def corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
   test("persisted IVF index serves the same top-k as the in-memory path") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = tmpDir("ivfidx")
@@ -617,6 +620,75 @@ class VectorIndexSpec extends SparkTestBase {
     VectorIndex.append(batch, "vec_id", "embedding", dir,
       commitId = Some("b1"), autoCompactFragments = 2)
     assert(VectorIndex.currentLists(spark, dir).count() == rows)
+  }
+
+  test("a rebuild at the same dir with metaCols serves a filtered query") {
+    // a rebuild rewrites lists_g0 at the same paths with a new column; a
+    // schema remembered by path would still lack it
+    val (dir, fresh) = (tmpDir("ivfrebuildmeta"), tmpDir("ivfrebuildmetafresh"))
+    val queries = corpus.filter($"vec_id" < 4)
+    VectorIndex.build(corpus, "vec_id", "embedding", dir)
+    assert(VectorIndex.topK(spark, dir, queries, "vec_id", "embedding", 3).count() == 12)
+    VectorIndex.build(corpus, "vec_id", "embedding", dir, metaCols = Seq("label"))
+    VectorIndex.build(corpus, "vec_id", "embedding", fresh, metaCols = Seq("label"))
+    def filtered(d: String) = VectorIndex.topKFiltered(spark, d, queries,
+        "vec_id", "embedding", 3, $"label" === 1)
+      .as[(Long, Long, Long, Double)].collect().toSet
+    assert(filtered(dir) == filtered(fresh) && filtered(fresh).size == 12)
+    // the schema the build's write recorded is the one its footers hold
+    val m = VectorIndex.store.current(spark, dir)
+    val (k, gs) = m.refs("lists").head
+    assert(GenIndex.footerDDL(spark, dir, m, "lists", "__cid", "") ==
+      spark.read.parquet(s"$dir/${gs.head}/__cid=$k").schema.toDDL)
+  }
+
+  test("a rebuild at the same dir with other centroids serves them") {
+    val (dir, fresh) = (tmpDir("ivfrebuildk"), tmpDir("ivfrebuildkfresh"))
+    val queries = corpus.filter($"vec_id" < 8)
+    def serve(d: String) = VectorIndex.topK(spark, d, queries, "vec_id", "embedding", 3,
+        nprobe = 2).as[(Long, Long, Long, Double)].collect().toSet
+    VectorIndex.build(corpus, "vec_id", "embedding", dir, numCentroids = 4)
+    val before = serve(dir)
+    VectorIndex.build(corpus, "vec_id", "embedding", dir, numCentroids = 6)
+    VectorIndex.build(corpus, "vec_id", "embedding", fresh, numCentroids = 6)
+    assert(VectorIndex.centroids(spark, dir).count() == 6)
+    val after = serve(dir)
+    assert(after == serve(fresh) && after.size == 24)
+    assert(after != before, "4 and 6 centroids probed at 2 should serve differently")
+  }
+
+  test("serve ranks scores: duplicate queries and a re-appended vector rank once") {
+    val dir = tmpDir("ivfdedup")
+    VectorIndex.build(corpus.filter($"vec_id" < 200), "vec_id", "embedding", dir,
+      numCentroids = 4)
+    // ids 5 and 17 appended again with identical vectors: each is held twice
+    VectorIndex.append(corpus.filter($"vec_id".isin(5, 17)), "vec_id", "embedding", dir)
+    assert(VectorIndex.currentLists(spark, dir).filter(
+      $"neighbor_id".isin(5, 17)).count() == 4)
+    val q = corpus.filter($"vec_id".isin(5, 17, 40, 41))
+      .withColumn("vec_id", $"vec_id" + 10000)
+    val queries = q.union(q.filter($"vec_id" < 10020))
+    val served = VectorIndex.topK(spark, dir, queries, "vec_id", "embedding", 3, nprobe = 2)
+    val got = served.as[(Long, Long, Long, Double)].collect()
+    // the reference: the vector-keyed distinct over the same candidates
+    val probes = VectorFunctions.ivfAssign(queries, "vec_id", "embedding",
+        VectorIndex.centroids(spark, dir), nprobe = 2)
+      .select($"__aid".as("query_id"), $"__avec".as("__qv"), $"__cid")
+    val want = HofReference.rankProbedByVector(
+        probes.join(VectorIndex.currentLists(spark, dir), Seq("__cid")), 3)
+      .as[(Long, Long, Long, Double)].collect()
+    assert(got.sorted.toSeq == want.sorted.toSeq && got.length == 12)
+    assert(got.map(r => (r._1, r._2)).distinct.length == got.length)
+    // each duplicated id is its own query's top neighbour, once
+    assert(got.filter(_._3 == 1).map(r => r._1 -> r._2).toSet
+      .contains(10005L -> 5L) && got.exists(r => r._1 == 10017L && r._2 == 17L))
+    // no vector reaches an aggregate key; the rank filter stays a
+    // partial WindowGroupLimit
+    val plan = served.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    plan.linesIterator.filter(_.contains("HashAggregate")).foreach(l =>
+      assert(!l.contains("__qv") && !l.contains("__cv"), s"vector in a key: $l"))
+    assert(plan.contains("WindowGroupLimit"), plan)
   }
 
   test("metaCols list files stay clustered on the metadata (no writer re-sort)") {

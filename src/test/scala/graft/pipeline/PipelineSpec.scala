@@ -550,6 +550,76 @@ class PipelineSpec extends SparkTestBase {
     assert(statuses(p).values.forall(_ == (Status.Approved, true)))
   }
 
+  /** A Catalog whose control-log lookups answer late: each log lookup
+    * waits `delayMs` after resolving its version, as a busy driver
+    * would, so a lookup taken outside the commit lock goes stale while
+    * another writer commits.
+    */
+  private class SlowLookup(root: String, delayMs: Long)
+      extends Catalog(spark, root, graceVersions = 8) {
+    override def logViews[V](name: String, view: Catalog.LogView[V]): Seq[V] = {
+      val views = super.logViews(name, view)
+      Thread.sleep(delayMs)
+      views
+    }
+  }
+
+  /** Runs `a` and `b` on two threads started together; rethrows a failure. */
+  private def together(a: => Unit, b: => Unit): Unit = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq(() => a, () => b).map { body =>
+      val t = new Thread(() =>
+        try { start.await(); body() } catch { case e: Throwable => failures.add(e) })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    failures.asScala.headOption.foreach(throw _)
+  }
+
+  /** Two writers on one root whose control lookups answer late, and a
+    * customers table of keys 1-9 registered under its primary key.
+    */
+  private def slowWriters(): (Pipeline, Pipeline, String) = {
+    val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
+    def writer() = new Pipeline(spark, new SlowLookup(root, 300), new InMemoryNotifier, landing)
+    val (a, b) = (writer(), writer())
+    land(landing, "b1", "insert/customers.csv",
+      "customer_id,name\n" + (1 to 9).map(k => s"$k,n$k\n").mkString)
+    a.registerArrival(FileEvent("b1", "insert/customers.csv", "ins"))
+    a.processApproval(approval("ins", "approve", "insert"))
+    a.catalog.registerPrimaryKey("customers", Seq("customer_id"))
+    (a, b, landing)
+  }
+
+  test("lost update: two writers registering one file assign distinct versions") {
+    val (a, b, _) = slowWriters()
+    val versions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def register(p: Pipeline, tag: String): Unit = (1 to 2).foreach { i =>
+      p.registerArrival(FileEvent("b1", "update/customers.csv", s"$tag$i")).foreach(versions.add)
+    }
+    together(register(a, "a"), register(b, "b"))
+    // the insert of the same file name holds version 1
+    assert(versions.asScala.toSeq.sorted == (2L to 5L), s"versions: $versions")
+    val logged = a.catalog.read(a.ControlTable).as[ProcessedFile].collect()
+      .filter(_.file_name == "customers.csv").map(_.file_version).toSeq
+    assert(logged.sorted == (1L to 5L), s"logged: $logged")
+  }
+
+  test("lost update: two writers staging deletes assign distinct QueryIds") {
+    val (a, b, landing) = slowWriters()
+    land(landing, "b1", "delete/a.csv", "customer_id\n1\n2\n")
+    land(landing, "b1", "delete/b.csv", "customer_id\n3\n")
+    a.registerArrival(FileEvent("b1", "delete/a.csv", "da"))
+    b.registerArrival(FileEvent("b1", "delete/b.csv", "db"))
+    together(a.processApproval(approval("da", "approve", "delete", "a.csv")),
+      b.processApproval(approval("db", "approve", "delete", "b.csv")))
+    val ids = a.catalog.read(a.DeleteControlTable).as[DeleteControl].collect().map(_.QueryId)
+    assert(ids.sorted.toSeq == Seq(1L, 2L, 3L), s"QueryIds: ${ids.toSeq}")
+  }
+
   test("a control lookup on a log of MaxControlRefs refs runs one job") {
     val (root, landing) = (tmpDir("wh"), tmpDir("landing"))
     val p = new Pipeline(spark, new Catalog(spark, root), new InMemoryNotifier, landing)
